@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column => native, expression}
 
 /** The CSV repair pipeline (SURVEY §2.2 F1–F4) as declarative
   * `DataFrame => DataFrame` transforms — Spark fuses all of them into a
@@ -45,10 +46,7 @@ object Repair {
     * (RepairSpec pins the equivalence), one parser attempt per row
     * instead of ~n/2. */
   def lenientTimestamp(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.plans.MultiFormatTimestampExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c),
-        TimestampFormats))
+    native(graft.plans.MultiFormatTimestampExpr(expression(c), TimestampFormats))
 
   /** Reference re-emits matched timestamps canonically as
     * `%Y-%m-%d %H:%M:%S` (`main.py:127`). */
@@ -75,21 +73,23 @@ object Repair {
   /** Drop rows whose raw-line arity ≠ schema arity (`main.py:101-103`).
     * Operates on a single string column holding the raw delimited line;
     * the delimiter may be escaped with `\` (reference parser uses
-    * QUOTE_NONE + escapechar `\`, `main.py:92-93`), hence the negative
-    * lookbehind.
+    * QUOTE_NONE + escapechar `\`, `main.py:92-93`). Counts cells with
+    * the count-only form of the native byte-scan split
+    * (graft.plans.EscapedSplit), which allocates nothing per row.
     */
   def arityFilter(line: Column, sep: String, arity: Int): Column =
-    size(split(line, "(?<!\\\\)" + java.util.regex.Pattern.quote(sep))) === arity
+    native(graft.plans.CountEscapedExpr(expression(line), sep)) === arity
 
   /** Split a raw line into the schema's string columns (post arity
-    * filter), unescaping escaped delimiters.
+    * filter), unescaping escaped delimiters: the native split
+    * (graft.plans.SplitEscapedExpr) runs once per line and every cell
+    * shares it through subexpression elimination.
     */
   def splitLine(df: DataFrame, lineCol: String, sep: String,
                 schema: StructType): DataFrame = {
-    val parts = split(col(lineCol), "(?<!\\\\)" + java.util.regex.Pattern.quote(sep))
+    val parts = native(graft.plans.SplitEscapedExpr(expression(col(lineCol)), sep))
     val cols = schema.fields.zipWithIndex.map { case (f, i) =>
-      regexp_replace(parts.getItem(i), java.util.regex.Pattern.quote("\\" + sep),
-        sep).as(f.name)
+      parts.getItem(i).as(f.name)
     }
     df.select(cols.toIndexedSeq: _*)
   }

@@ -86,25 +86,33 @@ object CsvIngest {
       encoding: String = "ISO-8859-1",
       skipHeaders: Boolean = true)
 
-  /** Strict reference-faithful read: raw lines → arity filter (F1,
-    * drops malformed rows exactly like `main.py:101-103`) → split with
-    * escape handling → lenient typed repair (F2–F4). Entirely lazy; the
-    * whole pipeline is one codegen'd pass at action time.
+  /** Strict reference-faithful read: raw lines → header skip → arity
+    * filter (F1, drops malformed rows exactly like `main.py:101-103`) →
+    * byte-scan split with escape handling → lenient typed repair
+    * (F2–F4). Entirely lazy; scan → filter → project is one codegen'd
+    * pass at action time, with no shuffle and no object round trip.
+    *
+    * The header skip is the CSV reader's own `header` option: each
+    * split that starts at file offset 0 drops its first non-blank line,
+    * so every file loses exactly its header, even when several small
+    * files share a partition; later splits start mid-file and their
+    * first line is a real record. Blank lines are dropped either way.
+    * Spark checks each skipped header against the one-column line
+    * schema and, with `enforceSchema` at its default, logs a
+    * "CSV header does not conform" warning per file instead of failing.
     */
   def read(spark: SparkSession, path: String, schema: StructType,
            opts: Options = Options()): DataFrame = {
     // whole lines through the csv reader with a NUL separator — unlike
     // the text source, csv honors the `encoding` option (ISO-8859-1)
-    val raw = spark.read
+    val lines = spark.read
       .schema(StructType(Seq(StructField("value", StringType))))
       .option("sep", "\u0000")
       .option("quote", "")
       .option("encoding", opts.encoding)
       .option("mode", "PERMISSIVE")
+      .option("header", opts.skipHeaders)
       .csv(path)
-    val lines =
-      if (opts.skipHeaders) dropFirstLinePerFile(spark, raw)
-      else raw
     val kept = lines.filter(
       Repair.arityFilter(col("value"), opts.sep, schema.fields.length))
     Repair.repair(Repair.splitLine(kept, "value", opts.sep, schema), schema)
@@ -159,34 +167,6 @@ object CsvIngest {
     fs.rename(part, dest)
     fs.delete(tmp, true)
     dest
-  }
-
-  /** Header skip per file WITHOUT a shuffle: a header line is exactly
-    * the first row of a file chunk whose `_metadata.file_block_start`
-    * is 0 (splits after the first start mid-file; Hadoop line-boundary
-    * semantics make their first row a real record). Within a task the
-    * scan delivers each file's rows as one consecutive run — even when
-    * `maxPartitionBytes` packs several small files into one partition —
-    * so "row starts a new file run AND its chunk offset is 0" finds
-    * every header and nothing else, in one narrow per-partition pass.
-    * (The previous Window.partitionBy(file) variant clustered EVERY row
-    * of a file onto one reducer — the skew bottleneck at 100 TB.)
-    */
-  private def dropFirstLinePerFile(spark: SparkSession, raw: DataFrame): DataFrame = {
-    import spark.implicits._
-    raw
-      .select(col("value"), col("_metadata.file_path").as("__file"),
-        col("_metadata.file_block_start").as("__start"))
-      .as[(String, String, Long)]
-      .mapPartitions { it =>
-        var prevFile: String = null
-        it.flatMap { case (v, f, start) =>
-          val newFileRun = f != prevFile
-          prevFile = f
-          if (newFileRun && start == 0L) None else Some(v)
-        }
-      }
-      .toDF("value")
   }
 }
 

@@ -100,9 +100,45 @@ class CsvIngestSpec extends AnyFunSuite {
     // both headers dropped, all data rows kept
     assert(df.orderBy("NAME").collect().map(_.getString(0)).toSeq
       == Seq("a", "b", "c"))
-    // the skip must not cluster each file onto one reducer
+    // the skip must not cluster each file onto one reducer, nor take a
+    // typed object round trip: scan → filter → project stays one pass
     val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
+    Seq("Exchange", "DeserializeToObject", "MapPartitions").foreach { op =>
+      assert(!plan.contains(op), s"unexpected $op in:\n$plan")
+    }
+  }
+
+  test("a file read in several splits loses exactly its header") {
+    val dir = tmpDir()
+    val data = (1 to 3000).map(i => s"r$i;$i;$i.5")
+    write(dir, "big.csv", "NAME;N;X" +: data)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "8k")
+    try {
+      val df = CsvIngest.read(spark, dir.resolve("big.csv").toString, schema)
+      assert(df.rdd.getNumPartitions >= 3)
+      val names = df.collect().map(_.getString(0))
+      assert(names.length == data.length)
+      assert(names.toSet == data.map(_.takeWhile(_ != ';')).toSet)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  test("blank lines before the header do not shift the header skip") {
+    val dir = tmpDir()
+    write(dir, "b.csv", Seq("", "", "NAME;N;X", "a;1;1.0", "", "b;2;2.0"))
+    val out = CsvIngest.read(spark, dir.resolve("b.csv").toString, schema)
+      .orderBy("NAME").collect()
+    assert(out.map(_.getString(0)).toSeq == Seq("a", "b"))
+  }
+
+  test("a header-only file gives 0 rows") {
+    val dir = tmpDir()
+    write(dir, "h.csv", Seq("NAME;N;X"))
+    assert(CsvIngest.read(spark, dir.resolve("h.csv").toString, schema).count() == 0)
   }
 
   test("writeFixed emits the repaired FIXED_ artifact (S9) and round-trips") {

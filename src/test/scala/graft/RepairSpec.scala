@@ -102,6 +102,49 @@ class RepairSpec extends AnyFunSuite {
     assert(kept == Set("a;b;c", "x\\;y;b;c"))
   }
 
+  test("native split and count equal the lookbehind-regex split (property)") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => native, expression}
+    import org.scalacheck.rng.Seed
+    import java.util.regex.Pattern.quote
+    // the pre-native formulation, kept verbatim as the semantics oracle
+    def regexParts(line: Column, sep: String) = split(line, "(?<!\\\\)" + quote(sep))
+    def regexCells(line: Column, sep: String) =
+      transform(regexParts(line, sep), c => regexp_replace(c, quote("\\" + sep), sep))
+    Seq(";", "|", "||", ".").zipWithIndex.foreach { case (sep, k) =>
+      val atom = Gen.frequency(
+        4 -> Gen.alphaNumStr.map(_.take(4)),
+        2 -> Gen.oneOf("é", "ü", "ß", "ñ", "Ø", "ÿ"),
+        4 -> Gen.const(sep),
+        2 -> Gen.const("\\" + sep),
+        1 -> Gen.const("\\\\" + sep),
+        2 -> Gen.const("\\"),
+        2 -> Gen.oneOf(";", "|", ".", " ", sep.take(1)))
+      val line = Gen.choose(0, 12).flatMap(Gen.listOfN(_, atom)).map(_.mkString)
+      val edges = Seq("", sep, sep * 3, "a" + sep, sep + "a", "a" + sep + sep + "b",
+        "a\\" + sep + "b", "a\\\\" + sep + "b", "a" + sep + "b\\", "\\",
+        "\\" + sep, "café" + sep + "über" + sep + "ñ")
+      val fuzz = Gen.listOfN(400, line).apply(Gen.Parameters.default, Seed(k + 1L)).get
+      val lines = (edges ++ fuzz).distinct
+      val rows = lines.toDF("l").select(col("l"),
+        size(regexParts(col("l"), sep)).as("rc"),
+        native(graft.plans.CountEscapedExpr(expression(col("l")), sep)).as("nc"),
+        regexCells(col("l"), sep).as("rs"),
+        native(graft.plans.SplitEscapedExpr(expression(col("l")), sep)).as("ns"))
+        .collect()
+      assert(rows.length == lines.length)
+      val bad = rows.filter(r => r.getInt(1) != r.getInt(2) ||
+        r.getSeq[String](3) != r.getSeq[String](4))
+      assert(bad.isEmpty, s"sep '$sep': native != regex on " +
+        bad.take(3).map(r => s"'${r.getString(0)}': ${r.getSeq[String](3)} vs " +
+          s"${r.getSeq[String](4)}").mkString("; "))
+    }
+  }
+
+  test("an empty separator is rejected") {
+    intercept[IllegalArgumentException](Repair.arityFilter(col("value"), "", 3))
+  }
+
   test("repair coerces by schema type, preserves strings") {
     val schema = StructType(Seq(
       StructField("name", StringType), StructField("n", LongType),
