@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,10 +29,7 @@ object FilePick {
   def mostRecentCsv(spark: SparkSession, dir: String, prefix: String): Path = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val names = fs.globStatus(new Path(p, prefix + "*")) match {
-      case null => Array.empty[Path]
-      case sts  => sts.filter(_.isFile).map(_.getPath)
-    }
+    val names = matching(fs, p, prefix).map(_.getPath)
     if (names.isEmpty) throw CsvNotFound()
     val pick = names.maxBy(_.getName)
     if (!pick.getName.endsWith(".csv") && !pick.getName.endsWith(".csv.gz"))
@@ -47,11 +44,17 @@ object FilePick {
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val archived = new Path(base, "ARCHIVED")
     if (!fs.exists(archived)) fs.mkdirs(archived)
-    Option(fs.globStatus(new Path(base, prefix + "*")))
-      .getOrElse(Array.empty).filter(_.isFile).foreach { st =>
-        fs.rename(st.getPath, new Path(archived, st.getPath.getName))
-      }
+    matching(fs, base, prefix).foreach { st =>
+      fs.rename(st.getPath, new Path(archived, st.getPath.getName))
+    }
   }
+
+  /** Files directly under `dir` whose name starts with `prefix`, taken
+    * literally: the reference lists blobs by prefix, so `?`, `*`, `[`,
+    * `{` or `\` in a prefix are plain characters, not glob syntax. */
+  private def matching(fs: FileSystem, dir: Path, prefix: String): Array[FileStatus] =
+    if (!fs.exists(dir)) Array.empty
+    else fs.listStatus(dir).filter(st => st.isFile && st.getPath.getName.startsWith(prefix))
 }
 
 /** Destination-name templating (SURVEY §2.3 T1): expand `{a:b}` in a
@@ -81,38 +84,26 @@ object NameTemplate {
   * by default (`:95-96`, default `:40,202`).
   */
 object CsvIngest {
-  final case class Options(
-      sep: String = ";",
-      encoding: String = "ISO-8859-1",
-      skipHeaders: Boolean = true)
+  final case class Options(sep: String = ";", skipHeaders: Boolean = true)
 
-  /** Strict reference-faithful read: raw lines → header skip → arity
-    * filter (F1, drops malformed rows exactly like `main.py:101-103`) →
-    * byte-scan split with escape handling → lenient typed repair
-    * (F2–F4). Entirely lazy; scan → filter → project is one codegen'd
-    * pass at action time, with no shuffle and no object round trip.
+  /** Strict reference-faithful read: raw Latin-1 lines → header skip →
+    * arity filter (F1, drops malformed rows exactly like
+    * `main.py:101-103`) → byte-scan split with escape handling → lenient
+    * typed repair (F2–F4). Entirely lazy; scan → filter → project is one
+    * codegen'd pass at action time, with no shuffle and no object round
+    * trip.
     *
-    * The header skip is the CSV reader's own `header` option: each
-    * split that starts at file offset 0 drops its first non-blank line,
-    * so every file loses exactly its header, even when several small
-    * files share a partition; later splits start mid-file and their
-    * first line is a real record. Blank lines are dropped either way.
-    * Spark checks each skipped header against the one-column line
-    * schema and, with `enforceSchema` at its default, logs a
-    * "CSV header does not conform" warning per file instead of failing.
+    * The lines come from `LineSource`, which cuts each file into about
+    * one chunk per core: byte ranges of a plain file, decompressed
+    * ranges of a gzip file (each task decompresses from the start and
+    * skips to its range). The chunk that starts a file drops its first
+    * non-blank line when `skipHeaders` is set, so every file loses
+    * exactly its header however it is cut; blank lines are dropped
+    * everywhere. Rows keep file order.
     */
   def read(spark: SparkSession, path: String, schema: StructType,
            opts: Options = Options()): DataFrame = {
-    // whole lines through the csv reader with a NUL separator — unlike
-    // the text source, csv honors the `encoding` option (ISO-8859-1)
-    val lines = spark.read
-      .schema(StructType(Seq(StructField("value", StringType))))
-      .option("sep", "\u0000")
-      .option("quote", "")
-      .option("encoding", opts.encoding)
-      .option("mode", "PERMISSIVE")
-      .option("header", opts.skipHeaders)
-      .csv(path)
+    val lines = LineSource.read(spark, path, opts.skipHeaders)
     val kept = lines.filter(
       Repair.arityFilter(col("value"), opts.sep, schema.fields.length))
     Repair.repair(Repair.splitLine(kept, "value", opts.sep, schema), schema)
@@ -140,8 +131,8 @@ object CsvIngest {
     // (univocity quotes instead of escaping), so serialize each line
     // manually: escape backslash then the separator, nulls -> empty
     // cells (coalesce BEFORE concat_ws, which would skip nulls) - and
-    // ship whole lines through a NUL-separated single-column csv write,
-    // the same trick as the read side (text write is UTF-8-only).
+    // ship whole lines through a NUL-separated single-column csv write
+    // (the text writer is UTF-8-only).
     val cells = schema.fields.map { f =>
       val base = f.dataType match {
         case TimestampType => date_format(col(f.name), "yyyy-MM-dd HH:mm:ss")
@@ -158,7 +149,7 @@ object CsvIngest {
       .write.mode("overwrite")
       .option("sep", "\u0000")
       .option("quote", "")
-      .option("encoding", opts.encoding)
+      .option("encoding", "ISO-8859-1")
       .option("header", "false")
       .csv(tmp.toString)
     val part = fs.globStatus(new Path(tmp, "part-*"))(0).getPath

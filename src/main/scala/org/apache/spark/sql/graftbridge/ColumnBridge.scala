@@ -28,6 +28,23 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A DataFrame over an RDD of rows already in Catalyst's internal
+    * format — a `LogicalRDD`, planned as a codegen'd scan
+    * (`internalCreateDataFrame` is `private[sql]`). */
+  def internalFrame(spark: org.apache.spark.sql.SparkSession,
+                    rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                    schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rdd, schema)
+
+  /** The session's Hadoop conf: the context's, plus the session's SQL
+    * conf entries, as Spark's file sources use it. */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConf()
+
   /** Floating-point key normalization (−0.0 → 0.0, canonical NaN) for
     * custom operators that compare keys by UnsafeRow bytes — the
     * optimizer applies this rule to built-in aggregates/joins only

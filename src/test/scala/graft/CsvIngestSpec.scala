@@ -92,6 +92,24 @@ class CsvIngestSpec extends AnyFunSuite {
     assert(Files.exists(dir.resolve("other.csv"))) // non-matching untouched
   }
 
+  test("file pick and archive take the prefix literally, not as a glob") {
+    val dir = tmpDir()
+    write(dir, "a?b[1]{_202101.csv", Seq("NAME;N;X", "lit;1;1.0"))
+    // each would match the prefix read as a glob (`?`, `[1]`)
+    write(dir, "axb1{_202109.csv", Seq("h"))
+    write(dir, "a?b1{_202112.csv", Seq("h"))
+    val pick = FilePick.mostRecentCsv(spark, dir.toString, "a?b[1]{_")
+    assert(pick.getName == "a?b[1]{_202101.csv")
+    assert(CsvIngest.read(spark, pick.toString, schema).collect()
+      .map(_.getString(0)).toSeq == Seq("lit"))
+    // an unclosed `{` is a plain character too
+    intercept[CsvNotFound](FilePick.mostRecentCsv(spark, dir.toString, "{nope"))
+    FilePick.archive(spark, dir.toString, "a?b[1]{_")
+    assert(Files.exists(dir.resolve("ARCHIVED/a?b[1]{_202101.csv")))
+    assert(Files.exists(dir.resolve("axb1{_202109.csv")))
+    assert(Files.exists(dir.resolve("a?b1{_202112.csv")))
+  }
+
   test("header skip is narrow (no Exchange) and handles multi-file scans") {
     val dir = tmpDir()
     write(dir, "m1.csv", Seq("NAME;N;X", "a;1;1.0"))

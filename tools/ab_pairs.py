@@ -2,6 +2,7 @@
 """Runs alternating parent/change pairs of one benchmark workload.
 
     python3 tools/ab_pairs.py --workload etl_daily --parent HEAD~1 --pairs 10
+    python3 tools/ab_pairs.py --workload etl_daily --parent HEAD~1 --ledger --seed 11
 
 The change side is this checkout's working tree; the parent side is
 `--parent` checked out with `git worktree` at .bench_build/ab/parent
@@ -12,12 +13,18 @@ BENCHMARK.json the script prints each side's median and quartiles, the
 pairs the change won (ties count for neither side) and whether a gain
 can be claimed: at least 9 of 10 pairs won and a median gap larger than
 the parent's quartile spread. Raw results go to
-.bench_build/ab/<workload>-pairs.json; nothing else is written outside
+.bench_build/ab/<workload>-pairs.json.
+
+With --ledger it instead runs one traced run (`--trace 1`) per side with
+the same --seed, keeps both traces as
+.bench_build/ab/<workload>-seed<n>-{parent,change}.json and prints
+`perfbench/ledger_diff.py` parent → change. Nothing is written outside
 .bench_build/ and the worktree.
 """
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -43,10 +50,10 @@ def parent_checkout(ref):
     return want
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed, seconds, trace=0):
     out = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
         cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
         stdin=subprocess.DEVNULL, text=True)
     lines = [l for l in out.stdout.splitlines() if l.strip()]
@@ -81,6 +88,21 @@ def summarize(pairs, metrics):
               f"{won:>3}/{len(pairs):<2}  {'yes' if claim else 'no'}")
 
 
+def ledger(workload, seed, seconds):
+    """One traced run per side, then the ledger diff parent -> change."""
+    kept = {}
+    for side, checkout in (("parent", PARENT), ("change", ROOT)):
+        r = run_once(checkout, workload, seed, seconds, trace=1)
+        print(f"[ab_pairs] traced {side} seed {seed}: failed {r['failed']}",
+              file=sys.stderr, flush=True)
+        trace = os.path.join(checkout, ".bench_build", "traces",
+                             f"{workload}-seed{seed}-trace1.json")
+        kept[side] = os.path.join(AB, f"{workload}-seed{seed}-{side}.json")
+        shutil.copyfile(trace, kept[side])
+    subprocess.run([sys.executable, os.path.join(ROOT, "perfbench", "ledger_diff.py"),
+                    kept["parent"], kept["change"]], check=True)
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
@@ -88,11 +110,15 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
     ap.add_argument("--seconds", type=float)
+    ap.add_argument("--ledger", action="store_true",
+                    help="one traced run per side and their ledger diff")
     a = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     seconds = a.seconds or bench["run_seconds"]
     rev = parent_checkout(a.parent)
+    if a.ledger:
+        return ledger(a.workload, a.seed, seconds)
     pairs = []
     for i in range(a.pairs):
         seed = a.seed + i
