@@ -168,25 +168,7 @@ object Bench {
     val repoBase = sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo")
     val recordsPath = sys.env.getOrElse("SPARK_GRAFT_QUIET_RECORDS",
       s"$repoBase/bench/quiet_records.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // kept for TIMESTAMP(NANOS)-generation testdata (maps it to a
-      // nanos Long); current timestamp[us] testdata is unaffected, and
-      // operators adapt to either via Q.tsUs (EventTimeSchemaSpec)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle files of a GC'd dependency are only deleted after a
-      // DRIVER GC processes the ContextCleaner's weak refs; the 30 min
-      // default leaves a multi-phase composed query (q_graph_composed:
-      // PageRank → LPA → triangles, phases lineage-truncated between)
-      // accumulating every phase's shuffle on disk — at 100× that
-      // filled the box (r11: "No space left on device" at 76 GB free)
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus(32))
     spark.sparkContext.setLogLevel("WARN")
     // JIT/codegen warmup so the first timed query doesn't absorb
     // session + compiler startup (a scan, a shuffle join, an agg)

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // kept for TIMESTAMP(NANOS)-generation testdata (maps it to a
-      // nanos Long); current timestamp[us] testdata is unaffected, and
-      // operators adapt to either via Q.tsUs (EventTimeSchemaSpec)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // let the ContextCleaner reclaim phase-truncated shuffle files
-      // inside long composed queries (see Bench.scala rationale)
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional subset (comma-separated names) for fast local iteration —

@@ -3,6 +3,8 @@ package graft.examples
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
+
 /** The product-analytics layer, composed from the event-tier battery
   * operators: pseudonymize the raw event log first (governance
   * boundary — everything downstream joins on tokens, never raw user
@@ -17,13 +19,7 @@ import org.apache.spark.sql.functions._
 object AnalyticsDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus(32))
     spark.sparkContext.setLogLevel("WARN")
     println(run(spark, sfDir))
     spark.stop()

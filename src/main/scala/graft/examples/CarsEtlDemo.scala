@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 import graft.workflow.{Etl, LoadCsvConfig, LoadQueryConfig}
 
 /** End-to-end demo of the reference workflow (SURVEY §3.1/§3.2) on a
@@ -12,13 +12,7 @@ import graft.workflow.{Etl, LoadCsvConfig, LoadQueryConfig}
 object CarsEtlDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(sys.error("usage: CarsEtlDemo <fixture-dir>"))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$dir/warehouse")
-      .getOrCreate()
+    val spark = Sessions.local(4, Some(s"$dir/warehouse"))
     spark.sparkContext.setLogLevel("WARN")
 
     val status = Etl.carsWorkflow(spark,

@@ -3,6 +3,8 @@ package graft.examples
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
+
 /** The LLM-training-data pipeline, composed end-to-end from the
   * operator battery: PII scrub → repetition quality filter → domain
   * wholesale filter → LM-perplexity tail drop → DSIR target selection
@@ -18,13 +20,7 @@ import org.apache.spark.sql.functions._
 object CorpusPipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus(32))
     spark.sparkContext.setLogLevel("WARN")
     // composed-run scale evidence (VERDICT r8 #5): wall / spill /
     // failures / peak for the whole DAG — see [[PipelineProbe]]
@@ -38,8 +34,8 @@ object CorpusPipelineDemo {
   /** Corpus aggregates for the LOG-ONLY dedup advisor (VERDICT r11 #5
     * / r12 #6): the SAME 3-token shingle sets the near-dup stage
     * measures Jaccard over, plus the coarsest blocking-key occupancy —
-    * three cheap aggregate jobs, the EntropyHeadToHead/derivation
-    * pattern. */
+    * three cheap aggregate jobs, the derivation pattern of the
+    * `bench/entropy_h2h_r13.jsonl` head-to-head. */
   def dedupStats(spark: SparkSession,
                  sfDir: String): graft.operators.ScaleOps.DedupCorpusStats = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

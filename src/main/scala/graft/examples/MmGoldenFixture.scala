@@ -4,7 +4,7 @@ import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Generator for the REAL-codec golden fixture (VERDICT r8 #2: the
   * `javax.imageio` codec was spec-proven but not oracle-gated). Builds
@@ -159,10 +159,7 @@ object MmGoldenFixture {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .appName("mm-golden-fixture").getOrCreate()
+    val spark = Sessions.local(4)
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
     images().map { case (id, m) => (id, encodePng(m)) }

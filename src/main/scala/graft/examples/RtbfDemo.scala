@@ -3,6 +3,7 @@ package graft.examples
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.operators.{DedupQueries, ScaleOps, TakedownAudit, TextQueries,
   ExtraSimilarityQueries => ESQ}
 import graft.streaming.ComposedPipeline
@@ -126,13 +127,7 @@ object RtbfDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val workDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("rtbf").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus(32))
     spark.sparkContext.setLogLevel("WARN")
     val audits = run(spark, sfDir, workDir)
     println("right-to-be-forgotten audit — one request, four surfaces:")

@@ -1,6 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+
+import graft.Sessions
 import org.apache.spark.sql.functions._
 
 /** Replicate a testdata SF directory N× with disjoint key domains per
@@ -20,10 +22,11 @@ import org.apache.spark.sql.functions._
   *
   * An optional 4th arg appends `hotDocs` boilerplate documents that all
   * share ONE text — every MinHash band of those docs lands in the same
-  * band bucket, the worst-case hot key for the dedup band join. Used by
-  * graft.examples.SkewProbe to measure AQE's skew-split bounding that
-  * join's task times (real corpora carry exactly this shape: licence
-  * headers, cookie banners, templated pages).
+  * band bucket, the worst-case hot key for the dedup band join (real
+  * corpora carry exactly this shape: licence headers, cookie banners,
+  * templated pages). AQE's skew-split bounding that join's task times
+  * was measured on it: BASELINE.md "Skewed-key dedup robustness: AQE
+  * skew-split on a hot band bucket, r5".
   *
   * Usage: runMain graft.examples.ScaleUp <srcDir> <destDir> [factor] [hotDocs]
   */
@@ -38,13 +41,7 @@ object ScaleUp {
     val dest = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     val hotDocs = if (args.length > 3) args(3).toInt else 0
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus(32))
     spark.sparkContext.setLogLevel("WARN")
 
     def copies(df: DataFrame)(shift: (DataFrame, Long) => DataFrame): DataFrame =

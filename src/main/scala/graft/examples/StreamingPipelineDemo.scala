@@ -3,6 +3,8 @@ package graft.examples
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
+
 /** The composed STREAMING pipeline as a probe-instrumented main
   * (VERDICT r10 #6): ingest → content dedup within watermark → scrub →
   * LM scoring → stateful per-source counters, chained as the two
@@ -19,13 +21,7 @@ import org.apache.spark.sql.functions._
 object StreamingPipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus(32))
     spark.sparkContext.setLogLevel("WARN")
     val probe = new PipelineProbe(spark)
     println(run(spark, sfDir))

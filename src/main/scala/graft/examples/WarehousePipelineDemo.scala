@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Sessions
+
 /** The warehouse-maintenance pipeline, composed end-to-end from the
   * operator battery: incremental CSV ingest (checkpointed streaming
   * drain) → column profile → data-quality expectations gate → SCD2
@@ -22,13 +24,7 @@ import org.apache.spark.sql.types._
 object WarehousePipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus(32))
     spark.sparkContext.setLogLevel("WARN")
     val probe = new PipelineProbe(spark)
     println(run(spark, sfDir))

@@ -543,22 +543,6 @@ ORDER BY d.doc_id"""
       .select(col("doc_a"), col("doc_b"), round(col("jac"), 4).as("jaccard"))
   }
 
-  /** Verified MinHash near-dup pairs (doc_a < doc_b, jaccard ≥
-    * threshold), shared by the pair and cluster queries. Candidate
-    * generation is a self-equi-join on (band, bandHash) — at scale a
-    * plain shuffle join on a key whose cardinality grows with the
-    * corpus, so no quadratic blowup; candidates then verified with
-    * exact Jaccard on the shingle sets. Only ids travel through the
-    * band join + distinct (shuffling the shingle sets there would be
-    * the 100 TB mistake); sets are re-attached afterwards for verify.
-    * Uses the native single-pass expressions (graft.plans) — the HOF
-    * chain is interpreted per element and was the whole-query
-    * bottleneck. */
-  /** The LSH band-candidate leg on its own: signatures → per-band
-    * (band, bandHash) keys → self-equi-join → raw (doc_a < doc_b)
-    * candidates (NOT distinct'd — callers dedup). Public so the skew
-    * probe (graft.examples.SkewProbe) can measure exactly this join
-    * under a deliberately hot band bucket. */
   /** Per-document LSH band index (doc_id, band, bh) — as a maintained
     * corpus artifact this is THE incremental-dedup enabler: a corpus
     * table bucketed by (band, bh) that new batches equi-join against
@@ -571,7 +555,13 @@ ORDER BY d.doc_id"""
       .select(col("doc_id"),
         posexplode(lshBands(col("mh"), Bands, RowsPerBand)).as(Seq("band", "bh")))
 
-  def bandCandidates(docs: org.apache.spark.sql.DataFrame)
+  /** The LSH band-candidate leg on its own: signatures → per-band
+    * (band, bandHash) keys → self-equi-join → raw (doc_a < doc_b)
+    * candidates (NOT distinct'd — callers dedup). Its behaviour under
+    * a deliberately hot band bucket is measured in BASELINE.md
+    * "Skewed-key dedup robustness: AQE skew-split on a hot band
+    * bucket, r5". */
+  private def bandCandidates(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val sig = bandIndex(docs)
     val a = sig.select(col("doc_id").as("doc_a"), col("band"), col("bh"))
@@ -620,6 +610,17 @@ ORDER BY d.doc_id"""
     batch.join(broadcast(drops), col("doc_id") === col("new_id"), "left_anti")
   }
 
+  /** Verified MinHash near-dup pairs (doc_a < doc_b, jaccard ≥
+    * threshold), shared by the pair and cluster queries. Candidate
+    * generation is a self-equi-join on (band, bandHash) — at scale a
+    * plain shuffle join on a key whose cardinality grows with the
+    * corpus, so no quadratic blowup; candidates then verified with
+    * exact Jaccard on the shingle sets. Only ids travel through the
+    * band join + distinct (shuffling the shingle sets there would be
+    * the 100 TB mistake); sets are re-attached afterwards for verify.
+    * Uses the native single-pass expressions (graft.plans) — the HOF
+    * chain is interpreted per element and was the whole-query
+    * bottleneck. */
   private def minhashPairs(s: org.apache.spark.sql.SparkSession,
                            dir: String): org.apache.spark.sql.DataFrame = {
     // NOT pinned (r19 measured): the two verify attaches re-evaluate
@@ -693,9 +694,9 @@ ORDER BY d.doc_id"""
     * first `nCells` corpus vectors as the fixed deterministic init),
     * within-cell pairwise cosine ≥ `theta`, greedy keep-lowest-id.
     * Returns the kept (vec_id, label). `nCells` must scale with the
-    * corpus (SemDeDup's contract: cells stay constant-size) — the
-    * scale probe (examples.SemanticScaleProbe) runs 10× data with 10×
-    * cells to show the per-cell pair work staying flat. */
+    * corpus (SemDeDup's contract: cells stay constant-size) — 10×
+    * data with 10× cells keeps the per-cell pair work flat (BASELINE.md
+    * "10× scale ratios for the r5 operators", q_dedup_semantic). */
   def semanticKeep(e: org.apache.spark.sql.DataFrame, nCells: Int,
                    theta: Double): org.apache.spark.sql.DataFrame = {
     val drops = cellBlockedCosinePairs(e, nCells, theta)
@@ -726,7 +727,7 @@ ORDER BY d.doc_id"""
     * then within-cell pairwise fused cosine ≥ `theta` — a plain
     * equi-join on cent_id, so pair volume is Σ cell² not n², and
     * `nCells` grows with the corpus to keep cells constant-size
-    * (SemDeDup's contract; examples.SemanticScaleProbe measures it).
+    * (SemDeDup's contract; see [[semanticKeep]] for the measurement).
     * Returns (a_id, b_id, cos). [[semanticKeep]] derives its drop set
     * from these pairs. */
   def cellBlockedCosinePairs(e: org.apache.spark.sql.DataFrame, nCells: Int,

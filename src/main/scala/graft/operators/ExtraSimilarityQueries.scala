@@ -72,10 +72,10 @@ object ExtraSimilarityQueries {
           graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv")),
       iters)
 
-  /** The parameterized trainer behind [[lloydCentroids]] — exposed
-    * (private[graft]) so the ANN operating-curve probe
-    * ([[graft.examples.AnnOperatingCurve]]) sweeps cell counts over
-    * the SAME production training path the gate exercises.
+  /** The parameterized trainer behind [[lloydCentroids]]. The ANN
+    * operating curve (`bench/ann_curve_10x_r13.jsonl`,
+    * `bench/ann_curve_10x_r14.jsonl`) swept cell counts over this SAME
+    * production training path the gate exercises.
     * `corpus` = (vec_id, ev), `init` = (cent_id, cv double[]). */
   private[graft] def lloydTrain(corpus: org.apache.spark.sql.DataFrame,
                                 init: org.apache.spark.sql.DataFrame,
@@ -269,8 +269,8 @@ object ExtraSimilarityQueries {
     * TWO separate assign/encode passes over the frozen artifacts,
     * unioned — corpus state is never recomputed when a batch
     * arrives. */
-  // private[graft]: the TombstoneCarryProbe sweeps carry-vs-compact
-  // over the SAME production index construction the gates exercise
+  // private[graft]: RtbfDemo audits its ANN takedown over the SAME
+  // production index construction the gates exercise
   private[graft] final case class FrozenAnnIndex(
       cents: org.apache.spark.sql.DataFrame,
       cb: org.apache.spark.sql.DataFrame,
@@ -320,7 +320,7 @@ object ExtraSimilarityQueries {
     * externally supplied cell/code tables — broadcast query batch,
     * broadcast LUT, native TopKPerKey. Output: (query_id, rank,
     * vec_id, is_new, adc) with `is_new` marking batch-side rows. */
-  private[graft] def ivfPqSearch(e: org.apache.spark.sql.DataFrame,
+  private def ivfPqSearch(e: org.apache.spark.sql.DataFrame,
                           idx: FrozenAnnIndex)
       : org.apache.spark.sql.DataFrame = {
     val qraw = e.filter(col("vec_id") >= NCentroids && col("vec_id") < 13)

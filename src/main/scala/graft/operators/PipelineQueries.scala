@@ -318,8 +318,8 @@ object PipelineQueries {
         // SUM of phase footprints instead of their MAX, which at the
         // 100× replica filled the box (r11, 76 GB free → ENOSPC). The
         // ContextCleaner then reclaims the dead files mid-query
-        // (periodicGC.interval is lowered in the Bench/Verify
-        // sessions for exactly this row).
+        // (periodicGC.interval is lowered in graft.Sessions for
+        // exactly this row).
         // The PageRank, LPA AND triangle phases are independent until
         // the final stats union — run all three CONCURRENTLY from
         // driver threads (guide §2.6 "overlap independent jobs"): the

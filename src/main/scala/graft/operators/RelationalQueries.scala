@@ -326,8 +326,8 @@ object RelationalQueries {
     // RETIRE-OR-KEEP decision (VERDICT r11 #7 / r12 #7): KEPT — the
     // exact segment join dominates it at every measured operating
     // point, but this row is the LOSSY BASELINE every fuzzy
-    // head-to-head (FuzzyTierRemeasure, EntropyHeadToHead, the
-    // advisor's rationale prose) compares the exact operators
+    // head-to-head (bench/fuzzy_remeasure_100x_r13.jsonl,
+    // bench/entropy_h2h_r13.jsonl, the advisor's rationale prose) compares the exact operators
     // against; retiring it would leave the measured "exact recall AND
     // faster" claims without their in-battery reference row.
     //
@@ -411,7 +411,7 @@ object RelationalQueries {
     //
     // GATE OPERATING POINT (VERDICT r12 #2): the gate key is
     // gram-DIVERSE — 20 base64 chars of the document's md5 (the
-    // EntropyHeadToHead corpus shape: ~6 bits/char, 4-gram vocabulary
+    // bench/entropy_h2h_r13.jsonl corpus shape: ~6 bits/char, 4-gram vocabulary
     // 64⁴ ≈ 16.7 M ≫ corpus grams, postings ≈ 1), with deterministic
     // planted single-edit mutants (id + 1e9, every 5th doc; position
     // and replacement char hash-derived, so DuckDB replays them

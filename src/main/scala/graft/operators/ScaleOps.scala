@@ -642,9 +642,9 @@ object ScaleOps {
     * reach at that candidate volume, so this curve prices the nprobe
     * knob (VERDICT r16 #4). On the clustered K=32 geometry routing
     * saturates far earlier — measured 1.000 at nprobe=4
-    * (`bench/clustered_ann_r14.jsonl`, the ResidualCeilingProbe
-    * routing ceiling) — so the isotropic curve is the conservative
-    * side and the clustered branch pins nprobe=4. */
+    * (`bench/clustered_ann_r14.jsonl`, routing-ceiling rows) — so
+    * the isotropic curve is the conservative side and the clustered
+    * branch pins nprobe=4. */
   val MeasuredRoutingRecallByNprobe: Seq[(Int, Double, Double)] =
     Seq((1, 0.917, 0.016), (2, 0.926, 0.032), (4, 0.946, 0.064),
       (8, 0.956, 0.128), (16, 0.968, 0.255))
@@ -700,10 +700,11 @@ object ScaleOps {
   /** Per-dimension variance imbalance (max/min over dims) above which
     * the advisor recommends the variance-balancing SNAKE subspace
     * permutation before anything else. Calibrated r16 from both
-    * measured spectra (`bench/clustered_ann_r16.jsonl`,
-    * `ResidualCeilingProbe`): at ratio ≈ e⁶ ≈ 400 (decaying spectrum,
-    * both correlated modes) the free permutation bought +0.33–0.35
-    * recall@10 at m=8 and +0.19–0.21 at m=16 — the largest single
+    * measured spectra (`bench/clustered_ann_r16.jsonl`, BASELINE.md
+    * "OPQ decomposed on correlated residual geometries, r16"): at
+    * ratio ≈ e⁶ ≈ 400 (decaying spectrum, both correlated modes) the
+    * free permutation bought +0.33–0.35 recall@10 at m=8 and
+    * +0.19–0.21 at m=16 — the largest single
     * effect in the sweep — while at ratio ≈ 1 (the i.i.d. r15 legs)
     * it was a two-sided null (−0.8 to −2.4 pts). As with
     * [[EdJoinCandidateBudgetPerRow]] the SIGN on each side is
@@ -892,7 +893,7 @@ object ScaleOps {
     * the tombstones, partitioning is preserved). One-pass rewrite vs
     * a perpetual 25 % read tax is the standard LSM/segment-merge
     * break-even region. MEASURED in both regimes on the gates' own
-    * 10× frozen-codebook index (`TombstoneCarryProbe`): cached —
+    * 10× frozen-codebook index: cached —
     * rewrite 0.28–0.71 s (one anti-join map pass), break-even 2–3
     * reads (`bench/tombstone_carry_r17.jsonl`); cold-file (r18,
     * parquet-resident index, REAL parquet rewrite) — the rewrite
@@ -979,7 +980,6 @@ object ScaleOps {
     * unvalidated 64 the advisor shipped with (VERDICT r12 #1).
     *
     * VALIDATED AT THE BOUNDARY in r14 (VERDICT r13 #5,
-    * `graft.examples.MidEntropyCrossover`,
     * `bench/midentropy_crossover_r14.jsonl`): tunable-gram-vocab
     * corpora (20-char keys over restricted alphabets, 520 k rows,
     * identical match sets asserted) at avgDf 55 / 174 / 230 / 426 —
@@ -1121,27 +1121,17 @@ object ScaleOps {
       .groupBy(col("p")).agg(min(col("v")).as("value"))
   }
 
-  /** Shuffle granularity for [[qgramFuzzyJoin]]'s candidate join: one
-    * cheap aggregate over the key column, sized from the PREFIX-gram
+  /** Shuffle granularity for [[qgramFuzzyJoin]]'s candidate join from
+    * the corpus row count and key bytes, sized from the PREFIX-gram
     * table the join actually shuffles — `q·maxDist + 1` rows per
     * string, each carrying the full key string plus ~48 B of id/gram
     * bookkeeping; the right side replicates ×9 through the band ×
     * position-bucket neighborhood explode (1 left + 9 right = ×10).
     * Degenerates to the session constant at gate scale like every
-    * other derivation ([[deriveShufflePartitions]]). */
-  def deriveQgramPartitions(df: DataFrame, c: String,
-                            q: Int, maxDist: Int): Int = {
-    val row = df.agg(count(lit(1)).as("n"),
-      sum(octet_length(col(c))).as("kb")).head()
-    val n = row.getLong(0)
-    val keyBytes = if (row.isNullAt(1)) 0L else row.getLong(1)
-    qgramPartitionsFromStats(df.sparkSession, n, keyBytes, q, maxDist)
-  }
-
-  /** [[deriveQgramPartitions]] body with the row stats already in hand
-    * — lets [[deriveQgramParams]] reuse its own single row-level
-    * aggregate instead of re-scanning the corpus for the same two
-    * numbers (r20 job-count fusion). */
+    * other derivation ([[deriveShufflePartitions]]). Takes the row
+    * stats already in hand, so [[deriveQgramPlan]] reuses its own
+    * single row-level aggregate instead of re-scanning the corpus for
+    * the same two numbers (r20 job-count fusion). */
   private def qgramPartitionsFromStats(ss: SparkSession, n: Long,
                                        keyBytes: Long,
                                        q: Int, maxDist: Int): Int = {
@@ -1158,8 +1148,9 @@ object ScaleOps {
     * is the mean postings-list length. On the 10× replica the probe
     * measured exactly the predicted ordering (q=2: vocab 142,
     * avgDf 9591, 138.6 s; q=4: vocab 1782, avgDf 708, 52.7 s —
-    * identical 210 429 pairs at every q; `QgramProbe`,
-    * bench/qgram_q_10x.jsonl). Walks q upward while the predicted
+    * identical 210 429 pairs at every q; measured r11 — no committed
+    * artifact holds the 10× sweep, the 100× vocabulary is in
+    * BASELINE.md "Exact edit-distance joins, r11"). Walks q upward while the predicted
     * volume keeps strictly improving; `qMax` defaults to 4 because
     * the short-string fallback absorbs keys under `q·(maxDist+1)`
     * chars — at q=5, d=4 that is 25 chars, swallowing typical
@@ -1556,7 +1547,7 @@ object ScaleOps {
     // pair meeting through k shared prefix grams is verified k times —
     // k ≤ q·d+1 extra verifies on the small matched set, orders less
     // work than shuffling the full candidate volume (measured 1.9× on
-    // the 10× replica, bench/qgram_q_10x.jsonl).
+    // the 10× replica in r11; no committed artifact holds that run).
     gramCand.unionByName(shortCand)
       .filter(abs(length(col(leftCol)) - length(col(rightCol))) <= d)
       .withColumn(distCol,

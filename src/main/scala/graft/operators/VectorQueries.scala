@@ -18,9 +18,8 @@ object VectorQueries {
 
   /** Parameterized PQ building blocks, shared by the `q_ann_pq_recall`
     * gate (m = 8, subDim = 8 — the oracle-replayed operating point)
-    * and the ANN operating-curve probe
-    * ([[graft.examples.AnnOperatingCurve]]), which sweeps `m` over the
-    * SAME production path instead of a private copy. */
+    * and the ANN operating curve, which swept `m` over the SAME
+    * production path (`bench/ann_curve_10x_r14.jsonl`). */
   private[graft] def pqSqd(a: org.apache.spark.sql.Column,
                            b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val d = graft.functions.VectorFunctions.dot _

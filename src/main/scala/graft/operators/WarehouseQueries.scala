@@ -37,6 +37,21 @@ object WarehouseQueries {
   def profileColumns(df: org.apache.spark.sql.DataFrame,
                      cols: Seq[String],
                      exact: Boolean = true): org.apache.spark.sql.DataFrame = {
+    val stackArgs = cols.map(c =>
+      s"'$c', null_$c, dist_$c, min_$c, max_$c").mkString(", ")
+    profileRow(df, cols, exact)
+      .selectExpr(s"stack(${cols.size}, $stackArgs) AS " +
+        "(col_name, n_null, n_distinct, min_v, max_v)")
+      .orderBy(col("col_name"))
+  }
+
+  /** The one-row aggregate behind [[profileColumns]] and
+    * q_profile_columns_approx: per profiled column `c`, `null_c`,
+    * `dist_c` (exact or sketched per `exact`), and `min_c`/`max_c` as
+    * strings. */
+  private def profileRow(df: org.apache.spark.sql.DataFrame,
+                         cols: Seq[String],
+                         exact: Boolean): org.apache.spark.sql.DataFrame = {
     // STRING-buffered aggregates (min/max over string columns) are
     // split into their own grouping-free aggregate (r19, guide §7.2
     // "read the plan"): HashAggregate requires mutable fixed-size
@@ -65,16 +80,12 @@ object WarehouseQueries {
       Seq(min(col(c)).cast("string").as(s"min_$c"),
         max(col(c)).cast("string").as(s"max_$c"))
     }
-    val stackArgs = cols.map(c =>
-      s"'$c', null_$c, dist_$c, min_$c, max_$c").mkString(", ")
     val main = df.agg(mainAggs.head, mainAggs.tail: _*)
-    val joined =
-      if (strAggs.isEmpty) main
-      else main.crossJoin(broadcast(df.agg(strAggs.head, strAggs.tail: _*)))
-    joined
-      .selectExpr(s"stack(${cols.size}, $stackArgs) AS " +
-        "(col_name, n_null, n_distinct, min_v, max_v)")
-      .orderBy(col("col_name"))
+    // empty-guard (ADVICE r19 #2): a profiled column set with no string
+    // column must skip the string leg instead of throwing at
+    // strAggs.head during plan construction
+    if (strAggs.isEmpty) main
+    else main.crossJoin(broadcast(df.agg(strAggs.head, strAggs.tail: _*)))
   }
 
   def specs: Seq[Q.Spec] = Seq(
@@ -267,35 +278,12 @@ object WarehouseQueries {
       (s, dir) => {
         val cols = ProfiledOrderCols
         val orders = t(s, dir, "orders")
-        // string min/max split out of the exact aggregate for the same
-        // SortAggregate-demotion reason as profileColumns (r19) — one
-        // string buffer would drag the countDistinct Expand into
-        // sort-based aggregation
-        val strCols = cols.filter(c => orders.schema(c).dataType ==
-          org.apache.spark.sql.types.StringType).toSet
-        val exactAggs = cols.flatMap { c =>
-          Seq(sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"null_$c"),
-            countDistinct(col(c)).as(s"dist_$c")) ++
-            (if (strCols(c)) Nil
-             else Seq(min(col(c)).cast("string").as(s"min_$c"),
-               max(col(c)).cast("string").as(s"max_$c")))
-        }
-        val strAggs = cols.filter(strCols).flatMap { c =>
-          Seq(min(col(c)).cast("string").as(s"min_$c"),
-            max(col(c)).cast("string").as(s"max_$c"))
-        }
         val sketchAggs = cols.map(c =>
           approx_count_distinct(col(c), 0.01).as(s"approx_$c"))
         val stackArgs = cols.map(c =>
           s"'$c', null_$c, dist_$c, approx_$c, min_$c, max_$c")
           .mkString(", ")
-        // empty-guard like profileColumns (ADVICE r19 #2): a profiled
-        // column set with no string column must skip the string leg
-        // instead of throwing at strAggs.head during plan construction
-        val exactLeg = orders.agg(exactAggs.head, exactAggs.tail: _*)
-        (if (strAggs.isEmpty) exactLeg
-         else exactLeg.crossJoin(
-           broadcast(orders.agg(strAggs.head, strAggs.tail: _*))))
+        profileRow(orders, cols, exact = true)
           .crossJoin(orders.agg(sketchAggs.head, sketchAggs.tail: _*))
           .selectExpr(s"stack(${cols.size}, $stackArgs) AS " +
             "(col_name, n_null, n_distinct, approx, min_v, max_v)")

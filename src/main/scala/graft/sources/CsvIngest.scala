@@ -188,7 +188,4 @@ object TableSink {
   def save(df: DataFrame, table: String, append: Boolean): Unit =
     df.write.mode(if (append) "append" else "overwrite")
       .format("parquet").saveAsTable(table)
-
-  def saveToPath(df: DataFrame, path: String, append: Boolean): Unit =
-    df.write.mode(if (append) "append" else "overwrite").parquet(path)
 }

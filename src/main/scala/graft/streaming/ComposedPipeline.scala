@@ -86,9 +86,9 @@ object ComposedPipeline {
     dir.stripSuffix("/") + s"/batch_id=$batchId"
 
   /** Q1's foreachBatch body — per-micro-batch LM scoring + idempotent
-    * silver append. Extracted so the replay test and the scale probe
-    * ([[graft.examples.StreamScaleProbe]]) exercise the SHIPPED batch
-    * path, not a private copy. Calling it twice with the same
+    * silver append. Extracted so the replay test and the 10× streaming
+    * runs (`bench/stream_scale_10x_r16.jsonl`) exercise the SHIPPED
+    * batch path, not a private copy. Calling it twice with the same
     * `batchId` (the at-least-once replay) leaves silver unchanged.
     *
     * Arrivals are anti-joined against the takedown LEDGER (ADVICE

@@ -40,8 +40,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * sound only if the file source delivers a rewritten batch-N
   * partition before any file of a batch ≥ N + [[SeenBatchWindow]].
   * FileStreamSource orders by modification time, so this holds on
-  * local-FS delivery where the repo already manages mtimes
-  * explicitly (see StreamScaleProbe's restamp); on stores with
+  * local-FS delivery with explicitly managed mtimes (the 10×
+  * streaming runs in `bench/stream_scale_10x_r16.jsonl` restamped
+  * each batch's files); on stores with
   * coarse mtime granularity or clock regression a replay could
   * arrive after its memory was evicted and double-count. The window
   * is therefore set WIDER than the minimal 2 the replay argument

@@ -60,18 +60,27 @@ class EventTimeSchemaSpec extends AnyFunSuite {
   // nanosAsLong read path is untestable here (the test above covers
   // only the LongType branch of Q.tsUs). Guard the conf statically
   // instead: dropping it from a driver entry point would silently skip
-  // the legacy generation, so every entry-point builder must set it.
+  // the legacy generation, so the one session factory must set it and
+  // every entry point must build its session through that factory.
   test("every driver entry point pins spark.sql.legacy.parquet.nanosAsLong") {
+    val factory = "src/main/scala/graft/Sessions.scala"
     val entryPoints = Seq(
       "src/main/scala/graft/Bench.scala",
       "src/main/scala/graft/Verify.scala",
       "src/test/scala/graft/TestSpark.scala")
-    entryPoints.foreach { p =>
+    (factory +: entryPoints).foreach { p =>
       val txt = new String(Files.readAllBytes(
         java.nio.file.Paths.get(s"/root/repo/$p")), "UTF-8")
-      assert(txt.contains("spark.sql.legacy.parquet.nanosAsLong"),
-        s"$p builds a SparkSession without the nanosAsLong conf — the " +
-          "TIMESTAMP(NANOS) testdata generation would break silently")
+      if (p == factory)
+        assert(txt.contains("spark.sql.legacy.parquet.nanosAsLong"),
+          s"$p builds a SparkSession without the nanosAsLong conf — the " +
+            "TIMESTAMP(NANOS) testdata generation would break silently")
+      else
+        assert(txt.contains("Sessions.local(") &&
+          !txt.contains("SparkSession.builder"),
+          s"$p builds its SparkSession outside graft.Sessions, which " +
+            "pins the nanosAsLong conf")
     }
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
   }
 }

@@ -486,7 +486,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       distinctShingles = 4782L, worstBlockOccupancy = 97000L)
     val advLow = adviseDedup(measuredLowEntropy, EditDistance(maxDist = 4, q = 4))
     assert(advLow.operator == "segment_edit_join")
-    // r14 BOUNDARY validation (MidEntropyCrossover, bench/
+    // r14 BOUNDARY validation (bench/
     // midentropy_crossover_r14.jsonl): tunable-vocab corpora at 520 k
     // rows STRADDLE the 3000-candidate budget — avgDf 174 (2 958
     // cand/row) measured qgram 63.7 s < segment 67.1 s; avgDf 230

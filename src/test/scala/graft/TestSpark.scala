@@ -2,19 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (SURVEY §5). */
+/** One shared local session for all suites (SURVEY §5), built by the
+  * same [[Sessions]] factory as Bench and Verify. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
+    val s = Sessions.local(4, Some(
+      java.nio.file.Files.createTempDirectory("graft-wh").toString))
     s.sparkContext.setLogLevel("ERROR")
     s
   }
