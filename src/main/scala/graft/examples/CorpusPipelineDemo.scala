@@ -159,7 +159,7 @@ object CorpusPipelineDemo {
     // stage's lineage from the scan). A production DAG persists the
     // tiny per-stage keep-sets (doc_id projections, columnar
     // MEMORY_AND_DISK — disk-evictable, lineage intact, the
-    // GraphQueries.materialize rule), so the survivors join and every
+    // ScaleOps.materializePinned rule), so the survivors join and every
     // downstream station reuse them instead of recomputing. All pins
     // released before returning.
     val pinned =

@@ -441,7 +441,7 @@ ORDER BY d.doc_id"""
     // the cluster storage budget; a 100 TB corpus stays lazy instead
     // of spilling a corpus-sized array column to executor disk.
     def hydratedEst(df: org.apache.spark.sql.DataFrame): Long =
-      ScaleOps.planBytes(df).*(8L).min(BigInt(Long.MaxValue)).toLong
+      ScaleOps.planBytes(df, 8)
     val bs = ScaleOps.materializePinned(withSets(batch), hydratedEst(batch))
     val cs = ScaleOps.materializePinned(withSets(corpus), hydratedEst(corpus))
     val corpusInv = cs.select(col("doc_id"), explode(col("s")).as("sh"))

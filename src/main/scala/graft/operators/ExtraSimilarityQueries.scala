@@ -87,8 +87,8 @@ object ExtraSimilarityQueries {
     // — the caller's own passes over an equal plan reuse the cache via
     // the CacheManager's plan match.
     val corpusP =
-      if (iters > 0) ScaleOps.materializePinned(corpus,
-        (ScaleOps.planBytes(corpus) * 2).min(BigInt(Long.MaxValue)).toLong)
+      if (iters > 0)
+        ScaleOps.materializePinned(corpus, ScaleOps.planBytes(corpus, 2))
       else corpus
     var cents = init
     for (_ <- 0 until iters) {

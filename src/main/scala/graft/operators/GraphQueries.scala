@@ -18,104 +18,21 @@ import org.apache.spark.sql.functions._
 object GraphQueries {
   import Q._
 
-  /** Materialize a many-times-reused edge table as COMPRESSED COLUMNAR
-    * cache (InMemoryRelation, MEMORY_AND_DISK) instead of
-    * `localCheckpoint`. The r9 8 g probe against the 100× replica OOMed
-    * both iterative rows through exactly this seam: localCheckpoint
-    * stores the ~100 M-row symmetrized edge list as deserialized
-    * per-row objects (~5+ GB of heap at 100×), competes with every
-    * task's execution memory, and — because it truncates lineage — a
-    * lost block is unrecoverable ("Block rdd_186_29 does not exist").
-    * The columnar cache is a fraction of the size, evicts to disk
-    * under pressure, and an evicted block RECOMPUTES from lineage
-    * instead of crashing the job. Plan-growth truncation (the reason
-    * localCheckpoint exists here) is still applied, but only to the
-    * small per-round state tables (|V| rows), never to the edge list. */
-  private def materialize(df: DataFrame): DataFrame = {
-    // already-cached fast path: a composed session that pinned this
-    // exact (canonical) plan via materializeShared owns the pin —
-    // re-persisting would only log "Asked to cache already cached
-    // data" and double-register the release. storageLevel is the
-    // public plan-equivalence probe into the CacheManager.
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-      df.count()
-      return df
-    }
-    val out = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // register BEFORE the materializing count: if the count dies
-    // (OOM/cancellation), the harness' finally-side unpersistAll()
-    // must still find and release the pin — registering after would
-    // resurrect the leak on exactly the failure paths
-    synchronized { persisted += out }
-    out.count()
-    out
+  /** Release everything the last query holds: every pin and broadcast
+    * in the [[ScaleOps]] registry (graph edge/degree caches, the
+    * triangle close array, shingle-set and LM-score pins, the q-gram
+    * df map). The one release hook — Bench, Verify, PlanDump and the
+    * specs call it once the query's FINAL result has materialized:
+    * releasing earlier would silently recompute the iterative joins
+    * from lineage. Non-blocking — eviction proceeds in the background
+    * while the next query plans. Process-wide: see the registry's
+    * sequential-harness note in [[ScaleOps]]. */
+  def unpersistAll(): Unit = ScaleOps.synchronized {
+    ScaleOps.pinnedFrames.foreach(_.unpersist(blocking = false))
+    ScaleOps.pinnedFrames.clear()
+    ScaleOps.pinnedBroadcasts.foreach(_.destroy()) // non-blocking in Spark 3+
+    ScaleOps.pinnedBroadcasts.clear()
   }
-
-  /** Caches pinned by [[materialize]] since the last [[unpersistAll]].
-    * VERDICT r9: without a lifecycle, every graph query leaked 2–3
-    * cached edge/degree tables into the session for the rest of the
-    * battery ("Asked to cache already cached data" warnings, stale
-    * cache competing with live execution memory in a long-lived
-    * composed session). */
-  private val persisted =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Release every edge/degree cache the last graph query pinned. Call
-    * once the query's FINAL aggregate has materialized (the bench /
-    * verify harnesses do this per-query): unpersisting earlier would
-    * silently recompute the iterative joins from lineage. Non-blocking
-    * — eviction proceeds in the background while the next query plans.
-    *
-    * SEQUENTIAL-HARNESS ASSUMPTION (ADVICE r10): the registry is
-    * process-wide, so two graph queries running CONCURRENTLY on one
-    * JVM could have their pins released mid-iteration by the other's
-    * finally-side unpersistAll — silent recomputation, never wrong
-    * results (lineage rebuilds the cache). Bench/Verify run queries
-    * strictly one at a time, which is the supported mode; a harness
-    * that interleaves graph queries must scope releases itself. */
-  def unpersistAll(): Unit = {
-    synchronized {
-      persisted.foreach(_.unpersist(blocking = false))
-      persisted.clear()
-      broadcasts.foreach(_.destroy()) // non-blocking in Spark 3+
-      broadcasts.clear()
-    }
-    // the generic per-query pins (shingle-set / LM-score caches, r19)
-    // share this release hook — Bench/Verify/specs already call it in
-    // their per-query finally, so one call site frees every pin family
-    ScaleOps.unpersistPinned()
-  }
-
-  /** Release ONE registered pin, leaving the rest alive — the scoped
-    * form a composed session needs between phases (r20): the trade
-    * graph's pin is released the moment both its consumers are
-    * checkpointed, while the co-order graph built CONCURRENTLY by the
-    * triangle phase keeps its pin until the harness' end-of-query
-    * [[unpersistAll]]. A blanket release there would drop the sibling
-    * phase's cache mid-iteration (silent recompute, the ADVICE r10
-    * hazard). No-op when `df` was never registered. */
-  def release(df: DataFrame): Unit = synchronized {
-    val i = persisted.indexWhere(_ eq df)
-    if (i >= 0) {
-      persisted.remove(i).unpersist(blocking = false)
-    }
-  }
-
-  /** Broadcast variables owned by the current graph query (the packed
-    * edge-set probe below) — destroyed by the same per-query
-    * [[unpersistAll]] hook as the DataFrame pins. */
-  private val broadcasts =
-    scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.broadcast.Broadcast[_]]
-
-  /** Materialize a SHARED edge table with the same registry lifecycle
-    * as the per-algorithm internal caches — the "materialize once,
-    * analyze many" production pattern (VERDICT r10 #7): a composed
-    * session builds the symmetrized trade graph one time and runs
-    * PageRank + LPA off the same pinned columnar copy, instead of each
-    * algorithm re-scanning parquet and re-joining. Released by the
-    * same harness-side [[unpersistAll]] as every other graph cache. */
-  def materializeShared(df: DataFrame): DataFrame = materialize(df)
 
   /** Fixed iteration count for the gate — unrolled as explicit CTEs in
     * the DuckDB oracle, so keep the two in sync. */
@@ -157,8 +74,9 @@ object GraphQueries {
     // below also becomes exchange-free (clustered by src already) and
     // deg's cache inherits hash(src), so the per-round deg attach is
     // exchange-free too. Results are bit-identical — partitioning only.
-    val e = materialize(edges.select(col("src"), col("dst")))
-    val deg = materialize(e.groupBy(col("src")).agg(count(lit(1)).as("d")))
+    val e = ScaleOps.materializePinned(edges.select(col("src"), col("dst")))
+    val deg = ScaleOps.materializePinned(
+      e.groupBy(col("src")).agg(count(lit(1)).as("d")))
     var ranks = deg.select(col("src").as("node"), lit(1000000L).as("r"))
     for (k <- 1 to iters) {
       ranks = e.join(ranks, e("src") === ranks("node"))
@@ -221,7 +139,7 @@ object GraphQueries {
     // (see the pagerank spec's derivation note). 0 keeps the session
     // default.
     val symSelf = sym.union(nodes.select(col("src"), col("src").as("dst")))
-    val e = materialize(
+    val e = ScaleOps.materializePinned(
       if (np > 0) symSelf.repartition(np, col("src"))
       else symSelf.repartition(col("src")))
     val bounds = e.agg(max(col("src")).as("mx"), count(lit(1)).as("n")).head()
@@ -281,7 +199,7 @@ object GraphQueries {
     * bit-identical across plans and aggregation orders.
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val e = materialize(edges.select(col("u"), col("v")))
+    val e = ScaleOps.materializePinned(edges.select(col("u"), col("v")))
     val smallerFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
     val ss = edges.sparkSession
@@ -305,26 +223,16 @@ object GraphQueries {
     // (min(slots, parts) would undercount exactly when
     // shuffle.partitions < cores, the fixed-32-partition config that
     // motivated this derivation) — but the slots that matter are the
-    // ones SHARING ONE HEAP: per-executor cores on a cluster,
-    // defaultParallelism only in local mode (see
-    // ScaleOps.concurrentSlotsPerHeap; cluster-wide parallelism
-    // against one executor's heap would inflate `needed` by the
-    // executor count and flip this join to the SMJ fallback on
-    // exactly the large deployments it exists for)
-    val conc = ScaleOps.concurrentSlotsPerHeap(ss)
-    // spark.executor.memory is authoritative when set (cluster mode
-    // always sets it); the Runtime.maxMemory fallback is LOCAL-MODE
-    // ONLY — in local mode driver == executor JVM so it reads the true
-    // heap, while in cluster mode it would read the driver's heap and
-    // could under-partition the builds
-    val heap = ss.conf.getOption("spark.executor.memory")
-      .map(ScaleOps.parseJvmBytes)
-      .getOrElse(Runtime.getRuntime.maxMemory)
+    // ones SHARING ONE HEAP, which is what ScaleOps.heapPartitions
+    // divides by (cluster-wide parallelism against one executor's heap
+    // would inflate `needed` by the executor count and flip this join
+    // to the SMJ fallback on exactly the large deployments it exists
+    // for)
     // deg is MATERIALIZED (r20): both attach joins consume it, and the
     // pin makes |V| exactly knowable, which gates the broadcast attach
     // below — the |V|-sized table beside an |E|-sized cache is never
     // the memory problem.
-    val deg = materialize(e.select(col("u").as("n"))
+    val deg = ScaleOps.materializePinned(e.select(col("u").as("n"))
       .union(e.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d")))
     val nV = deg.count() // cache-backed
@@ -338,9 +246,9 @@ object GraphQueries {
     // every concurrent |V|/np build fits the same tenth-of-heap bound
     // as the wedge builds (ADVICE r19 #3: the deg joins now share the
     // wedge joins' derivation instead of riding the session default).
-    val degBcast = nV * 48L <= heap / 16L
-    val npDeg = math.max(parts.toLong,
-      math.ceil(nV.toDouble * 48.0 * conc / (0.1 * heap)).toLong).toInt
+    val degBcast = ScaleOps.fitsBroadcast(ss, nV * 48L)
+    val npDeg =
+      math.max(parts.toLong, ScaleOps.heapPartitions(ss, nV * 48L)).toInt
     def degSide(k: String, d: String): DataFrame = {
       val p = deg.select(col("n").as(k), col("d").as(d))
       if (degBcast) broadcast(p)
@@ -374,7 +282,7 @@ object GraphQueries {
     // partitions and the query completes with bounded memory AND
     // bounded disk. Only if the derivation overflows the 4096-
     // partition cap does the spillable sort-merge plan take over.
-    val needed = math.ceil(m.toDouble * 96.0 * conc / (0.1 * heap)).toLong
+    val needed = ScaleOps.heapPartitions(ss, m * 96L)
     val np = math.max(parts.toLong, needed).toInt
     val hashFits = needed <= 4096L
     def hinted(df: DataFrame): DataFrame =
@@ -401,14 +309,13 @@ object GraphQueries {
     // fall back to the shuffled join — on the packed single-long key
     // when ids allow (compact LongHashedRelation build, 16 B wedge
     // keys instead of 24 B), else the original two-column form.
-    val closeBcast = packable && m * 16L <= heap / 16L
+    val closeBcast = packable && ScaleOps.fitsBroadcast(ss, m * 16L)
     val tri =
       if (closeBcast) {
         val arr = e.select(packed(col("u"), col("v")).as("__uv"))
           .collect().map(_.getLong(0))
         java.util.Arrays.sort(arr)
-        val bc = ss.sparkContext.broadcast(arr)
-        synchronized { broadcasts += bc }
+        val bc = ScaleOps.broadcastPinned(ss, arr)
         val isEdge = udf((ab: Long) =>
           java.util.Arrays.binarySearch(bc.value, ab) >= 0)
         w.filter(isEdge(packed(col("a"), col("b"))))
@@ -480,8 +387,7 @@ object GraphQueries {
         // the derivation's regime boundary matters (gate: 11 MB × 6 =
         // 66 MB → latency regime, 3 partitions; 10×: 103 MB × 6 →
         // throughput regime, session count — both measured endpoints).
-        val npIter = ScaleOps.deriveIterParts(s,
-          (ScaleOps.planBytes(li) * 6).min(BigInt(Long.MaxValue)).toLong)
+        val npIter = ScaleOps.deriveIterParts(s, ScaleOps.planBytes(li, 6))
         val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
           .repartition(npIter, col("src"))
         pageRank(e, PageRankIters)
@@ -521,8 +427,7 @@ object GraphQueries {
         // pagerank spec; the self-loop rows add |V| ≤ |E| slack the
         // 32 MB target absorbs)
         labelPropagation(e, LpaIters,
-            np = ScaleOps.deriveIterParts(s,
-          (ScaleOps.planBytes(li) * 6).min(BigInt(Long.MaxValue)).toLong))
+            np = ScaleOps.deriveIterParts(s, ScaleOps.planBytes(li, 6)))
           .orderBy(col("node"))
           .select(col("node"), col("lab"))
       },

@@ -276,7 +276,7 @@ object PipelineQueries {
 
     // The composed GRAPH session (VERDICT r10 #7): "materialize once,
     // analyze many" — the symmetrized trade graph is pinned ONE time
-    // (GraphQueries.materializeShared, same registry lifecycle as the
+    // (ScaleOps.materializePinned, the same pin and release as the
     // per-algorithm caches) and PageRank + LPA both run off the shared
     // copy, instead of each gate row re-scanning parquet, re-joining
     // orders⋈lineitem, and re-caching its own edges. The three member
@@ -303,9 +303,8 @@ object PipelineQueries {
         // duplicate-free so row content is unchanged. Partition count
         // size-derived (ScaleOps.deriveIterParts, r20 — the pagerank
         // spec's per-round task-latency rule; same 2·|lineitem| bound).
-        val npIter = ScaleOps.deriveIterParts(s,
-          (ScaleOps.planBytes(li) * 6).min(BigInt(Long.MaxValue)).toLong)
-        val e = GraphQueries.materializeShared(
+        val npIter = ScaleOps.deriveIterParts(s, ScaleOps.planBytes(li, 6))
+        val e = ScaleOps.materializePinned(
           e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
             .repartition(npIter, col("src")))
         val nEdges = e.count()
@@ -338,8 +337,8 @@ object PipelineQueries {
         // untouched; all phase results are localCheckpoint'ed so the
         // iterative shuffle lineage stays collectable mid-query.
         // Thread-safety: Spark supports concurrent actions from driver
-        // threads, and the graph-cache registry (GraphQueries.persisted
-        // / broadcasts) is synchronized.
+        // threads, and the pin-and-broadcast registry (ScaleOps) is
+        // synchronized.
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         import scala.util.Try
@@ -361,7 +360,7 @@ object PipelineQueries {
         val triF = Future {
           val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
           val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
-          val eTri = GraphQueries.materializeShared(
+          val eTri = ScaleOps.materializePinned(
             a.join(b, "k").where(col("u") < col("v"))
               .select(col("u"), col("v")).distinct())
           val nCo = eTri.count()
@@ -384,7 +383,7 @@ object PipelineQueries {
         // may still be running off its own co-order pin (the scoped
         // form of the r11 "don't hold both graphs" rule; the co-order
         // pin is released by the harness' end-of-query unpersistAll)
-        GraphQueries.release(e)
+        ScaleOps.release(e)
         val triT = Try(Await.result(triF, Duration.Inf))
         pool.shutdown()
         val ranksTop = prT.get

@@ -70,7 +70,7 @@ class EventTimeSchemaSpec extends AnyFunSuite {
       "src/test/scala/graft/TestSpark.scala")
     (factory +: entryPoints).foreach { p =>
       val txt = new String(Files.readAllBytes(
-        java.nio.file.Paths.get(s"/root/repo/$p")), "UTF-8")
+        java.nio.file.Paths.get(p)), "UTF-8")
       if (p == factory)
         assert(txt.contains("spark.sql.legacy.parquet.nanosAsLong"),
           s"$p builds a SparkSession without the nanosAsLong conf — the " +
