@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
+import graft.operators.{GraphQueries, ScaleOps}
+import graft.operators.ScaleOps.materializePinned
 
 /** The LLM-training-data pipeline, composed end-to-end from the
   * operator battery: PII scrub → repetition quality filter → domain
@@ -31,124 +33,6 @@ object CorpusPipelineDemo {
     spark.stop()
   }
 
-  /** Corpus aggregates for the LOG-ONLY dedup advisor (VERDICT r11 #5
-    * / r12 #6): the SAME 3-token shingle sets the near-dup stage
-    * measures Jaccard over, plus the coarsest blocking-key occupancy —
-    * three cheap aggregate jobs, the derivation pattern of the
-    * `bench/entropy_h2h_r13.jsonl` head-to-head. */
-  def dedupStats(spark: SparkSession,
-                 sfDir: String): graft.operators.ScaleOps.DedupCorpusStats = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val n = docs.count()
-    val row = docs.select(explode(graft.functions.TextFunctions
-        .shingleSetFast(col("text"))).as("__sh"))
-      .agg(count(lit(1)).as("t"), count_distinct(col("__sh")).as("v")).head()
-    val worst = docs.groupBy(substring(col("text"), 1, 1)).count()
-      .agg(max("count")).head().getLong(0)
-    graft.operators.ScaleOps.DedupCorpusStats(n,
-      row.getLong(0).toDouble / math.max(n, 1L), row.getLong(1), worst)
-  }
-
-  /** One advice line per dedup stage — operator + predicted candidate
-    * volume only (the rationale prose stays in the DedupAdvice for
-    * log readers; this line is the machine-greppable part). */
-  private def adviceLine(stage: String,
-                         a: graft.operators.ScaleOps.DedupAdvice): String =
-    s"""{"stage":"$stage","advice":"${a.operator}",""" +
-      s""""predicted_candidates":${a.predictedCandidates}}"""
-
-  /** The ANN-tier advice line (VERDICT r14 #4 — advisor parity with
-    * the dedup stages): trains production IVF cells over the corpus'
-    * embedding table through the SAME Lloyd path the six ANN gates
-    * exercise (ExtraSimilarityQueries.lloydTrain — micros-snapped
-    * codebook), reads ScaleOps.adviseAnn's one-pass variance
-    * decomposition, and names the PQ encoding a production index
-    * build over these embeddings should use. LOG-ONLY, like the
-    * dedup lines; `ks` = the gates' 16-code sub-codebooks. */
-  def annAdviceLine(spark: SparkSession, sfDir: String): String = {
-    import graft.operators.{ExtraSimilarityQueries => ESQ}
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val corpus = e.select(col("vec_id"), col("embedding").as("ev"))
-    val init = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cent_id"),
-        graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv"))
-    val cents = ESQ.lloydTrain(corpus, init, 2)
-    val assigned = ESQ.assignTo(cents)(corpus, "vec_id", "ev")
-    val stats = ESQ.annGeometryStats(corpus, cents, assigned)
-    // recall target 0.9 = the retrieval-stage bar the gates measure
-    // raw m=8 at on this geometry; the advisor surfaces the m knob
-    // the r15 ceiling sweep proved dominant (VERDICT r15 #3) and,
-    // when the measured spectrum is imbalanced, the r16
-    // variance-balancing permutation recommendation
-    // spectrumRatio is now capped finite at the source (ADVICE r16
-    // #1/#2 — var_pop + SpectrumRatioCap); belt-and-braces clamp here
-    // anyway so this JSON line can never emit Infinity/NaN even if a
-    // future ratio source regresses
-    val sr0 = ESQ.spectrumRatio(e, "embedding")
-    val sr = if (sr0.isFinite) sr0 else ESQ.SpectrumRatioCap
-    val a = graft.operators.ScaleOps.adviseAnn(stats, ks = 16,
-      recallTarget = 0.9, spectrumRatio = sr)
-    s"""{"stage":"ann_index_encoding","advice":"${a.encoding}",""" +
-      f""""explained":${a.explained}%.3f,"m":${a.m},"nprobe":${a.nprobe},""" +
-      f""""spectrum_ratio":$sr%.2f,""" +
-      s""""balance_subspaces":${a.rationale.contains("snake")}}"""
-  }
-
-  /** The incremental-ingest drift line (VERDICT r15 #2, the
-    * WHEN-to-retrain half of q_ann_incremental): freeze the corpus-
-    * trained Lloyd codebook, assign the arrivals batch (the same
-    * every-5th-doc split the dedup stage 4b replays) to the FROZEN
-    * cells, and read [[ScaleOps.adviseAnnDrift]] over the same
-    * one-pass variance decomposition the encoding advisor uses — if
-    * the frozen cells explain much less of the batch than of the
-    * training corpus, the batch has drifted and the codebook should
-    * be retrained before the next index build. LOG-ONLY. */
-  def annDriftLine(spark: SparkSession, sfDir: String): String = {
-    import graft.operators.{ExtraSimilarityQueries => ESQ}
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val corpus = e.filter(pmod(col("vec_id"), lit(5)) =!= 0)
-      .select(col("vec_id"), col("embedding").as("ev"))
-    val batch = e.filter(pmod(col("vec_id"), lit(5)) === 0)
-      .select(col("vec_id"), col("embedding").as("ev"))
-    val init = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cent_id"),
-        graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv"))
-    // FROZEN: trained on the corpus side only, like q_ann_incremental
-    val cents = ESQ.lloydTrain(corpus, init, 2)
-    val corpusStats = ESQ.annGeometryStats(corpus, cents,
-      ESQ.assignTo(cents)(corpus, "vec_id", "ev"))
-    val batchStats = ESQ.annGeometryStats(batch, cents,
-      ESQ.assignTo(cents)(batch, "vec_id", "ev"))
-    val d = graft.operators.ScaleOps.adviseAnnDrift(corpusStats, batchStats)
-    s"""{"stage":"ann_incremental_drift","retrain":${d.retrain},""" +
-      f""""corpus_explained":${d.corpusExplained}%.3f,""" +
-      f""""batch_explained":${d.batchExplained}%.3f}"""
-  }
-
-  /** The delete-path compaction line (the WHEN half of `q_ann_delete`,
-    * VERDICT r16 missing #2): q_ann_delete's retracted-crawl tombstone
-    * set against the demo's indexed embedding count — should index
-    * reads keep carrying the broadcast anti-join, or has the dead-
-    * posting fraction crossed [[ScaleOps.CompactionTombstoneFraction]]
-    * so a one-pass rewrite is due? LOG-ONLY; two metadata counts, no
-    * corpus scan. */
-  def compactionAdviceLine(spark: SparkSession, sfDir: String): String = {
-    import graft.operators.{ExtraSimilarityQueries => ESQ}
-    // one aggregation pass yields both counts (review r17); the
-    // predicate is the gate's own, shared so the sites cannot drift
-    val r = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .filter(col("vec_id") >= 20)
-      .agg(count(lit(1)).as("indexed"),
-        count(when(ESQ.annDeleteTombstonePred(col("vec_id")), 1))
-          .as("tomb"))
-      .head()
-    val a = graft.operators.ScaleOps.adviseCompaction(
-      r.getLong(0), r.getLong(1))
-    s"""{"stage":"ann_delete_compaction","compact":${a.compact},""" +
-      f""""tombstone_fraction":${a.tombstoneFraction}%.4f,""" +
-      f""""threshold":${graft.operators.ScaleOps.CompactionTombstoneFraction}%.2f}"""
-  }
-
   /** Runs the composed pipeline; returns the JSON stage summary. */
   def run(spark: SparkSession, sfDir: String): String = {
     val q = graft.SparkEntry.queries
@@ -156,55 +40,15 @@ object CorpusPipelineDemo {
     // 192 s against a 54 s sum of member-stage per-row times — the gap
     // was shared subtrees RE-EXECUTING across the demo's many actions
     // (each stage count, then the 9-way survivors join, rebuilt every
-    // stage's lineage from the scan). A production DAG persists the
-    // tiny per-stage keep-sets (doc_id projections, columnar
-    // MEMORY_AND_DISK — disk-evictable, lineage intact, the
-    // ScaleOps.materializePinned rule), so the survivors join and every
-    // downstream station reuse them instead of recomputing. All pins
-    // released before returning.
-    val pinned =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    // Release pins on EVERY exit path (ADVICE r10): an exception in any
-    // stage must not leak MEMORY_AND_DISK pins into the shared session
-    // (tests share one SparkSession across suites).
+    // stage's lineage from the scan). A production DAG pins the tiny
+    // per-stage keep-sets (doc_id projections) through
+    // ScaleOps.materializePinned, so the survivors join and every
+    // downstream station reuse them instead of recomputing. The
+    // finally releases every pin the run registered, its own and the
+    // member queries', on every exit path: the specs share one session.
     try {
-      def keepSet(df: org.apache.spark.sql.DataFrame)
-          : org.apache.spark.sql.DataFrame = {
-        val out = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pinned += out
-        out
-      }
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val nDocs = docs.count()
-
-      // LOG-ONLY operating-point advice before each dedup stage
-      // (VERDICT r11 #5): the advisor reads the corpus' own shingle
-      // statistics and names the operator it would route a production
-      // job to — a driver log line to read when the job misbehaves,
-      // never a plan change. At gate scale it honestly says
-      // brute_force for the near-dup stage (n ≤ 3000: the all-pairs
-      // join IS cheaper than the MinHash index build the demo runs for
-      // composition coverage); CorpusPipelineSpec pins that the same
-      // stats at production n route to exactly the operators the
-      // stages call (exact_digest for 2b, minhash_lsh for 3).
-      val advStats = dedupStats(spark, sfDir)
-      println(adviceLine("canonical_exact_dedup", graft.operators.ScaleOps
-        .adviseDedup(advStats, graft.operators.ScaleOps.ExactContent)))
-      // 0.5 = DedupQueries.MinhashJaccardThreshold (the stage-3 gate)
-      println(adviceLine("near_dup_dedup", graft.operators.ScaleOps
-        .adviseDedup(advStats,
-          graft.operators.ScaleOps.SetSimilarity(0.5, exactRecall = false))))
-      // ... and the ANN tier's encoding advice over the corpus'
-      // embedding table (VERDICT r14 #4 — parity with the dedup
-      // advisor: CorpusPipelineSpec asserts this exact line)
-      println(annAdviceLine(spark, sfDir))
-      // ... and the incremental-ingest drift check (VERDICT r15 #2):
-      // should tomorrow's batch keep assigning to the frozen codebook,
-      // or has it drifted enough to retrain first?
-      println(annDriftLine(spark, sfDir))
-      // ... and the delete-path compaction check (r17): is the
-      // tombstone fraction still cheaper to carry than to compact?
-      println(compactionAdviceLine(spark, sfDir))
 
       // 1. PII scrub (map-only; audit counts aggregated for the report)
       val scrub = graft.operators.TextQueries.redact(docs)
@@ -213,16 +57,17 @@ object CorpusPipelineDemo {
 
       // 2. quality: drop repetitive docs (Gopher rule) AND docs the
       //    linear classifier rejects (model-based filter, stateless map)
-      val qualityIds = keepSet(q("q_text_repetition")(spark, sfDir)
-        .filter(!col("is_repetitive")).select("doc_id")
-        .join(graft.operators.TextQueries.qualityClassifier(docs)
-          .filter(col("keep")).select("doc_id"), Seq("doc_id")))
+      val qualityIds = materializePinned(
+        q("q_text_repetition")(spark, sfDir)
+          .filter(!col("is_repetitive")).select("doc_id")
+          .join(graft.operators.TextQueries.qualityClassifier(docs)
+            .filter(col("keep")).select("doc_id"), Seq("doc_id")))
       val nQuality = qualityIds.count()
 
       // 2b. canonical exact dedup FIRST (one native byte pass + digest
       //     groupBy): trivially-different copies collapse before the
       //     (more expensive) MinHash machinery ever sees them
-      val canonKeep = keepSet(graft.operators.DedupQueries
+      val canonKeep = materializePinned(graft.operators.DedupQueries
         .canonicalDigest(docs)
         .groupBy(col("canon_digest")).agg(min(col("doc_id")).as("doc_id"))
         .select("doc_id"))
@@ -230,7 +75,7 @@ object CorpusPipelineDemo {
 
       // 2c. per-domain cap: at most 40 docs per source domain, best by
       //     n_chars (native TopKPerKey — the CommonCrawl host-cap rule)
-      val domainCapped = keepSet(graft.operators.ScaleOps.topKPerKey(
+      val domainCapped = materializePinned(ScaleOps.topKPerKey(
           docs.select(col("doc_id"), col("source"), col("n_chars")),
           Seq(col("source")), Seq(col("n_chars").desc, col("doc_id")), 40)
         .select("doc_id"))
@@ -239,8 +84,9 @@ object CorpusPipelineDemo {
       // 2d. domain-level WHOLESALE quality: drop every doc of a host
       //     whose aggregate signal is below the bar (host stats are one
       //     keyed aggregate, broadcast back — corpus rows never shuffle)
-      val domainOk = keepSet(q("q_domain_quality_filter")(spark, sfDir)
-        .filter(col("kept")).select("doc_id"))
+      val domainOk = materializePinned(
+        q("q_domain_quality_filter")(spark, sfDir)
+          .filter(col("kept")).select("doc_id"))
       val nDomainOk = domainOk.count()
 
       // 2e. CCNet-style LM-perplexity filter: train the unigram LM on
@@ -263,27 +109,28 @@ object CorpusPipelineDemo {
       // quantile: the scoring join (token explode × broadcast LM) is the
       // stage's dominant cost and would otherwise execute twice — once
       // for the quantile job, again for the keep-set filter
-      val lmScored = keepSet(graft.operators.TextQueries
+      val lmScored = materializePinned(graft.operators.TextQueries
         .scoreAgainstLm(docs, lmFreq, lmScal)
         .select(col("doc_id"),
           round(col("avg_nll") * 10000).cast("long").as("nll4")))
       // empty/all-null scores → exactQuantiles returns no rows — keep
       // everything vacuously rather than crashing the composed run
-      val pplCut = graft.operators.ScaleOps
+      val pplCut = ScaleOps
         .exactQuantiles(lmScored.select(col("nll4")), "nll4",
           Seq(2.0 / 3.0))
         .collect().headOption.map(_.getLong(1)).getOrElse(Long.MaxValue)
-      val lmOk = keepSet(
+      val lmOk = materializePinned(
         lmScored.filter(col("nll4") <= pplCut).select("doc_id"))
       val nLmOk = lmOk.count()
 
       // 2f. DSIR importance selection toward the target domain (en):
       //     target docs ride through; raw docs survive iff their hashed
       //     n-gram log-ratio says they look like the target
-      val dsirOk = keepSet(docs.filter(col("lang") === "en").select("doc_id")
-        .union(graft.operators.CurationQueries
-          .dsirWeights(docs, col("lang") === "en")
-          .filter(col("selected")).select("doc_id")))
+      val dsirOk = materializePinned(
+        docs.filter(col("lang") === "en").select("doc_id")
+          .union(graft.operators.CurationQueries
+            .dsirWeights(docs, col("lang") === "en")
+            .filter(col("selected")).select("doc_id")))
       val nDsirOk = dsirOk.count()
 
       // audit: the crawl front door — canonical-URL dedup collapses
@@ -293,13 +140,14 @@ object CorpusPipelineDemo {
       val nCanonicalUrls = q("q_url_canonical")(spark, sfDir).count()
 
       // 3. dedup keep set (MinHash → verify → clusters → canonical)
-      val keepIds = keepSet(q("q_dedup_corpus")(spark, sfDir).select("doc_id"))
+      val keepIds =
+        materializePinned(q("q_dedup_corpus")(spark, sfDir).select("doc_id"))
 
       // 4. leakage-aware split (cluster-keyed, so near-dups co-travel)
-      val splits = keepSet(q("q_split_by_cluster")(spark, sfDir)
+      val splits = materializePinned(q("q_split_by_cluster")(spark, sfDir)
         .select(col("doc_id"), col("split")))
 
-      val surviving = keepSet(docs
+      val surviving = materializePinned(docs
         .join(qualityIds, Seq("doc_id"))
         .join(canonKeep, Seq("doc_id"))
         .join(domainCapped, Seq("doc_id"))
@@ -361,7 +209,7 @@ object CorpusPipelineDemo {
           trainMixed
             .repartition(32).write.mode("overwrite")
             .parquet(s"$out/train_raw")
-          graft.operators.ScaleOps.compactFiles(spark,
+          ScaleOps.compactFiles(spark,
             s"$out/train_raw", s"$out/train", targetBytes = 1L << 20)
         // the file count is the published fact; reclaim the scratch tree
         // so repeated demo/spec runs don't accumulate /tmp garbage
@@ -380,6 +228,6 @@ object CorpusPipelineDemo {
         s""""arrivals_kept":$nArrivalsKept,""" +
         s""""train_packs":$nPacks,"chunks":$nChunks,""" +
         s""""train_files":$nFiles}"""
-    } finally pinned.foreach(_.unpersist(blocking = false))
+    } finally GraphQueries.unpersistAll()
   }
 }

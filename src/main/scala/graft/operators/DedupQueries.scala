@@ -410,8 +410,9 @@ ORDER BY d.doc_id"""
     * guaranteed and the exact-Jaccard verify (against surviving docs
     * only) makes the OUTPUT identical to a from-scratch
     * rebuild-without-deleted; only candidate-pruning efficiency
-    * drifts as df staleness grows, which is a compaction
-    * ([[ScaleOps.adviseCompaction]]) concern, not a correctness one.
+    * drifts as df staleness grows, which is a compaction concern
+    * (BASELINE.md "Tombstone carry-vs-compact crossover, r17"), not a
+    * correctness one.
     * The q_dedup_prefix_delete oracle proves the equality — DuckDB
     * brute-forces batch × (corpus ∖ deleted).
     */

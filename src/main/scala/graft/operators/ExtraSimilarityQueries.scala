@@ -183,65 +183,6 @@ object ExtraSimilarityQueries {
       .select(col(idCol), col(centKey), col("m"),
         zip_with(col("sv"), col("csv"), (a, b) => a - b).as("sv"))
 
-  /** One-pass geometry aggregates for [[ScaleOps.adviseAnn]]: total
-    * corpus variance Σ‖v − μ‖² (= Σ‖v‖² − n‖μ‖², one scalar agg plus
-    * a dim-sized mean) and the within-cell residual Σ‖v − c(v)‖²
-    * (one agg over the broadcast codebook join) — never corpus-sized
-    * state, the advisor reads two doubles. */
-  private[graft] def annGeometryStats(corpus: org.apache.spark.sql.DataFrame,
-                                      cents: org.apache.spark.sql.DataFrame,
-                                      assigned: org.apache.spark.sql.DataFrame)
-      : ScaleOps.AnnCorpusStats = {
-    val vd = corpus.select(col("vec_id"),
-      graft.functions.VectorFunctions.asDouble(col("ev")).as("v"))
-    val normRow = vd.agg(
-      sum(graft.functions.VectorFunctions.dot(col("v"), col("v"))).as("ss"),
-      count(lit(1)).as("n")).head()
-    val (sumSq, n) = (normRow.getDouble(0), normRow.getLong(1))
-    val mu = vd.select(posexplode(col("v")).as(Seq("pos", "val")))
-      .groupBy("pos").agg(avg("val").as("m"))
-      .orderBy("pos").collect().map(_.getDouble(1))
-    val totalSse = sumSq - n * mu.map(x => x * x).sum
-    val within = vd.join(assigned.select(col("vec_id"), col("cent_id")),
-        Seq("vec_id"))
-      .join(broadcast(cents), Seq("cent_id"))
-      .agg(sum(VectorQueries.pqSqd(col("v"), col("cv"))).as("w"))
-      .head().getDouble(0)
-    ScaleOps.AnnCorpusStats(n, cents.count(), totalSse, within)
-  }
-
-  /** Per-dimension variance imbalance max/min — the one-aggregate
-    * statistic [[ScaleOps.adviseAnn]]'s `spectrumRatio` input wants
-    * (threshold [[ScaleOps.SpectrumBalanceThreshold]]): ≈1 on flat
-    * spectra where a subspace permutation is a measured null, ≫1 on
-    * decaying spectra where variance-balancing the subspaces is the
-    * dominant free recall knob. Shuffle carries only `dim` partial-agg
-    * keys; result is a driver scalar.
-    *
-    * Variance via `var_pop` (Catalyst's central-moments aggregate,
-    * centered update) rather than E[x²]−E[x]² — the one-pass raw-
-    * moments form cancels catastrophically on a dim with large mean
-    * and tiny variance and could return a spuriously non-positive
-    * `lo`, collapsing the whole statistic (ADVICE r16 #2). A truly
-    * degenerate dim (constant → variance 0) still means the ratio is
-    * unbounded in the limit; floor `lo` at an epsilon relative to
-    * `hi` so the result stays FINITE ([[SpectrumRatioCap]] ≥ any
-    * measured routing threshold) and JSON-serializable (ADVICE r16
-    * #1 wants a finite emit downstream). */
-  private[graft] val SpectrumRatioCap: Double = 1e6
-  private[graft] def spectrumRatio(vecs: org.apache.spark.sql.DataFrame,
-                                   vCol: String): Double = {
-    val dv = vecs
-      .select(posexplode(
-        graft.functions.VectorFunctions.asDouble(col(vCol))).as(Seq("pos", "x")))
-      .groupBy("pos")
-      .agg(var_pop(col("x")).as("v"))
-      .agg(max(col("v")).as("hi"), min(col("v")).as("lo")).head()
-    val (hi, lo) = (dv.getDouble(0), dv.getDouble(1))
-    if (hi <= 0) 1.0 // all dims constant: flat by definition
-    else math.min(SpectrumRatioCap, hi / math.max(lo, hi / SpectrumRatioCap))
-  }
-
   // same seeded hyperplanes as SimilarityQueries (seed 42) so the two
   // modules' buckets agree
   private def bucketSqlPublic(vexpr: String): String =
@@ -254,8 +195,8 @@ object ExtraSimilarityQueries {
 
   /** `q_ann_delete`'s tombstone set — a retracted-crawl id range plus
     * two point takedowns that seeded the frozen PQ codebook — shared
-    * by the gate, the demo's compaction line, and AnnDeleteSpec so
-    * the Scala sites cannot drift (review r17); the DuckDB oracle
+    * by the gate and AnnDeleteSpec so the Scala sites cannot drift
+    * (review r17); the DuckDB oracle
     * keeps its own SQL transcription of the same predicate. */
   private[graft] def annDeleteTombstonePred(
       id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -366,9 +307,12 @@ object ExtraSimilarityQueries {
           "query_id", "qv")
           .withColumnRenamed("cent_id", "q_cent")
         // final top-k through the native TopKPerKey (shuffle pruned to
-        // ≤ k rows per query per mapper; see SimilarityQueries.topKRanked)
+        // ≤ k rows per query per mapper; see SimilarityQueries.topKRanked).
+        // The query side (queries × nprobe rows) is broadcast explicitly:
+        // left to AQE, the build side followed whichever small stage
+        // finished first, so identical runs planned differently.
         SimilarityQueries.topKRanked(
-          queries.join(corpus, col("q_cent") === col("cent_id"))
+          broadcast(queries).join(corpus, col("q_cent") === col("cent_id"))
             .select(col("query_id"), col("vec_id"),
               cosine(col("qv"), col("ev")).as("cos")), K)
       },
@@ -801,9 +745,10 @@ object ExtraSimilarityQueries {
     // unions them (the incremental path); the DuckDB oracle encodes
     // the whole union in ONE pass against the same frozen CTEs (the
     // full-rebuild path). A hash match means the two paths agree
-    // bit-for-bit. The WHEN-to-retrain half lives in
-    // [[ScaleOps.adviseAnnDrift]] over [[annGeometryStats]] on the
-    // batch (CorpusPipelineDemo prints the drift line). Scale shape:
+    // bit-for-bit. WHEN to retrain is not decided here: the drift
+    // it would key on (cell-explained variance, 0.89–0.98 clustered vs
+    // 0.14 isotropic) is recorded in BASELINE.md "ANN:
+    // composed-with-TRAINED-PQ + clustered-manifold probe, r14". Scale shape:
     // the arrival pass costs one broadcast-assign + one broadcast-
     // encode over the BATCH only; the search is the composed
     // q_ann_ivfpq plan over union'd cell/code tables.
@@ -892,10 +837,11 @@ object ExtraSimilarityQueries {
     // the exclusions are load-bearing, never vacuous) plus two point
     // takedowns (21, 28) that seeded the frozen PQ codebook: deleting
     // a training row removes its POSTINGS, never the frozen codebook —
-    // retraining is adviseAnnDrift's call, not the delete path's.
-    // WHEN to stop carrying tombstones and rewrite instead is
-    // [[ScaleOps.adviseCompaction]]; AnnDeleteSpec pins both advisor
-    // branches and the engine-internal tombstone==rebuild equality.
+    // retraining is not the delete path's call. WHEN to stop carrying
+    // tombstones and rewrite instead is measured in BASELINE.md
+    // "Tombstone carry-vs-compact crossover, r17" (break-even 2–6
+    // reads); AnnDeleteSpec pins the engine-internal tombstone==rebuild
+    // equality.
     Spec("q_ann_delete",
       (s, dir) => {
         val e = t(s, dir, "embeddings")

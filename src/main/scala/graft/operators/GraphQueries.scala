@@ -218,7 +218,7 @@ object GraphQueries {
       eStats.getLong(3) >= 0 && eStats.getLong(4) < (1L << 32)
     def packed(a: Column, b: Column): Column =
       shiftleft(a.cast("long"), 32).bitwiseOR(b.cast("long"))
-    val parts = ss.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    val parts = ScaleOps.sessionPartitions(ss)
     // task slots bound build concurrency REGARDLESS of partition count
     // (min(slots, parts) would undercount exactly when
     // shuffle.partitions < cores, the fixed-32-partition config that

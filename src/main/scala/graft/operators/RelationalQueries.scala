@@ -327,7 +327,7 @@ object RelationalQueries {
     // exact segment join dominates it at every measured operating
     // point, but this row is the LOSSY BASELINE every fuzzy
     // head-to-head (bench/fuzzy_remeasure_100x_r13.jsonl,
-    // bench/entropy_h2h_r13.jsonl, the advisor's rationale prose) compares the exact operators
+    // bench/entropy_h2h_r13.jsonl) compares the exact operators
     // against; retiring it would leave the measured "exact recall AND
     // faster" claims without their in-battery reference row.
     //
@@ -416,9 +416,10 @@ object RelationalQueries {
     // planted single-edit mutants (id + 1e9, every 5th doc; position
     // and replacement char hash-derived, so DuckDB replays them
     // bit-for-bit) giving a non-trivial match set. This is the corpus
-    // profile adviseDedup actually ROUTES to the q-gram join;
-    // the low-entropy profile it routes AWAY (first-4-words keys on
-    // generated text, avgDf ≈ 3 090 at 100×, where the old gate burned
+    // profile where the q-gram join wins (BASELINE.md "Edit-distance
+    // crossover calibrated from BOTH sides, r13": 19.2 s vs segment
+    // 52.5 s); the low-entropy profile where it loses (first-4-words
+    // keys on generated text, avgDf ≈ 3 090 at 100×, where the old gate burned
     // 647 s = 24 % of the r11 100× battery) is kept as the downsized
     // adversarial row below.
     Spec("q_fuzzy_match_qgram",
@@ -494,11 +495,11 @@ object RelationalQueries {
     // The documented ADVERSARIAL leg of the q-gram row (VERDICT r12
     // #2): the LOW-ENTROPY corpus profile — first-4-words keys over
     // generated text, where gram postings collapse (100×: vocab
-    // 4 782, avgDf ≈ 3 090) and adviseDedup routes production jobs to
-    // the segment join instead. Kept deliberately DOWNSIZED (every
-    // 4th doc: candidate volume ∝ n²/vocab, so ~1/16 of the full-
-    // corpus cost that made the old gate 24 % of the 100× battery) so
-    // the battery still prices the operator's worst-case profile
+    // 4 782, avgDf ≈ 3 090) and the segment join wins instead (same
+    // BASELINE.md r13 section: 430.9 s vs 967.1 s). Kept deliberately
+    // DOWNSIZED (every 4th doc: candidate volume ∝ n²/vocab, so ~1/16
+    // of the full-corpus cost that made the old gate 24 % of the 100×
+    // battery) so the battery still prices the operator's worst-case profile
     // without letting a mismatched operating point dominate the wall.
     Spec("q_fuzzy_match_qgram_lowent",
       (s, dir) => {

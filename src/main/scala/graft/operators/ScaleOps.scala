@@ -40,8 +40,8 @@ object ScaleOps {
   private val pinLog = org.slf4j.LoggerFactory.getLogger("graft.ScaleOps")
 
   /** Cluster-wide storage budget a [[materializePinned]] estimate is
-    * judged against (VERDICT r19 #2 — the advisor pattern of
-    * [[adviseDedup]]/[[deriveSegmentJoin]] applied to pinning): 0.3 ×
+    * judged against (VERDICT r19 #2 — the size-routed pattern of
+    * [[deriveSegmentJoin]] applied to pinning): 0.3 ×
     * heap × executor count — Spark's default storage share of the
     * unified region (`spark.memory.fraction` 0.6 × storageFraction
     * 0.5) summed over the executors the cache is spread across
@@ -50,7 +50,7 @@ object ScaleOps {
     * memory; past it, MEMORY_AND_DISK degrades to writing a
     * corpus-sized derived table to executor disk — the r19 10×
     * evidence (prefix self-join pin: +1.5×) says a spilling pin can
-    * cost MORE than recomputing the arms, so the advisor keeps the
+    * cost MORE than recomputing the arms, so the gate keeps the
     * plan lazy instead. */
   def pinBudgetBytes(ss: SparkSession): Long = {
     val executors = math.max(1,
@@ -176,6 +176,12 @@ object ScaleOps {
     ss.conf.getOption("spark.executor.memory").map(parseJvmBytes)
       .getOrElse(Runtime.getRuntime.maxMemory)
 
+  /** The session's `spark.sql.shuffle.partitions` (Spark's default 200
+    * when unset) — the floor every derived partition count starts
+    * from. */
+  private[operators] def sessionPartitions(ss: SparkSession): Int =
+    ss.conf.get("spark.sql.shuffle.partitions", "200").toInt
+
   /** Partitions such that the task slots sharing one heap
     * ([[concurrentSlotsPerHeap]]) concurrently hold at most a
     * conservative tenth of it of `bytes` between them:
@@ -199,11 +205,9 @@ object ScaleOps {
     * whenever that already suffices (plan unchanged at gate scale), and
     * caps at 4096 so task-launch overhead never dominates. */
   def deriveShufflePartitions(ss: SparkSession, bytes: Long,
-                              cap: Int = 4096): Int = {
-    val parts = ss.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    math.min(cap.toLong, math.max(parts.toLong, heapPartitions(ss, bytes)))
-      .toInt
-  }
+                              cap: Int = 4096): Int =
+    math.min(cap.toLong,
+      math.max(sessionPartitions(ss).toLong, heapPartitions(ss, bytes))).toInt
 
   /** NARROW twin of [[deriveShufflePartitions]] for iteration-cached
     * tables (VERDICT r19 #3 / guide §2 scale-adaptive partitioning):
@@ -232,12 +236,11 @@ object ScaleOps {
     * Purely physical: results are partition-count independent
     * (integer-exact aggregates; specs pin values). */
   def deriveIterParts(ss: SparkSession, bytes: Long): Int = {
-    val parts = ss.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val cores = ss.sparkContext.defaultParallelism
     val regimeNp =
       if (bytes < cores.toLong * (8L << 20))
         math.max(1L, math.ceil(bytes.toDouble / (32L << 20)).toLong)
-      else parts.toLong
+      else sessionPartitions(ss).toLong
     math.min(4096L, math.max(regimeNp, heapPartitions(ss, bytes))).toInt
   }
 
@@ -264,9 +267,8 @@ object ScaleOps {
     * directions). One definition so a fix to the guard can never miss
     * a call site. */
   def widenIfAbove(df: DataFrame, np: Int, keys: Column*): DataFrame = {
-    val parts =
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    if (np > parts) df.repartition(np, keys: _*) else df
+    if (np > sessionPartitions(df.sparkSession)) df.repartition(np, keys: _*)
+    else df
   }
 
   /** Persist both sides of a recurring join bucketed + sorted on the
@@ -638,274 +640,6 @@ object ScaleOps {
       .drop("__c", "__b", "__s")
   }
 
-  /** What a dedup job is being asked to do — the advisor's input
-    * alongside the corpus aggregates (VERDICT r10 #8). */
-  sealed trait DedupTask
-  /** Byte-identical (or canonicalized) content duplicates. */
-  case object ExactContent extends DedupTask
-  /** Set-similarity near-duplicates at a Jaccard `threshold`;
-    * `exactRecall` = the caller needs every qualifying pair
-    * (contamination / legal holds), not a sketch's recall. */
-  final case class SetSimilarity(threshold: Double,
-                                 exactRecall: Boolean) extends DedupTask
-  /** Edit-distance matching (record linkage) within `maxDist`. */
-  final case class EditDistance(maxDist: Int, q: Int = 2) extends DedupTask
-
-  /** Corpus aggregates the advisor decides from — all already computed
-    * by the derivation helpers (one cheap scan):
-    * `n` rows, `avgShinglesPerDoc` (tokens or q-grams per key),
-    * `distinctShingles` (vocabulary size), `worstBlockOccupancy` (max
-    * rows sharing the coarsest blocking key — deriveFuzzyBlocking's
-    * neighborhood aggregate). */
-  final case class DedupCorpusStats(n: Long, avgShinglesPerDoc: Double,
-                                    distinctShingles: Long,
-                                    worstBlockOccupancy: Long)
-
-  /** The advisor's verdict: which operator, the predicted candidate
-    * volume its verify stage will face, and the rule that fired —
-    * LOG-ONLY (no plan changes): a driver logs this line before
-    * launching the job, and a human reads it when the job misbehaves. */
-  final case class DedupAdvice(operator: String, predictedCandidates: Long,
-                               rationale: String)
-
-  /** Corpus geometry for the ANN encoding decision: `totalSse` =
-    * Σ‖v − μ‖² (variance around the global mean), `withinSse` =
-    * Σ‖v − c(v)‖² (residual variance after the trained IVF cells) —
-    * both one-aggregate cheap ([[ExtraSimilarityQueries
-    * .annGeometryStats]]). Their ratio is the fraction of corpus
-    * variance the cell structure explains — the single number that
-    * separates manifold-shaped embedding corpora from isotropic
-    * ones. */
-  final case class AnnCorpusStats(n: Long, cells: Long,
-                                  totalSse: Double, withinSse: Double) {
-    def explained: Double =
-      if (totalSse <= 0) 0.0 else 1.0 - withinSse / totalSse
-  }
-
-  final case class AnnAdvice(encoding: String, explained: Double,
-                             rationale: String, m: Int = 8,
-                             nprobe: Int = 4)
-
-  /** Measured IVF routing-recall-vs-nprobe curve — (nprobe, routing
-    * recall@10, scanned corpus fraction) — on 64 trained cells over
-    * the near-isotropic 10× replica (`bench/ann_curve_10x_r14.jsonl`
-    * ivf_curve rows). Routing recall is the CEILING any encoding can
-    * reach at that candidate volume, so this curve prices the nprobe
-    * knob (VERDICT r16 #4). On the clustered K=32 geometry routing
-    * saturates far earlier — measured 1.000 at nprobe=4
-    * (`bench/clustered_ann_r14.jsonl`, routing-ceiling rows) — so
-    * the isotropic curve is the conservative side and the clustered
-    * branch pins nprobe=4. */
-  val MeasuredRoutingRecallByNprobe: Seq[(Int, Double, Double)] =
-    Seq((1, 0.917, 0.016), (2, 0.926, 0.032), (4, 0.946, 0.064),
-      (8, 0.956, 0.128), (16, 0.968, 0.255))
-
-  /** Measured residual-recall-vs-m curve on the clustered K=32
-    * geometry (trained sub-codebooks, ks=256, fixed 64-cell/nprobe-4
-    * routing — `bench/clustered_ann_r15.jsonl`): recall@10 0.373 at
-    * m=8 vs 0.651 at m=16, at 2× the code bytes (still 16× under raw
-    * vectors). The r15 ceiling sweep showed m — not training depth
-    * (saturates at ~2 iterations: 0.373 → 0.375 from 2 → 8 iters) nor
-    * the OPQ-lite permutation (−0.8 to −2.4 pts, an honest null on
-    * i.i.d.-shaped residuals) — is the knob that moves residual
-    * recall, so the advisor surfaces it (VERDICT r15 #3). Keys are m,
-    * values the measured clustered-geometry recall floor. */
-  val MeasuredResidualRecallByM: Seq[(Int, Double)] =
-    Seq(8 -> 0.373, 16 -> 0.651)
-
-  /** Raw-PQ recall on the near-isotropic gate corpus at m=8
-    * (`q_ann_pq_trained_recall` tier, 10× replica measurements
-    * `bench/ann_curve_10x_r14.jsonl`: 0.908–0.920) — the baseline the
-    * isotropic branch prices m against. */
-  val MeasuredIsotropicRecallM8: Double = 0.90
-
-  /** Cell-explained-variance crossover for the PQ encoding choice,
-    * calibrated r14 from BOTH measured geometries
-    * (`bench/clustered_ann_r14.jsonl` + `bench/ann_curve_10x_r14
-    * .jsonl`, identical trained routing + candidate sets per pair):
-    *
-    *  - clustered K=32 mixture (measured explained 0.89–0.98 across
-    *    sigma 0.35/0.15): residual codes 0.32–0.38 recall vs raw
-    *    0.06–0.10 — a 5–6× multiplier;
-    *  - near-isotropic `embeddings` corpus (measured explained 0.14
-    *    at the 10× replica over the same 64 trained cells): residual
-    *    0.911–0.917 vs raw 0.908–0.920 — within noise of each other,
-    *    not worth the nprobe× LUT.
-    *
-    * 0.5 is the interpolated midpoint of [0.14, 0.89]; as with
-    * [[EdJoinCandidateBudgetPerRow]] the SIGN on each side is
-    * measured, so any threshold inside the bracket routes both
-    * measured geometries to their winners. */
-  val ResidualExplainedThreshold: Double = 0.5
-
-  /** One documented decision procedure for the ANN tier, mirroring
-    * [[adviseDedup]]: raw-PQ vs RESIDUAL-PQ from measured cell
-    * geometry, with the trained-codebook precondition the clustered
-    * probe exposed (training below the mode count collapses onto
-    * heavy modes — measured 0.011 → 0.003 at ks=16 vs K=32), plus the
-    * subspace-count recommendation the r15 ceiling sweep calibrated:
-    * given `recallTarget`, pick the smallest measured m whose
-    * clustered-geometry recall floor meets it
-    * ([[MeasuredResidualRecallByM]]) — "a user at 0.38 should double
-    * m before touching training depth or decomposition". */
-  /** Per-dimension variance imbalance (max/min over dims) above which
-    * the advisor recommends the variance-balancing SNAKE subspace
-    * permutation before anything else. Calibrated r16 from both
-    * measured spectra (`bench/clustered_ann_r16.jsonl`, BASELINE.md
-    * "OPQ decomposed on correlated residual geometries, r16"): at
-    * ratio ≈ e⁶ ≈ 400 (decaying spectrum, both correlated modes) the
-    * free permutation bought +0.33–0.35 recall@10 at m=8 and
-    * +0.19–0.21 at m=16 — the largest single
-    * effect in the sweep — while at ratio ≈ 1 (the i.i.d. r15 legs)
-    * it was a two-sided null (−0.8 to −2.4 pts). As with
-    * [[EdJoinCandidateBudgetPerRow]] the SIGN on each side is
-    * measured and the bracket [1, 400] is wide; 4 sits at "imbalance
-    * beyond what one codebook can absorb" and routes both measured
-    * geometries to their winners. The same sweep measured the two
-    * things NOT to do: a learned global PCA rotation added ≤0.013
-    * over the permutation on both correlated geometries (pooled
-    * covariance of per-cluster-correlated mixtures is near-diagonal —
-    * only per-cluster rotation, full LOPQ, could see it), and Ge et
-    * al.'s product (log-eigenvalue) allocation criterion landed at
-    * plain-slicing level, 35 pts under raw-variance balance — it is
-    * the Gaussian high-rate optimum and mixture residuals are not
-    * Gaussian. */
-  val SpectrumBalanceThreshold: Double = 4.0
-
-  def adviseAnn(stats: AnnCorpusStats, ks: Long,
-                recallTarget: Double = 0.0,
-                spectrumRatio: Double = 1.0): AnnAdvice = {
-    require(stats.n >= 0 && stats.cells > 0)
-    val e = stats.explained
-    // ONE CLAUSE PER KNOB (VERDICT r16 wrong #2): encoding, then
-    // permutation / m / nprobe / ks in a fixed order, each citing its
-    // measuring artifact, joined with "; " — no knob is mentioned
-    // without a measured recommendation attached
-    val permClause =
-      if (spectrumRatio >= SpectrumBalanceThreshold) Some(
-        f"spectrum max/min $spectrumRatio%.0f ≥ $SpectrumBalanceThreshold%.0f: apply the " +
-          "variance-balancing snake subspace permutation FIRST — free, " +
-          "+0.33@m=8/+0.20@m=16 measured on decaying spectra; learned " +
-          "rotation and product-criterion allocation measured ≤0 over " +
-          "it (clustered_ann_r16.jsonl)")
-      else None
-    val ksClause =
-      if (ks < stats.cells) Some(
-        s"WARNING ks=$ks < cells=${stats.cells}: train the codebook " +
-          "only at ks above the mode count (q_ann_pq_trained_recall " +
-          "inverted below it on the clustered probe)")
-      else None
-    if (e >= ResidualExplainedThreshold) {
-      // m is the priced dial on clustered geometry: smallest measured
-      // point meeting the target; past the measured ceiling the honest
-      // advice is the largest measured m plus the ceiling's number
-      val (mPick, _) = MeasuredResidualRecallByM
-        .find { case (_, r) => r >= recallTarget }
-        .getOrElse(MeasuredResidualRecallByM.last)
-      val mClause =
-        if (recallTarget > MeasuredResidualRecallByM.last._2)
-          f"m=$mPick%d is the measured ceiling (recall ${MeasuredResidualRecallByM.last._2}%.3f " +
-            f"< target $recallTarget%.2f) — the loss past it is PQ " +
-            "quantization, not routing (bench/clustered_ann_r15.jsonl); " +
-            "the unpriced next instrument is per-cluster LOPQ, not a knob " +
-            "this advisor can recommend"
-        else
-          f"m=$mPick%d meets the $recallTarget%.2f target (measured " +
-            MeasuredResidualRecallByM.map { case (m, r) => f"$r%.3f@m=$m" }
-              .mkString(" -> ") +
-            " at 2x code bytes per doubling; training saturates ~2 iters, " +
-            "permutation a null on FLAT spectra — m is the knob, " +
-            "bench/clustered_ann_r15.jsonl)"
-      // routing is measured SATURATED on this geometry — nprobe=4 is
-      // where the clustered probes hit recall 1.000 at 6.4 % scanned;
-      // raising it past saturation only multiplies candidate volume
-      val npClause =
-        "nprobe=4: routing recall measured 1.000 at nprobe=4 on " +
-          "clustered geometry (clustered_ann_r14.jsonl routing ceiling) " +
-          "— raising nprobe buys nothing measured here"
-      AnnAdvice("residual_pq", e,
-        (Seq(f"cells explain ${e * 100}%.0f%% of corpus variance — raw " +
-          "codes would re-encode cluster structure the IVF routing " +
-          "already paid for; residual encoding measured 5-6x recall at " +
-          "identical candidate volume (q_ann_ivfpq_residual_recall)") ++
-          permClause ++ Seq(mClause, npClause) ++ ksClause)
-          .mkString("; "),
-        m = mPick, nprobe = 4)
-    } else {
-      // near-isotropic: m=8 raw already measures ~0.91 — doubling m
-      // only pays past that measured floor
-      val mPick = if (recallTarget > MeasuredIsotropicRecallM8) 16 else 8
-      // nprobe from the measured routing curve: the smallest point
-      // whose routing CEILING meets the target (an encoding cannot
-      // out-recall its routing), with the scanned fraction it costs
-      val (npPick, npRecall, npFrac) = MeasuredRoutingRecallByNprobe
-        .find { case (_, r, _) => r >= recallTarget }
-        .getOrElse(MeasuredRoutingRecallByNprobe.last)
-      val npClause =
-        if (recallTarget > MeasuredRoutingRecallByNprobe.last._2)
-          f"nprobe=$npPick%d is the measured routing ceiling " +
-            f"($npRecall%.3f@nprobe=$npPick at ${npFrac * 100}%.1f%% scanned < " +
-            f"target $recallTarget%.2f) — past it the measured option is " +
-            "brute force (100% scanned), ann_curve_10x_r14.jsonl"
-        else
-          f"nprobe=$npPick%d: routing recall measured $npRecall%.3f at " +
-            f"${npFrac * 100}%.1f%% of corpus scanned — the smallest " +
-            "measured point whose routing ceiling meets the target " +
-            "(ann_curve_10x_r14.jsonl ivf_curve; encoding cannot " +
-            "out-recall its routing)"
-      AnnAdvice("raw_pq", e,
-        (Seq(f"cells explain only ${e * 100}%.0f%% of corpus variance — " +
-          "near-isotropic geometry, residual re-centering buys ~nothing " +
-          "and costs an nprobe-times larger LUT (q_ann_ivfpq_recall)",
-          f"m=$mPick%d (raw m=8 measured ~${MeasuredIsotropicRecallM8}%.2f recall " +
-            "on this geometry, ann_curve_10x_r14.jsonl)") ++
-          permClause ++ Seq(npClause) ++ ksClause)
-          .mkString("; "),
-        m = mPick, nprobe = npPick)
-    }
-  }
-
-  /** Codebook-drift verdict for the incremental ANN path
-    * (VERDICT r15 #2): a 100 TB corpus appends batches daily against a
-    * FROZEN codebook ([[graft.operators.ExtraSimilarityQueries]]'
-    * `q_ann_incremental` contract — assignment is a pure function of
-    * the frozen centers, so batch codes equal a full-rebuild's), and
-    * the operational question is WHEN to retrain. The statistic is the
-    * one [[annGeometryStats]] already computes, evaluated on the
-    * arrivals batch against the frozen cells: if the frozen codebook
-    * explains much less of the batch's variance than it explained of
-    * the corpus it was trained on, the batch has drifted off the
-    * trained cell structure and recall decays like the UNtrained
-    * operating points the probes measured. */
-  final case class AnnDriftAdvice(retrain: Boolean, corpusExplained: Double,
-                                  batchExplained: Double, rationale: String)
-
-  /** Retrain when the frozen cells explain this many absolute points
-    * less of the batch variance than of the training corpus. 0.1 sits
-    * well inside the measured decision gap: the advisor's two
-    * calibrated geometries are 0.75 apart (0.89 clustered vs 0.14
-    * isotropic), and the gates' own explained values are stable to
-    * ±0.02 across replicas — a 10-point drop is far above measurement
-    * noise yet fires long before the batch looks isotropic to cells
-    * trained on clustered data. */
-  val AnnDriftMargin: Double = 0.1
-
-  def adviseAnnDrift(corpus: AnnCorpusStats,
-                     batch: AnnCorpusStats): AnnDriftAdvice = {
-    val (ce, be) = (corpus.explained, batch.explained)
-    val drifted = be < ce - AnnDriftMargin
-    AnnDriftAdvice(drifted, ce, be,
-      if (drifted)
-        f"frozen cells explain ${be * 100}%.0f%% of batch variance vs " +
-          f"${ce * 100}%.0f%% of the training corpus — drop exceeds the " +
-          f"$AnnDriftMargin%.2f margin: retrain the codebook before the " +
-          "next index build (assign-only ingest remains correct meanwhile)"
-      else
-        f"frozen cells explain ${be * 100}%.0f%% of batch variance " +
-          f"(corpus ${ce * 100}%.0f%%) — within the $AnnDriftMargin%.2f " +
-          "margin: keep assigning to the frozen codebook")
-  }
-
   /** Tombstone-delete over an incremental index table (VERDICT r16
     * missing #2): the delete dual of the frozen-codebook append. A
     * 100 TB pipeline takes removals — takedowns, right-to-be-
@@ -924,184 +658,14 @@ object ScaleOps {
     * Scale shape: the tombstone set is takedown-sized (≪ corpus) —
     * broadcast it so the anti-join is a map-side hash probe on every
     * index partition, no shuffle of the index itself. A tombstone set
-    * too big to broadcast is past [[CompactionTombstoneFraction]]
-    * anyway — compact instead of carrying it. */
+    * too big to broadcast is a sign to compact instead of carrying it:
+    * measured break-even is 2–6 reads in both the cached and the
+    * file-backed regime (BASELINE.md "Tombstone carry-vs-compact
+    * crossover, r17" and "Cold-file compaction regime, r18"). */
   def tombstone(index: DataFrame, tombstones: DataFrame,
                 idCol: String): DataFrame =
     index.join(broadcast(tombstones.select(col(idCol)).distinct()),
       Seq(idCol), "left_anti")
-
-  final case class CompactionAdvice(tombstoneFraction: Double,
-                                    compact: Boolean, rationale: String)
-
-  /** Compact (rewrite the index tables without dead postings) once
-    * tombstones exceed this fraction of indexed ids. The tradeoff:
-    * carrying tombstones costs every query a broadcast-hash probe per
-    * candidate plus scanning dead postings — wasted candidate work is
-    * f/(1−f) of the live work, so at 0.2 every read scans 25 % dead
-    * rows forever — while compaction is a ONE-TIME map-only filter
-    * pass over the index tables (no shuffle: the anti-join broadcasts
-    * the tombstones, partitioning is preserved). One-pass rewrite vs
-    * a perpetual 25 % read tax is the standard LSM/segment-merge
-    * break-even region. MEASURED in both regimes on the gates' own
-    * 10× frozen-codebook index: cached —
-    * rewrite 0.28–0.71 s (one anti-join map pass), break-even 2–3
-    * reads (`bench/tombstone_carry_r17.jsonl`); cold-file (r18,
-    * parquet-resident index, REAL parquet rewrite) — the rewrite
-    * triples to 0.88–1.22 s but the carry tax grows too on the
-    * decode-bound scans, so break-even stays 2–6 reads
-    * (`bench/tombstone_carry_r18.jsonl`, page-cache-resident files:
-    * a lower bound on a true cold object store). In both measured
-    * regimes compaction pays for itself within a handful of reads —
-    * 0.2 is the conservative carry bound. */
-  val CompactionTombstoneFraction: Double = 0.2
-
-  /** Decide tombstone-carry vs compaction from the two row counts a
-    * pipeline already has (index metadata, not a corpus scan).
-    * `indexedIds` counts ALL ids the index holds INCLUDING the
-    * tombstoned ones — tombstones are a subset of the index by
-    * construction, so f ≤ 1 always; the requires make a live-only
-    * miscount fail loudly instead of printing an Infinity/negative
-    * dead-posting percentage (review r17). f = 1 — an entirely
-    * retracted crawl — is a LEGITIMATE state (ADVICE r17 #4): it
-    * short-circuits to compact (the rewrite is a truncate; carrying
-    * means every read scans only dead postings) without touching the
-    * f/(1−f) read-tax formula, which is meaningless at f = 1. */
-  def adviseCompaction(indexedIds: Long,
-                       tombstonedIds: Long): CompactionAdvice = {
-    require(indexedIds > 0, "adviseCompaction: empty index")
-    require(tombstonedIds >= 0 && tombstonedIds <= indexedIds,
-      s"adviseCompaction: tombstonedIds=$tombstonedIds must be in " +
-        s"[0, indexedIds=$indexedIds] — indexedIds counts the whole " +
-        "index INCLUDING tombstoned rows")
-    if (tombstonedIds == indexedIds)
-      return CompactionAdvice(1.0, compact = true,
-        "every indexed id is tombstoned (a fully-retracted index): " +
-          "compact now — the rewrite is a truncate of cells+codes, " +
-          "and carrying would make every read scan only dead postings")
-    val f = tombstonedIds.toDouble / indexedIds
-    val compact = f >= CompactionTombstoneFraction
-    CompactionAdvice(f, compact,
-      if (compact)
-        f"tombstones are ${f * 100}%.0f%% of indexed ids (≥ " +
-          f"${CompactionTombstoneFraction * 100}%.0f%%): every read now " +
-          f"scans ${f / (1 - f) * 100}%.0f%% dead postings — compact " +
-          "(one map-only anti-join rewrite of cells+codes, tombstone " +
-          "table then truncated)"
-      else
-        f"tombstones are ${f * 100}%.0f%% of indexed ids (< " +
-          f"${CompactionTombstoneFraction * 100}%.0f%%): carry the " +
-          "broadcast anti-join — a rewrite pass costs more than the " +
-          f"${f / (1 - f) * 100}%.0f%% dead-posting read tax it removes")
-  }
-
-  /** One documented decision procedure for the dedup tier
-    * (VERDICT r10 #8) — the rules the repo's operators each derive
-    * locally (deriveFuzzyBlocking, deriveShufflePartitions, the PPJoin
-    * prefix bound, the Ed-Join gram bound), collapsed into a single
-    * driver-side function over the SAME corpus aggregates. Integer
-    * arithmetic; every branch names the operator battery row that
-    * gates it.
-    *
-    * The shared primitive is the mean postings-list length
-    * `avgDf = n·shingles / vocab`: a prefix gram meets ~avgDf partners,
-    * so candidate volume ≈ rows × prefix length × avgDf — the quantity
-    * that actually bounds the verify stage, which a FIXED blocking key
-    * (first-char × band) cannot bound because its candidate count
-    * grows with the worst block's occupancy squared (the r10 lesson
-    * that made blockedFuzzyJoin `weak`). */
-  /** Qgram-vs-segment crossover for the EditDistance branch, in
-    * predicted CANDIDATES PER ROW — calibrated from BOTH sides at the
-    * same ~5e5-row scale in one r13 session (48 g, single-box quiet;
-    * `bench/entropy_h2h_r13.jsonl` + `bench/fuzzy_remeasure_100x_r13
-    * .jsonl`):
-    *
-    *  - gram-DIVERSE corpus (base64 keys, avgDf 1, 17 cand/row):
-    *    qgram 19.2 s vs segment 52.5 s — qgram wins 2.7×;
-    *  - LOW-ENTROPY corpus (first-4-words keys, avgDf 3 090,
-    *    52 530 cand/row): qgram 967.1 s vs segment 430.9 s — segment
-    *    wins 2.2× (identical 5 448 501 matches on both, exactness
-    *    cross-checked).
-    *
-    * Under a linear-in-avgDf cost model for both operators (qgram's
-    * verify volume IS n·(qd+1)·avgDf; segment's verify volume grows
-    * with key-collision counts, measured at the same two points), the
-    * equal-cost point sits at avgDf ≈ 181, i.e. ≈ 3 000 candidates
-    * per row at the derived (q = 4, d = 4) — replacing the
-    * unvalidated 64 the advisor shipped with (VERDICT r12 #1).
-    *
-    * VALIDATED AT THE BOUNDARY in r14 (VERDICT r13 #5,
-    * `bench/midentropy_crossover_r14.jsonl`): tunable-gram-vocab
-    * corpora (20-char keys over restricted alphabets, 520 k rows,
-    * identical match sets asserted) at avgDf 55 / 174 / 230 / 426 —
-    * the advisor routed ALL FOUR to their measured winners, the two
-    * straddling points (2 958 and 3 910 cand/row) included, and at
-    * avgDf 174 the measured walls agree within 5 % (qgram 63.7 s vs
-    * segment 67.1 s): the interpolated crossover is where the real
-    * one is. ScaleOpsSpec feeds all the measured stat rows through
-    * the advisor and pins the winners. */
-  val EdJoinCandidateBudgetPerRow: Long = 3000L
-
-  def adviseDedup(stats: DedupCorpusStats, task: DedupTask): DedupAdvice = {
-    require(stats.n >= 0 && stats.distinctShingles >= 0)
-    val n = stats.n
-    val avgDf = math.max(1L,
-      (n * stats.avgShinglesPerDoc).toLong / math.max(stats.distinctShingles, 1L))
-    val brute = if (n <= 3000L) Some(n * n / 2) else None
-    task match {
-      // exact content FIRST: the digest groupBy is O(n) — the brute
-      // all-pairs shortcut is never cheaper for plain equality, even
-      // at gate scale (it exists for the similarity tasks, whose index
-      // BUILD can cost more than n²/2 verifies on tiny corpora)
-      case ExactContent =>
-        DedupAdvice("exact_digest", n,
-          "content equality needs one digest groupBy — shuffle carries " +
-            "digests only, never text (q_dedup_exact / q_dedup_canonical)")
-      case _ if brute.isDefined =>
-        DedupAdvice("brute_force", brute.get,
-          s"n=$n is gate-scale: the all-pairs join (${brute.get} pairs) is " +
-            "cheaper than any index build (q_fuzzy_match / q_dedup_embed_cosine shape)")
-      case EditDistance(d, q) =>
-        val cand = n * (q.toLong * d + 1) * avgDf
-        if (cand <= EdJoinCandidateBudgetPerRow * n)
-          DedupAdvice("qgram_edit_join", cand,
-            s"guaranteed recall at ed<=$d: candidates = n x (q*d+1) prefix " +
-              s"grams x avgDf=$avgDf postings (q_fuzzy_match_qgram); the fixed " +
-              s"first-char x band key would put worstBlock^2=" +
-              s"${stats.worstBlockOccupancy * stats.worstBlockOccupancy} pairs " +
-              "on one block and grows quadratically with the corpus " +
-              "(q_fuzzy_match_blocked, the r10 weak row)")
-        else
-          // low-entropy corpus: gram postings are long (avgDf high), so
-          // the gram prefix filter stops filtering — exact-substring
-          // segment keys survive a small alphabet. Crossover measured
-          // from BOTH sides; see [[EdJoinCandidateBudgetPerRow]].
-          DedupAdvice("segment_edit_join", n * (2L * d + 1L) * (d + 1L),
-            s"guaranteed recall at ed<=$d with gram postings too long to " +
-              s"filter (avgDf=$avgDf puts qgram candidates at $cand > " +
-              s"${EdJoinCandidateBudgetPerRow}n): disjoint-segment " +
-              "pigeonholing keys on exact len/(d+1)-char " +
-              "substrings; probe volume is n x (2d+1)(d+1) windowed " +
-              "substrings and candidates scale with segment-key rarity " +
-              "(q_fuzzy_match_segment)")
-      case SetSimilarity(t, exactRecall) =>
-        val prefixLen = math.max(1L,
-          (stats.avgShinglesPerDoc * (1.0 - t)).toLong + 1L)
-        val prefixCand = n * prefixLen * avgDf
-        if (exactRecall || prefixCand <= 64L * n)
-          DedupAdvice("prefix_filter_ppjoin", prefixCand,
-            s"jaccard>=$t with zero false negatives: candidates = n x " +
-              s"prefix=(1-t)*shingles+1=$prefixLen x avgDf=$avgDf " +
-              "(q_dedup_prefix_filter; verify granularity via " +
-              "deriveShufflePartitions)")
-        else
-          DedupAdvice("minhash_lsh", n * avgDf,
-            s"prefix-filter candidates ($prefixCand) exceed the 64n verify " +
-              "budget and sketch recall is acceptable: band-bucket equi-join " +
-              "bounds candidates by bucket collisions ~ n x avgDf " +
-              "(q_dedup_minhash / q_dedup_corpus)")
-    }
-  }
 
   /** Exact, bit-DETERMINISTIC quantiles of a long column — the
     * adaptive-policy primitive `approxQuantile` cannot provide

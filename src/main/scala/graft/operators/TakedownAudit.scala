@@ -27,8 +27,9 @@ import org.apache.spark.sql.functions._
   *
   * Priority: a ledgered/tombstoned id counts as ALREADY GONE even
   * while its dead rows physically remain in a carried index — the
-  * carry-vs-compact distinction ([[ScaleOps.adviseCompaction]]) is
-  * storage layout, not deletion status.
+  * carry-vs-compact distinction (BASELINE.md "Tombstone
+  * carry-vs-compact crossover, r17") is storage layout, not deletion
+  * status.
   *
   * Scale shape: `requested` is takedown-sized by definition; every
   * classification is a semi/anti-join of the request against id-only

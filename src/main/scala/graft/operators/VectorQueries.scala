@@ -406,8 +406,8 @@ object VectorQueries {
     // gate corpus the permutation is recall-neutral by measurement
     // (the r15 flat-spectrum null); the row gates the DERIVATION and
     // the permuted encode path bit-exactly, the probe supplies the
-    // geometry where it pays, and [[graft.operators.ScaleOps
-    // .adviseAnn]] routes by measured spectrum ratio. Scale shape:
+    // geometry where it pays (BASELINE.md "OPQ decomposed on
+    // correlated residual geometries, r16"). Scale shape:
     // the variance pass is one 64-key aggregate; the permutation is
     // driver state (64 ints); everything downstream is the gated PQ
     // path unchanged.

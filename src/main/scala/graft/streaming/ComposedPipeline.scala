@@ -203,8 +203,9 @@ object ComposedPipeline {
   final case class VictimScanAdvice(pushdown: Boolean, nLedgerIds: Long,
                                     silverBytes: Long, reason: String)
 
-  /** Route the victim scan (the advisor dual of
-    * [[graft.operators.ScaleOps.adviseCompaction]]): push the
+  /** Route the victim scan (the silver-side dual of the index's
+    * carry-vs-compact crossover, BASELINE.md "Tombstone
+    * carry-vs-compact crossover, r17"): push the
     * collected id list into the parquet read as an IN filter when the
     * list is small enough to be a cheap predicate AND silver is big
     * enough that row-group/file pruning pays; otherwise keep the
@@ -502,7 +503,8 @@ object ComposedPipeline {
   private[graft] val LedgerBroadcastWarnIds = 10L * 1000 * 1000
 
   /** Advice for the ledger's lifecycle (VERDICT r18 next #3 — the
-    * dual of [[graft.operators.ScaleOps.adviseCompaction]]). */
+    * ledger dual of the index's carry-vs-compact crossover, BASELINE.md
+    * "Tombstone carry-vs-compact crossover, r17"). */
   final case class LedgerAdvice(compact: Boolean, broadcastRisk: Boolean,
                                 reason: String)
 

@@ -135,7 +135,10 @@ class AnalyticsSpec extends AnyFunSuite {
   test("the composed analytics demo runs its audits green") {
     // the demo's internal require()s are the assertions: token
     // bijectivity, funnel narrowing, cohort diagonal, sketch bound
+    spark.catalog.clearCache()
     val json = graft.examples.AnalyticsDemo.run(spark, sfDir)
     assert(json.contains("\"sketch_ok\":true"), json)
+    assert(TestSpark.cacheManager.isEmpty,
+      "AnalyticsDemo.run left cached plans in the session")
   }
 }

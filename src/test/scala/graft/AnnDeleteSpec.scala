@@ -12,9 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the deleted rows); this spec proves it engine-internally, pins the
   * end-to-end search invariants (no tombstoned id ever surfaces; the
   * results actually CHANGED vs the pre-delete index, so the test
-  * cannot pass vacuously), and pins both branches of the compaction
-  * advisor that decides when tombstone-carry stops being the right
-  * plan. */
+  * cannot pass vacuously). */
 class AnnDeleteSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -86,28 +84,5 @@ class AnnDeleteSpec extends AnyFunSuite {
     assert(incIds.exists(tombstoned),
       "pre-delete results contain no tombstoned ids — the delete test " +
         "would be vacuous; pick a different tombstone predicate")
-  }
-
-  test("adviseCompaction: carry below the threshold, rewrite at/above it") {
-    import graft.operators.ScaleOps
-    val carry = ScaleOps.adviseCompaction(indexedIds = 100, tombstonedIds = 14)
-    assert(!carry.compact && carry.tombstoneFraction === 0.14)
-    assert(carry.rationale.contains("carry"))
-    val rewrite = ScaleOps.adviseCompaction(indexedIds = 100, tombstonedIds = 20)
-    assert(rewrite.compact && rewrite.tombstoneFraction === 0.2)
-    assert(rewrite.rationale.contains("compact"))
-    intercept[IllegalArgumentException] {
-      ScaleOps.adviseCompaction(indexedIds = 0, tombstonedIds = 0)
-    }
-    // a fully-retracted index (ADVICE r17 #4) is a legitimate state:
-    // compact, with a rationale that never evaluates f/(1-f) at f=1
-    val full = ScaleOps.adviseCompaction(indexedIds = 100, tombstonedIds = 100)
-    assert(full.compact && full.tombstoneFraction === 1.0)
-    assert(full.rationale.contains("compact") &&
-      !full.rationale.contains("Infinity") && !full.rationale.contains("NaN"))
-    // but a genuine miscount (tombstones exceeding the index) still throws
-    intercept[IllegalArgumentException] {
-      ScaleOps.adviseCompaction(indexedIds = 100, tombstonedIds = 101)
-    }
   }
 }

@@ -9,8 +9,12 @@ class CorpusPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("pipeline stages compose with monotone counts and full coverage") {
+    spark.catalog.clearCache()
     val json = graft.examples.CorpusPipelineDemo
       .run(spark, "/root/testdata/sf0.001")
+    // every keep-set and member-query pin is released by the run itself
+    assert(TestSpark.cacheManager.isEmpty,
+      "CorpusPipelineDemo.run left cached plans in the session")
     val kv = "\"([a-z_]+)\":(\\d+)".r.findAllMatchIn(json)
       .map(m => m.group(1) -> m.group(2).toLong).toMap
     assert(kv("n_docs") > 0)
@@ -31,90 +35,5 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(kv("train_mixed") > 0 && kv("train_packs") > 0)
     // every surviving doc yields at least one retrieval chunk
     assert(kv("chunks") >= kv("after_dedup_and_split"))
-  }
-
-  test("the logged dedup advice names the operator each demo stage " +
-    "actually calls (VERDICT r12 #6)") {
-    import graft.operators.ScaleOps
-    val stats = graft.examples.CorpusPipelineDemo
-      .dedupStats(spark, "/root/testdata/sf0.001")
-    // stage 2b is DedupQueries.canonicalDigest — a digest groupBy:
-    // the advisor names it at EVERY scale
-    assert(ScaleOps.adviseDedup(stats, ScaleOps.ExactContent)
-      .operator == "exact_digest")
-    // stage 3 is the MinHash+LSH near-dup keep-set. At gate scale the
-    // honest advice is brute_force (n <= 3000: all-pairs beats any
-    // index build); at production n — same per-doc shingle profile,
-    // vocabulary held fixed (generated text: postings GROW with the
-    // corpus, the conservative low-entropy assumption) — the advisor
-    // must route to exactly the operator the stage calls.
-    val task = ScaleOps.SetSimilarity(0.5, exactRecall = false)
-    assert(ScaleOps.adviseDedup(stats, task).operator == "brute_force")
-    val atScale = stats.copy(n = 500L * 1000 * 1000)
-    assert(ScaleOps.adviseDedup(atScale, task).operator == "minhash_lsh")
-  }
-
-  test("the logged ANN advice line routes the demo's embedding table " +
-    "by its measured geometry (VERDICT r14 #4 — parity with the " +
-    "dedup advisor)") {
-    import graft.operators.ScaleOps
-    val line = graft.examples.CorpusPipelineDemo
-      .annAdviceLine(spark, "/root/testdata/sf0.001")
-    assert(line.contains("\"stage\":\"ann_index_encoding\""), line)
-    // the synthetic embeddings corpus is near-isotropic (measured
-    // explained 0.14 at the 10x replica, r14) — the honest advice at
-    // gate scale is raw_pq: residual re-centering buys ~nothing here
-    assert(line.contains("\"advice\":\"raw_pq\""), line)
-    // sign-capable regex (ADVICE r15 #3): a negative explained value
-    // (withinSse > totalSse) must FAIL the >= 0 assertion below, not
-    // have its sign silently dropped by the parse
-    val explained = "\"explained\":(-?[0-9.]+)".r
-      .findFirstMatchIn(line).get.group(1).toDouble
-    assert(explained >= 0.0 &&
-      explained < ScaleOps.ResidualExplainedThreshold, line)
-    // and the clustered-manifold shape flips the SAME decision rule
-    // to residual_pq (the two-sided calibration, ScaleOpsSpec pins
-    // the measured decomposition values)
-    val clusteredShaped = ScaleOps.AnnCorpusStats(
-      n = 5000, cells = 64, totalSse = 1000.0, withinSse = 80.0)
-    assert(ScaleOps.adviseAnn(clusteredShaped, ks = 256)
-      .encoding == "residual_pq")
-    // the advice line carries the m knob the r15 ceiling sweep proved
-    // dominant (VERDICT r15 #3): at the demo's 0.9 target on this
-    // near-isotropic geometry the measured m=8 floor suffices
-    assert(line.contains("\"m\":8"), line)
-  }
-
-  test("the incremental-ingest drift line keeps the frozen codebook " +
-    "on a batch drawn from the same corpus (VERDICT r15 #2)") {
-    val line = graft.examples.CorpusPipelineDemo
-      .annDriftLine(spark, "/root/testdata/sf0.001")
-    assert(line.contains("\"stage\":\"ann_incremental_drift\""), line)
-    // the every-5th-doc batch IS the same distribution — the frozen
-    // cells must explain it about as well as the training corpus, so
-    // the honest verdict is keep-assigning, not retrain
-    assert(line.contains("\"retrain\":false"), line)
-    val kv = "\"([a-z_]+)\":(-?[0-9.]+)".r.findAllMatchIn(line)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    // both decompositions present and sane; the batch within margin
-    assert(kv.contains("corpus_explained") && kv.contains("batch_explained"),
-      line)
-    assert(kv("batch_explained") >=
-      kv("corpus_explained") - graft.operators.ScaleOps.AnnDriftMargin, line)
-  }
-
-  test("the delete-path compaction line prices q_ann_delete's tombstone " +
-    "set against the carry-vs-rewrite threshold (r17)") {
-    import graft.operators.ScaleOps
-    val line = graft.examples.CorpusPipelineDemo
-      .compactionAdviceLine(spark, "/root/testdata/sf0.001")
-    assert(line.contains("\"stage\":\"ann_delete_compaction\""), line)
-    val kv = "\"([a-z_]+)\":([0-9.]+)".r.findAllMatchIn(line)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    val f = kv("tombstone_fraction")
-    assert(f > 0.0 && f < 1.0, line)
-    // the verdict must be the threshold rule, not an independent guess
-    assert(line.contains(s""""compact":${f >= ScaleOps.CompactionTombstoneFraction}"""),
-      line)
   }
 }

@@ -76,4 +76,23 @@ class PinRegistrySpec extends AnyFunSuite with Eventually {
       "the failed pin outlived unpersistAll")
     assert(df.storageLevel == StorageLevel.NONE)
   }
+
+  test("under src/main/scala only ScaleOps persists, caches or broadcasts") {
+    import scala.jdk.CollectionConverters._
+    val calls = Seq(".persist(", ".cache()", "sparkContext.broadcast(")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val walk = java.nio.file.Files.walk(root)
+    val sources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val owner = root.resolve("graft/operators/ScaleOps.scala")
+    val hits = sources.flatMap { p =>
+      val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      calls.filter(txt.contains).map(p -> _)
+    }
+    // the registry itself must still be found, or the check reads nothing
+    assert(hits.exists(_._1 == owner), s"no pin call found in $owner")
+    assert(hits.forall(_._1 == owner),
+      s"pins or broadcasts outside the ScaleOps registry: $hits")
+  }
 }

@@ -426,183 +426,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(exact == bruteEq, "maxDist=0 must equal the exact self-match")
   }
 
-  test("annGeometryStats decomposes variance exactly (hand-computed)") {
-    import spark.implicits._
-    // 4 vectors in 2 dims around two well-separated cells:
-    // mean = (5,1); total SSE = 4 x (25 + 1) = 104
-    // cells (0,1) and (10,1): within SSE = 4 x 1 = 4 -> explained 100/104
-    val corpus = Seq(
-      (0L, Seq(0.0, 0.0)), (1L, Seq(0.0, 2.0)),
-      (2L, Seq(10.0, 0.0)), (3L, Seq(10.0, 2.0)))
-      .toDF("vec_id", "ev")
-    val cents = Seq((0L, Seq(0.0, 1.0)), (1L, Seq(10.0, 1.0)))
-      .toDF("cent_id", "cv")
-    val assigned = Seq((0L, 0L), (1L, 0L), (2L, 1L), (3L, 1L))
-      .toDF("vec_id", "cent_id")
-    val geo = graft.operators.ExtraSimilarityQueries
-      .annGeometryStats(corpus, cents, assigned)
-    assert(geo.n == 4 && geo.cells == 2)
-    assert(math.abs(geo.totalSse - 104.0) < 1e-9, geo.totalSse)
-    assert(math.abs(geo.withinSse - 4.0) < 1e-9, geo.withinSse)
-    assert(math.abs(geo.explained - 100.0 / 104.0) < 1e-12)
-    // and the advisor reads it: well-separated cells -> residual_pq
-    assert(ScaleOps.adviseAnn(geo, ks = 4).encoding == "residual_pq")
-  }
-
-  test("adviseDedup picks the gated operator per task and corpus shape") {
-    import ScaleOps._
-    // gate-scale corpus: brute force beats any index build
-    val tiny = DedupCorpusStats(500, 40, 20000, 30)
-    assert(adviseDedup(tiny, EditDistance(2)).operator == "brute_force")
-    // exact content is always the digest groupBy
-    val big = DedupCorpusStats(500000000L, 40, 50000000L, 9153)
-    assert(adviseDedup(big, ExactContent).operator == "exact_digest")
-    // edit distance at scale over a DIVERSE gram vocabulary (short
-    // postings): the q-gram join, never the fixed blocking key;
-    // predicted candidates follow the n x (qd+1) x avgDf bound
-    val diverseGrams = DedupCorpusStats(500000000L, 40, 4000000000L, 9153)
-    val ed = adviseDedup(diverseGrams, EditDistance(maxDist = 4, q = 2))
-    assert(ed.operator == "qgram_edit_join")
-    val avgDf = (diverseGrams.n * 40) / diverseGrams.distinctShingles
-    assert(ed.predictedCandidates == diverseGrams.n * 9L * avgDf)
-    assert(ed.rationale.contains("q_fuzzy_match_qgram"))
-    // edit distance over a LOW-ENTROPY corpus (long postings blunt the
-    // gram prefix filter — the r11 100x head-to-head): segment join
-    val edLow = adviseDedup(big, EditDistance(maxDist = 4, q = 2))
-    assert(edLow.operator == "segment_edit_join")
-    assert(edLow.predictedCandidates == big.n * 9L * 5L)
-    assert(edLow.rationale.contains("q_fuzzy_match_segment"))
-    // the TWO MEASURED corpus profiles (r13 head-to-heads, both sides
-    // of the crossover — bench/entropy_h2h_r13.jsonl +
-    // bench/fuzzy_remeasure_100x_r13.jsonl): the advisor must route
-    // each to its measured winner
-    val measuredDiverse = DedupCorpusStats( // base64 keys: qgram 19.2 s < segment 52.5 s
-      n = 520000L, avgShinglesPerDoc = 17.0,
-      distinctShingles = 6708991L, worstBlockOccupancy = 8200L)
-    val advDiverse = adviseDedup(measuredDiverse, EditDistance(maxDist = 4, q = 4))
-    assert(advDiverse.operator == "qgram_edit_join")
-    val measuredLowEntropy = DedupCorpusStats( // first-4-words keys: segment 430.9 s < qgram 967.1 s
-      n = 500000L, avgShinglesPerDoc = 29.5602,
-      distinctShingles = 4782L, worstBlockOccupancy = 97000L)
-    val advLow = adviseDedup(measuredLowEntropy, EditDistance(maxDist = 4, q = 4))
-    assert(advLow.operator == "segment_edit_join")
-    // r14 BOUNDARY validation (bench/
-    // midentropy_crossover_r14.jsonl): tunable-vocab corpora at 520 k
-    // rows STRADDLE the 3000-candidate budget — avgDf 174 (2 958
-    // cand/row) measured qgram 63.7 s < segment 67.1 s; avgDf 230
-    // (3 910 cand/row) measured segment 61.5 s < qgram 64.6 s. The
-    // advisor routes both straddling points to their measured winners;
-    // the interpolated equal-cost avgDf ≈ 181 sits between them, where
-    // the measured walls agree within 5 % — the constant now decides
-    // correctly exactly where it decides.
-    val boundaryQgram = DedupCorpusStats( // 20-char keys, alphabet a=15
-      n = 520000L, avgShinglesPerDoc = 17.0,
-      distinctShingles = 50625L, worstBlockOccupancy = 34667L)
-    assert(adviseDedup(boundaryQgram, EditDistance(maxDist = 4, q = 4))
-      .operator == "qgram_edit_join")
-    val boundarySegment = DedupCorpusStats( // restricted a=14
-      n = 520000L, avgShinglesPerDoc = 17.0,
-      distinctShingles = 38416L, worstBlockOccupancy = 37143L)
-    assert(adviseDedup(boundarySegment, EditDistance(maxDist = 4, q = 4))
-      .operator == "segment_edit_join")
-    // ANN encoding advisor (r14): the two MEASURED geometries —
-    // clustered K=32 mixture (explained 0.95, residual 5-6x recall)
-    // and the near-isotropic embeddings corpus (explained 0.18,
-    // residual ≈ raw) — must route to their measured winners, and the
-    // ks < cells trained-codebook inversion must be warned
-    val clusteredGeo = AnnCorpusStats(50000L, 64L,
-      totalSse = 1000.0, withinSse = 50.0) // explained 0.95
-    assert(adviseAnn(clusteredGeo, ks = 256).encoding == "residual_pq")
-    val isotropicGeo = AnnCorpusStats(19000L, 64L,
-      totalSse = 1000.0, withinSse = 820.0) // explained 0.18
-    assert(adviseAnn(isotropicGeo, ks = 256).encoding == "raw_pq")
-    assert(adviseAnn(clusteredGeo, ks = 16).rationale.contains("WARNING"))
-    assert(!adviseAnn(clusteredGeo, ks = 64).rationale.contains("WARNING"))
-    // the m recommendation (VERDICT r15 #3, bench/clustered_ann_r15
-    // .jsonl): on clustered geometry the advisor picks the smallest
-    // MEASURED m meeting the recall target — 0.373@m=8, 0.651@m=16
-    assert(adviseAnn(clusteredGeo, ks = 256, recallTarget = 0.3).m == 8)
-    assert(adviseAnn(clusteredGeo, ks = 256, recallTarget = 0.5).m == 16)
-    val atCurve = adviseAnn(clusteredGeo, ks = 256, recallTarget = 0.5)
-    assert(atCurve.rationale.contains("0.651@m=16"), atCurve.rationale)
-    // past the measured ceiling: largest measured m, honest note
-    val pastCeiling = adviseAnn(clusteredGeo, ks = 256, recallTarget = 0.8)
-    assert(pastCeiling.m == 16 &&
-      pastCeiling.rationale.contains("measured ceiling"))
-    // isotropic geometry: raw m=8 already measures ~0.90 — only a
-    // target past that floor doubles m
-    assert(adviseAnn(isotropicGeo, ks = 256, recallTarget = 0.9).m == 8)
-    assert(adviseAnn(isotropicGeo, ks = 256, recallTarget = 0.95).m == 16)
-    // default target keeps the gates' m=8 operating point everywhere
-    assert(adviseAnn(clusteredGeo, ks = 256).m == 8)
-
-    // spectrum-imbalance routing (r16, bench/clustered_ann_r16.jsonl):
-    // the decaying-spectrum geometry (max/min ≈ e^6 ≈ 400) gets the
-    // free variance-balancing snake permutation recommended FIRST —
-    // measured +0.33@m=8 on both correlated modes; a flat spectrum
-    // (ratio ≈ 1, the r15 i.i.d. null) must NOT get it. Both branches
-    // carry the note.
-    val snakeAdv = adviseAnn(clusteredGeo, ks = 256, spectrumRatio = 400.0)
-    assert(snakeAdv.rationale.contains("snake"), snakeAdv.rationale)
-    assert(!adviseAnn(clusteredGeo, ks = 256).rationale.contains("snake"))
-    assert(adviseAnn(isotropicGeo, ks = 256, spectrumRatio = 400.0)
-      .rationale.contains("snake"))
-    assert(!adviseAnn(isotropicGeo, ks = 256, spectrumRatio = 1.2)
-      .rationale.contains("snake"))
-
-    // nprobe knob (VERDICT r16 #4, bench/ann_curve_10x_r14.jsonl
-    // ivf_curve): on the isotropic branch the advisor picks the
-    // smallest measured nprobe whose ROUTING ceiling (0.917@1 ->
-    // 0.926@2 -> 0.946@4 -> 0.956@8 -> 0.968@16) meets the target —
-    // an encoding cannot out-recall its routing
-    assert(adviseAnn(isotropicGeo, ks = 256, recallTarget = 0.9).nprobe == 1)
-    assert(adviseAnn(isotropicGeo, ks = 256, recallTarget = 0.93).nprobe == 4)
-    assert(adviseAnn(isotropicGeo, ks = 256, recallTarget = 0.95).nprobe == 8)
-    // past the measured routing ceiling: largest measured point plus
-    // the honest brute-force note
-    val pastRouting = adviseAnn(isotropicGeo, ks = 256, recallTarget = 0.98)
-    assert(pastRouting.nprobe == 16 &&
-      pastRouting.rationale.contains("measured routing ceiling"),
-      pastRouting.rationale)
-    // clustered branch: routing measured SATURATED (1.000@nprobe=4,
-    // clustered_ann_r14.jsonl) — nprobe pinned at 4, and a recall
-    // target above the m ceiling no longer emits the unmeasured
-    // "raise nprobe or ks" hint: the loss past the ceiling is PQ
-    // quantization, stated as such
-    assert(adviseAnn(clusteredGeo, ks = 256, recallTarget = 0.8).nprobe == 4)
-    assert(pastCeiling.rationale.contains("quantization, not routing"),
-      pastCeiling.rationale)
-    assert(!pastCeiling.rationale.contains("raise nprobe"))
-
-    // codebook-drift advisor for the incremental ingest path
-    // (VERDICT r15 #2): same geometry -> keep the frozen codebook;
-    // a batch the frozen cells explain >= AnnDriftMargin less ->
-    // retrain before the next index build
-    val frozen = AnnCorpusStats(50000L, 64L, 1000.0, 50.0) // explained .95
-    val sameShape = AnnCorpusStats(5000L, 64L, 100.0, 6.0) // explained .94
-    assert(!adviseAnnDrift(frozen, sameShape).retrain)
-    val drifted = AnnCorpusStats(5000L, 64L, 100.0, 30.0) // explained .70
-    val dVerdict = adviseAnnDrift(frozen, drifted)
-    assert(dVerdict.retrain && dVerdict.rationale.contains("retrain"))
-    // boundary: the margin is strict — exactly margin-below keeps
-    val atMargin = AnnCorpusStats(5000L, 64L, 1000.0, 150.0) // .85 = .95 - .10
-    assert(!adviseAnnDrift(frozen, atMargin).retrain)
-
-    // set similarity with exact recall: PPJoin regardless of volume
-    val headHeavy = DedupCorpusStats(500000000L, 40, 1000L, 1000000L)
-    assert(adviseDedup(headHeavy, SetSimilarity(0.8, exactRecall = true))
-      .operator == "prefix_filter_ppjoin")
-    // sketch recall acceptable + prefix candidates past the 64n budget
-    // (tiny vocabulary -> huge avgDf): MinHash LSH
-    assert(adviseDedup(headHeavy, SetSimilarity(0.8, exactRecall = false))
-      .operator == "minhash_lsh")
-    // high threshold + diverse vocabulary -> short prefixes keep PPJoin
-    // under budget even without the recall requirement
-    val diverse = DedupCorpusStats(500000000L, 40, 20000000000L, 200)
-    assert(adviseDedup(diverse, SetSimilarity(0.9, exactRecall = false))
-      .operator == "prefix_filter_ppjoin")
-  }
-
   test("exactQuantiles equals the sorted-array type-1 definition on " +
     "random multisets (ties, skew, nulls, p=1.0)") {
     import spark.implicits._

@@ -12,6 +12,13 @@ object TestSpark {
     s
   }
 
+  /** The shared session's cache of persisted plans: what `.cache()`,
+    * `.persist()` and [[graft.operators.ScaleOps.materializePinned]]
+    * register, and what `unpersist`/`clearCache` remove. */
+  def cacheManager: org.apache.spark.sql.execution.CacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+
   /** Temp dir that is recursively deleted at JVM exit — specs that
     * materialize whole table copies (InputOrderInvarianceSpec,
     * EventTimeSchemaSpec) must not leave orphaned parquet in /tmp
