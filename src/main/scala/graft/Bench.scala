@@ -217,7 +217,7 @@ object Bench {
         // per-query cache lifecycle (VERDICT r9 #3): the graph queries
         // pin edge/degree caches that must not outlive their query —
         // non-blocking release, and a no-op for every other query
-        graft.operators.GraphQueries.unpersistAll()
+        graft.operators.ScaleOps.releaseAll()
       }
     }
     // absolute CPU calibration: a fixed xorshift spin fanned across all

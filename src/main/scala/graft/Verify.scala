@@ -39,7 +39,7 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           true
         }
-        finally graft.operators.GraphQueries.unpersistAll()
+        finally graft.operators.ScaleOps.releaseAll()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

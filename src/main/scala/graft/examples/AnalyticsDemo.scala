@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
-import graft.operators.{GraphQueries, ScaleOps}
+import graft.operators.ScaleOps
 
 /** The product-analytics layer, composed from the event-tier battery
   * operators: pseudonymize the raw event log first (governance
@@ -78,6 +78,6 @@ object AnalyticsDemo {
       s"""{"n_events":$nEvents,"n_users":$nUsers,"funnel":[${steps.getLong(0)},""" +
         s"""${steps.getLong(1)},${steps.getLong(2)},${steps.getLong(3)}],""" +
         s""""n_cohorts":$nCohorts,"wau_days":$wauDays,"sketch_ok":$sketchOk}"""
-    } finally GraphQueries.unpersistAll()
+    } finally ScaleOps.releaseAll()
   }
 }

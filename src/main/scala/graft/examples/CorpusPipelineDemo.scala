@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
-import graft.operators.{GraphQueries, ScaleOps}
+import graft.operators.ScaleOps
 import graft.operators.ScaleOps.materializePinned
 
 /** The LLM-training-data pipeline, composed end-to-end from the
@@ -213,7 +213,7 @@ object CorpusPipelineDemo {
             s"$out/train_raw", s"$out/train", targetBytes = 1L << 20)
         // the file count is the published fact; reclaim the scratch tree
         // so repeated demo/spec runs don't accumulate /tmp garbage
-        } finally PipelineProbe.deleteScratch(out)
+        } finally graft.operators.Q.deleteTree(out)
 
       s"""{"n_docs":$nDocs,"n_redactions":$nRedactions,""" +
         s""""after_canonical":$nCanon,"after_domain_cap":$nDomainCapped,""" +
@@ -228,6 +228,6 @@ object CorpusPipelineDemo {
         s""""arrivals_kept":$nArrivalsKept,""" +
         s""""train_packs":$nPacks,"chunks":$nChunks,""" +
         s""""train_files":$nFiles}"""
-    } finally GraphQueries.unpersistAll()
+    } finally ScaleOps.releaseAll()
   }
 }

@@ -14,26 +14,6 @@ import org.apache.spark.sql.SparkSession
   * Construct before the pipeline runs, then print [[reportJson]] — one
   * JSON line a probe artifact (and BASELINE.md) can quote verbatim.
   */
-object PipelineProbe {
-  /** Recursive scratch cleanup for the demos' temp trees (staged CSV
-    * batches, streaming checkpoints, compaction outputs): repeated
-    * demo/spec runs must not accumulate unbounded /tmp garbage on the
-    * shared box. Best-effort — a failed delete never fails the run. */
-  def deleteScratch(root: java.nio.file.Path): Unit =
-    try {
-      import java.nio.file.Files
-      import scala.jdk.CollectionConverters._
-      // Files.walk holds a directory handle until closed (ADVICE r10:
-      // relying on GC leaks one handle per call) — materialize the
-      // paths, then close before deleting.
-      val walk = Files.walk(root)
-      val paths =
-        try walk.iterator().asScala.toSeq
-        finally walk.close()
-      paths.reverseIterator.foreach(p => Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-}
-
 final class PipelineProbe(spark: SparkSession) {
   private val memSpill = new AtomicLong(0L)
   private val diskSpill = new AtomicLong(0L)

@@ -87,7 +87,7 @@ object PlanDump {
           System.err.println(s"[plan-dump] $name FAILED: $e")
           true
       } finally {
-        graft.operators.GraphQueries.unpersistAll()
+        graft.operators.ScaleOps.releaseAll()
       }
     } finally if (exec) spark.listenerManager.unregister(listener)
   }

@@ -114,11 +114,6 @@ object RtbfDemo {
     // (fresh epoch id per the reconcileTakedowns cadence contract)
     ComposedPipeline.drainAndReconcile(spark, Nil, silver,
       epochBatchId = 9L)
-    // drain-time maintenance checklist (this demo never ran Q2, so
-    // the silver advisor reads nothing-committed → carry; the ledger
-    // line is the live one here)
-    ComposedPipeline.maintenanceChecklist(spark, silver, s"$workDir/cp2")
-      .foreach(println)
 
     Seq(annAudit, prefixAudit, scrubAudit, streamAudit)
   }

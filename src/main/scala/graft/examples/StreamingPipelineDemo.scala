@@ -84,11 +84,6 @@ object StreamingPipelineDemo {
       // come (a no-op in this demo: no takedowns were submitted)
       ComposedPipeline.drainAndReconcile(spark, Seq(q1b), silver,
         epochBatchId = 1L << 20)
-      // the operator's drain-time checklist: all three lifecycle
-      // advisors (silver backlog, compacted-region runs, ledger) in
-      // one readout
-      ComposedPipeline.maintenanceChecklist(spark, silver, cp2)
-        .foreach(println)
       val q2b = ComposedPipeline.startCounts(spark, silver, gold2, cp2)
       try q2b.processAllAvailable() finally q2b.stop()
       val wall = (System.nanoTime() - t0) / 1e9
@@ -118,6 +113,6 @@ object StreamingPipelineDemo {
         s""""dups_replayed_across_restart":$nDupsAcross,""" +
         s""""sources":${batch.size},"sources_parity_ok":$paritySources,""" +
         s""""frontier_advanced_across_restart":$advanced}"""
-    } finally PipelineProbe.deleteScratch(root)
+    } finally graft.operators.Q.deleteTree(root)
   }
 }

@@ -63,7 +63,7 @@ object WarehousePipelineDemo {
           outputDir = root.resolve("out").toString))
       // the drained count is already materialized; nothing downstream
       // reads the ingest tree — reclaim the scratch even on failure
-      finally PipelineProbe.deleteScratch(root)
+      finally graft.operators.Q.deleteTree(root)
 
     // 1. profile the incoming snapshot (one scan; the operational
     //    "what did we receive" report). SPARK_GRAFT_PROFILE_SKETCH=1

@@ -40,11 +40,9 @@ object CurationQueries {
     """{"id":4,"text":"plain","meta":{"lang":"fr","source":"cc"},"tags":["a","b","c"]}""")
 
   private lazy val jsonlFixture: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_jsonl")
-    val f = d.resolve("docs.jsonl")
+    val f = fixtureDir("graft_jsonl").resolve("docs.jsonl")
     java.nio.file.Files.write(f, JsonlLines.mkString("\n").getBytes(
       java.nio.charset.StandardCharsets.UTF_8))
-    f.toFile.deleteOnExit(); d.toFile.deleteOnExit()
     f.toString
   }
 
@@ -74,11 +72,10 @@ object CurationQueries {
   private def partitionedCopy(s: org.apache.spark.sql.SparkSession,
                               dir: String): String =
     partitionedDirs.computeIfAbsent(dir, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_part")
+      val d = fixtureDir("graft_part").toString
       t(s, dir, "documents").write.mode("overwrite")
-        .partitionBy("lang").parquet(d.toString)
-      d.toFile.deleteOnExit()
-      d.toString
+        .partitionBy("lang").parquet(d)
+      d
     })
 
   /** Two-generation schema-evolution fixture: generation 1 lacks the
@@ -88,7 +85,7 @@ object CurationQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def evolvedDir(s: org.apache.spark.sql.SparkSession): String =
     evolvedDirMemo.computeIfAbsent("dir", _ => {
-    val d = java.nio.file.Files.createTempDirectory("graft_evolve")
+    val d = fixtureDir("graft_evolve")
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val gen1 = s.createDataFrame(
@@ -99,7 +96,6 @@ object CurationQueries {
       StructType.fromDDL("id BIGINT, name STRING, quality DOUBLE"))
     gen1.coalesce(1).write.parquet(s"$d/gen=1")
     gen2.coalesce(1).write.parquet(s"$d/gen=2")
-    d.toFile.deleteOnExit()
     d.toString
   })
 
@@ -117,8 +113,7 @@ object CurationQueries {
       // explicit per-JVM temp location → external tables, immune to a
       // stale managed-table directory left in ./spark-warehouse by a
       // previous run (managed CREATE refuses non-empty locations)
-      val base = java.nio.file.Files.createTempDirectory("graft_bucketed")
-      base.toFile.deleteOnExit()
+      val base = fixtureDir("graft_bucketed")
       ScaleOps.writeBucketed(
         t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity")),
         lt, "l_orderkey", 8, path = s"$base/$lt")

@@ -30,11 +30,9 @@ object EtlQueries {
   /** The on-disk `.sql` fixture, created ONCE per JVM (the query runs
     * many times per bench/determinism sweep) and removed on exit. */
   private lazy val sqlFixtureDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_sqlsrc")
-    val f = d.resolve("agg.sql")
-    java.nio.file.Files.write(f,
+    val d = fixtureDir("graft_sqlsrc")
+    java.nio.file.Files.write(d.resolve("agg.sql"),
       SqlFileE2eText.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    f.toFile.deleteOnExit(); d.toFile.deleteOnExit()
     d.toString
   }
 
@@ -71,14 +69,13 @@ object EtlQueries {
       |    mode: REPEATED
       |""".stripMargin
   private lazy val repeatedFixture: (String, java.nio.file.Path) = {
-    val d = java.nio.file.Files.createTempDirectory("graft_repeated")
+    val d = fixtureDir("graft_repeated")
     val csv = d.resolve("seq_202109.csv")
     java.nio.file.Files.write(csv, RepeatedCsvText.getBytes(
       java.nio.charset.StandardCharsets.ISO_8859_1))
     val sch = d.resolve("seq_schema.yaml")
     java.nio.file.Files.write(sch, RepeatedSchemaYaml.getBytes(
       java.nio.charset.StandardCharsets.UTF_8))
-    csv.toFile.deleteOnExit(); sch.toFile.deleteOnExit(); d.toFile.deleteOnExit()
     (csv.toString, sch)
   }
 

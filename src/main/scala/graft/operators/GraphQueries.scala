@@ -18,21 +18,10 @@ import org.apache.spark.sql.functions._
 object GraphQueries {
   import Q._
 
-  /** Release everything the last query holds: every pin and broadcast
-    * in the [[ScaleOps]] registry (graph edge/degree caches, the
-    * triangle close array, shingle-set and LM-score pins, the q-gram
-    * df map). The one release hook — Bench, Verify, PlanDump and the
-    * specs call it once the query's FINAL result has materialized:
-    * releasing earlier would silently recompute the iterative joins
-    * from lineage. Non-blocking — eviction proceeds in the background
-    * while the next query plans. Process-wide: see the registry's
-    * sequential-harness note in [[ScaleOps]]. */
-  def unpersistAll(): Unit = ScaleOps.synchronized {
-    ScaleOps.pinnedFrames.foreach(_.unpersist(blocking = false))
-    ScaleOps.pinnedFrames.clear()
-    ScaleOps.pinnedBroadcasts.foreach(_.destroy()) // non-blocking in Spark 3+
-    ScaleOps.pinnedBroadcasts.clear()
-  }
+  /** [[ScaleOps.releaseAll]] under its older name. Kept as a one-line
+    * delegate because the `perfbench` harness releases each operation
+    * through it; new callers use `ScaleOps.releaseAll()`. */
+  def unpersistAll(): Unit = ScaleOps.releaseAll()
 
   /** Fixed iteration count for the gate — unrolled as explicit CTEs in
     * the DuckDB oracle, so keep the two in sync. */

@@ -372,7 +372,7 @@ object PipelineQueries {
         // Await EVERY phase to completion before surfacing any failure
         // (ADVICE r19 #1): rethrowing while a sibling future still runs
         // would let its Spark jobs outlive the harness' finally-side
-        // unpersistAll — silently recomputing released caches inside
+        // releaseAll — silently recomputing released caches inside
         // the NEXT query's timing window. Try-wrapped awaits never
         // throw, so all three phases are finished (or failed) before
         // any .get below rethrows the first error.
@@ -382,7 +382,7 @@ object PipelineQueries {
         // — release the shared trade pin NOW, while the triangle phase
         // may still be running off its own co-order pin (the scoped
         // form of the r11 "don't hold both graphs" rule; the co-order
-        // pin is released by the harness' end-of-query unpersistAll)
+        // pin is released by the harness' end-of-query releaseAll)
         ScaleOps.release(e)
         val triT = Try(Await.result(triF, Duration.Inf))
         pool.shutdown()

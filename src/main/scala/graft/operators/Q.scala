@@ -36,6 +36,31 @@ object Q {
   def spread(s: SparkSession, df: DataFrame): DataFrame =
     df.repartition(s.sparkContext.defaultParallelism)
 
+  /** A fresh temp directory for a once-per-JVM fixture, deleted with
+    * everything under it when the JVM exits. `File.deleteOnExit`
+    * removes only an EMPTY directory, so a fixture holding data (a
+    * partitioned or bucketed table copy) would outlive every run. */
+  def fixtureDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook(deleteTree(d))
+    d
+  }
+
+  /** Delete `root` and everything under it. Best-effort — a failed
+    * delete never fails the run. */
+  def deleteTree(root: java.nio.file.Path): Unit =
+    try {
+      import java.nio.file.Files
+      import scala.jdk.CollectionConverters._
+      // Files.walk holds a directory handle until closed —
+      // materialize the paths, then close before deleting.
+      val walk = Files.walk(root)
+      val paths =
+        try walk.iterator().asScala.toSeq
+        finally walk.close()
+      paths.reverseIterator.foreach(p => Files.deleteIfExists(p))
+    } catch { case _: Throwable => () }
+
   /** Column yielding `events.ts` as epoch MICROSECONDS, adaptive to
     * both generations of driver testdata: TIMESTAMP(NANOS) parquet
     * surfaced as a nanos Long (`spark.sql.legacy.parquet.nanosAsLong`)

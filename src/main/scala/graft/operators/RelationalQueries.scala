@@ -402,7 +402,7 @@ object RelationalQueries {
     // all, and candidate volume scales with gram rarity instead of a
     // fixed (prefix × band) key space — the property that kept
     // q_fuzzy_match_blocked `weak` at the 100-TB bar. BOTH knobs are
-    // data-derived and purely physical (deriveQgramParams): recall is
+    // data-derived and purely physical (deriveQgramPlan): recall is
     // exact at ANY gram width, so q is chosen by the measured
     // candidate-volume model n·(q·d+1)·avgDf(q) — the oracle needs no
     // replay of the derivation, precisely because the result cannot

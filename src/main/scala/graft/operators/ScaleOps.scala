@@ -14,9 +14,9 @@ object ScaleOps {
 
   /** What the running query holds: every cache pinned by
     * [[materializePinned]] and every broadcast variable made by
-    * [[broadcastPinned]] since the last `GraphQueries.unpersistAll()`,
-    * the one release hook Bench, Verify, PlanDump and the specs call in
-    * their per-query finally. Without it each query leaked its
+    * [[broadcastPinned]] since the last [[releaseAll]], the one release
+    * hook Bench, Verify, PlanDump and the specs call in their
+    * per-query finally. Without it each query leaked its
     * derived-table caches into the session for the rest of the battery
     * (VERDICT r9) and its broadcast values into the driver's block
     * manager. Pins are MEMORY_AND_DISK columnar caches: they evict
@@ -26,16 +26,30 @@ object ScaleOps {
     * SEQUENTIAL-HARNESS ASSUMPTION (ADVICE r10): the registry is
     * process-wide, so two queries running CONCURRENTLY on one JVM
     * could have their pins released mid-iteration by the other's
-    * finally-side unpersistAll — silent recomputation, never wrong
+    * finally-side releaseAll — silent recomputation, never wrong
     * results (lineage rebuilds the cache). Bench/Verify run queries
     * strictly one at a time, which is the supported mode; a harness
     * that interleaves queries must scope releases itself (see
     * [[release]]). */
-  private[operators] val pinnedFrames =
+  private val pinnedFrames =
     scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private[operators] val pinnedBroadcasts =
+  private val pinnedBroadcasts =
     scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.broadcast.Broadcast[_]]
+
+  /** Release everything the last query holds: every registered pin and
+    * broadcast (graph edge/degree caches, the triangle close array,
+    * shingle-set and LM-score pins, the q-gram df map). Call it once
+    * the query's FINAL result has materialized: releasing earlier
+    * would silently recompute the iterative joins from lineage.
+    * Non-blocking — eviction proceeds in the background while the next
+    * query plans. Process-wide: see the sequential-harness note above. */
+  def releaseAll(): Unit = synchronized {
+    pinnedFrames.foreach(_.unpersist(blocking = false))
+    pinnedFrames.clear()
+    pinnedBroadcasts.foreach(_.destroy()) // non-blocking in Spark 3+
+    pinnedBroadcasts.clear()
+  }
 
   private val pinLog = org.slf4j.LoggerFactory.getLogger("graft.ScaleOps")
 
@@ -111,7 +125,7 @@ object ScaleOps {
     }
     val out = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // register BEFORE the materializing count: if the count dies
-    // (OOM/cancellation), the finally-side unpersistAll() must still
+    // (OOM/cancellation), the finally-side releaseAll() must still
     // find and release the pin — registering after would resurrect the
     // leak on exactly the failure paths
     synchronized { pinnedFrames += out }
@@ -124,7 +138,7 @@ object ScaleOps {
     * graph's pin is released the moment both its consumers are
     * checkpointed, while the co-order graph built CONCURRENTLY by the
     * triangle phase keeps its pin until the harness' end-of-query
-    * unpersistAll. A blanket release there would drop the sibling
+    * releaseAll. A blanket release there would drop the sibling
     * phase's cache mid-iteration (silent recompute, the ADVICE r10
     * hazard). No-op when `df` was never registered. */
   def release(df: DataFrame): Unit = synchronized {
@@ -755,39 +769,31 @@ object ScaleOps {
   }
 
   /** DATA-derived gram width + shuffle granularity for
-    * [[qgramFuzzyJoin]] (the deriveFuzzyBlocking pattern): recall is
-    * exact for ANY q (the prefix theorem is width-independent), so q
-    * is a PHYSICAL knob, and the right value is corpus-dependent —
-    * the candidate volume a width buys is
-    * `n · (q·maxDist+1) · avgDf(q)` where `avgDf(q) = grams/vocab(q)`
-    * is the mean postings-list length. On the 10× replica the probe
-    * measured exactly the predicted ordering (q=2: vocab 142,
-    * avgDf 9591, 138.6 s; q=4: vocab 1782, avgDf 708, 52.7 s —
-    * identical 210 429 pairs at every q; measured r11 — no committed
-    * artifact holds the 10× sweep, the 100× vocabulary is in
-    * BASELINE.md "Exact edit-distance joins, r11"). Walks q upward while the predicted
-    * volume keeps strictly improving; `qMax` defaults to 4 because
-    * the short-string fallback absorbs keys under `q·(maxDist+1)`
-    * chars — at q=5, d=4 that is 25 chars, swallowing typical
-    * first-4-words keys whole. One cheap aggregate per candidate q
-    * over the key projection. */
-  def deriveQgramParams(df: DataFrame, c: String, maxDist: Int,
-                        qMax: Int = 4): (Int, Int) = {
-    val (q, np, _, _) = deriveQgramPlan(df, c, maxDist, qMax)
-    (q, np)
-  }
-
-  /** [[deriveQgramParams]] plus the chosen width's measured mean
-    * postings-list length `avgDf = grams/vocab(q)` (floor) — the
-    * corpus statistic that routes [[qgramFuzzyJoin]]'s `dfOrder` knob
-    * (r20): at avgDf ≈ 1 every gram is already df-rare, so the
-    * df-ascending prefix order buys no candidate selectivity while its
-    * plan costs a full-gram aggregate plus one join per side. Same two
-    * driver jobs; the statistic is already in hand. Also returns the
-    * chosen width's measured VOCAB (distinct gram count) — the
-    * statistic that gates [[qgramFuzzyJoin]]'s collected-df-map path
-    * (`dfVocab`): a df-ordered corpus has a small vocabulary by
-    * construction (avgDf = grams/vocab ≥ 2 is what routed it here). */
+    * [[qgramFuzzyJoin]] (the deriveFuzzyBlocking pattern), returned as
+    * `(q, partitions, avgDf, vocab)`. Recall is exact for ANY q (the
+    * prefix theorem is width-independent), so q is a PHYSICAL knob,
+    * and the right value is corpus-dependent — the candidate volume a
+    * width buys is `n · (q·maxDist+1) · avgDf(q)` where
+    * `avgDf(q) = grams/vocab(q)` is the mean postings-list length. On
+    * the 10× replica the probe measured exactly the predicted ordering
+    * (q=2: vocab 142, avgDf 9591, 138.6 s; q=4: vocab 1782, avgDf 708,
+    * 52.7 s — identical 210 429 pairs at every q; measured r11 — no
+    * committed artifact holds the 10× sweep, the 100× vocabulary is in
+    * BASELINE.md "Exact edit-distance joins, r11"). Walks q upward
+    * while the predicted volume keeps strictly improving; `qMax`
+    * defaults to 4 because the short-string fallback absorbs keys
+    * under `q·(maxDist+1)` chars — at q=5, d=4 that is 25 chars,
+    * swallowing typical first-4-words keys whole.
+    *
+    * The chosen width's measured mean postings-list length `avgDf`
+    * (floor) routes [[qgramFuzzyJoin]]'s `dfOrder` knob (r20): at
+    * avgDf ≈ 1 every gram is already df-rare, so the df-ascending
+    * prefix order buys no candidate selectivity while its plan costs
+    * a full-gram aggregate plus one join per side. The chosen width's
+    * measured VOCAB (distinct gram count) gates [[qgramFuzzyJoin]]'s
+    * collected-df-map path (`dfVocab`): a df-ordered corpus has a
+    * small vocabulary by construction (avgDf = grams/vocab ≥ 2 is
+    * what routed it here). Two driver jobs in all. */
   def deriveQgramPlan(df: DataFrame, c: String, maxDist: Int,
                       qMax: Int = 4): (Int, Int, Long, Long) = {
     require(qMax >= 1)
@@ -1133,7 +1139,7 @@ object ScaleOps {
         explode(array((col("__pr") / w).cast("long") - 1,
           (col("__pr") / w).cast("long"),
           (col("__pr") / w).cast("long") + 1)))
-    // derived granularity for the candidate join (deriveQgramParams at
+    // derived granularity for the candidate join (deriveQgramPlan at
     // call sites): the explicit repartition REPLACES the join's own
     // exchange; no-op at gate scale (widenIfAbove)
     val plW = widenIfAbove(pl, partitions, col("__g"), col("__b"), col("__pb"))

@@ -30,8 +30,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * grows one partition per micro-batch, so its LIFECYCLE ops are part
   * of the contract (r19): [[SilverCompaction]] rewrites old batches
   * out of the small-files regime without disturbing Q2 or the replay
-  * guarantees, [[compactLedger]]/[[retractTakedown]]/[[adviseLedger]]
-  * keep the takedown ledger bounded, and [[drainAndReconcile]] closes
+  * guarantees, [[compactLedger]]/[[retractTakedown]] keep the
+  * takedown ledger bounded, [[runMaintenance]] runs whichever of
+  * those rewrites pays, and [[drainAndReconcile]] closes
   * every session through the takedown-race re-check.
   */
 object ComposedPipeline {
@@ -68,8 +69,8 @@ object ComposedPipeline {
     * counters stay exact across a crash anywhere in the chain.
     * StreamingSpec's forced-replay test drives the rewritten
     * partition THROUGH a running Q2 and pins the frontier. */
-  private def idempotentAppend(mb: DataFrame, batchId: Long,
-                               dir: String): Unit =
+  private[streaming] def idempotentAppend(mb: DataFrame, batchId: Long,
+                                          dir: String): Unit =
     mb.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -196,41 +197,16 @@ object ComposedPipeline {
     * scan + broadcast join beats planning a many-term IN predicate. */
   private[graft] val VictimScanSmallBytes = 64L << 20
 
-  /** The victim-scan branch decision, with the inputs it was made
-    * from — logged per takedown batch so the silver-scan cost story
-    * is visible in demo/deployment output (VERDICT r18 next #5: one
-    * advisor instead of a raw constant). */
-  final case class VictimScanAdvice(pushdown: Boolean, nLedgerIds: Long,
-                                    silverBytes: Long, reason: String)
-
-  /** Route the victim scan (the silver-side dual of the index's
+  /** The victim-scan route (the silver-side dual of the index's
     * carry-vs-compact crossover, BASELINE.md "Tombstone
-    * carry-vs-compact crossover, r17"): push the
-    * collected id list into the parquet read as an IN filter when the
-    * list is small enough to be a cheap predicate AND silver is big
-    * enough that row-group/file pruning pays; otherwise keep the
-    * plain broadcast joins. Derived from the ledger's distinct-id
-    * count and the live+compacted silver footprint (FS metadata, no
-    * data read). */
-  def adviseVictimScan(nLedgerIds: Long, silverBytes: Long): VictimScanAdvice = {
-    require(nLedgerIds >= 0 && silverBytes >= 0, "adviseVictimScan: negative input")
-    if (nLedgerIds > LedgerPushdownMaxIds)
-      VictimScanAdvice(pushdown = false, nLedgerIds, silverBytes,
-        s"victim-scan=join: ledger ids > $LedgerPushdownMaxIds — an IN " +
-          "list this long costs more to evaluate than the row groups " +
-          "it would prune; broadcast-join the full ledger instead")
-    else if (silverBytes < VictimScanSmallBytes)
-      VictimScanAdvice(pushdown = false, nLedgerIds, silverBytes,
-        s"victim-scan=join: silver+compacted footprint $silverBytes B < " +
-          s"$VictimScanSmallBytes B — a full scan reads a handful of " +
-          "row groups; skip planning an IN predicate")
-    else
-      VictimScanAdvice(pushdown = true, nLedgerIds, silverBytes,
-        s"victim-scan=isin-pushdown: $nLedgerIds ledger ids over " +
-          s"$silverBytes B of silver — doc_id stats prune row groups " +
-          "(and compacted files via the _stats sidecar) before a row " +
-          "is decoded")
-  }
+    * carry-vs-compact crossover, r17"): push the collected id list
+    * into the parquet read as an IN filter only when the list is
+    * short enough to be a cheap predicate AND silver is big enough
+    * that row-group/file pruning pays; otherwise keep the plain
+    * broadcast joins. */
+  private[graft] def victimScanPushdown(nLedgerIds: Long,
+                                        silverBytes: Long): Boolean =
+    nLedgerIds <= LedgerPushdownMaxIds && silverBytes >= VictimScanSmallBytes
 
   /** Total data-file bytes under a directory (recursive, FS metadata
     * only); 0 for a missing path. */
@@ -273,12 +249,12 @@ object ComposedPipeline {
     * touched; the decrement itself is takedown-sized. Victims are
     * sought across the LIVE dir AND the [[compactedSilverDir]] region
     * (a doc curated long ago lives only there after a
-    * [[SilverCompaction]] run). [[adviseVictimScan]] routes the scan
-    * per batch — and logs its choice — between the collected-`isin`
-    * pushdown (row-group doc_id pruning, plus whole-FILE pruning of
-    * the compacted region via its `_stats` sidecar) and the plain
-    * broadcast joins (ledger past [[LedgerPushdownMaxIds]] ids, or a
-    * silver footprint too small for pruning to pay).
+    * [[SilverCompaction]] run). [[victimScanPushdown]] routes the scan
+    * per batch between the collected-`isin` pushdown (row-group doc_id
+    * pruning, plus whole-FILE pruning of the compacted region via its
+    * `_stats` sidecar) and the plain broadcast joins (ledger past
+    * [[LedgerPushdownMaxIds]] ids, or a silver footprint too small for
+    * pruning to pay).
     *
     * ORDERING + RACE RECOVERY (ADVICE r17 #3/#5): the batch's ids are
     * recorded in the LEDGER **before** silver is read, and victims
@@ -315,11 +291,10 @@ object ComposedPipeline {
     // a doc curated long ago has had its +1 rewritten out of Q2's
     // glob by SilverCompaction, but right-to-be-forgotten still has
     // to find it there
-    val advice = adviseVictimScan(ledgerIds.length,
-      dirBytes(spark, silverDir) +
-        dirBytes(spark, compactedSilverDir(silverDir)))
-    println(s"[takedown] batch=$batchId ${advice.reason}")
-    val prunable = if (advice.pushdown) Some(ledgerIds) else None
+    val prunable =
+      if (victimScanPushdown(ledgerIds.length, dirBytes(spark, silverDir) +
+          dirBytes(spark, compactedSilverDir(silverDir)))) Some(ledgerIds)
+      else None
     val live = parquetIfExists(spark, SilverSchema, silverDir)
     val compacted = SilverCompaction.readCompactedForIds(spark,
       compactedSilverDir(silverDir), prunable)
@@ -328,10 +303,8 @@ object ComposedPipeline {
       case (Some(l), Some(c)) => l.unionByName(c)
       case (l, c) => l.orElse(c).get
     }
-    val silverScan =
-      if (advice.pushdown) silver0.filter(col("doc_id").isin(ledgerIds: _*))
-      else silver0
-    val silver = silverScan
+    val silver = prunable.fold(silver0)(sorted =>
+        silver0.filter(col("doc_id").isin(sorted: _*)))
       .withColumn("delta", coalesce(col("delta"), lit(1L)))
       .filter(col("batch_id") =!= myBid)
     val counted = silver.filter(col("delta") > 0)
@@ -382,61 +355,19 @@ object ComposedPipeline {
     reconcileTakedowns(spark, silverDir, epochBatchId)
   }
 
-  /** One-call maintenance readout for a deployment: the three
-    * lifecycle advisors' verdicts over the tables derived from
-    * `silverDir` — [[SilverCompaction.adviseSilver]] (should the live
-    * small-files backlog be rewritten), [[SilverCompaction
-    * .adviseRegion]] (should the compacted region's runs be merged),
-    * and [[adviseLedger]] (should the takedown ledger be compacted /
-    * is its broadcast at risk). FS-metadata-cheap except the ledger's
-    * distinct-id count, a takedown-sized aggregate. Call it at drain
-    * or from a scheduled maintenance entry point; the returned lines
-    * read as the operator's checklist (the demos print them). */
-  def maintenanceChecklist(spark: SparkSession, silverDir: String,
-                           q2CheckpointDir: String): Seq[String] = {
-    val silver =
-      SilverCompaction.adviseSilver(spark, silverDir, q2CheckpointDir)
-    val region =
-      SilverCompaction.adviseRegion(spark, compactedSilverDir(silverDir))
-    val ledger = ledgerAdvice(spark, silverDir)
-    Seq(
-      s"[maintenance] silver compact=${silver.compact}: ${silver.reason}",
-      s"[maintenance] region merge=${region.merge}: ${region.reason}",
-      s"[maintenance] ledger compact=${ledger.compact} " +
-        s"broadcastRisk=${ledger.broadcastRisk}: ${ledger.reason}")
-  }
-
-  /** [[adviseLedger]] over a live ledger: distinct-id count (a
-    * takedown-sized aggregate) + partition fan-out (FS metadata). */
-  def ledgerAdvice(spark: SparkSession, silverDir: String): LedgerAdvice = {
-    val dir = takedownLedgerDir(silverDir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    parquetIfExists(spark, LedgerSchema, dir) match {
-      case None => adviseLedger(0, 0)
-      case Some(df) =>
-        val parts = fs.listStatus(p).toSeq.count(s =>
-          s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-        adviseLedger(df.select(col("doc_id")).distinct().count(), parts)
-    }
-  }
-
   /** What [[runMaintenance]] did: each field is Some only when its
-    * advisor said act (and the op then ran), plus the POST-action
-    * checklist — which should read all-carry, making the outcome
-    * self-verifying in the maintenance log. */
+    * rule said act (and the op then ran). */
   final case class MaintenanceOutcome(
       silverCompacted: Option[SilverCompaction.CompactionStats],
       runsMerged: Option[SilverCompaction.CompactionStats],
-      ledgerCompacted: Option[LedgerStats],
-      checklist: Seq[String])
+      ledgerCompacted: Option[LedgerStats])
 
-  /** Execute whatever the advisors advise, in dependency order:
-    * compact the silver backlog (which may land a new `run=`), then
-    * merge the region's runs, then compact the ledger. The one
-    * maintenance entry point a deployment schedules — each action
-    * runs ONLY on its advisor's say-so, so calling this on a healthy
-    * deployment is FS-metadata-cheap and writes nothing.
+  /** Run each maintenance operation whose rule says it pays, in
+    * dependency order: compact the silver backlog (which may land a
+    * new `run=`), then merge the region's runs, then compact the
+    * ledger. The one maintenance entry point a deployment schedules —
+    * calling it on a healthy deployment is FS-metadata-cheap and
+    * writes nothing.
     *
     * CONTRACT: call from a maintenance window (streaming queries
     * stopped, e.g. right after [[drainAndReconcile]], or between
@@ -444,42 +375,25 @@ object ComposedPipeline {
     * the committed-only rule — but the run merge and the ledger
     * rewrite are not atomic for a concurrent reader listing files
     * mid-commit. `targetFileBytes` sizes the rewrites AND the
-    * advisors' collapse math (default 128 MiB). */
+    * fan-out math that gates them (default 128 MiB). */
   def runMaintenance(spark: SparkSession, silverDir: String,
                      q2CheckpointDir: String,
                      targetFileBytes: Long = 128L << 20)
       : MaintenanceOutcome = {
-    val sAdv = SilverCompaction.adviseSilver(spark, silverDir,
+    val compacted = SilverCompaction.compactIfFanout(spark, silverDir,
       q2CheckpointDir, targetFileBytes)
-    val compacted = if (sAdv.compact)
-      SilverCompaction.compact(spark, silverDir, q2CheckpointDir,
-        targetFileBytes)
-    else None
     val compactedDir = compactedSilverDir(silverDir)
-    val rAdv =
-      SilverCompaction.adviseRegion(spark, compactedDir, targetFileBytes)
-    // merge the size-TIERED subset, not the whole region: a full
-    // rewrite per cycle is O(region) writes each time — the tiered
-    // policy leaves big base runs alone until the tail grows to a
-    // fixed fraction of them, bounding total rewrite I/O to
-    // O(n log n) over the deployment's life. When the advisor demands
-    // action but no natural tier exists (a clean geometric tower),
-    // the cheapest run-count reduction — the two smallest runs —
-    // honors it without touching the base.
-    val merged = if (rAdv.merge) {
-      val sizes = SilverCompaction.runSizes(spark, compactedDir)
-      val tiered = SilverCompaction.selectRunsForMerge(sizes)
-      val members =
-        if (tiered.size >= 2) tiered
-        else sizes.sortBy { case (id, b) => (b, id) }.take(2).map(_._1)
-      SilverCompaction.recompactRuns(spark, compactedDir, targetFileBytes,
-        members)
-    } else None
-    val ledger = if (ledgerAdvice(spark, silverDir).compact)
-      Some(compactLedger(spark, silverDir))
-    else None
-    MaintenanceOutcome(compacted, merged, ledger,
-      maintenanceChecklist(spark, silverDir, q2CheckpointDir))
+    val members =
+      SilverCompaction.regionMergeMembers(spark, compactedDir, targetFileBytes)
+    val merged =
+      if (members.isEmpty) None
+      else SilverCompaction.recompactRuns(spark, compactedDir,
+        targetFileBytes, members)
+    val ledger =
+      if (ledgerCompactionPays(ledgerPartDirs(spark, silverDir).size))
+        Some(compactLedger(spark, silverDir))
+      else None
+    MaintenanceOutcome(compacted, merged, ledger)
   }
 
   /** Marker batch_id under which [[compactLedger]]/[[retractTakedown]]
@@ -497,51 +411,25 @@ object ComposedPipeline {
     * opens that many small files for a takedown-sized id set. */
   private[graft] val LedgerCompactMinPartitions = 16
 
-  /** Past this many distinct ledgered ids the per-micro-batch
-    * broadcast anti-join in [[curateBatch]] stops being free (~8 B/id
-    * broadcast to every executor every trigger). */
-  private[graft] val LedgerBroadcastWarnIds = 10L * 1000 * 1000
+  /** The ledger-compaction rule (the ledger dual of the index's
+    * carry-vs-compact crossover, BASELINE.md "Tombstone
+    * carry-vs-compact crossover, r17"): decided on partition fan-out
+    * alone, because that is all [[compactLedger]] changes — the
+    * distinct-id set, and so the per-micro-batch suppression
+    * broadcast, is the same size after the rewrite. */
+  private[graft] def ledgerCompactionPays(partitions: Int): Boolean =
+    partitions > LedgerCompactMinPartitions
 
-  /** Advice for the ledger's lifecycle (VERDICT r18 next #3 — the
-    * ledger dual of the index's carry-vs-compact crossover, BASELINE.md
-    * "Tombstone carry-vs-compact crossover, r17"). */
-  final case class LedgerAdvice(compact: Boolean, broadcastRisk: Boolean,
-                                reason: String)
-
-  /** Should the ledger be compacted, and is it approaching a size
-    * where the hot-path broadcast itself is the problem? The ledger
-    * is append-only (one partition per takedown batch) and
-    * [[curateBatch]] reads + broadcasts its full distinct id set
-    * EVERY micro-batch, so both dimensions matter: partition count
-    * (read fan-out, fixed by [[compactLedger]] — always safe, nothing
-    * streams from the ledger) and distinct-id count (broadcast bytes,
-    * which no compaction reduces — past
-    * [[LedgerBroadcastWarnIds]] the advice is LOUD: review retention
-    * via [[retractTakedown]], or accept that suppression must move
-    * off the broadcast path). */
-  def adviseLedger(distinctIds: Long, partitions: Int): LedgerAdvice = {
-    require(distinctIds >= 0 && partitions >= 0, "adviseLedger: negative input")
-    val compact = partitions > LedgerCompactMinPartitions
-    val risk = distinctIds > LedgerBroadcastWarnIds
-    LedgerAdvice(compact, risk,
-      (if (risk)
-        s"LOUD: $distinctIds distinct ledgered ids exceeds " +
-          s"$LedgerBroadcastWarnIds — the per-micro-batch suppression " +
-          "broadcast is no longer free; review retention with " +
-          "retractTakedown (ids with a completed, reconciled takedown " +
-          "and a business guarantee of no re-crawl) or move " +
-          "suppression to a shuffle join. "
-      else "") +
-        (if (compact)
-          s"compact: $partitions ledger partitions > " +
-            s"$LedgerCompactMinPartitions — every curate micro-batch " +
-            "opens that many small files for a takedown-sized id set; " +
-            "compactLedger rewrites them into one (safe: nothing " +
-            "streams from the ledger)"
-        else
-          s"carry: $partitions ledger partitions ≤ " +
-            s"$LedgerCompactMinPartitions and " +
-            s"$distinctIds ids broadcast-safe"))
+  /** The ledger's `batch_id=` partition directories; empty when there
+    * is no ledger yet. */
+  private def ledgerPartDirs(spark: SparkSession,
+                             silverDir: String): Seq[org.apache.hadoop.fs.Path] = {
+    val p = new org.apache.hadoop.fs.Path(takedownLedgerDir(silverDir))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
+      .map(_.getPath)
   }
 
   /** Rewrite the ledger to a single distinct-id partition under
@@ -580,15 +468,11 @@ object ComposedPipeline {
   private def rewriteLedger(spark: SparkSession, silverDir: String,
                             remove: Option[DataFrame]): LedgerStats = {
     val dir = takedownLedgerDir(silverDir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ledger = parquetIfExists(spark, LedgerSchema, dir)
       .getOrElse(return LedgerStats(0, 0, 0))
-    def partDirs(): Seq[org.apache.hadoop.fs.Path] =
-      fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-        .map(_.getPath)
-    val before = partDirs()
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val before = ledgerPartDirs(spark, silverDir)
     val kept0 = ledger.select(col("doc_id")).distinct()
     val kept = remove.fold(kept0)(r => kept0.join(
         broadcast(r.select(col("doc_id")).distinct()),
@@ -599,7 +483,7 @@ object ComposedPipeline {
     idempotentAppend(kept, LedgerCompactBatchId, dir)
     before.filterNot(_.getName == s"batch_id=$LedgerCompactBatchId")
       .foreach(d => fs.delete(d, true))
-    LedgerStats(nKept, before.size, partDirs().size)
+    LedgerStats(nKept, before.size, ledgerPartDirs(spark, silverDir).size)
   }
 
   /** Q3 — takedowns: file-source ingest of takedown id batches →

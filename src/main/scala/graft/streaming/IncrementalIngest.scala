@@ -1,8 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
+
+import graft.sources.CsvIngest
 
 /** Incremental variant of the reference's scheduled pickup (SURVEY
   * §2.8): the reference polls daily for the newest file and archives
@@ -29,31 +32,43 @@ object IncrementalIngest {
       sep: String = ";",
       maxFilesPerTrigger: Int = 1000)
 
+  /** What the binary file source lists per file; only `path` is
+    * selected, so no file content is read by the source. */
+  private val FileListing = StructType(Seq(
+    StructField("path", StringType), StructField("modificationTime", TimestampType),
+    StructField("length", LongType), StructField("content", BinaryType)))
+
   /** Start a drain-available-then-stop ingest: CSV files → repaired
-    * rows → parquet sink. Returns the started query; callers
-    * `awaitTermination()`.
+    * rows → parquet sink. The stream tracks FILES only; each
+    * micro-batch's files are parsed by [[CsvIngest.read]], the same
+    * reference wire format the batch workflow loads (ISO-8859-1,
+    * QUOTE_NONE with `\` escapes, wrong-arity rows dropped), and land
+    * in their own `batch_id` partition through
+    * [[ComposedPipeline.idempotentAppend]], so a replayed micro-batch
+    * rewrites its partition instead of appending twice. Returns the
+    * started query; callers `awaitTermination()`.
     */
   def start(spark: SparkSession, schema: StructType, cfg: Config): StreamingQuery = {
-    val allStrings = StructType(schema.fields.map(_.copy(
-      dataType = org.apache.spark.sql.types.StringType)))
-    val raw = spark.readStream
-      .schema(allStrings)
-      .option("sep", cfg.sep)
-      .option("quote", "")
-      .option("escape", "\\")
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
+    val opts = CsvIngest.Options(sep = cfg.sep)
+    spark.readStream
+      .format("binaryFile")
+      .schema(FileListing)
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
       // the reference's clean_bucket archive, done by the source itself
       .option("cleanSource", "archive")
       .option("sourceArchiveDir", cfg.archiveDir)
-      .csv(cfg.inputDir)
-    val repaired = graft.operators.Repair.repair(raw, schema)
-    repaired.writeStream
-      .format("parquet")
-      .option("path", cfg.outputDir)
+      .load(cfg.inputDir)
+      .select(col("path"))
+      .writeStream
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(Trigger.AvailableNow())
+      .foreachBatch { (files: DataFrame, batchId: Long) =>
+        val rows = files.collect().toSeq
+          .map(r => CsvIngest.read(spark, r.getString(0), schema, opts))
+        if (rows.nonEmpty)
+          ComposedPipeline.idempotentAppend(rows.reduce(_ union _), batchId,
+            cfg.outputDir)
+      }
       .start()
   }
 

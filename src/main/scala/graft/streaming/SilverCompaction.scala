@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Safe compaction for the streaming silver handoff (VERDICT r18
   * next #1 — the last 100 TB lifecycle gap): [[ComposedPipeline]]'s
@@ -107,8 +107,13 @@ object SilverCompaction {
     finally in.close()
   }
 
-  private def isDataFile(name: String): Boolean =
-    !name.startsWith("_") && !name.startsWith(".")
+  /** The data files directly under each of `dirs` (names starting
+    * with `_` or `.` are metadata: `_SUCCESS`, checksums). */
+  private def dataFiles(fs: FileSystem, dirs: Seq[Path]): Seq[FileStatus] =
+    dirs.flatMap(d => fs.listStatus(d).toSeq.filter { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !n.startsWith(".")
+    })
 
   /** The set of silver file paths (scheme-stripped) Q2's checkpoint
     * has COMMITTED — i.e. files whose rows are already reflected in
@@ -184,8 +189,7 @@ object SilverCompaction {
       cur.toSeq.sorted.takeRight(w).toSet ++ td.toSeq.sorted.takeRight(w)
     val committed = committedSilverFiles(spark, q2CheckpointDir)
     val (ok, not) = (partDirs.keySet -- protectedIds).partition { b =>
-      val files = fs.listStatus(partDirs(b)).toSeq
-        .filter(s => s.isFile && isDataFile(s.getPath.getName))
+      val files = dataFiles(fs, Seq(partDirs(b)))
       files.nonEmpty &&
         files.forall(f => committed.contains(f.getPath.toUri.getPath))
     }
@@ -211,8 +215,7 @@ object SilverCompaction {
     val runId = p.compactable.max
     val srcDirs = p.compactable
       .map(b => ComposedPipeline.partitionDir(silverDir, b))
-    val srcFiles = srcDirs.flatMap(d => fs.listStatus(new Path(d)).toSeq
-      .filter(s => s.isFile && isDataFile(s.getPath.getName)))
+    val srcFiles = dataFiles(fs, srcDirs.map(new Path(_)))
     val srcBytes = srcFiles.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(srcBytes.toDouble / targetFileBytes).toInt)
     val src = spark.read.option("basePath", silverDir)
@@ -233,8 +236,7 @@ object SilverCompaction {
         "— source partitions NOT deleted")
     writeFileStats(spark, compactedDir, runId)
     srcDirs.foreach(d => fs.delete(new Path(d), true))
-    val filesAfter = fs.listStatus(new Path(runDir)).toSeq
-      .count(s => s.isFile && isDataFile(s.getPath.getName))
+    val filesAfter = dataFiles(fs, Seq(new Path(runDir))).size
     Some(CompactionStats(runId, p.compactable.size, srcRows,
       srcFiles.size, filesAfter, srcBytes))
   }
@@ -374,132 +376,57 @@ object SilverCompaction {
       goldBatchIdBase = nextGoldBatchIdBase(spark, goldDir))
 
   /** How many live files over the post-compaction count justify a
-    * [[compact]] run (see [[adviseSilver]]): below this multiple the
-    * per-read small-files tax is noise against the one-time rewrite. */
+    * rewrite (see [[fanoutPays]]): below this multiple the per-read
+    * small-files tax is noise against the one-time rewrite. */
   private[graft] val CompactFileFanout = 8
 
-  /** Floor under which compaction is never advised — a table this
-    * small reads in a handful of opens regardless of layout. */
+  /** Floor under which no rewrite pays — a table this small reads in
+    * a handful of opens regardless of layout. */
   private[graft] val CompactMinFiles = 16
 
-  /** Advice for when to RUN the compaction (the advisor-pattern dual
-    * of [[ComposedPipeline.adviseLedger]]). */
-  final case class SilverAdvice(compact: Boolean, compactableFiles: Int,
-                                filesAfter: Int, reason: String)
-
-  /** Should a compaction run now? Pure function of the plan's
-    * compactable file count + byte size and the file-size target: the
+  /** The fan-out rule both rewrites share ([[compactIfFanout]] for the
+    * silver backlog, [[regionMergeMembers]] for the region's runs): a
     * rewrite pays when it collapses at least [[CompactFileFanout]]×
-    * the post-compaction file count (the r19 probe measured a 23 %
-    * per-read tax already at ~200 skinny-row files —
-    * `bench/silver_compaction_r19.jsonl` — and the tax grows with
-    * file count while the rewrite cost is one-time), and never below
-    * [[CompactMinFiles]] files. */
-  def adviseSilver(compactableFiles: Int, compactableBytes: Long,
-                   targetFileBytes: Long = 128L << 20): SilverAdvice = {
-    require(compactableFiles >= 0 && compactableBytes >= 0 &&
-      targetFileBytes > 0, "adviseSilver: bad input")
-    val after =
-      math.max(1, math.ceil(compactableBytes.toDouble / targetFileBytes).toInt)
-    val compact = compactableFiles >= CompactMinFiles &&
-      compactableFiles >= CompactFileFanout * after
-    SilverAdvice(compact, compactableFiles, after,
-      if (compact)
-        s"compact: $compactableFiles committed files collapse to " +
-          s"$after (≥ ${CompactFileFanout}× fan-out) — every full read " +
-          "and victim scan pays the per-file open+footer tax until the " +
-          "one-time rewrite runs"
-      else if (compactableFiles < CompactMinFiles)
-        s"carry: $compactableFiles committed files < $CompactMinFiles — " +
-          "the table reads in a handful of opens regardless of layout"
-      else
-        s"carry: $compactableFiles files would still be $after after a " +
-          s"rewrite (fan-out < ${CompactFileFanout}×) — the rewrite buys " +
-          "little until more batches commit")
+    * the post-rewrite file count, `ceil(bytes / targetFileBytes)`,
+    * and never below [[CompactMinFiles]] files. The r19 probe measured
+    * a 23 % per-read tax already at ~200 skinny-row files
+    * (`bench/silver_compaction_r19.jsonl`); the tax grows with file
+    * count while the rewrite cost is one-time. */
+  private[graft] def fanoutPays(files: Int, bytes: Long,
+                                targetFileBytes: Long): Boolean = {
+    val after = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+    files >= CompactMinFiles && files >= CompactFileFanout * after
   }
 
-  /** Gather [[adviseSilver]]'s inputs from a live table: the plan's
-    * compactable partitions' file count + bytes (FS metadata only). */
-  def adviseSilver(spark: SparkSession, silverDir: String,
-                   q2CheckpointDir: String): SilverAdvice =
-    adviseSilver(spark, silverDir, q2CheckpointDir, 128L << 20)
-
-  /** [[adviseSilver]] over a live table at an explicit file-size
-    * target (overloads cannot share the pure form's default). */
-  def adviseSilver(spark: SparkSession, silverDir: String,
-                   q2CheckpointDir: String,
-                   targetFileBytes: Long): SilverAdvice = {
-    val p = plan(spark, silverDir, q2CheckpointDir)
+  /** [[compact]] only when [[fanoutPays]] over the plan's compactable
+    * files — the form maintenance runs: a backlog the rewrite would
+    * not shrink enough waits for a later cycle. */
+  private[streaming] def compactIfFanout(spark: SparkSession,
+                                         silverDir: String,
+                                         q2CheckpointDir: String,
+                                         targetFileBytes: Long)
+      : Option[CompactionStats] = {
     val (fs, _) = fsFor(spark, silverDir)
-    val files = p.compactable
-      .map(b => new Path(ComposedPipeline.partitionDir(silverDir, b)))
-      .flatMap(d => fs.listStatus(d).toSeq
-        .filter(s => s.isFile && isDataFile(s.getPath.getName)))
-    adviseSilver(files.size, files.map(_.getLen).sum, targetFileBytes)
+    val files = dataFiles(fs, plan(spark, silverDir, q2CheckpointDir)
+      .compactable.map(b => new Path(ComposedPipeline.partitionDir(silverDir, b))))
+    if (fanoutPays(files.size, files.map(_.getLen).sum, targetFileBytes))
+      compact(spark, silverDir, q2CheckpointDir, targetFileBytes)
+    else None
   }
 
-  /** Runs the compacted region may hold before a [[recompactRuns]]
-    * merge is advised regardless of file fan-out: each run carries its
-    * own doc_id sort, so one victim id's span can intersect one file
-    * PER RUN — the `_stats` pruning bound (and every full read's open
-    * count) degrades linearly with run count. */
+  /** Runs the compacted region may hold before a merge pays regardless
+    * of file fan-out: each run carries its own doc_id sort, so one
+    * victim id's span can intersect one file PER RUN — the `_stats`
+    * pruning bound (and every full read's open count) degrades
+    * linearly with run count. */
   private[graft] val RegionMaxRuns = 4
 
-  /** Advice for the compacted region's own lifecycle (the
-    * [[recompactRuns]] dual of [[adviseSilver]]). */
-  final case class RegionAdvice(merge: Boolean, runs: Int, files: Int,
-                                filesAfter: Int, reason: String)
-
-  /** Should the region's runs be merged? Two independent triggers:
-    * run count past [[RegionMaxRuns]] (each run is a separate doc_id
-    * sort, so victim-scan pruning reads ≥ one file per run whatever
-    * the spans say), or the same file fan-out economics as
-    * [[adviseSilver]] (≥ [[CompactFileFanout]]× collapse past the
-    * [[CompactMinFiles]] floor). Never with fewer than two runs —
-    * there is nothing to merge. */
-  def adviseRegion(runs: Int, files: Int, bytes: Long,
-                   targetFileBytes: Long = 128L << 20): RegionAdvice = {
-    require(runs >= 0 && files >= 0 && bytes >= 0 && targetFileBytes > 0,
-      "adviseRegion: bad input")
-    val after =
-      math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val byRuns = runs > RegionMaxRuns
-    val byFanout = files >= CompactMinFiles && files >= CompactFileFanout * after
-    val merge = runs >= 2 && (byRuns || byFanout)
-    RegionAdvice(merge, runs, files, after,
-      if (merge && byRuns)
-        s"merge: $runs runs > $RegionMaxRuns — every victim scan reads " +
-          "at least one file per run regardless of span pruning; " +
-          "recompactRuns restores one global doc_id sort"
-      else if (merge)
-        s"merge: $files region files collapse to $after " +
-          s"(≥ ${CompactFileFanout}× fan-out)"
-      else if (runs < 2)
-        s"carry: $runs run(s) — nothing to merge"
-      else
-        s"carry: $runs runs, $files files → $after after a merge — " +
-          "below both the run-count and fan-out thresholds")
-  }
-
-  /** Gather [[adviseRegion]]'s inputs from a live region (FS metadata
-    * only). */
-  def adviseRegion(spark: SparkSession, compactedDir: String): RegionAdvice =
-    adviseRegion(spark, compactedDir, 128L << 20)
-
-  /** [[adviseRegion]] over a live region at an explicit file-size
-    * target (overloads cannot share the pure form's default). */
-  def adviseRegion(spark: SparkSession, compactedDir: String,
-                   targetFileBytes: Long): RegionAdvice = {
-    val (fs, cp) = fsFor(spark, compactedDir)
-    if (!fs.exists(cp)) return RegionAdvice(merge = false, 0, 0, 0,
-      "carry: no compacted region")
-    val runs = listRuns(fs, cp)
-    val files = runs.toSeq.map(r => new Path(cp, s"run=$r"))
-      .flatMap(d => fs.listStatus(d).toSeq
-        .filter(s => s.isFile && isDataFile(s.getPath.getName)))
-    adviseRegion(runs.size, files.size, files.map(_.getLen).sum,
-      targetFileBytes)
-  }
+  /** The region-merge rule: never under two runs (nothing to merge);
+    * otherwise merge past [[RegionMaxRuns]] runs, or when the region's
+    * files pass [[fanoutPays]]. */
+  private[graft] def regionMergePays(runs: Int, files: Int, bytes: Long,
+                                     targetFileBytes: Long): Boolean =
+    runs >= 2 && (runs > RegionMaxRuns || fanoutPays(files, bytes, targetFileBytes))
 
   /** A kept run must be at least this many × the combined size of all
     * smaller runs for [[selectRunsForMerge]] to leave it alone — the
@@ -538,17 +465,40 @@ object SilverCompaction {
     if (merge.size < 2) Nil else merge.sorted
   }
 
+  /** Each run of a live region with its data files (FS metadata
+    * only), in run-id order. */
+  private def runFiles(spark: SparkSession, compactedDir: String)
+      : Seq[(Long, Seq[FileStatus])] = {
+    val (fs, cp) = fsFor(spark, compactedDir)
+    listRuns(fs, cp).toSeq.sorted
+      .map(r => r -> dataFiles(fs, Seq(new Path(cp, s"run=$r"))))
+  }
+
   /** Per-run byte sizes of a live region (FS metadata only) — the
     * input [[selectRunsForMerge]] wants. */
   def runSizes(spark: SparkSession, compactedDir: String)
-      : Seq[(Long, Long)] = {
-    val (fs, cp) = fsFor(spark, compactedDir)
-    if (!fs.exists(cp)) return Nil
-    listRuns(fs, cp).toSeq.sorted.map { r =>
-      r -> fs.listStatus(new Path(cp, s"run=$r")).toSeq
-        .filter(s => s.isFile && isDataFile(s.getPath.getName))
-        .map(_.getLen).sum
-    }
+      : Seq[(Long, Long)] =
+    runFiles(spark, compactedDir).map { case (r, files) => r -> files.map(_.getLen).sum }
+
+  /** The runs a maintenance merge rewrites: Nil unless
+    * [[regionMergePays]]; otherwise the size-TIERED subset
+    * ([[selectRunsForMerge]]) — a full rewrite per cycle is O(region)
+    * writes each time, while the tiered policy leaves big base runs
+    * alone until the tail grows to a fixed fraction of them, bounding
+    * total rewrite I/O to O(n log n) over the deployment's life. When
+    * the rule demands a merge but no natural tier exists (a clean
+    * geometric tower), the cheapest run-count reduction — the two
+    * smallest runs — honors it without touching the base. */
+  private[graft] def regionMergeMembers(spark: SparkSession,
+                                        compactedDir: String,
+                                        targetFileBytes: Long): Seq[Long] = {
+    val runs = runFiles(spark, compactedDir)
+    val sizes = runs.map { case (r, files) => r -> files.map(_.getLen).sum }
+    if (!regionMergePays(runs.size, runs.map(_._2.size).sum,
+        sizes.map(_._2).sum, targetFileBytes)) return Nil
+    val tiered = selectRunsForMerge(sizes)
+    if (tiered.size >= 2) tiered
+    else sizes.sortBy { case (id, b) => (b, id) }.take(2).map(_._1)
   }
 
   /** Regenerate `_stats` entries for runs missing them and drop
@@ -563,20 +513,6 @@ object SilverCompaction {
       fs.delete(new Path(cp, s"_stats/run=$r"), true))
     (dataRuns -- statsRuns).foreach(r =>
       writeFileStats(spark, compactedDir, r))
-  }
-
-  /** Merge ALL existing `run=` partitions of the compacted region
-    * into one. Fine for small regions and tests; a production-cadence
-    * deployment should merge the tiered subset instead
-    * ([[selectRunsForMerge]] — what [[ComposedPipeline
-    * .runMaintenance]] does) so the big base runs are not rewritten
-    * every cycle. */
-  def recompactRuns(spark: SparkSession, compactedDir: String,
-                    targetFileBytes: Long = 128L << 20)
-      : Option[CompactionStats] = {
-    val (fs, cp) = fsFor(spark, compactedDir)
-    val all = if (fs.exists(cp)) listRuns(fs, cp).toSeq.sorted else Nil
-    recompactRuns(spark, compactedDir, targetFileBytes, all)
   }
 
   /** Merge the given `run=` partitions of the compacted region into
@@ -642,8 +578,7 @@ object SilverCompaction {
         (m, new Path(cp, s"_merge_run=${m.max}"), m.max, false)
     }
     val srcDirs = members.map(r => new Path(cp, s"run=$r")).filter(fs.exists)
-    val srcFiles = srcDirs.flatMap(d => fs.listStatus(d).toSeq
-      .filter(s => s.isFile && isDataFile(s.getPath.getName)))
+    val srcFiles = dataFiles(fs, srcDirs)
     if (!resumed) {
       // step 1 — member runs are all still present here
       val src = spark.read.schema(ComposedPipeline.SilverSchema)
@@ -683,8 +618,7 @@ object SilverCompaction {
     fs.delete(new Path(finalDir, "_members"), false)
     writeFileStats(spark, compactedDir, mergedId)
     healStats(spark, compactedDir, fs, cp)
-    val filesAfter = fs.listStatus(finalDir).toSeq
-      .count(s => s.isFile && isDataFile(s.getPath.getName))
+    val filesAfter = dataFiles(fs, Seq(finalDir)).size
     val rows = spark.read.schema(ComposedPipeline.SilverSchema)
       .parquet(finalDir.toString).count()
     Some(CompactionStats(mergedId, members.size, rows,

@@ -11,7 +11,11 @@ import graft.operators.{GraphQueries, ScaleOps}
 
 /** The one pin-and-broadcast registry: whatever a query pins or
   * broadcasts through [[ScaleOps]] is gone after
-  * [[GraphQueries.unpersistAll]], on the failure path too. */
+  * [[ScaleOps.releaseAll]], on the failure path too. The release
+  * assertions go through `GraphQueries.unpersistAll`, the delegate
+  * the `perfbench` harness calls, so both names stay pinned. Also the
+  * source checks that keep pins and console output where they
+  * belong. */
 class PinRegistrySpec extends AnyFunSuite with Eventually {
   private lazy val spark = TestSpark.spark
 
@@ -19,7 +23,7 @@ class PinRegistrySpec extends AnyFunSuite with Eventually {
     "broadcasts") {
     import spark.implicits._
     spark.sparkContext // the block manager read needs a live session
-    GraphQueries.unpersistAll()
+    ScaleOps.releaseAll()
     val before = BroadcastBlocks.held().keySet
     // a generous vocab bound routes dfOrder through the collected df
     // map (ScaleOpsSpec's dfVocab)
@@ -59,7 +63,7 @@ class PinRegistrySpec extends AnyFunSuite with Eventually {
   test("a pin whose materializing count fails is still released by " +
     "unpersistAll") {
     val sc = spark.sparkContext
-    GraphQueries.unpersistAll()
+    ScaleOps.releaseAll()
     val before = sc.getPersistentRDDs.keySet
     val boom = udf((x: Long) => {
       if (x == 7L) throw new IllegalStateException("planted failure")
@@ -77,16 +81,21 @@ class PinRegistrySpec extends AnyFunSuite with Eventually {
     assert(df.storageLevel == StorageLevel.NONE)
   }
 
-  test("under src/main/scala only ScaleOps persists, caches or broadcasts") {
+  private val mainRoot = java.nio.file.Paths.get("src/main/scala")
+
+  /** Every Scala source under `src/main/scala`, read relative to the
+    * working directory (as EventTimeSchemaSpec reads its fixtures). */
+  private def mainSources(): List[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(mainRoot)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  test("under src/main/scala only ScaleOps persists, caches or broadcasts") {
     val calls = Seq(".persist(", ".cache()", "sparkContext.broadcast(")
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val walk = java.nio.file.Files.walk(root)
-    val sources =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    val owner = root.resolve("graft/operators/ScaleOps.scala")
-    val hits = sources.flatMap { p =>
+    val owner = mainRoot.resolve("graft/operators/ScaleOps.scala")
+    val hits = mainSources().flatMap { p =>
       val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
       calls.filter(txt.contains).map(p -> _)
     }
@@ -94,5 +103,20 @@ class PinRegistrySpec extends AnyFunSuite with Eventually {
     assert(hits.exists(_._1 == owner), s"no pin call found in $owner")
     assert(hits.forall(_._1 == owner),
       s"pins or broadcasts outside the ScaleOps registry: $hits")
+  }
+
+  test("println appears only in the examples, Bench and Verify") {
+    val pkg = mainRoot.resolve("graft")
+    val consoleOwners = Set(pkg.resolve("Bench.scala"),
+      pkg.resolve("Verify.scala"))
+    val printing = mainSources().filter { p =>
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .contains("println")
+    }
+    // the allowed owners must still be found, or the check reads nothing
+    assert(printing.exists(consoleOwners), s"no println found in $consoleOwners")
+    val stray = printing.filterNot(p =>
+      consoleOwners(p) || p.startsWith(pkg.resolve("examples")))
+    assert(stray.isEmpty, s"println outside the console mains: $stray")
   }
 }

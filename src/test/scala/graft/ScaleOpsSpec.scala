@@ -281,7 +281,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       val df3 = (1 to 10).toDF("x")
       val uncond = ScaleOps.materializePinned(df3)
       assert(uncond.storageLevel != NONE)
-    } finally graft.operators.GraphQueries.unpersistAll()
+    } finally graft.operators.ScaleOps.releaseAll()
   }
 
   test("deriveIterParts: latency regime narrows by size, throughput " +

@@ -667,6 +667,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(archivedCount >= 1, "expected consumed csvs under the archive dir")
   }
 
+  test("incremental ingest parses a file exactly as the batch CsvIngest " +
+    "read: Latin-1 bytes, wrong-arity rows dropped, escaped separators") {
+    val root = Files.createTempDirectory("streamcsv")
+    val in = Files.createDirectories(root.resolve("in"))
+    val cfg = IncrementalIngest.Config(
+      inputDir = in.toString,
+      checkpointDir = root.resolve("ckpt").toString,
+      archiveDir = root.resolve("archived").toString,
+      outputDir = root.resolve("out").toString)
+    val abc = StructType(Seq(StructField("NAME", StringType),
+      StructField("A", IntegerType), StructField("B", IntegerType)))
+    val file = root.resolve("both.csv")
+    val text = Seq("NAME;A;B", "café;3;4", "short;5", "long;6;7;8",
+      "esc\\;aped;9;10").mkString("", "\n", "\n")
+    Files.write(file, text.getBytes("ISO-8859-1"))
+    val batch = graft.sources.CsvIngest.read(spark, file.toString, abc)
+      .collect().map(_.toString).sorted.toSeq
+    Files.copy(file, in.resolve("both.csv"))
+    assert(IncrementalIngest.runOnce(spark, abc, cfg) == 2)
+    val streamed = spark.read.parquet(cfg.outputDir).select("NAME", "A", "B")
+      .collect().map(_.toString).sorted.toSeq
+    assert(streamed == batch)
+    assert(batch == Seq("[café,3,4]", "[esc;aped,9,10]"), batch)
+  }
+
   test("watermarked stream-stream attribution join matches the batch join") {
     // the click→purchase attribution shape: two watermarked event
     // streams inner-joined on user within a 30-minute event-time band.
