@@ -40,6 +40,25 @@ object DedupQueries {
     * any that don't truly reach thr. */
   private val BoundEps = 1e-7
 
+  /** The PPJoin prefix of a doc whose `n` elements are the `(df, sh)`
+    * structs of `ts`: its first `n − ceil(n·thr) + 1` elements in
+    * ascending (df, sh) order, posexploded as `(pos, p)`. The
+    * [[BoundEps]] slack under ceil can only LENGTHEN the prefix. */
+  private def prefixSlice(ts: Column, n: Column, thr: Double): Column =
+    posexplode(slice(array_sort(ts), lit(1),
+      (n - ceil(n * lit(thr) - lit(BoundEps)) + 1).cast("int")))
+      .as(Seq("pos", "p"))
+
+  /** The PPJoin length and positional prunes over a candidate row with
+    * both sides' set sizes (`na`, `nb`) and 1-based prefix positions
+    * (`pa`, `pb`); see [[prefixFilterCandidates]] for why they never
+    * drop a pair reaching `thr`. */
+  private def ppjoinPrunes(thr: Double): Column =
+    least(col("na"), col("nb")) >=
+      greatest(col("na"), col("nb")) * lit(thr) - lit(BoundEps) &&
+      lit(1) + least(col("na") - col("pa"), col("nb") - col("pb")) >=
+        (col("na") + col("nb")) * lit(thr / (1.0 + thr)) - lit(BoundEps)
+
   /** DuckDB replay of the md5-derived 60-bit SimHash signature — same
     * per-token hash, votes, and bit assembly as
     * [[graft.plans.SimHashSigExpr]]. */
@@ -332,11 +351,7 @@ ORDER BY d.doc_id"""
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("df"), col("sh"))).as("ts"),
         count(lit(1)).as("n"))
-      .select(col("doc_id"), col("n"),
-        posexplode(slice(array_sort(col("ts")), lit(1),
-          (col("n") - ceil(col("n") * lit(thr) - lit(BoundEps)) + 1)
-            .cast("int")))
-          .as(Seq("pos", "p")))
+      .select(col("doc_id"), col("n"), prefixSlice(col("ts"), col("n"), thr))
       .filter(col("p.df") > 1)
       .select(col("doc_id"), col("n"), (col("pos") + 1).as("pp"),
         col("p.sh").as("sh"))
@@ -361,7 +376,6 @@ ORDER BY d.doc_id"""
     // max=20, thr=0.55 → 11 < 11.000000000000002 would prune a TRUE
     // pair); the slack admits only provably-borderline candidates and
     // the exact-Jaccard verify discards any that don't reach thr.
-    val tight = thr / (1.0 + thr)
     // np > session parts: ONE widened exchange on the base prefix
     // table replaces the join's own pair of exchanges (both sides
     // derive from the same repartitioned frame, so exchange reuse
@@ -377,10 +391,7 @@ ORDER BY d.doc_id"""
       .join(prefixesW.select(col("doc_id").as("doc_b"), col("sh"),
         col("n").as("nb"), col("pp").as("pb")), "sh")
       .filter(col("doc_a") < col("doc_b"))
-      .filter(least(col("na"), col("nb")) >=
-        greatest(col("na"), col("nb")) * lit(thr) - lit(BoundEps))
-      .filter(lit(1) + least(col("na") - col("pa"), col("nb") - col("pb")) >=
-        (col("na") + col("nb")) * lit(tight) - lit(BoundEps))
+      .filter(ppjoinPrunes(thr))
       .select(col("doc_a"), col("doc_b")).distinct()
   }
 
@@ -460,12 +471,7 @@ ORDER BY d.doc_id"""
         .groupBy(col("doc_id"))
         .agg(collect_list(struct(col("df"), col("sh"))).as("ts"),
           count(lit(1)).as("n"))
-        .select(col("doc_id"), col("n"),
-          // same FP-safe epsilon as prefixFilterCandidates
-          posexplode(slice(array_sort(col("ts")), lit(1),
-            (col("n") - ceil(col("n") * lit(thr) - lit(BoundEps)) + 1)
-              .cast("int")))
-            .as(Seq("pos", "p")))
+        .select(col("doc_id"), col("n"), prefixSlice(col("ts"), col("n"), thr))
         .select(col("doc_id"), col("n"), (col("pos") + 1).as("pp"),
           col("p.sh").as("sh"))
     val cand = widen(prefixes(
@@ -475,10 +481,7 @@ ORDER BY d.doc_id"""
       .join(widen(prefixes(corpusInvLive)
         .select(col("doc_id").as("old_id"), col("sh"),
           col("n").as("na"), col("pp").as("pa")), col("sh")), "sh")
-      .filter(least(col("na"), col("nb")) >=
-        greatest(col("na"), col("nb")) * lit(thr) - lit(BoundEps))
-      .filter(lit(1) + least(col("na") - col("pa"), col("nb") - col("pb")) >=
-        (col("na") + col("nb")) * lit(thr / (1.0 + thr)) - lit(BoundEps))
+      .filter(ppjoinPrunes(thr))
       .select(col("new_id"), col("old_id")).distinct()
     val dropIds = widen(cand, col("new_id"))
       .join(widen(bs, col("doc_id"))

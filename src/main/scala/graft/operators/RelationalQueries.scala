@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -16,6 +17,17 @@ import org.apache.spark.sql.expressions.Window
   */
 object RelationalQueries {
   import Q._
+
+  /** The self-pair shape of the `q_fuzzy_match_*` rows: `join` runs on
+    * `keys` renamed to `(id_a, s_a)` and `(id_b, s_b)`, and each
+    * unordered pair comes back once as `(id_a < id_b, dist)`, ordered. */
+  private def selfPairs(keys: DataFrame, id: String)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    join(keys.select(col(id).as("id_a"), col("k").as("s_a")),
+        keys.select(col(id).as("id_b"), col("k").as("s_b")))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), col("dist"))
+      .orderBy(col("id_a"), col("id_b"))
 
   val specs: Seq[Spec] = Seq(
 
@@ -349,15 +361,10 @@ object RelationalQueries {
             concat_ws(" ", slice(split(col("text"), " "), 1, 4)).as("k"))
         val bp = ScaleOps.deriveFuzzyBlocking(docs, "k",
           targetRowsPerBlock = 200, pMax = 8, maxDist = 4)
-        ScaleOps.blockedFuzzyJoin(
-            docs.select(col("doc_id").as("id_a"), col("k").as("s_a")),
-            docs.select(col("doc_id").as("id_b"), col("k").as("s_b")),
-            "s_a", "s_b", maxDist = 4,
-            salts = bp.salts, prefixLen = bp.prefixLen,
-            saltHotOnlyAbove = 200L, partitions = bp.partitions)
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"), col("dist"))
-          .orderBy(col("id_a"), col("id_b"))
+        selfPairs(docs, "doc_id")(ScaleOps.blockedFuzzyJoin(_, _,
+          "s_a", "s_b", maxDist = 4, salts = bp.salts,
+          prefixLen = bp.prefixLen, saltHotOnlyAbove = 200L,
+          partitions = bp.partitions))
       },
       Some("""WITH k AS (
                SELECT doc_id,
@@ -455,14 +462,9 @@ object RelationalQueries {
         // full-gram df aggregate plus one join per side. A future
         // corpus with real gram skew routes back automatically.
         val (q, np, avgDf, vocab) = ScaleOps.deriveQgramPlan(u, "k", maxDist = 4)
-        ScaleOps.qgramFuzzyJoin(
-            u.select(col("id").as("id_a"), col("k").as("s_a")),
-            u.select(col("id").as("id_b"), col("k").as("s_b")),
-            "s_a", "s_b", maxDist = 4, q = q, partitions = np,
-            dfOrder = avgDf >= 2, dfVocab = vocab)
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"), col("dist"))
-          .orderBy(col("id_a"), col("id_b"))
+        selfPairs(u, "id")(ScaleOps.qgramFuzzyJoin(_, _, "s_a", "s_b",
+          maxDist = 4, q = q, partitions = np,
+          dfOrder = avgDf >= 2, dfVocab = vocab))
       },
       Some("""WITH b AS (
                SELECT doc_id AS id,
@@ -512,14 +514,9 @@ object RelationalQueries {
         // on the df order, where rare-gram-first prefixes are the
         // whole candidate defense
         val (q, np, avgDf, vocab) = ScaleOps.deriveQgramPlan(docs, "k", maxDist = 4)
-        ScaleOps.qgramFuzzyJoin(
-            docs.select(col("doc_id").as("id_a"), col("k").as("s_a")),
-            docs.select(col("doc_id").as("id_b"), col("k").as("s_b")),
-            "s_a", "s_b", maxDist = 4, q = q, partitions = np,
-            dfOrder = avgDf >= 2, dfVocab = vocab)
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"), col("dist"))
-          .orderBy(col("id_a"), col("id_b"))
+        selfPairs(docs, "doc_id")(ScaleOps.qgramFuzzyJoin(_, _,
+          "s_a", "s_b", maxDist = 4, q = q, partitions = np,
+          dfOrder = avgDf >= 2, dfVocab = vocab))
       },
       Some("""WITH k AS (
                SELECT doc_id,
@@ -554,16 +551,9 @@ object RelationalQueries {
         val docs = t(s, dir, "documents").select(col("doc_id"),
           concat_ws(" ", slice(split(col("text"), " "), 1, 4)).as("k"))
         val plan = ScaleOps.deriveSegmentJoin(docs, "k", maxDist = 4)
-        ScaleOps.segmentFuzzyJoin(
-            docs.select(col("doc_id").as("id_a"), col("k").as("s_a")),
-            docs.select(col("doc_id").as("id_b"), col("k").as("s_b")),
-            "s_a", "s_b", maxDist = 4,
-            broadcastIndex = plan.broadcastIndex,
-            partitions = plan.partitions,
-            symmetric = true)
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"), col("dist"))
-          .orderBy(col("id_a"), col("id_b"))
+        selfPairs(docs, "doc_id")(ScaleOps.segmentFuzzyJoin(_, _,
+          "s_a", "s_b", maxDist = 4, broadcastIndex = plan.broadcastIndex,
+          partitions = plan.partitions, symmetric = true))
       },
       Some("""WITH k AS (
                SELECT doc_id,

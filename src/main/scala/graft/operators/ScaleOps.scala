@@ -435,6 +435,77 @@ object ScaleOps {
         payload.map(p => col("__p").getField(p).as(p)): _*)
   }
 
+  /** The contract the three edit-distance joins check: `maxDist ≥ 0`,
+    * disjoint left/right column names, and no input column named like
+    * the output `dist`, the band columns or the join's `reserved` ones. */
+  private def requireJoinable(left: DataFrame, right: DataFrame,
+                              maxDist: Int, join: String,
+                              reserved: String*): Unit = {
+    require(maxDist >= 0, "maxDist must be >= 0")
+    val dup = left.columns.intersect(right.columns)
+    require(dup.isEmpty,
+      s"left/right column names must not collide: ${dup.mkString(", ")}")
+    val clash = (left.columns ++ right.columns)
+      .filter((reserved ++ Seq("__b", "__b0", "dist")).contains)
+    require(clash.isEmpty,
+      s"columns collide with $join internals: ${clash.mkString(", ")}")
+  }
+
+  /** Band of `x` (a key length or a gram position) at width
+    * `max(maxDist, 1)`; the long cast of the double quotient is floor
+    * for the non-negative values here. */
+  private def bandOf(x: Column, maxDist: Int): Column =
+    (x / math.max(maxDist, 1)).cast("long")
+
+  /** One row per band of `b`'s ±1 neighbourhood: values within
+    * `maxDist` of each other land in the same or adjacent bands, so a
+    * side keyed by its own band meets this side in exactly one band. */
+  private def bandNeighbours(b: Column): Column =
+    explode(array(b - 1, b, b + 1))
+
+  /** `left` keyed by its key's length band `__b`, `right` by the
+    * [[bandNeighbours]] of its own: an equi-join on `__b` (plus any
+    * keys the caller adds) meets every pair with `|Δlength| ≤ maxDist`
+    * exactly once. */
+  private def lengthBands(left: DataFrame, right: DataFrame,
+                          leftCol: String, rightCol: String,
+                          maxDist: Int): (DataFrame, DataFrame) =
+    (left.withColumn("__b", bandOf(length(col(leftCol)), maxDist)),
+      right.withColumn("__b0", bandOf(length(col(rightCol)), maxDist))
+        .withColumn("__b", bandNeighbours(col("__b0"))).drop("__b0"))
+
+  /** The [[lengthBands]] join alone: the exact joins' fallback for keys
+    * too short for their candidate filter (bounded by construction). */
+  private def lengthBandJoin(left: DataFrame, right: DataFrame,
+                             leftCol: String, rightCol: String,
+                             maxDist: Int): DataFrame = {
+    val (l, r) = lengthBands(left, right, leftCol, rightCol, maxDist)
+    l.join(r, Seq("__b")).drop("__b")
+  }
+
+  /** The verify every edit-distance join ends in, adding the long
+    * `dist`. Edit distance is ≥ |Δlength|, so the length probe rejects
+    * a pair before any DP table is built; thresholded levenshtein runs
+    * the banded O(len·maxDist) algorithm and returns −1 past the
+    * threshold (at 0: 0 for equal strings, −1 otherwise). */
+  private def verifyEditDistance(cand: DataFrame, leftCol: String,
+                                 rightCol: String, maxDist: Int): DataFrame =
+    cand.filter(abs(length(col(leftCol)) - length(col(rightCol))) <= maxDist)
+      .withColumn("dist",
+        levenshtein(col(leftCol), col(rightCol), maxDist).cast("long"))
+      .filter(col("dist") >= 0)
+
+  /** Row count and key bytes (0 on empty input) of `df`'s key column
+    * `c`, plus the values of any `extra` long aggregates — one driver
+    * job for every edit-distance derivation's corpus figures. */
+  private def keyStats(df: DataFrame, c: String,
+                       extra: Column*): (Long, Long, Seq[Long]) = {
+    val row = df.agg(count(lit(1)), sum(octet_length(col(c))) +: extra: _*)
+      .head()
+    (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1),
+      (2 until row.length).map(row.getLong))
+  }
+
   /** A data-derived operating point for [[blockedFuzzyJoin]] (VERDICT
     * r7: the knobs existed but were manual — at 100× the gate would
     * have needed retuning by hand). One cheap aggregate over the key
@@ -471,13 +542,9 @@ object ScaleOps {
                           maxDist: Int = 4): FuzzyBlocking = {
     require(targetRowsPerBlock >= 1, "targetRowsPerBlock must be >= 1")
     require(pMax >= 1, "pMax must be >= 1")
-    val aggs = (1 to pMax).map(p =>
-      count_distinct(substring(col(c), 1, p)).as(s"d$p")) :+
-      sum(octet_length(col(c))).as("kb")
-    val row = df.agg(count(lit(1)).as("n"), aggs: _*).head()
-    val n = row.getLong(0)
-    val keyBytes = if (row.isNullAt(pMax + 1)) 0L else row.getLong(pMax + 1)
-    val occ = (1 to pMax).map(p => n / math.max(row.getLong(p), 1L))
+    val (n, keyBytes, distinctPrefixes) = keyStats(df, c,
+      (1 to pMax).map(p => count_distinct(substring(col(c), 1, p))): _*)
+    val occ = distinctPrefixes.map(d => n / math.max(d, 1L))
     val p = occ.indexWhere(_ <= targetRowsPerBlock) match {
       case -1 => pMax
       case i  => i + 1
@@ -495,10 +562,9 @@ object ScaleOps {
     // occupancy that must split is the 3-band NEIGHBORHOOD sum, not the
     // single band — the self-join below runs on the already-aggregated
     // block-count table (|prefixes|×|bands| rows, tiny by construction).
-    val w = math.max(maxDist, 1)
     val blockCounts = df
       .groupBy(substring(col(c), 1, p).as("__c"),
-        (length(col(c)) / w).cast("long").as("__b"))
+        bandOf(length(col(c)), maxDist).as("__b"))
       .count()
     val nbr = blockCounts.select(col("__c"), col("__b"), col("count"))
       .join(blockCounts.select(col("__c").as("__c2"), col("__b").as("__b2"),
@@ -538,7 +604,7 @@ object ScaleOps {
     * block-local pair counts instead of n², and the join shuffles on
     * (char, band) like any equi-join — no cartesian, no theta join.
     *
-    * Output = all left columns + all right columns + `distCol` (long
+    * Output = all left columns + all right columns + `dist` (long
     * edit distance ≤ maxDist); names must not collide.
     *
     * `prefixLen` sets the blocking prefix length (default 1 char).
@@ -549,51 +615,39 @@ object ScaleOps {
     * accordingly, at the documented recall trade-off: pairs whose
     * edit distance touches the prefix are missed).
     *
-    * `salts > 1` additionally splits each block's LEFT side across
-    * `salts` sub-keys (right side replicated per salt) — the result
-    * set is identical, but a boilerplate-heavy hot block's n_l × n_r
-    * edit-distance work spreads over `salts` tasks instead of one.
-    * The right-side replication cost is `salts ×` on the (id, key)
-    * projection only, the standard trade for bounding the straggler;
-    * AQE's skew split does the same for reducer-side bytes but cannot
-    * split the per-task CPU of one hot block's quadratic verify loop.
+    * `salts > 1` additionally splits the LEFT side of each block
+    * holding more than `saltHotOnlyAbove` left rows (0 = every occupied
+    * block) across `salts` sub-keys, the right side of those blocks
+    * replicated per salt — the result set is identical, but a
+    * boilerplate-heavy hot block's n_l × n_r edit-distance work spreads
+    * over `salts` tasks instead of one. The right-side replication cost
+    * is `salts ×` on the hot blocks' (id, key) projection only, the
+    * standard trade for bounding the straggler; AQE's skew split does
+    * the same for reducer-side bytes but cannot split the per-task CPU
+    * of one hot block's quadratic verify loop.
     */
   def blockedFuzzyJoin(left: DataFrame, right: DataFrame,
                        leftCol: String, rightCol: String,
-                       maxDist: Int, distCol: String = "dist",
+                       maxDist: Int,
                        salts: Int = 1, prefixLen: Int = 1,
                        saltHotOnlyAbove: Long = 0L,
                        partitions: Int = 0): DataFrame = {
-    require(maxDist >= 0, "maxDist must be >= 0")
     require(salts >= 1, "salts must be >= 1")
     require(prefixLen >= 1, "prefixLen must be >= 1")
-    val dup = left.columns.intersect(right.columns)
-    require(dup.isEmpty,
-      s"left/right column names must not collide: ${dup.mkString(", ")}")
-    val reserved = Seq("__c", "__b", "__b0", "__s", "__hot", distCol)
-    val clash = (left.columns ++ right.columns).filter(reserved.contains)
-    require(clash.isEmpty,
-      s"columns collide with blockedFuzzyJoin internals: ${clash.mkString(", ")}")
-    val w = math.max(maxDist, 1)
-    // int/int Column division is double; cast(long) truncates = floor
-    // for the non-negative lengths here
-    val l0 = left
-      .withColumn("__c", substring(col(leftCol), 1, prefixLen))
-      .withColumn("__b", (length(col(leftCol)) / w).cast("long"))
-    val r0 = right
-      .withColumn("__c", substring(col(rightCol), 1, prefixLen))
-      .withColumn("__b0", (length(col(rightCol)) / w).cast("long"))
-      .withColumn("__b",
-        explode(array(col("__b0") - 1, col("__b0"), col("__b0") + 1)))
-      .drop("__b0")
-    // `saltHotOnlyAbove > 0` = salt ONLY the blocks whose left-side
-    // occupancy exceeds the threshold. Flat salting replicates the
-    // whole right side `salts`×, which scales with the CORPUS; the hot
-    // blocks of a head-heavy corpus are a broadcastable handful of
-    // keys, so conditional salting makes the replication scale with
-    // the HOT MASS instead (the 100× replica: 69 M → ~7 M salted right
-    // rows for the same per-task pair bound). Cold blocks keep salt 0
-    // on both sides — the pair set is bit-identical either way.
+    requireJoinable(left, right, maxDist, "blockedFuzzyJoin",
+      "__c", "__s", "__hot")
+    val (l0, r0) = lengthBands(
+      left.withColumn("__c", substring(col(leftCol), 1, prefixLen)),
+      right.withColumn("__c", substring(col(rightCol), 1, prefixLen)),
+      leftCol, rightCol, maxDist)
+    // Salt ONLY the blocks whose left-side occupancy exceeds
+    // `saltHotOnlyAbove`: salting every block would replicate the whole
+    // right side `salts`×, which scales with the CORPUS; the hot blocks
+    // of a head-heavy corpus are a broadcastable handful of keys, so
+    // the replication scales with the HOT MASS instead (the 100×
+    // replica: 69 M → ~7 M salted right rows for the same per-task
+    // pair bound). Cold blocks keep salt 0 on both sides — the pair set
+    // is bit-identical either way.
     // Salt assignment hashes the WHOLE left row (every left column,
     // which in practice includes the caller's stable id) rather than
     // the key alone: an exact-duplicate-heavy hot block (many copies of
@@ -607,14 +661,9 @@ object ScaleOps {
     // recompute). The residual caveat is FULLY identical left rows (no
     // distinguishing id): those share a salt — they are exact
     // duplicates, which the dedup battery removes upstream.
-    def saltOf = pmod(
-      xxhash64(left.columns.map(col).toSeq: _*), lit(salts))
     val (l, r) =
       if (salts == 1) (l0.withColumn("__s", lit(0L)),
         r0.withColumn("__s", lit(0L)))
-      else if (saltHotOnlyAbove <= 0L)
-        (l0.withColumn("__s", saltOf),
-          r0.withColumn("__s", explode(sequence(lit(0L), lit(salts - 1L)))))
       else {
         val hot = l0.groupBy(col("__c"), col("__b"))
           .agg(count(lit(1)).as("__n"))
@@ -622,7 +671,8 @@ object ScaleOps {
           .select(col("__c"), col("__b"), lit(1).as("__hot"))
         val lS = l0.join(broadcast(hot), Seq("__c", "__b"), "left")
           .withColumn("__s", when(col("__hot").isNotNull,
-            saltOf).otherwise(lit(0L)))
+            pmod(xxhash64(left.columns.map(col).toSeq: _*), lit(salts)))
+            .otherwise(lit(0L)))
           .drop("__hot")
         val rS = r0.join(broadcast(hot), Seq("__c", "__b"), "left")
           .withColumn("__s", explode(when(col("__hot").isNotNull,
@@ -641,16 +691,8 @@ object ScaleOps {
     // (ScaleOpsSpec pins this).
     val lj = widenIfAbove(l, partitions, col("__c"), col("__b"), col("__s"))
     val rj = widenIfAbove(r, partitions, col("__c"), col("__b"), col("__s"))
-    lj.join(rj, Seq("__c", "__b", "__s"))
-      // levenshtein(a,b) >= |len(a)-len(b)|: reject on the cheap length
-      // probe before any DP table is built
-      .filter(abs(length(col(leftCol)) - length(col(rightCol))) <= maxDist)
-      // thresholded levenshtein runs the banded O(n·maxDist) algorithm
-      // (vs O(n·m) full DP) and returns -1 past the threshold — identical
-      // kept rows, ~len/(2·maxDist+1)× less work per pair
-      .withColumn(distCol,
-        levenshtein(col(leftCol), col(rightCol), maxDist).cast("long"))
-      .filter(col(distCol) >= 0)
+    verifyEditDistance(lj.join(rj, Seq("__c", "__b", "__s")),
+      leftCol, rightCol, maxDist)
       .drop("__c", "__b", "__s")
   }
 
@@ -750,24 +792,6 @@ object ScaleOps {
       .groupBy(col("p")).agg(min(col("v")).as("value"))
   }
 
-  /** Shuffle granularity for [[qgramFuzzyJoin]]'s candidate join from
-    * the corpus row count and key bytes, sized from the PREFIX-gram
-    * table the join actually shuffles — `q·maxDist + 1` rows per
-    * string, each carrying the full key string plus ~48 B of id/gram
-    * bookkeeping; the right side replicates ×9 through the band ×
-    * position-bucket neighborhood explode (1 left + 9 right = ×10).
-    * Degenerates to the session constant at gate scale like every
-    * other derivation ([[deriveShufflePartitions]]). Takes the row
-    * stats already in hand, so [[deriveQgramPlan]] reuses its own
-    * single row-level aggregate instead of re-scanning the corpus for
-    * the same two numbers (r20 job-count fusion). */
-  private def qgramPartitionsFromStats(ss: SparkSession, n: Long,
-                                       keyBytes: Long,
-                                       q: Int, maxDist: Int): Int = {
-    val prefixRows = q.toLong * maxDist + 1L
-    deriveShufflePartitions(ss, (keyBytes + 48L * n) * prefixRows * 10L)
-  }
-
   /** DATA-derived gram width + shuffle granularity for
     * [[qgramFuzzyJoin]] (the deriveFuzzyBlocking pattern), returned as
     * `(q, partitions, avgDf, vocab)`. Recall is exact for ANY q (the
@@ -804,10 +828,7 @@ object ScaleOps {
     // ONE exploded-gram aggregate computing (total, vocab) for every
     // candidate width in a single corpus pass — at 100 TB that single
     // pass also replaces qMax full re-scans of the key column.
-    val rowStats = df.agg(count(lit(1)).as("n"),
-      sum(octet_length(col(c))).as("kb")).head()
-    val n = rowStats.getLong(0)
-    val keyBytes = if (rowStats.isNullAt(1)) 0L else rowStats.getLong(1)
+    val (n, keyBytes, _) = keyStats(df, c)
     // guard sequence(1, 0): Spark's sequence DESCENDS when start >
     // stop, so an unguarded bound of 0 emits two phantom grams
     // (positions 1 and 0) for every string shorter than q, inflating
@@ -835,8 +856,12 @@ object ScaleOps {
     while (q < qMax && { val p = predicted(q + 1); p < best && { best = p; true } })
       q += 1
     val (total, vocab) = stats.getOrElse(q, (0L, 0L))
-    (q, qgramPartitionsFromStats(df.sparkSession, n, keyBytes, q, maxDist),
-      total / math.max(vocab, 1L), vocab)
+    // candidate-join granularity from the PREFIX-gram table it shuffles:
+    // q·d+1 rows per string of key + ~48 B of id/gram bookkeeping, the
+    // right side ×9 through the band × position-bucket explode (×10)
+    val np = deriveShufflePartitions(df.sparkSession,
+      (keyBytes + 48L * n) * (q.toLong * maxDist + 1L) * 10L)
+    (q, np, total / math.max(vocab, 1L), vocab)
   }
 
   /** Guaranteed-recall edit-distance join (Ed-Join family: Xiao, Wang,
@@ -845,7 +870,7 @@ object ScaleOps {
     * (first-chars × length-band) blocking key. Candidate volume here
     * scales with GRAM RARITY, not a fixed key alphabet, and recall is
     * EXACT: the result equals the brute-force
-    * `levenshtein(l, r) ≤ maxDist` join on distinct input rows
+    * `levenshtein ≤ maxDist` join on distinct input rows
     * (ScaleOpsSpec pins this against brute force; the battery gate's
     * oracle IS the brute-force join — the same contract as
     * DedupQueries.prefixFilterPairs for set similarity).
@@ -892,7 +917,7 @@ object ScaleOps {
     * exact duplicates upstream), and output pair order is unspecified
     * (sort downstream).
     *
-    * Output = all left columns + all right columns + `distCol`
+    * Output = all left columns + all right columns + `dist`
     * (long edit distance ≤ maxDist); names must not collide.
     */
   /** `dfVocab ≥ 0` declares the measured distinct-gram count (from
@@ -910,21 +935,12 @@ object ScaleOps {
   def qgramFuzzyJoin(left: DataFrame, right: DataFrame,
                      leftCol: String, rightCol: String,
                      maxDist: Int, q: Int = 2,
-                     distCol: String = "dist",
                      partitions: Int = 0,
                      dfOrder: Boolean = true,
                      dfVocab: Long = -1L): DataFrame = {
-    require(maxDist >= 0, "maxDist must be >= 0")
     require(q >= 1, "q must be >= 1")
-    val dup = left.columns.intersect(right.columns)
-    require(dup.isEmpty,
-      s"left/right column names must not collide: ${dup.mkString(", ")}")
-    val reserved =
-      Seq("__g", "__gp", "__df", "__pl", "__pr", "__pref", "__b", "__b0",
-        "__parr", distCol)
-    val clash = (left.columns ++ right.columns).filter(reserved.contains)
-    require(clash.isEmpty,
-      s"columns collide with qgramFuzzyJoin internals: ${clash.mkString(", ")}")
+    requireJoinable(left, right, maxDist, "qgramFuzzyJoin",
+      "__g", "__gp", "__p", "__df", "__pl", "__pr", "__pb", "__parr")
     val d = maxDist
     val prefLen = q * d + 1
     val shortLen = q * (d + 1) // len < shortLen ⇔ gram count ≤ q·d
@@ -1126,19 +1142,12 @@ object ScaleOps {
     // filtering the products afterwards. A matching right row's 9
     // replicas land in 9 DISTINCT cells, so a pair still meets at
     // most once per shared prefix gram.
-    val w = math.max(d, 1)
     val pl = prefixGrams(lg, "__pl")
-      .withColumn("__b", (length(col(leftCol)) / w).cast("long"))
-      .withColumn("__pb", (col("__pl") / w).cast("long"))
+      .withColumn("__b", bandOf(length(col(leftCol)), d))
+      .withColumn("__pb", bandOf(col("__pl"), d))
     val pr = prefixGrams(rg, "__pr")
-      .withColumn("__b",
-        explode(array((length(col(rightCol)) / w).cast("long") - 1,
-          (length(col(rightCol)) / w).cast("long"),
-          (length(col(rightCol)) / w).cast("long") + 1)))
-      .withColumn("__pb",
-        explode(array((col("__pr") / w).cast("long") - 1,
-          (col("__pr") / w).cast("long"),
-          (col("__pr") / w).cast("long") + 1)))
+      .withColumn("__b", bandNeighbours(bandOf(length(col(rightCol)), d)))
+      .withColumn("__pb", bandNeighbours(bandOf(col("__pr"), d)))
     // derived granularity for the candidate join (deriveQgramPlan at
     // call sites): the explicit repartition REPLACES the join's own
     // exchange; no-op at gate scale (widenIfAbove)
@@ -1150,14 +1159,9 @@ object ScaleOps {
 
     // short×short fallback (theorem step 3): bounded by construction —
     // every key here is < q·(d+1) chars
-    val sl = left.filter(length(col(leftCol)) < shortLen)
-      .withColumn("__b", (length(col(leftCol)) / w).cast("long"))
-    val sr = right.filter(length(col(rightCol)) < shortLen)
-      .withColumn("__b0", (length(col(rightCol)) / w).cast("long"))
-      .withColumn("__b",
-        explode(array(col("__b0") - 1, col("__b0"), col("__b0") + 1)))
-      .drop("__b0")
-    val shortCand = sl.join(sr, Seq("__b")).drop("__b")
+    val shortCand = lengthBandJoin(
+      left.filter(length(col(leftCol)) < shortLen),
+      right.filter(length(col(rightCol)) < shortLen), leftCol, rightCol, d)
 
     // VERIFY before dedup: the candidate stream pipelines from the
     // join straight through the length probe and the banded
@@ -1168,12 +1172,7 @@ object ScaleOps {
     // k ≤ q·d+1 extra verifies on the small matched set, orders less
     // work than shuffling the full candidate volume (measured 1.9× on
     // the 10× replica in r11; no committed artifact holds that run).
-    gramCand.unionByName(shortCand)
-      .filter(abs(length(col(leftCol)) - length(col(rightCol))) <= d)
-      .withColumn(distCol,
-        levenshtein(col(leftCol), col(rightCol), math.max(d, 1))
-          .cast("long"))
-      .filter(col(distCol) >= 0 && col(distCol) <= d)
+    verifyEditDistance(gramCand.unionByName(shortCand), leftCol, rightCol, d)
       .dropDuplicates()
   }
 
@@ -1196,10 +1195,7 @@ object ScaleOps {
     * table's in-flight bytes (≈ `(2·maxDist+1)²` windowed substring
     * rows per probe string, each carrying the full key). */
   def deriveSegmentJoin(df: DataFrame, c: String, maxDist: Int): SegmentJoinPlan = {
-    val row = df.agg(count(lit(1)).as("n"),
-      sum(octet_length(col(c))).as("kb")).head()
-    val n = row.getLong(0)
-    val keyBytes = if (row.isNullAt(1)) 0L else row.getLong(1)
+    val (n, keyBytes, _) = keyStats(df, c)
     val m = maxDist.toLong + 1L
     val idxBytes = (keyBytes + 48L * n) * m * 2L
     val ss = df.sparkSession
@@ -1252,7 +1248,7 @@ object ScaleOps {
     * string, never candidates.
     *
     * Contract: same as [[qgramFuzzyJoin]] — distinct input rows,
-    * non-colliding column names, output = left ++ right ++ `distCol`,
+    * non-colliding column names, output = left ++ right ++ `dist`,
     * pair order unspecified.
     *
     * `symmetric = true` declares the SELF-JOIN contract: left and
@@ -1268,18 +1264,11 @@ object ScaleOps {
   def segmentFuzzyJoin(left: DataFrame, right: DataFrame,
                        leftCol: String, rightCol: String,
                        maxDist: Int,
-                       distCol: String = "dist",
                        broadcastIndex: Boolean = true,
                        partitions: Int = 0,
                        symmetric: Boolean = false): DataFrame = {
-    require(maxDist >= 0, "maxDist must be >= 0")
-    val dup = left.columns.intersect(right.columns)
-    require(dup.isEmpty,
-      s"left/right column names must not collide: ${dup.mkString(", ")}")
-    val reserved = Seq("__l", "__i", "__g", "__sp", "__b", "__b0", distCol)
-    val clash = (left.columns ++ right.columns).filter(reserved.contains)
-    require(clash.isEmpty,
-      s"columns collide with segmentFuzzyJoin internals: ${clash.mkString(", ")}")
+    requireJoinable(left, right, maxDist, "segmentFuzzyJoin",
+      "__l", "__i", "__g", "__sp")
     val d = maxDist
     val m = d + 1 // disjoint segments; pigeonhole needs edits < m
 
@@ -1357,15 +1346,8 @@ object ScaleOps {
     // left-short fallback: strings under m chars have zero-length
     // segments — bounded length-band equi-join (right partner is
     // under m+d = 2d+1 chars by the length filter in verify)
-    val w = math.max(d, 1)
-    val sl0 = left.filter(length(col(leftCol)) < m)
-      .withColumn("__b", (length(col(leftCol)) / w).cast("long"))
-    val sr0 = right.filter(length(col(rightCol)) < m + d)
-      .withColumn("__b0", (length(col(rightCol)) / w).cast("long"))
-      .withColumn("__b",
-        explode(array(col("__b0") - 1, col("__b0"), col("__b0") + 1)))
-      .drop("__b0")
-    val shortCand = sl0.join(sr0, Seq("__b")).drop("__b")
+    val shortCand = lengthBandJoin(left.filter(length(col(leftCol)) < m),
+      right.filter(length(col(rightCol)) < m + d), leftCol, rightCol, d)
 
     // verify inline (same stage as the candidate join — candidates
     // never shuffle), dedup only the matched pairs.
@@ -1375,12 +1357,8 @@ object ScaleOps {
     // thresholded levenshtein already abandons false candidates
     // within a few band rows, so the per-candidate compare cost more
     // than the halved true-pair DP saved.)
-    val verified = segCand.unionByName(shortCand)
-      .filter(abs(length(col(leftCol)) - length(col(rightCol))) <= d)
-      .withColumn(distCol,
-        levenshtein(col(leftCol), col(rightCol), math.max(d, 1))
-          .cast("long"))
-      .filter(col(distCol) >= 0 && col(distCol) <= d)
+    val verified =
+      verifyEditDistance(segCand.unionByName(shortCand), leftCol, rightCol, d)
     // symmetric mode found each unordered pair from its longer side
     // only — re-emit the mirrored orientation (positional rename;
     // edit distance is symmetric). Equal-length pairs and the short
@@ -1400,12 +1378,12 @@ object ScaleOps {
       else {
         val lc = left.columns
         val rc = right.columns
-        val outCols = lc ++ rc :+ distCol
+        val outCols = lc ++ rc :+ "dist"
         def orient(src: Seq[String]): Column =
           struct(src.zipWithIndex.map { case (c, i) => col(c).as(s"_$i") }: _*)
         verified
           .select(explode(array(orient(outCols),
-            orient((rc ++ lc) :+ distCol))).as("__sp"))
+            orient((rc ++ lc) :+ "dist"))).as("__sp"))
           .select(outCols.zipWithIndex.map {
             case (c, i) => col("__sp")(s"_$i").as(c) }: _*)
       }

@@ -174,26 +174,35 @@ object SilverCompaction {
   /** Classify silver's current batch partitions (see [[Plan]]). Pure
     * metadata — FS listings plus the checkpoint-log parse. */
   def plan(spark: SparkSession, silverDir: String,
-           q2CheckpointDir: String): Plan = {
+           q2CheckpointDir: String): Plan =
+    planWithFiles(spark, silverDir, q2CheckpointDir)._1
+
+  /** [[plan]] plus the data files of its compactable partitions: the
+    * committed check already lists every unprotected partition, so a
+    * compaction reuses that listing instead of listing them again. */
+  private def planWithFiles(spark: SparkSession, silverDir: String,
+                            q2CheckpointDir: String): (Plan, Seq[FileStatus]) = {
     val (fs, sp) = fsFor(spark, silverDir)
-    if (!fs.exists(sp)) return Plan(Nil, Nil, Nil)
+    if (!fs.exists(sp)) return (Plan(Nil, Nil, Nil), Nil)
     val partDirs = fs.listStatus(sp).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
       .map(s => s.getPath.getName.stripPrefix("batch_id=").toLong -> s.getPath)
       .toMap
-    if (partDirs.isEmpty) return Plan(Nil, Nil, Nil)
+    if (partDirs.isEmpty) return (Plan(Nil, Nil, Nil), Nil)
     val base = ComposedPipeline.TakedownBatchIdBase
     val w = StageCounts.SeenBatchWindow
     val (td, cur) = partDirs.keySet.partition(_ >= base)
     val protectedIds =
       cur.toSeq.sorted.takeRight(w).toSet ++ td.toSeq.sorted.takeRight(w)
     val committed = committedSilverFiles(spark, q2CheckpointDir)
-    val (ok, not) = (partDirs.keySet -- protectedIds).partition { b =>
-      val files = dataFiles(fs, Seq(partDirs(b)))
+    val listed = (partDirs.keySet -- protectedIds).toSeq.sorted
+      .map(b => b -> dataFiles(fs, Seq(partDirs(b))))
+    val (ok, not) = listed.partition { case (_, files) =>
       files.nonEmpty &&
         files.forall(f => committed.contains(f.getPath.toUri.getPath))
     }
-    Plan(ok.toSeq.sorted, protectedIds.toSeq.sorted, not.toSeq.sorted)
+    (Plan(ok.map(_._1), protectedIds.toSeq.sorted, not.map(_._1)),
+      ok.flatMap(_._2))
   }
 
   /** Execute one compaction run: rewrite every compactable batch
@@ -207,15 +216,21 @@ object SilverCompaction {
   def compact(spark: SparkSession, silverDir: String,
               q2CheckpointDir: String,
               targetFileBytes: Long = 128L << 20): Option[CompactionStats] = {
+    val (p, srcFiles) = planWithFiles(spark, silverDir, q2CheckpointDir)
+    compactPlanned(spark, silverDir, p, srcFiles, targetFileBytes)
+  }
+
+  /** [[compact]] over a plan and its compactable files already in hand. */
+  private def compactPlanned(spark: SparkSession, silverDir: String,
+                             p: Plan, srcFiles: Seq[FileStatus],
+                             targetFileBytes: Long): Option[CompactionStats] = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val p = plan(spark, silverDir, q2CheckpointDir)
     if (p.compactable.isEmpty) return None
     val (fs, _) = fsFor(spark, silverDir)
     val compactedDir = ComposedPipeline.compactedSilverDir(silverDir)
     val runId = p.compactable.max
     val srcDirs = p.compactable
       .map(b => ComposedPipeline.partitionDir(silverDir, b))
-    val srcFiles = dataFiles(fs, srcDirs.map(new Path(_)))
     val srcBytes = srcFiles.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(srcBytes.toDouble / targetFileBytes).toInt)
     val src = spark.read.option("basePath", silverDir)
@@ -406,11 +421,9 @@ object SilverCompaction {
                                          q2CheckpointDir: String,
                                          targetFileBytes: Long)
       : Option[CompactionStats] = {
-    val (fs, _) = fsFor(spark, silverDir)
-    val files = dataFiles(fs, plan(spark, silverDir, q2CheckpointDir)
-      .compactable.map(b => new Path(ComposedPipeline.partitionDir(silverDir, b))))
+    val (p, files) = planWithFiles(spark, silverDir, q2CheckpointDir)
     if (fanoutPays(files.size, files.map(_.getLen).sum, targetFileBytes))
-      compact(spark, silverDir, q2CheckpointDir, targetFileBytes)
+      compactPlanned(spark, silverDir, p, files, targetFileBytes)
     else None
   }
 

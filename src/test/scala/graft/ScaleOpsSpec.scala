@@ -223,6 +223,22 @@ class ScaleOpsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(widened.toSet == brute && widened.length == widened.toSet.size,
       "partition-widened blocked fuzzy join must equal the unsalted result")
+    // maxDist = 0: band width 1 and the threshold-0 verify, unsalted and
+    // through the hot-block salting path (cut 0 salts every block)
+    val brute0 = a.crossJoin(b)
+      .withColumn("dist", levenshtein(col("s_a"), col("s_b")).cast("long"))
+      .filter(substring(col("s_a"), 1, 1) === substring(col("s_b"), 1, 1) &&
+        col("dist") <= 0)
+      .select("id_a", "id_b", "dist").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    for (salts <- Seq(1, 5)) {
+      val exact = ScaleOps.blockedFuzzyJoin(a, b, "s_a", "s_b",
+          maxDist = 0, salts = salts)
+        .select("id_a", "id_b", "dist").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(exact.toSet == brute0 && exact.length == exact.toSet.size,
+        s"maxDist=0 blocked fuzzy join (salts=$salts) must equal brute force")
+    }
   }
 
   test("qgram fuzzy join equals full brute force (guaranteed recall) " +

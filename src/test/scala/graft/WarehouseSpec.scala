@@ -27,7 +27,7 @@ class WarehouseSpec extends AnyFunSuite {
       (1L, 13L, "A", ts("2024-01-04 00:00:00")),
       (2L, 20L, "C", ts("2024-02-01 00:00:00"))
     ).toDF("o_custkey", "o_orderkey", "o_orderstatus", "o_orderdate")
-    val dir = java.nio.file.Files.createTempDirectory("graft_scd2").toString
+    val dir = TestSpark.scratchDir("graft_scd2")
     orders.write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val got = WarehouseQueries.specs.find(_.name == "q_scd2_history").get
       .run(spark, dir)
@@ -46,7 +46,7 @@ class WarehouseSpec extends AnyFunSuite {
       (2L, 7L, null, "HIGH"),
       (3L, 7L, "A", null)
     ).toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-    val dir = java.nio.file.Files.createTempDirectory("graft_prof").toString
+    val dir = TestSpark.scratchDir("graft_prof")
     orders.write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val got = WarehouseQueries.specs.find(_.name == "q_profile_columns").get
       .run(spark, dir)
