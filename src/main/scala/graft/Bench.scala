@@ -173,8 +173,8 @@ object Bench {
     // JIT/codegen warmup so the first timed query doesn't absorb
     // session + compiler startup (a scan, a shuffle join, an agg)
     try {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      val o = spark.read.parquet(s"$sfDir/orders.parquet")
+      val li = operators.Q.t(spark, sfDir, "lineitem")
+      val o = operators.Q.t(spark, sfDir, "orders")
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy("l_returnflag").count().count()
       ()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
+import graft.operators.Q
 import graft.operators.ScaleOps
 
 /** The product-analytics layer, composed from the event-tier battery
@@ -39,7 +40,7 @@ object AnalyticsDemo {
       val tokens = q("q_pseudonymize")(spark, sfDir)
       val nEvents = tokens.count()
       val nTokens = tokens.select("user_token").distinct().count()
-      val nUsers = spark.read.parquet(s"$sfDir/events.parquet")
+      val nUsers = Q.t(spark, sfDir, "events")
         .select("user_id").distinct().count()
       require(nTokens == nUsers,
         s"pseudonymization broke join preservation: $nTokens tokens vs $nUsers users")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
+import graft.operators.Q
 import graft.operators.ScaleOps
 import graft.operators.ScaleOps.materializePinned
 
@@ -47,7 +48,7 @@ object CorpusPipelineDemo {
     // finally releases every pin the run registered, its own and the
     // member queries', on every exit path: the specs share one session.
     try {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = Q.t(spark, sfDir, "documents")
       val nDocs = docs.count()
 
       // 1. PII scrub (map-only; audit counts aggregated for the report)

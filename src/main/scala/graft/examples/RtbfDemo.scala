@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
-import graft.operators.{DedupQueries, ScaleOps, TakedownAudit, TextQueries,
+import graft.operators.{DedupQueries, Q, ScaleOps, TakedownAudit, TextQueries,
   ExtraSimilarityQueries => ESQ}
 import graft.streaming.ComposedPipeline
 
@@ -42,8 +42,8 @@ object RtbfDemo {
     * `q_rtbf_audit` gate so the sites cannot drift. */
   def run(spark: SparkSession, sfDir: String, workDir: String)
       : Seq[TakedownAudit.SurfaceAudit] = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val docs = Q.t(spark, sfDir, "documents")
+    val e = Q.t(spark, sfDir, "embeddings")
     val prior = TakedownAudit.priorIds(spark)
     val requested = TakedownAudit.requestedIds(spark)
     val allTomb = prior.unionByName(requested).distinct()

@@ -3,6 +3,7 @@ package graft.examples
 import org.apache.spark.sql.DataFrame
 
 import graft.Sessions
+import graft.operators.Q
 import org.apache.spark.sql.functions._
 
 /** Replicate a testdata SF directory N× with disjoint key domains per
@@ -50,7 +51,7 @@ object ScaleUp {
     def shiftCols(df: DataFrame, off: Long, cols: String*): DataFrame =
       cols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + off))
 
-    def read(name: String) = spark.read.parquet(s"$src/$name.parquet")
+    def read(name: String) = Q.t(spark, src, name)
     def write(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$dest/$name.parquet")
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
+import graft.operators.Q
 
 /** The composed STREAMING pipeline as a probe-instrumented main
   * (VERDICT r10 #6): ingest → content dedup within watermark → scrub →
@@ -43,7 +44,7 @@ object StreamingPipelineDemo {
     val gold1 = root.resolve("gold1").toString
     val gold2 = root.resolve("gold2").toString
     try {
-      val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs0 = Q.t(spark, sfDir, "documents")
       val n = docs0.count()
       val half = n / 2
       val docs = docs0.withColumn("ets",

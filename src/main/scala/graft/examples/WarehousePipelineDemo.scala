@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Sessions
+import graft.operators.Q
 
 /** The warehouse-maintenance pipeline, composed end-to-end from the
   * operator battery: incremental CSV ingest (checkpointed streaming
@@ -40,7 +41,7 @@ object WarehousePipelineDemo {
     //    slice of orders) staged as `;`-separated CSV, drained through
     //    the checkpointed streaming source with schema-driven repair —
     //    the reference's cron pickup, exactly-once across ticks
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+    val orders = Q.t(spark, sfDir, "orders")
     val root = java.nio.file.Files.createTempDirectory("wh_ingest")
     val inDir = java.nio.file.Files.createDirectories(root.resolve("in"))
     orders.filter(pmod(col("o_orderkey"), lit(20)) === 0)

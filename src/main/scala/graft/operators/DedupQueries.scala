@@ -212,9 +212,12 @@ ORDER BY d.doc_id"""
     * iterative min-label propagation: each round every node takes the
     * minimum label among itself and its neighbors; fixpoint in
     * O(cluster diameter) rounds (near-dup clusters are shallow). Each
-    * iteration is one shuffle join + one aggregation; localCheckpoint
-    * truncates the growing plan lineage (at cluster scale this — not
-    * the data — is what kills iterative Spark jobs).
+    * round is two joins (edges ⋈ labels for the neighbours' minimum,
+    * then labels ⋈ that minimum) and one aggregation, materialized by a
+    * localCheckpoint that truncates the growing plan lineage (at
+    * cluster scale this — not the data — is what kills iterative Spark
+    * jobs). At sf0.01 under AQE a round is 7 Spark jobs: six
+    * query-stage jobs and the checkpoint; a convergence check adds two.
     *
     * Fails loudly if `maxRounds` is reached before the fixpoint —
     * returning partially-propagated labels would be silently-wrong
@@ -833,7 +836,7 @@ ORDER BY doc_id""")),
     // Connected components by iterative min-label propagation: each
     // round every node takes the minimum label among itself and its
     // neighbors; fixpoint in O(cluster diameter) rounds (near-dup
-    // clusters are shallow). Each iteration is one shuffle join + one
+    // clusters are shallow). Each round is two joins and one
     // aggregation; localCheckpoint truncates the growing plan lineage
     // (at cluster scale this — not the data — is what kills iterative
     // Spark jobs).

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{call_function, lit, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.sources.ParquetTables
+
 /** Shared plumbing for the harness query battery (SURVEY §7 step 5).
   *
   * Every operator in SURVEY §2 is declared as a [[Q.Spec]]: a named
@@ -20,9 +22,11 @@ object Q {
       run: (SparkSession, String) => DataFrame,
       oracle: Option[String])
 
-  /** Load one star-schema table from the per-SF dir (TESTDATA.md). */
+  /** Load one star-schema table from the per-SF dir (TESTDATA.md),
+    * its schema inferred once per file set and session settings
+    * ([[graft.sources.ParquetTables]]). */
   def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    ParquetTables.read(s, s"$dir/$name.parquet")
 
   /** Spread a narrow source across the cluster before CPU-heavy per-row
     * work. A parquet scan cannot split below one row group, so a

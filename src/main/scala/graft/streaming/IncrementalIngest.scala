@@ -73,8 +73,10 @@ object IncrementalIngest {
   }
 
   /** One scheduled "tick" (the cron-equivalent): drain whatever is new
-    * and return the loaded row count so the workflow's conditional
-    * switch (SURVEY §2.8 W3) has something to branch on. */
+    * and return the output table's cumulative row count (every row
+    * loaded so far, not this tick's), so the workflow's conditional
+    * switch (SURVEY §2.8 W3) has something to branch on. A tick that
+    * finds nothing new returns the previous count. */
   def runOnce(spark: SparkSession, schema: StructType, cfg: Config): Long = {
     val q = start(spark, schema, cfg)
     q.awaitTermination()
