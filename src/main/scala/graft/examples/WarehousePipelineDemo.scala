@@ -55,6 +55,8 @@ object WarehousePipelineDemo {
       StructField("o_orderstatus", StringType),
       StructField("o_totalprice", DoubleType),
       StructField("o_orderdate", StringType)))
+    // the rows this one tick loaded: the whole staged slice, because
+    // the ingest tree is fresh
     val nIngested =
       try graft.streaming.IncrementalIngest.runOnce(spark,
         batchSchema, graft.streaming.IncrementalIngest.Config(
@@ -62,23 +64,13 @@ object WarehousePipelineDemo {
           checkpointDir = root.resolve("ckpt").toString,
           archiveDir = root.resolve("archived").toString,
           outputDir = root.resolve("out").toString))
-      // the drained count is already materialized; nothing downstream
-      // reads the ingest tree — reclaim the scratch even on failure
+      // the count is already taken; nothing downstream reads the
+      // ingest tree — reclaim the scratch even on failure
       finally graft.operators.Q.deleteTree(root)
 
     // 1. profile the incoming snapshot (one scan; the operational
-    //    "what did we receive" report). SPARK_GRAFT_PROFILE_SKETCH=1
-    //    runs the 100 TB sketch mode (approx_count_distinct — no
-    //    Expand, so the exact mode's ×4 in-flight replication and its
-    //    7.3 GB spill at 8 g/100× disappear; the r11 probe measures
-    //    exactly this swap). Default stays exact — the oracle-anchored
-    //    mode.
-    val profile =
-      if (sys.env.get("SPARK_GRAFT_PROFILE_SKETCH").contains("1"))
-        graft.operators.WarehouseQueries.profileColumns(
-          orders, graft.operators.WarehouseQueries.ProfiledOrderCols,
-          exact = false)
-      else q("q_profile_columns")(spark, sfDir)
+    //    "what did we receive" report)
+    val profile = q("q_profile_columns")(spark, sfDir)
     val nProfiled = profile.count()
 
     // 2. expectations gate: hard validity predicates must pass before

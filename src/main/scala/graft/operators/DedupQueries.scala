@@ -203,87 +203,13 @@ FROM documents d
 WHERE d.doc_id NOT IN (SELECT doc_id FROM cc WHERE doc_id <> cluster_id)
 ORDER BY d.doc_id"""
 
-  /** Diagnostics for the spec: rounds run / convergence checks issued
-    * by the most recent connectedComponents call in this JVM. */
-  @volatile private[graft] var lastCcRounds: Int = 0
-  @volatile private[graft] var lastCcChecks: Int = 0
-
-  /** Connected components over undirected pairs (doc_a, doc_b) by
-    * iterative min-label propagation: each round every node takes the
-    * minimum label among itself and its neighbors; fixpoint in
-    * O(cluster diameter) rounds (near-dup clusters are shallow). Each
-    * round is two joins (edges ⋈ labels for the neighbours' minimum,
-    * then labels ⋈ that minimum) and one aggregation, materialized by a
-    * localCheckpoint that truncates the growing plan lineage (at
-    * cluster scale this — not the data — is what kills iterative Spark
-    * jobs). At sf0.01 under AQE a round is 7 Spark jobs: six
-    * query-stage jobs and the checkpoint; a convergence check adds two.
-    *
-    * Fails loudly if `maxRounds` is reached before the fixpoint —
-    * returning partially-propagated labels would be silently-wrong
-    * cluster ids (a component of diameter > maxRounds would keep two
-    * labels). Diameter > 25 is implausible for near-dup clusters, so
-    * hitting the cap means something is broken, not slow.
-    *
-    * Convergence is checked every `checkEvery` rounds, not every
-    * round: propagation is monotone, so a round past the fixpoint is a
-    * cheap no-op, and halving the driver-side `changed`-count actions
-    * matters more on deep clusters than the odd extra round.
-    */
-  def connectedComponents(pairs: org.apache.spark.sql.DataFrame,
-                          maxRounds: Int = 25,
-                          checkEvery: Int = 2): org.apache.spark.sql.DataFrame = {
-    require(checkEvery >= 1, "checkEvery must be >= 1")
-    // symmetric edge set, materialized once — every iteration reuses
-    // it rather than recomputing signatures
-    val edges = pairs.union(
-      pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint()
-    var labels = edges.select(col("doc_a").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint()
-    var changed = 1L
-    var rounds = 0
-    var checks = 0
-    while (changed > 0 && rounds < maxRounds) {
-      // convergence gets verified on check rounds and always on the
-      // final permitted round (so the non-convergence throw is never
-      // based on a stale count)
-      val doCheck = (rounds + 1) % checkEvery == 0 || rounds + 1 == maxRounds
-      val nb = edges.join(
-          labels.select(col("id").as("nid"), col("label").as("nlabel")),
-          col("doc_b") === col("nid"))
-        .groupBy(col("doc_a")).agg(min(col("nlabel")).as("nb_min"))
-      val merged = labels.join(nb, col("id") === col("doc_a"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nb_min"), col("label")))
-            .as("label"),
-          (col("label") > coalesce(col("nb_min"), col("label")))
-            .cast("long").as("chg"))
-      val next = merged.localCheckpoint()
-      if (doCheck) {
-        changed = next.agg(coalesce(sum(col("chg")), lit(0L))).head().getLong(0)
-        checks += 1
-      }
-      labels = next.select("id", "label")
-      rounds += 1
-    }
-    lastCcRounds = rounds
-    lastCcChecks = checks
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds " +
-          s"($changed labels still changing) — component diameter exceeds " +
-          "the round cap; raise maxRounds")
-    val sizes = labels.groupBy(col("label").as("cluster_id"))
-      .agg(count(lit(1)).as("n_members"))
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-      .join(sizes, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"),
-        (col("doc_id") === col("cluster_id")).as("is_canonical"),
-        col("n_members"))
-      .orderBy(col("doc_id"))
-  }
+  /** Near-dup clusters of the documents table: connected components
+    * ([[GraphQueries.connectedComponents]]) over the verified MinHash
+    * pairs — the cluster map every cluster-keyed row starts from. */
+  private def minhashClusters(s: org.apache.spark.sql.SparkSession,
+                              dir: String): org.apache.spark.sql.DataFrame =
+    GraphQueries.connectedComponents(
+      minhashPairs(s, dir).select(col("doc_a"), col("doc_b")))
 
   /** Co-occurrence pairs from an inverted (doc_id, sh) index with a
     * document-frequency cap: a shingle shared by m docs contributes
@@ -836,13 +762,10 @@ ORDER BY doc_id""")),
     // Connected components by iterative min-label propagation: each
     // round every node takes the minimum label among itself and its
     // neighbors; fixpoint in O(cluster diameter) rounds (near-dup
-    // clusters are shallow). Each round is two joins and one
-    // aggregation; localCheckpoint truncates the growing plan lineage
-    // (at cluster scale this — not the data — is what kills iterative
-    // Spark jobs).
+    // clusters are shallow). Each round is one join and one
+    // aggregation, pinned columnar (GraphQueries.connectedComponents).
     Spec("q_dedup_clusters",
-      (s, dir) => connectedComponents(
-        minhashPairs(s, dir).select(col("doc_a"), col("doc_b"))),
+      (s, dir) => minhashClusters(s, dir),
       Some(clustersOracle)),
 
     // The COMPOSED dedup pipeline — what a user actually runs: MinHash
@@ -854,8 +777,7 @@ ORDER BY doc_id""")),
     // broadcasts.
     Spec("q_dedup_corpus",
       (s, dir) => {
-        val clusters = connectedComponents(
-          minhashPairs(s, dir).select(col("doc_a"), col("doc_b")))
+        val clusters = minhashClusters(s, dir)
         val drop = clusters.filter(!col("is_canonical")).select(col("doc_id"))
         t(s, dir, "documents")
           .join(broadcast(drop), Seq("doc_id"), "left_anti")
@@ -956,8 +878,7 @@ ORDER BY doc_id""")),
     // engine; the cluster map is tiny (duplicates only) and broadcasts.
     Spec("q_split_by_cluster",
       (s, dir) => {
-        val clusters = connectedComponents(
-            minhashPairs(s, dir).select(col("doc_a"), col("doc_b")))
+        val clusters = minhashClusters(s, dir)
           .select(col("doc_id"), col("cluster_id"))
         val bucket = conv(substring(md5(concat(lit("csplit|"),
           col("group_id").cast("string"))), 1, 15), 16, 10)
@@ -1544,8 +1465,7 @@ FROM grouped ORDER BY doc_id""")),
   private def canonicalKeepBestSpec: Spec =
     Spec("q_dedup_keep_best",
       (s, dir) => {
-        val clusters = connectedComponents(
-            minhashPairs(s, dir).select(col("doc_a"), col("doc_b")))
+        val clusters = minhashClusters(s, dir)
           .select(col("doc_id"), col("cluster_id"))
         t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
           .join(broadcast(clusters), Seq("doc_id"), "left")

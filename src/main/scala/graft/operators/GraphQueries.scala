@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph scoring over edge tables — the Pregel-on-DataFrame
@@ -43,15 +43,13 @@ object GraphQueries {
     * standard iterative-join PageRank: the degree table is computed
     * once and reused, only (node, rank) pairs (16 B) travel per round,
     * and AQE handles hub-node skew on the dst aggregate. Edges and
-    * degrees are materialized ONCE (`localCheckpoint`, the
-    * [[DedupQueries.connectedComponents]] pattern) — without it every
-    * iteration's plan re-derives the edge subtree, tripling the scan
-    * work at 3 rounds and growing without bound beyond; ranks are
-    * likewise checkpointed every few rounds so deep runs don't carry
-    * the whole join lineage.
+    * degrees are pinned ONCE — without it every iteration's plan
+    * re-derives the edge subtree, tripling the scan work at 3 rounds
+    * and growing without bound beyond. `edges` is pinned as given, so
+    * a caller that already pinned it (the composed graph row) shares
+    * that one copy.
     */
-  def pageRank(edges: DataFrame, iters: Int,
-               checkpointEvery: Int = 4): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int): DataFrame = {
     // Callers pass the edge list PRE-HASH-PARTITIONED by src (r19, guide
     // §2.4 "remove shuffles outright"): the cache then reports
     // hashpartitioning(src) and EVERY iteration's ranks join streams the
@@ -63,11 +61,11 @@ object GraphQueries {
     // below also becomes exchange-free (clustered by src already) and
     // deg's cache inherits hash(src), so the per-round deg attach is
     // exchange-free too. Results are bit-identical — partitioning only.
-    val e = ScaleOps.materializePinned(edges.select(col("src"), col("dst")))
+    val e = ScaleOps.materializePinned(edges)
     val deg = ScaleOps.materializePinned(
       e.groupBy(col("src")).agg(count(lit(1)).as("d")))
     var ranks = deg.select(col("src").as("node"), lit(1000000L).as("r"))
-    for (k <- 1 to iters) {
+    for (_ <- 1 to iters) {
       ranks = e.join(ranks, e("src") === ranks("node"))
         .join(deg, "src")
         .select(col("dst"), expr("r div d").as("c"))
@@ -75,10 +73,50 @@ object GraphQueries {
         .agg(sum(col("c")).as("s"))
         .select(col("dst").as("node"),
           (lit(150000L) + expr("(s * 85) div 100")).as("r"))
-      if (k % checkpointEvery == 0 && k < iters)
-        ranks = ranks.localCheckpoint()
     }
     ranks
+  }
+
+  /** The one edge pin label propagation reads: the symmetric
+    * `(src, dst)` edges plus ONE self-loop per node, so a node's own
+    * label takes part in every round it aggregates. The pin is filled
+    * by the caller's first action over it ([[ScaleOps.pin]]). Callers pass the
+    * edges pre-hash-partitioned by src, as [[pageRank]] takes them, so
+    * the self-loop distinct is clustered already and adds no exchange
+    * of its own. */
+  private def selfLoopedPin(edges: DataFrame): DataFrame = {
+    val sym = edges.select(col("src"), col("dst"))
+    ScaleOps.pin(sym.union(
+      sym.select(col("src")).distinct().select(col("src"), col("src").as("dst"))))
+  }
+
+  /** Synchronous label propagation over a [[selfLoopedPin]] `e` — the
+    * one round loop behind [[labelPropagation]] (mode of the
+    * neighbours' labels) and [[connectedComponents]] (their minimum).
+    * Round 1's label map is the identity (lab(n) = n), so it reads the
+    * labels straight off the edges instead of paying a |E| ⋈ |V| join
+    * for a no-op mapping; every later round joins the previous labels
+    * onto the edges once. `combine` aggregates a round's
+    * `(src, dst, lab)` contributions per dst into `(node, lab, …)`;
+    * `settle(k, labs)` takes round k's labels and returns the labels
+    * the next round reads (the result, on the last round) and whether
+    * round k was the last. */
+  private def propagate(e: DataFrame, combine: DataFrame => DataFrame)(
+      settle: (Int, DataFrame) => (DataFrame, Boolean)): DataFrame = {
+    var labs: DataFrame = null
+    var k = 0
+    var done = false
+    while (!done) {
+      k += 1
+      val contrib =
+        if (k == 1) e.select(col("src"), col("dst"), col("src").as("lab"))
+        else e.join(labs, e("src") === labs("node"))
+          .select(e("src"), e("dst"), labs("lab"))
+      val (next, last) = settle(k, combine(contrib))
+      labs = next
+      done = last
+    }
+    labs
   }
 
   /** Fixed iteration count for the LPA gate row — keep in sync with
@@ -106,64 +144,122 @@ object GraphQueries {
     * SortAggregate pair per round — measured 1.6× slower on the gate
     * graph; LpaPlanProbe pins the plan). The packing needs label ids
     * < 2³²−1 and per-(node, label) counts < 2³¹ — checked ONCE against
-    * the materialized edges, loud throw beyond (use an unpacked
-    * variant past 4 B nodes). Edges are materialized once; labels
-    * checkpoint every few rounds ([[pageRank]]'s lineage pattern).
+    * the pinned edges, loud throw beyond (use an unpacked variant past
+    * 4 B nodes). Edges are taken pre-hash-partitioned by src, as
+    * [[pageRank]] takes them ([[selfLoopedPin]]).
     */
-  def labelPropagation(edges: DataFrame, iters: Int,
-                       checkpointEvery: Int = 4, np: Int = 0): DataFrame = {
+  def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
+    require(iters >= 1, s"labelPropagation: iters must be >= 1 (got $iters)")
     val PackShift = 4294967296L // 2^32
-    val sym = edges.select(col("src"), col("dst"))
-    val nodes = sym.select(col("src")).distinct()
-    // hash(src)-partitioned cache (r19, guide §2.4): rounds 2+ join
-    // labels onto edges by src — with the cache partitioned by src the
-    // join consumes the cached partitioning and no round re-shuffles
-    // the |E|+|V| self-looped edge list (the r18 executed plan carried
-    // one Exchange hashpartitioning(src) over the cache for the label
-    // joins). The union output had no usable partitioning before, so
-    // the repartition replaces a per-query shuffle, not adds one.
-    // np > 0 (r20): size-derived cache partition count from the caller
-    // (ScaleOps.deriveIterParts) — per-round stages launch one task per
-    // cache partition, so the session constant over-tasks small graphs
-    // (see the pagerank spec's derivation note). 0 keeps the session
-    // default.
-    val symSelf = sym.union(nodes.select(col("src"), col("src").as("dst")))
-    val e = ScaleOps.materializePinned(
-      if (np > 0) symSelf.repartition(np, col("src"))
-      else symSelf.repartition(col("src")))
+    val e = selfLoopedPin(edges)
+    // the guard's aggregate is the action that fills the pin
     val bounds = e.agg(max(col("src")).as("mx"), count(lit(1)).as("n")).head()
     require(bounds.getLong(0) >= 0 && bounds.getLong(0) < PackShift - 1 &&
       bounds.getLong(1) < (1L << 31),
       s"labelPropagation: node ids must fit 32 bits and |E| < 2^31 for " +
         s"the packed arg-max (got max id ${bounds.getLong(0)}, " +
         s"|E| ${bounds.getLong(1)})")
-    var labs = nodes.select(col("src").as("node"), col("src").as("lab"))
-    for (k <- 1 to iters) {
-      // round 1's label map is the identity (lab(n) = n), so the first
-      // round reads labels straight off the edge list instead of paying
-      // a |E| ⋈ |V| join for a no-op mapping
-      val contrib =
-        if (k == 1) e.select(col("dst"), col("src").as("lab"))
-        else e.join(labs, e("src") === labs("node"))
-          .select(col("dst"), col("lab"))
-      // NOT fused to one exchange (r19 measured): repartitioning the
-      // raw contributions by dst would satisfy both aggregates'
-      // clustering and drop the second exchange, but it also forfeits
-      // the map-side partial counts — measured a wash at gate scale
-      // (5.27 vs 5.11 s) and partial aggregation is the safer shape
-      // under hub skew at 100 TB, so the two-exchange form stays.
-      labs = contrib
-        .groupBy(col("dst"), col("lab"))
+    // NOT fused to one exchange (r19 measured): repartitioning the raw
+    // contributions by dst would satisfy both aggregates' clustering
+    // and drop the second exchange, but it also forfeits the map-side
+    // partial counts — measured a wash at gate scale (5.27 vs 5.11 s)
+    // and partial aggregation is the safer shape under hub skew at
+    // 100 TB, so the two-exchange form stays.
+    propagate(e, _.groupBy(col("dst"), col("lab"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("dst"))
         .agg(max(col("c") * PackShift + (lit(PackShift - 1) - col("lab")))
           .as("m"))
         .select(col("dst").as("node"),
-          (lit(PackShift - 1) - (col("m") % PackShift)).as("lab"))
-      if (k % checkpointEvery == 0 && k < iters)
-        labs = labs.localCheckpoint()
+          (lit(PackShift - 1) - (col("m") % PackShift)).as("lab"))) {
+      (k, labs) => (labs, k == iters)
     }
-    labs
+  }
+
+  /** Rounds between [[connectedComponents]]' convergence checks:
+    * propagation is monotone, so a round past the fixpoint is a cheap
+    * no-op, and halving the driver-side `changed`-count actions matters
+    * more on deep clusters than the odd extra round. */
+  private[graft] val CcCheckEvery = 2
+
+  /** Diagnostics for the spec: rounds run / convergence checks issued
+    * by the most recent connectedComponents call in this JVM. */
+  @volatile private[graft] var lastCcRounds: Int = 0
+  @volatile private[graft] var lastCcChecks: Int = 0
+
+  /** Connected components over undirected pairs (doc_a, doc_b): label
+    * propagation ([[propagate]]) with `min` as the combine — each round
+    * every node takes the minimum label among itself (its self-loop)
+    * and its neighbours; fixpoint in O(cluster diameter) rounds
+    * (near-dup clusters are shallow). A round is one join (labels onto
+    * the edge pin) and one aggregate per node; the aggregate also reads
+    * the node's old label off its self-loop row, so `chg` costs no
+    * second join.
+    *
+    * Convergence is checked every [[CcCheckEvery]] rounds and always on
+    * the last permitted one (so the throw never rests on a stale
+    * count). Each checked round is pinned through [[ScaleOps]] (the
+    * columnar pin, not `localCheckpoint`: see
+    * [[ScaleOps.materializePinned]]), the check being the action that
+    * fills it, and the pin before it released once it is counted; a
+    * round between checks stays lazy and is computed inside the next
+    * pin's plan, which spares its materializing jobs. The edge pin is
+    * released on return, so only the final labels stay for the
+    * harness' [[ScaleOps.releaseAll]].
+    *
+    * Fails loudly if `maxRounds` is reached before the fixpoint —
+    * returning partially-propagated labels would be silently-wrong
+    * cluster ids (a component of diameter > maxRounds would keep two
+    * labels). Diameter > 25 is implausible for near-dup clusters, so
+    * hitting the cap means something is broken, not slow.
+    */
+  def connectedComponents(pairs: DataFrame, maxRounds: Int = 25): DataFrame = {
+    require(maxRounds >= 1, s"connectedComponents: maxRounds must be >= 1 (got $maxRounds)")
+    // both directions out of ONE pass over the pairs (a union would
+    // evaluate the pairs' plan once per direction)
+    val e = selfLoopedPin(pairs
+      .select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("p"))
+      .select(col("p.src"), col("p.dst"))
+      .repartition(col("src")))
+    var changed = 1L
+    var checks = 0
+    var prev: DataFrame = null
+    val labels =
+      try propagate(e, _.groupBy(col("dst"))
+          .agg(min(col("lab")).as("lab"),
+            max(when(col("src") === col("dst"), col("lab"))).as("old"))
+          .select(col("dst").as("node"), col("lab"),
+            (col("old") > col("lab")).cast("long").as("chg"))) { (k, labs) =>
+        lastCcRounds = k
+        // a round no check reads stays lazy: the next round's pin
+        // computes it inside its own plan
+        if (k % CcCheckEvery != 0 && k != maxRounds) (labs, false)
+        else {
+          // the check is the action that fills the pin
+          val pinned = ScaleOps.pin(labs)
+          changed = pinned.agg(coalesce(sum(col("chg")), lit(0L))).head().getLong(0)
+          checks += 1
+          if (prev != null) ScaleOps.release(prev)
+          prev = pinned
+          (pinned, changed == 0 || k == maxRounds)
+        }
+      } finally ScaleOps.release(e)
+    lastCcChecks = checks
+    if (changed > 0)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxRounds rounds " +
+          s"($changed labels still changing) — component diameter exceeds " +
+          "the round cap; raise maxRounds")
+    val sizes = labels.groupBy(col("lab").as("cluster_id"))
+      .agg(count(lit(1)).as("n_members"))
+    labels.select(col("node").as("doc_id"), col("lab").as("cluster_id"))
+      .join(sizes, "cluster_id")
+      .select(col("doc_id"), col("cluster_id"),
+        (col("doc_id") === col("cluster_id")).as("is_canonical"),
+        col("n_members"))
+      .orderBy(col("doc_id"))
   }
 
   /** Exact triangle-participation counts over an undirected edge table
@@ -193,18 +289,21 @@ object GraphQueries {
       (col("du") === col("dv") && col("u") < col("v"))
     val ss = edges.sparkSession
     // ONE agg off the cache: the edge count m drives every derivation
-    // below, and the key bounds decide whether (u, v) packs into a
-    // single long (u into the high 32 bits) — the compact closing-probe
-    // key (r20). All replica scales keep ids far under 2³¹; the guard
-    // makes the generic API safe for any caller.
+    // below, and the key bounds check that (u, v) packs into a single
+    // long (u into the high 32 bits) — the compact closing-probe key
+    // (r20). Every graph here keys on l_partkey, far under 2³¹; the
+    // guard makes the generic API loud for any other caller.
     val eStats = e.agg(count(lit(1)).as("m"),
       min(col("u")).cast("long").as("nu"), max(col("u")).cast("long").as("mu"),
       min(col("v")).cast("long").as("nv"), max(col("v")).cast("long").as("mv"))
       .head()
     val m = eStats.getLong(0)
-    val packable = m > 0 && !eStats.isNullAt(1) && !eStats.isNullAt(3) &&
-      eStats.getLong(1) >= 0 && eStats.getLong(2) < (1L << 31) &&
-      eStats.getLong(3) >= 0 && eStats.getLong(4) < (1L << 32)
+    require(m == 0 || (eStats.getLong(1) >= 0 && eStats.getLong(2) < (1L << 31) &&
+      eStats.getLong(3) >= 0 && eStats.getLong(4) < (1L << 32)),
+      s"triangleCounts: ids must be non-negative with u < 2^31 (31 bits) " +
+        s"and v < 2^32 (32 bits) for the packed (u, v) key (got u in " +
+        s"[${eStats.get(1)}, ${eStats.get(2)}], v in " +
+        s"[${eStats.get(3)}, ${eStats.get(4)}])")
     def packed(a: Column, b: Column): Column =
       shiftleft(a.cast("long"), 32).bitwiseOR(b.cast("long"))
     val parts = ScaleOps.sessionPartitions(ss)
@@ -295,12 +394,11 @@ object GraphQueries {
     // partial aggregate. The array is 5× smaller than a hashed
     // relation (no per-row object or map overhead), which is exactly
     // what keeps the 10× replica inside the budget. Past the budget,
-    // fall back to the shuffled join — on the packed single-long key
-    // when ids allow (compact LongHashedRelation build, 16 B wedge
-    // keys instead of 24 B), else the original two-column form.
-    val closeBcast = packable && ScaleOps.fitsBroadcast(ss, m * 16L)
+    // fall back to the shuffled join on the packed single-long key
+    // (compact LongHashedRelation build, 16 B wedge keys instead of
+    // 24 B).
     val tri =
-      if (closeBcast) {
+      if (ScaleOps.fitsBroadcast(ss, m * 16L)) {
         val arr = e.select(packed(col("u"), col("v")).as("__uv"))
           .collect().map(_.getLong(0))
         java.util.Arrays.sort(arr)
@@ -308,7 +406,7 @@ object GraphQueries {
         val isEdge = udf((ab: Long) =>
           java.util.Arrays.binarySearch(bc.value, ab) >= 0)
         w.filter(isEdge(packed(col("a"), col("b"))))
-      } else if (packable) {
+      } else {
         val ePk = e.select(packed(col("u"), col("v")).as("__uv"))
         val wPk = w.withColumn("__ab", packed(col("a"), col("b")))
         val ePkP = if (hashFits && np > parts)
@@ -316,13 +414,54 @@ object GraphQueries {
         val wPkP = if (hashFits && np > parts)
           wPk.repartition(np, col("__ab")) else wPk
         wPkP.join(hinted(ePkP), col("__ab") === col("__uv"))
-      } else {
-        val eP = if (hashFits && np > parts)
-          e.repartition(np, col("u"), col("v")) else e
-        w.join(hinted(eP), col("a") === col("u") && col("b") === col("v"))
       }
     tri.select(explode(array(col("apex"), col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
+  }
+
+  /** The customer↔supplier trade graph of the star schema, in the edge
+    * form [[pageRank]] and [[labelPropagation]] take: `orders ⋈
+    * lineitem` (suppliers offset into their own id space), distinct,
+    * symmetrized, and hash-partitioned by src.
+    *
+    * No distinct after symmetrizing: customer ids and offset supplier
+    * ids live in disjoint key spaces (also under the ScaleUp replica's
+    * per-copy shifts), so a forward row can never equal a swapped row —
+    * the union is already duplicate-free and the extra 2|E|-row
+    * shuffle would be pure waste. The partition COUNT is derived by
+    * size, not the session constant (ScaleOps.deriveIterParts, r20):
+    * each iteration stage launches one task per cache partition. The
+    * bytes bound comes from the optimizer's lineitem file size, NO
+    * driver job — a li.count() here measured +0.7 s per graph row at
+    * the 10× replica, pure added job latency. ×6 ≈ (2 symmetrized edge
+    * rows × 48 B in-flight per lineitem row, distinct only shrinks)
+    * over ~16 B/row compressed parquet; only the order of magnitude at
+    * the derivation's regime boundary matters (gate: 11 MB × 6 = 66 MB
+    * → latency regime, 3 partitions; 10×: 103 MB × 6 → throughput
+    * regime, session count — both measured endpoints). LPA's self-loop
+    * rows add |V| ≤ |E| slack the 32 MB target absorbs. */
+  private[operators] def tradeGraph(s: SparkSession, dir: String): DataFrame = {
+    val o = t(s, dir, "orders")
+    val li = t(s, dir, "lineitem")
+    val e0 = o.join(li, o("o_orderkey") === li("l_orderkey"))
+      .select(col("o_custkey").as("src"),
+        (col("l_suppkey") + lit(1000000L)).as("dst"))
+      .distinct()
+    e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(ScaleOps.deriveIterParts(s, ScaleOps.planBytes(li, 6)),
+        col("src"))
+  }
+
+  /** The market-basket projection of the star schema: parts co-ordered
+    * in the same order form an edge, in the canonical `(u < v)`,
+    * distinct form [[triangleCounts]] takes. The per-order self-join's
+    * fan-out is bounded by order size (≤ C(7,2) pairs/order). */
+  private[operators] def coorderGraph(s: SparkSession, dir: String): DataFrame = {
+    val li = t(s, dir, "lineitem")
+    val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
+    val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
+    a.join(b, "k").where(col("u") < col("v"))
+      .select(col("u"), col("v")).distinct()
   }
 
   private def lpIterSql(prev: String, cur: String): String =
@@ -350,40 +489,10 @@ object GraphQueries {
     // identical integer recurrence as chained CTEs — bit-equal because
     // no float ever enters the computation.
     Spec("q_graph_pagerank",
-      (s, dir) => {
-        val o = t(s, dir, "orders")
-        val li = t(s, dir, "lineitem")
-        val e0 = o.join(li, o("o_orderkey") === li("l_orderkey"))
-          .select(col("o_custkey").as("src"),
-            (col("l_suppkey") + lit(1000000L)).as("dst"))
-          .distinct()
-        // no distinct after symmetrizing: customer ids and offset
-        // supplier ids live in disjoint key spaces (also under the
-        // ScaleUp replica's per-copy shifts), so a forward row can
-        // never equal a swapped row — the union is already
-        // duplicate-free and the extra 2|E|-row shuffle would be
-        // pure waste
-        // pre-partition by src so the iteration cache is join-consumable
-        // (see pageRank's scaladoc note; physical only, result unchanged).
-        // Partition COUNT derived by size, not the session constant
-        // (ScaleOps.deriveIterParts, r20): each iteration stage launches
-        // one task per cache partition. The bytes bound comes from the
-        // optimizer's lineitem file size, NO driver job — a li.count()
-        // here measured +0.7 s per graph row at the 10× replica, pure
-        // added job latency. ×6 ≈ (2 symmetrized edge rows × 48 B
-        // in-flight per lineitem row, distinct only shrinks) over
-        // ~16 B/row compressed parquet; only the order of magnitude at
-        // the derivation's regime boundary matters (gate: 11 MB × 6 =
-        // 66 MB → latency regime, 3 partitions; 10×: 103 MB × 6 →
-        // throughput regime, session count — both measured endpoints).
-        val npIter = ScaleOps.deriveIterParts(s, ScaleOps.planBytes(li, 6))
-        val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-          .repartition(npIter, col("src"))
-        pageRank(e, PageRankIters)
-          .orderBy(col("r").desc, col("node"))
-          .limit(100)
-          .select(col("node"), col("r").as("rank"))
-      },
+      (s, dir) => pageRank(tradeGraph(s, dir), PageRankIters)
+        .orderBy(col("r").desc, col("node"))
+        .limit(100)
+        .select(col("node"), col("r").as("rank")),
       Some(s"""WITH e0 AS (
                  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
                  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
@@ -404,22 +513,9 @@ object GraphQueries {
     // rounds stable on this bipartite graph. All-long state, so the
     // result is bit-equal regardless of plan or aggregation order.
     Spec("q_graph_communities",
-      (s, dir) => {
-        val o = t(s, dir, "orders")
-        val li = t(s, dir, "lineitem")
-        val e0 = o.join(li, o("o_orderkey") === li("l_orderkey"))
-          .select(col("o_custkey").as("src"),
-            (col("l_suppkey") + lit(1000000L)).as("dst"))
-          .distinct()
-        val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-        // size-derived iteration-cache granularity (same bound as the
-        // pagerank spec; the self-loop rows add |V| ≤ |E| slack the
-        // 32 MB target absorbs)
-        labelPropagation(e, LpaIters,
-            np = ScaleOps.deriveIterParts(s, ScaleOps.planBytes(li, 6)))
-          .orderBy(col("node"))
-          .select(col("node"), col("lab"))
-      },
+      (s, dir) => labelPropagation(tradeGraph(s, dir), LpaIters)
+        .orderBy(col("node"))
+        .select(col("node"), col("lab")),
       Some(s"""WITH e0 AS (
                  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
                  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
@@ -443,16 +539,9 @@ object GraphQueries {
     // degree-ordered orientation, so the two engines count the exact
     // same apex per triangle.
     Spec("q_graph_triangles",
-      (s, dir) => {
-        val li = t(s, dir, "lineitem")
-        val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
-        val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
-        val e = a.join(b, "k").where(col("u") < col("v"))
-          .select(col("u"), col("v")).distinct()
-        triangleCounts(e)
-          .orderBy(col("node"))
-          .select(col("node"), col("n_tri"))
-      },
+      (s, dir) => triangleCounts(coorderGraph(s, dir))
+        .orderBy(col("node"))
+        .select(col("node"), col("n_tri")),
       Some("""WITH e AS (
                  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
                  FROM lineitem a JOIN lineitem b

@@ -291,28 +291,16 @@ object PipelineQueries {
     // other composed row.
     Spec("q_graph_composed",
       (s, dir) => {
-        val o = t(s, dir, "orders")
-        val li = t(s, dir, "lineitem")
-        val e0 = o.join(li, o("o_orderkey") === li("l_orderkey"))
-          .select(col("o_custkey").as("src"),
-            (col("l_suppkey") + lit(1000000L)).as("dst"))
-          .distinct()
-        // hash(src)-partitioned shared pin (r19): pageRank's iteration
-        // joins consume the cached partitioning directly — see
-        // GraphQueries.pageRank. Physical only; the union is already
-        // duplicate-free so row content is unchanged. Partition count
-        // size-derived (ScaleOps.deriveIterParts, r20 — the pagerank
-        // spec's per-round task-latency rule; same 2·|lineitem| bound).
-        val npIter = ScaleOps.deriveIterParts(s, ScaleOps.planBytes(li, 6))
-        val e = ScaleOps.materializePinned(
-          e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-            .repartition(npIter, col("src")))
+        // the shared trade graph, pinned hash(src)-partitioned (r19):
+        // pageRank's iteration joins consume the cached partitioning
+        // directly, and pageRank pins it as given, so both phases read
+        // this one copy — see GraphQueries.pageRank
+        val e = ScaleOps.materializePinned(GraphQueries.tradeGraph(s, dir))
         val nEdges = e.count()
         // Each phase's SMALL result (top-100 / |V| labels / per-node
-        // counts) is eagerly localCheckpoint'ed — the per-round-state
-        // pattern pageRank itself uses — so the phase's iterative
-        // shuffle lineage becomes unreachable the moment the phase
-        // ends. Without the truncation the final union holds every
+        // counts) is eagerly localCheckpoint'ed, so the phase's
+        // iterative shuffle lineage becomes unreachable the moment the
+        // phase ends. Without the truncation the final union holds every
         // phase's shuffle files ALIVE simultaneously: disk cost = the
         // SUM of phase footprints instead of their MAX, which at the
         // 100× replica filled the box (r11, 76 GB free → ENOSPC). The
@@ -352,17 +340,12 @@ object PipelineQueries {
             .localCheckpoint()
         }
         val lpaF = Future {
-          GraphQueries.labelPropagation(e, GraphQueries.LpaIters,
-              np = npIter)
+          GraphQueries.labelPropagation(e, GraphQueries.LpaIters)
             .select(col("node"), col("lab"))
             .localCheckpoint()
         }
         val triF = Future {
-          val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
-          val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
-          val eTri = ScaleOps.materializePinned(
-            a.join(b, "k").where(col("u") < col("v"))
-              .select(col("u"), col("v")).distinct())
+          val eTri = ScaleOps.materializePinned(GraphQueries.coorderGraph(s, dir))
           val nCo = eTri.count()
           val triDf = GraphQueries.triangleCounts(eTri)
             .select(col("node"), col("n_tri"))

@@ -114,22 +114,30 @@ object ScaleOps {
       pinLog.info(
         s"materializePinned: est ${estBytes} B <= budget ${budget} B — pinning")
     }
+    val out = pin(df)
+    out.count()
+    out
+  }
+
+  /** [[materializePinned]] without the materializing count: `df` is
+    * persisted and registered, and the caller's own next action over
+    * it fills the cache. For a caller whose next step is an action over
+    * the pin anyway (a range guard, a convergence check), the count
+    * would be one more action, with its own planning and exchange. */
+  private[operators] def pin(df: DataFrame): DataFrame = {
     // already-cached fast path: a composed session that pinned this
     // exact (canonical) plan owns the pin — re-persisting would only
     // log "Asked to cache already cached data" and double-register the
     // release. storageLevel is the public plan-equivalence probe into
     // the CacheManager.
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-      df.count()
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
       return df
-    }
     val out = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // register BEFORE the materializing count: if the count dies
+    // register BEFORE anything fills it: if that action dies
     // (OOM/cancellation), the finally-side releaseAll() must still
     // find and release the pin — registering after would resurrect the
     // leak on exactly the failure paths
     synchronized { pinnedFrames += out }
-    out.count()
     out
   }
 

@@ -23,23 +23,17 @@ object WarehouseQueries {
     * strings, for a uniform long-table schema) per profiled column,
     * unpivoted via stack.
     *
-    * `exact = true` uses exact COUNT(DISTINCT)s, which cost one Expand
-    * (×|cols| row replication before partial aggregation) — the oracle
-    * anchor, and the source of the warehouse DAG's entire 7.3 GB spill
-    * at the 8 g/100× probe (VERDICT r10). `exact = false` is the
-    * 100 TB mode: `approx_count_distinct` partials are fixed-size
-    * HLL++ sketches merged map-side — no Expand, no row replication,
-    * so the in-flight volume stays one row per input row regardless of
-    * how many columns are profiled (the r11 probe measures the spill
-    * vanishing). Both modes are oracle-gated: q_profile_columns pins
-    * the exact values, q_profile_columns_approx pins the sketch's
-    * bounded error against them. */
+    * The distinct counts are exact COUNT(DISTINCT)s, which cost one
+    * Expand (×|cols| row replication before partial aggregation) — the
+    * oracle anchor, and the source of the warehouse DAG's entire 7.3 GB
+    * spill at the 8 g/100× probe (VERDICT r10; BASELINE.md keeps the
+    * r11 measurement of the HLL swap). q_profile_columns_approx gates
+    * the sketched form against these exact values. */
   def profileColumns(df: org.apache.spark.sql.DataFrame,
-                     cols: Seq[String],
-                     exact: Boolean = true): org.apache.spark.sql.DataFrame = {
+                     cols: Seq[String]): org.apache.spark.sql.DataFrame = {
     val stackArgs = cols.map(c =>
       s"'$c', null_$c, dist_$c, min_$c, max_$c").mkString(", ")
-    profileRow(df, cols, exact)
+    profileRow(df, cols)
       .selectExpr(s"stack(${cols.size}, $stackArgs) AS " +
         "(col_name, n_null, n_distinct, min_v, max_v)")
       .orderBy(col("col_name"))
@@ -47,16 +41,14 @@ object WarehouseQueries {
 
   /** The one-row aggregate behind [[profileColumns]] and
     * q_profile_columns_approx: per profiled column `c`, `null_c`,
-    * `dist_c` (exact or sketched per `exact`), and `min_c`/`max_c` as
-    * strings. */
+    * the exact `dist_c`, and `min_c`/`max_c` as strings. */
   private def profileRow(df: org.apache.spark.sql.DataFrame,
-                         cols: Seq[String],
-                         exact: Boolean): org.apache.spark.sql.DataFrame = {
+                         cols: Seq[String]): org.apache.spark.sql.DataFrame = {
     // STRING-buffered aggregates (min/max over string columns) are
     // split into their own grouping-free aggregate (r19, guide §7.2
     // "read the plan"): HashAggregate requires mutable fixed-size
     // buffer types, so one string min anywhere in the aggregate list
-    // demotes the WHOLE aggregate — including the exact mode's
+    // demotes the WHOLE aggregate — including the
     // multi-countDistinct Expand — to SortAggregate, which SORTS the
     // ×|cols|-expanded row stream twice (measured as the entire cost
     // of the profile gate rows: the executed plan carried Sort+
@@ -70,8 +62,7 @@ object WarehouseQueries {
       org.apache.spark.sql.types.StringType).toSet
     val mainAggs = cols.flatMap { c =>
       Seq(sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"null_$c"),
-        (if (exact) countDistinct(col(c))
-         else approx_count_distinct(col(c), 0.01)).as(s"dist_$c")) ++
+        countDistinct(col(c)).as(s"dist_$c")) ++
         (if (strCols(c)) Nil
          else Seq(min(col(c)).cast("string").as(s"min_$c"),
            max(col(c)).cast("string").as(s"max_$c")))
@@ -222,9 +213,9 @@ object WarehouseQueries {
     // Single-pass column profiling: null count, distinct count,
     // min/max (as strings, for a uniform long-table schema) for every
     // profiled column in ONE scan, unpivoted via stack — see
-    // [[profileColumns]]. This row gates the EXACT mode (the oracle
-    // anchor); q_profile_columns_approx below gates the sketch mode
-    // the 100 TB deployment actually runs.
+    // [[profileColumns]]. This row gates the exact profile (the oracle
+    // anchor); q_profile_columns_approx below gates the HLL sketch
+    // against it.
     Spec("q_profile_columns",
       (s, dir) => profileColumns(t(s, dir, "orders"), ProfiledOrderCols),
       Some("""SELECT 'o_orderkey' AS col_name,
@@ -257,9 +248,9 @@ object WarehouseQueries {
              ORDER BY col_name""")),
 
     // Sketch-mode profile gate (VERDICT r10 #3): the same one-scan
-    // profile with approx_count_distinct — the mode the 100 TB
-    // deployment runs, because HLL++ partials merge without the exact
-    // mode's Expand (the attributed source of the warehouse DAG's
+    // profile with approx_count_distinct — the form a 100 TB profile
+    // would run, because HLL++ partials merge without the exact
+    // profile's Expand (the attributed source of the warehouse DAG's
     // entire 7.3 GB spill at 8 g/100×). Gated like
     // q_agg_approx_distinct: the row carries the EXACT distincts plus
     // a bounded-error boolean on the sketch (5 % = 5 sd at the
@@ -272,8 +263,7 @@ object WarehouseQueries {
     // through the multi-distinct Expand rewrite, which abandons
     // HashAggregate for an interpreted SortAggregate that copies the
     // ~11k-field buffer row per input row — measured 18.6 s vs 1.9 s
-    // for the split at sf0.01 (r11 ProfProbe); production mode
-    // (exact=false above) never mixes them so it was never affected.
+    // for the split at sf0.01 (r11 ProfProbe).
     Spec("q_profile_columns_approx",
       (s, dir) => {
         val cols = ProfiledOrderCols
@@ -283,7 +273,7 @@ object WarehouseQueries {
         val stackArgs = cols.map(c =>
           s"'$c', null_$c, dist_$c, approx_$c, min_$c, max_$c")
           .mkString(", ")
-        profileRow(orders, cols, exact = true)
+        profileRow(orders, cols)
           .crossJoin(orders.agg(sketchAggs.head, sketchAggs.tail: _*))
           .selectExpr(s"stack(${cols.size}, $stackArgs) AS " +
             "(col_name, n_null, n_distinct, approx, min_v, max_v)")

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.sources.CsvIngest
@@ -38,18 +38,23 @@ object IncrementalIngest {
     StructField("path", StringType), StructField("modificationTime", TimestampType),
     StructField("length", LongType), StructField("content", BinaryType)))
 
-  /** Start a drain-available-then-stop ingest: CSV files → repaired
-    * rows → parquet sink. The stream tracks FILES only; each
+  /** One scheduled "tick" (the cron-equivalent): drain whatever is new
+    * — CSV files → repaired rows → parquet sink — and return the number
+    * of rows THIS tick loaded, so the workflow's conditional switch
+    * (SURVEY §2.8 W3) has something to branch on; a tick that finds
+    * nothing new returns 0. The stream tracks FILES only; each
     * micro-batch's files are parsed by [[CsvIngest.read]], the same
     * reference wire format the batch workflow loads (ISO-8859-1,
     * QUOTE_NONE with `\` escapes, wrong-arity rows dropped), and land
     * in their own `batch_id` partition through
     * [[ComposedPipeline.idempotentAppend]], so a replayed micro-batch
-    * rewrites its partition instead of appending twice. Returns the
-    * started query; callers `awaitTermination()`.
+    * rewrites its partition instead of appending twice. The count is
+    * observed on each micro-batch's own write (`Dataset.observe`), so
+    * a tick never re-reads the files or the output table to report it.
     */
-  def start(spark: SparkSession, schema: StructType, cfg: Config): StreamingQuery = {
+  def runOnce(spark: SparkSession, schema: StructType, cfg: Config): Long = {
     val opts = CsvIngest.Options(sep = cfg.sep)
+    val loaded = new java.util.concurrent.atomic.AtomicLong()
     spark.readStream
       .format("binaryFile")
       .schema(FileListing)
@@ -65,21 +70,17 @@ object IncrementalIngest {
       .foreachBatch { (files: DataFrame, batchId: Long) =>
         val rows = files.collect().toSeq
           .map(r => CsvIngest.read(spark, r.getString(0), schema, opts))
-        if (rows.nonEmpty)
-          ComposedPipeline.idempotentAppend(rows.reduce(_ union _), batchId,
-            cfg.outputDir)
+        if (rows.nonEmpty) {
+          val seen = Observation()
+          ComposedPipeline.idempotentAppend(
+            rows.reduce(_ union _).observe(seen, count(lit(1)).as("n")),
+            batchId, cfg.outputDir)
+          loaded.addAndGet(seen.get("n").asInstanceOf[Long])
+        }
+        ()
       }
       .start()
-  }
-
-  /** One scheduled "tick" (the cron-equivalent): drain whatever is new
-    * and return the output table's cumulative row count (every row
-    * loaded so far, not this tick's), so the workflow's conditional
-    * switch (SURVEY §2.8 W3) has something to branch on. A tick that
-    * finds nothing new returns the previous count. */
-  def runOnce(spark: SparkSession, schema: StructType, cfg: Config): Long = {
-    val q = start(spark, schema, cfg)
-    q.awaitTermination()
-    spark.read.parquet(cfg.outputDir).count()
+      .awaitTermination()
+    loaded.get()
   }
 }

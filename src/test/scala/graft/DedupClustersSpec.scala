@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.DedupQueries
+import graft.operators.{DedupQueries, GraphQueries}
 
 /** Convergence contract of the min-label-propagation connected
   * components: a component whose diameter exceeds the round cap must
@@ -39,7 +39,7 @@ class DedupClustersSpec extends AnyFunSuite {
     // min labels travel one hop per round: a 12-edge path needs 12
     // rounds; cap at 5 must abort
     val e = intercept[IllegalStateException] {
-      DedupQueries.connectedComponents(pathGraph(12), maxRounds = 5)
+      GraphQueries.connectedComponents(pathGraph(12), maxRounds = 5)
     }
     assert(e.getMessage.contains("converge"), e.getMessage)
   }
@@ -57,7 +57,7 @@ class DedupClustersSpec extends AnyFunSuite {
   }
 
   test("the same path converges to one cluster with a sufficient cap") {
-    val rows = DedupQueries.connectedComponents(pathGraph(12), maxRounds = 20)
+    val rows = GraphQueries.connectedComponents(pathGraph(12), maxRounds = 20)
       .collect()
     assert(rows.length == 13)
     assert(rows.forall(_.getLong(1) == 0L), rows.mkString(","))
@@ -66,20 +66,48 @@ class DedupClustersSpec extends AnyFunSuite {
   }
 
   test("convergence checks are amortized: ~half the driver actions of per-round checking") {
-    val perRound = DedupQueries.connectedComponents(
-      pathGraph(12), maxRounds = 30, checkEvery = 1).collect()
-    val roundsPerRound = DedupQueries.lastCcRounds
-    val checksPerRound = DedupQueries.lastCcChecks
-    assert(checksPerRound == roundsPerRound) // every round checked
+    val rows = GraphQueries.connectedComponents(pathGraph(12), maxRounds = 30)
+      .collect()
+    assert(rows.forall(_.getLong(1) == 0L), rows.mkString(","))
+    val rounds = GraphQueries.lastCcRounds
+    val checks = GraphQueries.lastCcChecks
+    // min labels travel one hop per round: 12 rounds to the fixpoint
+    assert(rounds >= 12, s"rounds $rounds")
+    // one check per CcCheckEvery rounds, plus at most one extra
+    assert(checks <= rounds / GraphQueries.CcCheckEvery + 1,
+      s"expected ~${rounds / GraphQueries.CcCheckEvery} checks, got $checks")
+  }
 
-    val amortized = DedupQueries.connectedComponents(
-      pathGraph(12), maxRounds = 30, checkEvery = 2).collect()
-    val checksAmortized = DedupQueries.lastCcChecks
-    // same labels either way (propagation past the fixpoint is a no-op)
-    assert(amortized.map(_.toString).sorted.toSeq ==
-      perRound.map(_.toString).sorted.toSeq)
-    // and at most one extra round's worth of checks beyond the half
-    assert(checksAmortized <= roundsPerRound / 2 + 1,
-      s"expected ~${roundsPerRound / 2} checks, got $checksAmortized")
+  test("connectedComponents equals a driver-side union-find on seeded " +
+    "random graphs") {
+    import spark.implicits._
+    for (seed <- Seq(3, 17, 29)) {
+      val rng = new scala.util.Random(seed)
+      // sparse random pairs over 80 ids (several components), plus a
+      // 9-edge path on its own ids whose min label needs 9 rounds
+      val random = Seq.fill(45)((rng.nextInt(80).toLong, rng.nextInt(80).toLong))
+        .filter { case (a, b) => a != b }
+      val path = (100L until 109L).map(i => (i + 1, i))
+      val pairs = random ++ path
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      for ((a, b) <- pairs) {
+        val (ra, rb) = (find(a), find(b))
+        // the smaller root wins, so every root is its component's min
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val nodes = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
+      val size = nodes.groupBy(find).map { case (r, ns) => r -> ns.size.toLong }
+      val expected = nodes.sorted.map(n =>
+        (n, find(n), n == find(n), size(find(n))))
+      val got = GraphQueries.connectedComponents(pairs.toDF("doc_a", "doc_b"))
+        .as[(Long, Long, Boolean, Long)].collect().toSeq
+      assert(size.size > 1, s"seed $seed: one component only")
+      assert(GraphQueries.lastCcRounds > 2, s"seed $seed")
+      assert(got == expected, s"seed $seed")
+    }
   }
 }

@@ -217,6 +217,18 @@ class GraphScrubSpec extends AnyFunSuite {
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
 
+  test("triangleCounts rejects ids past the packed key's 31-bit u bound") {
+    val e = Seq((2147483648L, 2147483649L)).toDF("u", "v")
+    val ex = intercept[IllegalArgumentException](GraphQueries.triangleCounts(e))
+    assert(ex.getMessage.contains("31 bits"), ex.getMessage)
+  }
+
+  test("triangleCounts on an empty edge list returns no rows, same schema") {
+    val got = GraphQueries.triangleCounts(Seq.empty[(Long, Long)].toDF("u", "v"))
+    assert(got.columns.toSeq == Seq("node", "n_tri"))
+    assert(got.collect().isEmpty)
+  }
+
   test("triangleCounts equals the naive all-orderings count on a random graph") {
     val rng = new scala.util.Random(7)
     val n = 30

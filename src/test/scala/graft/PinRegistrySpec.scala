@@ -60,6 +60,20 @@ class PinRegistrySpec extends AnyFunSuite with Eventually {
     }
   }
 
+  test("q_dedup_corpus holds no RDD of its own past releaseAll") {
+    val sc = spark.sparkContext
+    ScaleOps.releaseAll()
+    val before = sc.getPersistentRDDs.keySet
+    val out = SparkEntry.queries("q_dedup_corpus")(spark, "/root/testdata/sf0.001")
+    assert(out.collect().nonEmpty)
+    ScaleOps.releaseAll()
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RDDs the query made outlived releaseAll: $left")
+    // `out` stays referenced up to here, so nothing it holds was
+    // reclaimed by GC instead of by the release
+    java.lang.ref.Reference.reachabilityFence(out)
+  }
+
   test("a pin whose materializing count fails is still released by " +
     "unpersistAll") {
     val sc = spark.sparkContext

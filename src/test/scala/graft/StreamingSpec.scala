@@ -642,15 +642,16 @@ class StreamingSpec extends AnyFunSuite {
     drop("cars_1.csv", Seq("a;1", "b;notanum"))
     assert(IncrementalIngest.runOnce(spark, schema, cfg) == 2)
 
-    // tick 2: only the new file is read (checkpointed tracking);
-    // totals accumulate in the sink
+    // tick 2: only the new file is read (checkpointed tracking), so
+    // the tick loads its one row
     drop("cars_2.csv", Seq("c;3"))
-    assert(IncrementalIngest.runOnce(spark, schema, cfg) == 3)
+    assert(IncrementalIngest.runOnce(spark, schema, cfg) == 1)
 
-    // tick 3: nothing new → no change
-    assert(IncrementalIngest.runOnce(spark, schema, cfg) == 3)
+    // tick 3: nothing new → nothing loaded
+    assert(IncrementalIngest.runOnce(spark, schema, cfg) == 0)
 
-    // repair semantics applied in-stream
+    // totals accumulate in the sink, with repair semantics applied
+    // in-stream
     val out = spark.read.parquet(cfg.outputDir).orderBy("NAME").collect()
     assert(out.map(_.getString(0)).toSeq == Seq("a", "b", "c"))
     assert(out(1).isNullAt(1)) // "notanum" → NULL
