@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorFunctions._
@@ -21,14 +22,15 @@ import graft.functions.VectorFunctions._
   */
 object ExtraSimilarityQueries {
   import Q._
+  import SimilarityQueries.{K, cosSql}
+  import VectorQueries.{adcRecallSql, adcSql, adcTopK, codesLutSql, pqCodes,
+    pqLut, pqSqd, pqSub, sampledCbSql, sampledCodebook, subSql}
 
-  private val NCentroids = 8
-  private val K = 5
-  // the q_ann_ivf oracle unrolls the Lloyd chain as explicit CTEs
-  // (a1/c1/a2/c2) — it replays exactly 2 iterations, keep in sync
-  private val LloydIters = 2
+  private final val NCentroids = 8
+  // the oracles' Lloyd chain is generated from this ([[lloydChainSql]])
+  private final val LloydIters = 2
   // IVF probes per query (the recall knob; cells disjoint → no dups)
-  private val NProbe = 2
+  private final val NProbe = 2
 
   /** Nearest-centroid assignment: broadcast the k×dim codebook, rank by
     * the same ‖a−b‖² dot expansion the oracle computes (sqrt omitted:
@@ -51,8 +53,15 @@ object ExtraSimilarityQueries {
       .drop("__d", "__rn", "cv")
   }
 
-  /** `iters` Lloyd refinements of the fixed init codebook over the
-    * corpus vectors. The mean is computed long-form (posexplode →
+  /** Cell assignment of `df`'s (vec_id, embedding) rows:
+    * (vec_id, ev, cent_id). */
+  private def cellsOf(cents: DataFrame)(df: DataFrame): DataFrame =
+    assignTo(cents)(df.select(col("vec_id"), col("embedding").as("ev")),
+      "vec_id", "ev")
+
+  /** `LloydIters` Lloyd refinements of the fixed init codebook (the
+    * first `NCentroids` vectors of `e`) over the `corpus` (vec_id,
+    * embedding) rows. The mean is computed long-form (posexplode →
     * avg per (cent_id, pos) → re-assemble sorted by pos) so it stays a
     * pair of tiny aggregations; an emptied cell keeps its previous
     * centroid. The codebook is snapped to the micros grid
@@ -62,15 +71,12 @@ object ExtraSimilarityQueries {
     * against the oracle replay (the defect class the r14 pqTrain fix
     * eliminated; [[meansSql]] mirrors the per-iteration floor).
     * Returns (cent_id, cv: array<double>), always on the grid. */
-  private def lloydCentroids(e: org.apache.spark.sql.DataFrame,
-                             iters: Int): org.apache.spark.sql.DataFrame =
+  private def lloydCentroids(e: DataFrame, corpus: DataFrame): DataFrame =
     lloydTrain(
-      e.filter(col("vec_id") >= 20)
-        .select(col("vec_id"), col("embedding").as("ev")),
+      corpus.select(col("vec_id"), col("embedding").as("ev")),
       e.filter(col("vec_id") < NCentroids)
-        .select(col("vec_id").as("cent_id"),
-          graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv")),
-      iters)
+        .select(col("vec_id").as("cent_id"), asDouble(col("embedding")).as("cv")),
+      LloydIters)
 
   /** The parameterized trainer behind [[lloydCentroids]]. The ANN
     * operating curve (`bench/ann_curve_10x_r13.jsonl`,
@@ -145,6 +151,64 @@ object ExtraSimilarityQueries {
              FROM $assigned) GROUP BY cent_id, pos)
          GROUP BY cent_id) m ON p.cent_id = m.cent_id"""
 
+  /** DuckDB replay of [[lloydCentroids]] trained on the `e` rows
+    * passing `flt`: the fixed init `c0`, then one assign CTE `a{i}`
+    * and one mean CTE `c{i}` per Lloyd iteration, ending in
+    * [[centsCte]]. */
+  private def lloydChainSql(flt: String): String =
+    (s"c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < $NCentroids)" +:
+      (1 to LloydIters).map(i =>
+        s"""a$i AS (${assignSql(s"c${i - 1}", "vid", flt)}),
+           c$i AS (${meansSql(s"a$i", s"c${i - 1}")})""")).mkString(",\n")
+
+  /** The trained codebook CTE of [[lloydChainSql]]. */
+  private def centsCte: String = s"c$LloydIters"
+
+  /** DuckDB replay of [[ivfQueries]]: CTE `queries` (query_id, q_cent),
+    * plus the query vector `v` when `withVec`. */
+  private def queriesSql(withVec: Boolean = false): String =
+    s"""queries AS (
+         SELECT vid AS query_id,${if (withVec) " v," else ""} cent_id AS q_cent FROM (
+           ${assignSql(centsCte, "vid",
+             s"e.vec_id >= $NCentroids AND e.vec_id < 13",
+             maxRank = NProbe)}) z)"""
+
+  /** DuckDB replay of a top-K leg: CTE `name` with, per query id `qid`,
+    * the K (query_id, vec_id) pairs of `from` first under `order`, ties
+    * on `c.vec_id`. */
+  private[operators] def topKSql(name: String, qid: String, order: String,
+                                 from: String): String =
+    s"""$name AS (
+         SELECT query_id, vec_id FROM (
+           SELECT $qid AS query_id, c.vec_id, row_number() OVER (
+               PARTITION BY $qid ORDER BY $order, c.vec_id) AS rn
+           FROM $from) x WHERE rn <= $K)"""
+
+  /** DuckDB replay of [[bruteTopK]] by exact L2: CTE `brute` for the
+    * `e` queries passing `queryFlt` (alias `q`) against the vec_id ≥ 20
+    * corpus. */
+  private[operators] def bruteL2Sql(queryFlt: String): String =
+    topKSql("brute", "q.vec_id",
+      """list_dot_product(c.v, c.v)
+           - 2 * list_dot_product(q.v, c.v)
+           + list_dot_product(q.v, q.v)""",
+      s"e q CROSS JOIN e c WHERE $queryFlt AND c.vec_id >= 20")
+
+  /** DuckDB replay of [[bruteTopK]] by cosine: CTE `brute` over the
+    * query CTE `q` (query_id, v) and the corpus CTE `c` (vec_id, v). */
+  private def bruteCosSql: String =
+    topKSql("brute", "q.query_id", s"$cosSql DESC", "q, c")
+
+  /** DuckDB replay of [[recallTable]] over the CTEs `brute` and
+    * `approx`. */
+  private[operators] def recallSql(approx: String): String =
+    s"""SELECT b.query_id, count(*) AS n_brute,
+              count(p.vec_id) AS n_recovered,
+              round(CAST(count(p.vec_id) AS DOUBLE) / count(*), 4) AS recall
+       FROM brute b LEFT JOIN $approx p
+         ON b.query_id = p.query_id AND b.vec_id = p.vec_id
+       GROUP BY b.query_id ORDER BY b.query_id"""
+
   /** Micros-grid snap of a trained codebook (the pqTrain convention):
     * centroid means are shuffle-merge-order sensitive in the last ULP,
     * and the RESIDUAL composition feeds them through subtraction into
@@ -183,16 +247,6 @@ object ExtraSimilarityQueries {
       .select(col(idCol), col(centKey), col("m"),
         zip_with(col("sv"), col("csv"), (a, b) => a - b).as("sv"))
 
-  // same seeded hyperplanes as SimilarityQueries (seed 42) so the two
-  // modules' buckets agree
-  private def bucketSqlPublic(vexpr: String): String =
-    hyperplanes(8, 64).map(p =>
-      s"(CASE WHEN list_dot_product($vexpr, CAST(${p.mkString("[", ", ", "]")} AS DOUBLE[])) >= 0 THEN '1' ELSE '0' END)")
-      .mkString(" || ")
-
-  private val cosSqlPublic =
-    "list_dot_product(q.v, c.v) / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v)))"
-
   /** `q_ann_delete`'s tombstone set — a retracted-crawl id range plus
     * two point takedowns that seeded the frozen PQ codebook — shared
     * by the gate and AnnDeleteSpec so the Scala sites cannot drift
@@ -218,116 +272,171 @@ object ExtraSimilarityQueries {
       cells: org.apache.spark.sql.DataFrame,
       codes: org.apache.spark.sql.DataFrame)
 
-  private[graft] def frozenAnnIndex(e: org.apache.spark.sql.DataFrame)
-      : FrozenAnnIndex = {
+  private[graft] def frozenAnnIndex(e: DataFrame): FrozenAnnIndex = {
     val corpusE = e.filter(col("vec_id") >= 20 &&
         pmod(col("vec_id"), lit(5)) =!= 0)
       .select(col("vec_id"), col("embedding"))
     val batchE = e.filter(col("vec_id") >= 20 &&
         pmod(col("vec_id"), lit(5)) === 0)
       .select(col("vec_id"), col("embedding"))
-    // frozen IVF codebook: Lloyd-trained on the corpus side only
-    val cents = lloydTrain(
-      corpusE.select(col("vec_id"), col("embedding").as("ev")),
-      e.filter(col("vec_id") < NCentroids)
-        .select(col("vec_id").as("cent_id"),
-          graft.functions.VectorFunctions.asDouble(col("embedding"))
-            .as("cv")),
-      LloydIters)
-    // frozen PQ sub-codebooks: sampled from the corpus side only
-    val corpusSub = VectorQueries.pqSub(corpusE, "vec_id", 8, 8)
-    val cb = corpusSub.filter(col("vec_id") < 36)
-      .select(col("m").as("cb_m"), col("vec_id").as("code"),
-        col("sv").as("cv"))
+    // frozen codebooks: Lloyd IVF cells and sampled PQ sub-codebooks,
+    // both from the corpus side only
+    val cents = lloydCentroids(e, corpusE)
+    val corpusSub = pqSub(corpusE, "vec_id", 8, 8)
+    val cb = sampledCodebook(corpusSub)
     // the INCREMENTAL path: corpus artifacts and batch artifacts are
     // two separate assign/encode passes over the frozen codebooks,
     // unioned — corpus state is never recomputed when a batch arrives
-    val corpusCells = assignTo(cents)(
-        corpusE.select(col("vec_id"), col("embedding").as("ev")),
-        "vec_id", "ev")
-      .select(col("vec_id"), col("cent_id"))
-    val batchCells = assignTo(cents)(
-        batchE.select(col("vec_id"), col("embedding").as("ev")),
-        "vec_id", "ev")
-      .select(col("vec_id"), col("cent_id"))
-    val allCells = corpusCells.unionByName(batchCells)
-    val allCodes = VectorQueries.pqCodes(corpusSub, cb, "vec_id")
-      .unionByName(VectorQueries.pqCodes(
-        VectorQueries.pqSub(batchE, "vec_id", 8, 8), cb, "vec_id"))
-    FrozenAnnIndex(cents, cb, allCells, allCodes)
+    def cells(df: DataFrame) =
+      cellsOf(cents)(df).select(col("vec_id"), col("cent_id"))
+    FrozenAnnIndex(cents, cb,
+      cells(corpusE).unionByName(cells(batchE)),
+      pqCodes(corpusSub, cb, "vec_id")
+        .unionByName(pqCodes(pqSub(batchE, "vec_id", 8, 8), cb, "vec_id")))
   }
 
-  /** The composed IVF+PQ search (the q_ann_ivfpq plan) over
-    * externally supplied cell/code tables — broadcast query batch,
-    * broadcast LUT, native TopKPerKey. Output: (query_id, rank,
-    * vec_id, is_new, adc) with `is_new` marking batch-side rows. */
-  private def ivfPqSearch(e: org.apache.spark.sql.DataFrame,
-                          idx: FrozenAnnIndex)
-      : org.apache.spark.sql.DataFrame = {
-    val qraw = e.filter(col("vec_id") >= NCentroids && col("vec_id") < 13)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val queries = assignTo(idx.cents, keepN = NProbe)(qraw, "query_id", "qv")
+  /** The IVF rows' query set: vec_id in [NCentroids, 13). */
+  private def ivfQueryRows(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") >= NCentroids && col("vec_id") < 13)
+
+  /** The IVF query side: each [[ivfQueryRows]] query (query_id, qv)
+    * assigned to its `NProbe` nearest cells — the nprobe recall knob;
+    * cells are disjoint, so candidates never dup — one row per probed
+    * cell `q_cent`. */
+  private def ivfQueries(e: DataFrame, cents: DataFrame): DataFrame =
+    assignTo(cents, keepN = NProbe)(
+        ivfQueryRows(e).select(col("vec_id").as("query_id"),
+          col("embedding").as("qv")),
+        "query_id", "qv")
       .withColumnRenamed("cent_id", "q_cent")
-    val lut = VectorQueries.pqLut(
-      VectorQueries.pqSub(
-        e.filter(col("vec_id") >= NCentroids && col("vec_id") < 13)
-          .select(col("vec_id"), col("embedding")), "query_id", 8, 8),
-      idx.cb, "query_id")
-    val candidates = broadcast(queries.select(col("query_id"), col("q_cent")))
-      .join(idx.cells, col("q_cent") === col("cent_id"))
-      .select(col("query_id"), col("vec_id"))
-    val adc = candidates.join(idx.codes, Seq("vec_id"))
-      .join(broadcast(lut), Seq("query_id", "m", "code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("pd")).as("adc"))
+
+  /** The IVF probe: [[ivfQueries]] equi-joined to the corpus `cells`
+    * (vec_id, cent_id, …) on the probed cell. The query batch
+    * (queries × nprobe rows) is small by contract and broadcast
+    * explicitly — the corpus-scale cell table is scanned once and
+    * never shuffles; left to AQE, the build side followed whichever
+    * small stage finished first, so identical runs planned
+    * differently. */
+  private def probe(queries: DataFrame, cells: DataFrame): DataFrame =
+    broadcast(queries).join(cells, col("q_cent") === col("cent_id"))
+
+  /** The IVF cosine candidates: (query_id, vec_id, cos) for every
+    * vec_id ≥ 20 corpus vector in a probed cell. */
+  private def ivfScored(e: DataFrame, cents: DataFrame): DataFrame =
+    probe(ivfQueries(e, cents), cellsOf(cents)(e.filter(col("vec_id") >= 20)))
+      .select(col("query_id"), col("vec_id"),
+        cosine(col("qv"), col("ev")).as("cos"))
+
+  /** The composed IVF+PQ search over externally supplied cell/code
+    * tables: ADC summed ONLY over the (query, candidate) pairs the
+    * probed cells admit — candidate volume is the IVF-pruned set,
+    * never the corpus — against the per-query LUT from `cb` (queries ×
+    * m × ks rows, broadcast). Output of [[adcTopK]]. */
+  private def ivfPqTopK(e: DataFrame, cents: DataFrame, cb: DataFrame,
+                        cells: DataFrame, codes: DataFrame): DataFrame =
+    adcTopK(
+      probe(ivfQueries(e, cents), cells)
+        .select(col("query_id"), col("vec_id"))
+        .join(codes, Seq("vec_id")),
+      pqLut(pqSub(ivfQueryRows(e), "query_id", 8, 8), cb, "query_id"),
+      Seq("query_id", "m", "code"))
+
+  /** [[ivfPqTopK]] over a frozen index, ranked. Output: (query_id,
+    * rank, vec_id, is_new, adc) with `is_new` marking batch-side
+    * rows. */
+  private def ivfPqSearch(e: DataFrame, idx: FrozenAnnIndex): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc"), col("vec_id"))
-    ScaleOps.topKPerKey(adc,
-        Seq(col("query_id")), Seq(col("adc"), col("vec_id")), K)
+    ivfPqTopK(e, idx.cents, idx.cb, idx.cells, idx.codes)
       .withColumn("rank", row_number().over(w).cast("long"))
       .select(col("query_id"), col("rank"), col("vec_id"),
         (pmod(col("vec_id"), lit(5)) === 0).as("is_new"), col("adc"))
       .orderBy(col("query_id"), col("rank"))
   }
 
+  /** The K best (query_id, vec_id) per query of `scored` under
+    * `order`, ties on vec_id, through the native TopKPerKey —
+    * membership only, so no residual rank window. */
+  private def topKOf(scored: DataFrame, order: Column): DataFrame =
+    ScaleOps.topKPerKey(scored,
+        Seq(col("query_id")), Seq(order, col("vec_id")), K)
+      .select(col("query_id"), col("vec_id"))
+
+  /** The exact top-K leg of the recall audits: every `corpus` row
+    * scored against every broadcast `queries` row by `score` (over
+    * their columns); `ascending` for a distance, else a similarity.
+    * Output (query_id, vec_id). */
+  private[operators] def bruteTopK(queries: DataFrame, corpus: DataFrame,
+                                   score: Column,
+                                   ascending: Boolean): DataFrame =
+    topKOf(
+      corpus.crossJoin(broadcast(queries))
+        .select(col("query_id"), col("vec_id"), score.as("score")),
+      if (ascending) col("score") else col("score").desc)
+
+  /** The exact-L2 top-K of the IVF queries, the truth of the IVF+PQ
+    * recall rows. */
+  private def ivfBruteL2(e: DataFrame): DataFrame =
+    bruteTopK(
+      ivfQueryRows(e).select(col("vec_id").as("query_id"),
+        asDouble(col("embedding")).as("qv")),
+      e.filter(col("vec_id") >= 20).select(col("vec_id"),
+        asDouble(col("embedding")).as("cv")),
+      pqSqd(col("qv"), col("cv")), ascending = true)
+
+  /** Per-query recall of an approximate top-K against the exact one:
+    * `brute` ⟕ `approx` on (query_id, vec_id), then `n_brute`,
+    * `n_recovered` and their ratio `recall` rounded to 4 places,
+    * ordered by query_id. A query the approximate leg missed entirely
+    * keeps its row with n_recovered = 0. */
+  private[graft] def recallTable(brute: DataFrame,
+                                 approx: DataFrame): DataFrame =
+    brute.join(
+        approx.select(col("query_id").as("query_id_a"),
+          col("vec_id").as("vec_id_a")),
+        col("query_id") === col("query_id_a") &&
+          col("vec_id") === col("vec_id_a"), "left")
+      .groupBy(col("query_id"))
+      .agg(count(lit(1)).as("n_brute"),
+        count(col("vec_id_a")).as("n_recovered"))
+      .select(col("query_id"), col("n_brute"), col("n_recovered"),
+        round(col("n_recovered").cast("double") / col("n_brute"), 4)
+          .as("recall"))
+      .orderBy(col("query_id"))
+
+  /** DuckDB replay of [[ivfPqSearch]] over the frozen index trained on
+    * the `vec_id % 5 <> 0` corpus side, rebuilt in ONE pass: the
+    * caller's CTE `cells`, and `codes` for the `sub` rows passing
+    * `codeFlt`. */
+  private def frozenSearchSql(codeFlt: String): String =
+    s"""${queriesSql()},
+       $subSql,
+       ${sampledCbSql("cb", "sub",
+         "vec_id >= 20 AND vec_id < 36 AND vec_id % 5 <> 0")},
+       ${codesLutSql("cb", "sub", codeFlt,
+         "sub", s"s.vec_id >= $NCentroids AND s.vec_id < 13")},
+       ${adcSql(Seq("query_id"))}
+       SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id,
+              (vec_id % 5 = 0) AS is_new, CAST(adc AS BIGINT) AS adc
+       FROM (SELECT query_id, vec_id, adc, row_number() OVER (
+               PARTITION BY query_id ORDER BY adc, vec_id) AS rank
+             FROM adc) y
+       WHERE rank <= $K ORDER BY query_id, rank"""
+
   val specs: Seq[Spec] = Seq(
 
     Spec("q_ann_ivf",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val cents = lloydCentroids(e, LloydIters)
-        val corpus = assignTo(cents)(
-          e.filter(col("vec_id") >= 20)
-            .select(col("vec_id"), col("embedding").as("ev")), "vec_id", "ev")
-        // nprobe=2: each query probes its two nearest cells — the IVF
-        // recall knob (cells are disjoint, so candidates never dup)
-        val queries = assignTo(cents, keepN = NProbe)(
-          e.filter(col("vec_id") >= NCentroids && col("vec_id") < 13)
-            .select(col("vec_id").as("query_id"), col("embedding").as("qv")),
-          "query_id", "qv")
-          .withColumnRenamed("cent_id", "q_cent")
         // final top-k through the native TopKPerKey (shuffle pruned to
-        // ≤ k rows per query per mapper; see SimilarityQueries.topKRanked).
-        // The query side (queries × nprobe rows) is broadcast explicitly:
-        // left to AQE, the build side followed whichever small stage
-        // finished first, so identical runs planned differently.
+        // ≤ k rows per query per mapper; see SimilarityQueries.topKRanked)
         SimilarityQueries.topKRanked(
-          broadcast(queries).join(corpus, col("q_cent") === col("cent_id"))
-            .select(col("query_id"), col("vec_id"),
-              cosine(col("qv"), col("ev")).as("cos")), K)
+          ivfScored(e, lloydCentroids(e, e.filter(col("vec_id") >= 20))), K)
       },
       Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < $NCentroids),
-             a1 AS (${assignSql("c0", "vid", "e.vec_id >= 20")}),
-             c1 AS (${meansSql("a1", "c0")}),
-             a2 AS (${assignSql("c1", "vid", "e.vec_id >= 20")}),
-             c2 AS (${meansSql("a2", "c1")}),
-             corpus AS (${assignSql("c2", "vec_id", "e.vec_id >= 20")}),
-             queries AS (
-               SELECT vid AS query_id, v, cent_id AS q_cent FROM (
-                 ${assignSql("c2", "vid",
-                   s"e.vec_id >= $NCentroids AND e.vec_id < 13",
-                   maxRank = NProbe)}) z),
+             ${lloydChainSql("e.vec_id >= 20")},
+             corpus AS (${assignSql(centsCte, "vec_id", "e.vec_id >= 20")}),
+             ${queriesSql(withVec = true)},
              scored AS (
                SELECT q.query_id, c.vec_id,
                       list_dot_product(q.v, c.v)
@@ -348,73 +457,26 @@ object ExtraSimilarityQueries {
     Spec("q_ann_ivf_recall",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val cents = lloydCentroids(e, LloydIters)
-        val corpus = assignTo(cents)(
-          e.filter(col("vec_id") >= 20)
-            .select(col("vec_id"), col("embedding").as("ev")), "vec_id", "ev")
-        val qraw = e.filter(col("vec_id") >= NCentroids && col("vec_id") < 13)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        val queries = assignTo(cents, keepN = NProbe)(qraw, "query_id", "qv")
-          .withColumnRenamed("cent_id", "q_cent")
-        val craw = e.filter(col("vec_id") >= 20)
-          .select(col("vec_id"), col("embedding").as("cv"))
-        val brute = ScaleOps.topKPerKey(
-            craw.crossJoin(broadcast(qraw))
-              .select(col("query_id"), col("vec_id"),
-                cosine(col("qv"), col("cv")).as("cos")),
-            Seq(col("query_id")), Seq(col("cos").desc, col("vec_id")), K)
-          .select(col("query_id"), col("vec_id"))
-        val ivf = ScaleOps.topKPerKey(
-            queries.join(corpus, col("q_cent") === col("cent_id"))
-              .select(col("query_id"), col("vec_id"),
-                cosine(col("qv"), col("ev")).as("cos")),
-            Seq(col("query_id")), Seq(col("cos").desc, col("vec_id")), K)
-          .select(col("query_id").as("query_id_i"), col("vec_id").as("vec_id_i"))
-        brute.join(ivf,
-            col("query_id") === col("query_id_i") &&
-              col("vec_id") === col("vec_id_i"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_brute"),
-            count(col("vec_id_i")).as("n_recovered"))
-          .select(col("query_id"), col("n_brute"), col("n_recovered"),
-            round(col("n_recovered").cast("double") / col("n_brute"), 4)
-              .as("recall"))
-          .orderBy(col("query_id"))
+        val corpusE = e.filter(col("vec_id") >= 20)
+        recallTable(
+          bruteTopK(
+            ivfQueryRows(e).select(col("vec_id").as("query_id"),
+              col("embedding").as("qv")),
+            corpusE.select(col("vec_id"), col("embedding").as("cv")),
+            cosine(col("qv"), col("cv")), ascending = false),
+          topKOf(ivfScored(e, lloydCentroids(e, corpusE)), col("cos").desc))
       },
       Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < $NCentroids),
-             a1 AS (${assignSql("c0", "vid", "e.vec_id >= 20")}),
-             c1 AS (${meansSql("a1", "c0")}),
-             a2 AS (${assignSql("c1", "vid", "e.vec_id >= 20")}),
-             c2 AS (${meansSql("a2", "c1")}),
-             corpus AS (${assignSql("c2", "vec_id", "e.vec_id >= 20")}),
-             queries AS (
-               SELECT vid AS query_id, v, cent_id AS q_cent FROM (
-                 ${assignSql("c2", "vid",
-                   s"e.vec_id >= $NCentroids AND e.vec_id < 13",
-                   maxRank = NProbe)}) z),
-             qraw AS (SELECT vec_id AS query_id, v FROM e
-                      WHERE vec_id >= $NCentroids AND vec_id < 13),
-             craw AS (SELECT vec_id, v FROM e WHERE vec_id >= 20),
-             brute AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT q.query_id, c.vec_id,
-                        row_number() OVER (PARTITION BY q.query_id ORDER BY
-                          $cosSqlPublic DESC, c.vec_id) AS rank
-                 FROM qraw q CROSS JOIN craw c) x WHERE rank <= $K),
-             ivfc AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT q.query_id, c.vec_id,
-                        row_number() OVER (PARTITION BY q.query_id ORDER BY
-                          $cosSqlPublic DESC, c.vec_id) AS rank
-                 FROM queries q JOIN corpus c ON q.q_cent = c.cent_id) y
-               WHERE rank <= $K)
-             SELECT b.query_id, count(*) AS n_brute,
-                    count(i.vec_id) AS n_recovered,
-                    round(CAST(count(i.vec_id) AS DOUBLE) / count(*), 4) AS recall
-             FROM brute b LEFT JOIN ivfc i
-               ON b.query_id = i.query_id AND b.vec_id = i.vec_id
-             GROUP BY b.query_id ORDER BY b.query_id""")),
+             ${lloydChainSql("e.vec_id >= 20")},
+             corpus AS (${assignSql(centsCte, "vec_id", "e.vec_id >= 20")}),
+             ${queriesSql(withVec = true)},
+             q AS (SELECT vec_id AS query_id, v FROM e
+                   WHERE vec_id >= $NCentroids AND vec_id < 13),
+             c AS (SELECT vec_id, v FROM e WHERE vec_id >= 20),
+             $bruteCosSql,
+             ${topKSql("ivfc", "q.query_id", s"$cosSql DESC",
+               "queries q JOIN corpus c ON q.q_cent = c.cent_id")}
+             ${recallSql("ivfc")}""")),
 
     // The COMPOSED production ANN shape — IVF cell routing to bound
     // the candidate set, then PQ asymmetric-distance (ADC) scoring
@@ -433,131 +495,28 @@ object ExtraSimilarityQueries {
     Spec("q_ann_ivfpq_recall",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        // IVF tier: trained cells; each query probes NProbe cells
-        val cents = lloydCentroids(e, LloydIters)
-        val corpusCells = assignTo(cents)(
-          e.filter(col("vec_id") >= 20)
-            .select(col("vec_id"), col("embedding").as("ev")), "vec_id", "ev")
-          .select(col("vec_id"), col("cent_id"))
-        val qraw = e.filter(col("vec_id") >= NCentroids && col("vec_id") < 13)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        val queries = assignTo(cents, keepN = NProbe)(qraw, "query_id", "qv")
-          .withColumnRenamed("cent_id", "q_cent")
-        // PQ tier: the q_ann_pq_recall codebook/codes over the same corpus
-        val corpusSub = VectorQueries.pqSub(
-          e.filter(col("vec_id") >= 20), "vec_id", 8, 8)
-        val cb = corpusSub.filter(col("vec_id") < 36)
-          .select(col("m").as("cb_m"), col("vec_id").as("code"),
-            col("sv").as("cv"))
-        val codes = VectorQueries.pqCodes(corpusSub, cb, "vec_id")
-        val lut = VectorQueries.pqLut(
-          VectorQueries.pqSub(
-            e.filter(col("vec_id") >= NCentroids && col("vec_id") < 13)
-              .select(col("vec_id"), col("embedding")), "query_id", 8, 8),
-          cb, "query_id")
-        // composed search: ADC summed ONLY over (query, candidate)
-        // pairs the probed cells admit — the LUT is per-query tiny
-        // (queries x m x ks rows), broadcast; candidate volume is the
-        // IVF-pruned set, never the corpus
-        // the query batch is small by contract (queries ≪ corpus), so
-        // broadcast IT against the corpus-scale cell table — the scan
-        // stays one corpus pass with no corpus shuffle
-        val candidates = broadcast(queries.select(col("query_id"), col("q_cent")))
-          .join(corpusCells, col("q_cent") === col("cent_id"))
-          .select(col("query_id"), col("vec_id"))
-        val adc = candidates.join(codes, Seq("vec_id"))
-          .join(broadcast(lut), Seq("query_id", "m", "code"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("pd")).as("adc"))
-        val ivfpq = ScaleOps.topKPerKey(adc,
-            Seq(col("query_id")), Seq(col("adc"), col("vec_id")), K)
-          .select(col("query_id").as("query_id_p"), col("vec_id").as("vec_id_p"))
+        val corpusE = e.filter(col("vec_id") >= 20)
+        // IVF tier: trained cells; PQ tier: the q_ann_pq_recall
+        // codebook/codes over the same corpus
+        val cents = lloydCentroids(e, corpusE)
+        val corpusSub = pqSub(corpusE, "vec_id", 8, 8)
+        val cb = sampledCodebook(corpusSub)
         // exact-L2 brute reference over the FULL corpus
-        val qd = qraw.select(col("query_id"), asDouble(col("qv")).as("qdv"))
-        val craw = e.filter(col("vec_id") >= 20)
-          .select(col("vec_id"), asDouble(col("embedding")).as("cdv"))
-        val brute = ScaleOps.topKPerKey(
-            craw.crossJoin(broadcast(qd))
-              .select(col("query_id"), col("vec_id"),
-                VectorQueries.pqSqd(col("qdv"), col("cdv")).as("d2")),
-            Seq(col("query_id")), Seq(col("d2"), col("vec_id")), K)
-          .select(col("query_id"), col("vec_id"))
-        brute.join(ivfpq,
-            col("query_id") === col("query_id_p") &&
-              col("vec_id") === col("vec_id_p"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_brute"),
-            count(col("vec_id_p")).as("n_recovered"))
-          .select(col("query_id"), col("n_brute"), col("n_recovered"),
-            round(col("n_recovered").cast("double") / col("n_brute"), 4)
-              .as("recall"))
-          .orderBy(col("query_id"))
+        recallTable(ivfBruteL2(e),
+          ivfPqTopK(e, cents, cb,
+            cellsOf(cents)(corpusE).select(col("vec_id"), col("cent_id")),
+            pqCodes(corpusSub, cb, "vec_id")))
       },
       Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < $NCentroids),
-             a1 AS (${assignSql("c0", "vid", "e.vec_id >= 20")}),
-             c1 AS (${meansSql("a1", "c0")}),
-             a2 AS (${assignSql("c1", "vid", "e.vec_id >= 20")}),
-             c2 AS (${meansSql("a2", "c1")}),
-             corpus AS (${assignSql("c2", "vec_id", "e.vec_id >= 20")}),
-             queries AS (
-               SELECT vid AS query_id, cent_id AS q_cent FROM (
-                 ${assignSql("c2", "vid",
-                   s"e.vec_id >= $NCentroids AND e.vec_id < 13",
-                   maxRank = NProbe)}) z),
-             sub AS (SELECT vec_id, CAST(mi AS BIGINT) AS m,
-                            v[mi*8+1 : mi*8+8] AS sv
-                     FROM e, UNNEST(generate_series(0, 7)) AS t(mi)),
-             cb AS (SELECT m, vec_id AS code, sv AS cv FROM sub
-                    WHERE vec_id >= 20 AND vec_id < 36),
-             codes AS (
-               SELECT vec_id, m, code FROM (
-                 SELECT s.vec_id, s.m, cb.code, row_number() OVER (
-                     PARTITION BY s.vec_id, s.m ORDER BY
-                       list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, cb.cv)
-                         + list_dot_product(cb.cv, cb.cv), cb.code) AS rn
-                 FROM sub s JOIN cb ON s.m = cb.m
-                 WHERE s.vec_id >= 20) x WHERE rn = 1),
-             lut AS (
-               SELECT s.vec_id AS query_id, s.m, cb.code,
-                      CAST(floor((list_dot_product(s.sv, s.sv)
-                          - 2 * list_dot_product(s.sv, cb.cv)
-                          + list_dot_product(cb.cv, cb.cv)) * 1000000)
-                        AS BIGINT) AS pd
-               FROM sub s JOIN cb ON s.m = cb.m
-               WHERE s.vec_id >= $NCentroids AND s.vec_id < 13),
-             cand AS (SELECT q.query_id, c.vec_id
-                      FROM queries q JOIN corpus c ON q.q_cent = c.cent_id),
-             adc AS (
-               SELECT l.query_id, cd.vec_id, sum(l.pd) AS adc
-               FROM cand x
-               JOIN codes cd ON x.vec_id = cd.vec_id
-               JOIN lut l ON l.query_id = x.query_id
-                 AND cd.m = l.m AND cd.code = l.code
-               GROUP BY l.query_id, cd.vec_id),
-             pq AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT query_id, vec_id, row_number() OVER (
-                     PARTITION BY query_id ORDER BY adc, vec_id) AS rn
-                 FROM adc) y WHERE rn <= $K),
-             brute AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT q.vec_id AS query_id, c.vec_id, row_number() OVER (
-                     PARTITION BY q.vec_id ORDER BY
-                       list_dot_product(c.v, c.v)
-                         - 2 * list_dot_product(q.v, c.v)
-                         + list_dot_product(q.v, q.v), c.vec_id) AS rn
-                 FROM e q CROSS JOIN e c
-                 WHERE q.vec_id >= $NCentroids AND q.vec_id < 13
-                   AND c.vec_id >= 20) z2 WHERE rn <= $K)
-             SELECT b.query_id, count(*) AS n_brute,
-                    count(p.vec_id) AS n_recovered,
-                    round(CAST(count(p.vec_id) AS DOUBLE) / count(*), 4)
-                      AS recall
-             FROM brute b LEFT JOIN pq p
-               ON b.query_id = p.query_id AND b.vec_id = p.vec_id
-             GROUP BY b.query_id ORDER BY b.query_id""")),
+             ${lloydChainSql("e.vec_id >= 20")},
+             cells AS (${assignSql(centsCte, "vec_id", "e.vec_id >= 20")}),
+             ${queriesSql()},
+             $subSql,
+             ${sampledCbSql("cb", "sub", "vec_id >= 20 AND vec_id < 36")},
+             ${codesLutSql("cb", "sub", "s.vec_id >= 20",
+               "sub", s"s.vec_id >= $NCentroids AND s.vec_id < 13")},
+             ${adcRecallSql(Seq("query_id"),
+               s"q.vec_id >= $NCentroids AND q.vec_id < 13")}""")),
 
     // RESIDUAL IVF+PQ (IVF-ADC proper — Jegou/Douze/Schmid, TPAMI'11
     // §IV; r14, motivated by the clustered-manifold probe): identical
@@ -585,146 +544,53 @@ object ExtraSimilarityQueries {
     Spec("q_ann_ivfpq_residual_recall",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val cents = lloydCentroids(e, LloydIters)
         val corpusE = e.filter(col("vec_id") >= 20)
-          .select(col("vec_id"), col("embedding"))
-        val corpusCells = assignTo(cents)(
-            corpusE.select(col("vec_id"), col("embedding").as("ev")),
-            "vec_id", "ev")
-          .select(col("vec_id"), col("cent_id"))
-        val qraw = e.filter(col("vec_id") >= NCentroids && col("vec_id") < 13)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        val queries = assignTo(cents, keepN = NProbe)(qraw, "query_id", "qv")
-          .withColumnRenamed("cent_id", "q_cent")
-          .select(col("query_id"), col("q_cent"))
+        val cents = lloydCentroids(e, corpusE)
+        val corpusCells =
+          cellsOf(cents)(corpusE).select(col("vec_id"), col("cent_id"))
+        val queries = ivfQueries(e, cents)
         val csub = centroidSub(cents, 8, 8)
         // corpus residual subvectors + residual-space codebook/codes
-        val rsub = residualSub(
-          VectorQueries.pqSub(corpusE, "vec_id", 8, 8),
+        val rsub = residualSub(pqSub(corpusE, "vec_id", 8, 8),
           corpusCells, csub, "vec_id", "cent_id")
-        val cb = rsub.filter(col("vec_id") < 36)
-          .select(col("m").as("cb_m"), col("vec_id").as("code"),
-            col("sv").as("cv"))
-        val codes = VectorQueries.pqCodes(
+        val cb = sampledCodebook(rsub)
+        val codes = pqCodes(
           rsub.select(col("vec_id"), col("m"), col("sv")), cb, "vec_id")
         // per-(query, probed cell) residual LUT
-        val qr = residualSub(
-          VectorQueries.pqSub(
-            e.filter(col("vec_id") >= NCentroids && col("vec_id") < 13)
-              .select(col("vec_id"), col("embedding")), "query_id", 8, 8),
-          queries, csub, "query_id", "q_cent")
-        val lut = qr.join(broadcast(cb), col("m") === col("cb_m"))
-          .select(col("query_id"), col("q_cent"), col("m"), col("code"),
-            floor(VectorQueries.pqSqd(col("sv"), col("cv")) * 1000000)
-              .cast("long").as("pd"))
+        val lut = pqLut(
+          residualSub(pqSub(ivfQueryRows(e), "query_id", 8, 8),
+            queries, csub, "query_id", "q_cent"),
+          cb, "query_id", "q_cent")
         // composed search: candidates carry the admitting cell so ADC
-        // picks that cell's residual LUT; broadcast the small-by-
-        // contract query batch (the r13 SMJ lesson) and the LUT
-        val candidates = broadcast(queries)
-          .join(corpusCells, col("q_cent") === col("cent_id"))
-          .select(col("query_id"), col("q_cent"), col("vec_id"))
-        val adc = candidates.join(codes, Seq("vec_id"))
-          .join(broadcast(lut), Seq("query_id", "q_cent", "m", "code"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("pd")).as("adc"))
-        val ivfpq = ScaleOps.topKPerKey(adc,
-            Seq(col("query_id")), Seq(col("adc"), col("vec_id")), K)
-          .select(col("query_id").as("query_id_p"), col("vec_id").as("vec_id_p"))
-        val qd = qraw.select(col("query_id"), asDouble(col("qv")).as("qdv"))
-        val craw = e.filter(col("vec_id") >= 20)
-          .select(col("vec_id"), asDouble(col("embedding")).as("cdv"))
-        val brute = ScaleOps.topKPerKey(
-            craw.crossJoin(broadcast(qd))
-              .select(col("query_id"), col("vec_id"),
-                VectorQueries.pqSqd(col("qdv"), col("cdv")).as("d2")),
-            Seq(col("query_id")), Seq(col("d2"), col("vec_id")), K)
-          .select(col("query_id"), col("vec_id"))
-        brute.join(ivfpq,
-            col("query_id") === col("query_id_p") &&
-              col("vec_id") === col("vec_id_p"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_brute"),
-            count(col("vec_id_p")).as("n_recovered"))
-          .select(col("query_id"), col("n_brute"), col("n_recovered"),
-            round(col("n_recovered").cast("double") / col("n_brute"), 4)
-              .as("recall"))
-          .orderBy(col("query_id"))
+        // picks that cell's residual LUT
+        recallTable(ivfBruteL2(e),
+          adcTopK(
+            probe(queries, corpusCells)
+              .select(col("query_id"), col("q_cent"), col("vec_id"))
+              .join(codes, Seq("vec_id")),
+            lut, Seq("query_id", "q_cent", "m", "code")))
       },
       Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < $NCentroids),
-             a1 AS (${assignSql("c0", "vid", "e.vec_id >= 20")}),
-             c1 AS (${meansSql("a1", "c0")}),
-             a2 AS (${assignSql("c1", "vid", "e.vec_id >= 20")}),
-             c2 AS (${meansSql("a2", "c1")}),
-             corpus AS (${assignSql("c2", "vec_id", "e.vec_id >= 20")}),
-             queries AS (
-               SELECT vid AS query_id, cent_id AS q_cent FROM (
-                 ${assignSql("c2", "vid",
-                   s"e.vec_id >= $NCentroids AND e.vec_id < 13",
-                   maxRank = NProbe)}) z),
-             sub AS (SELECT vec_id, CAST(mi AS BIGINT) AS m,
-                            v[mi*8+1 : mi*8+8] AS sv
-                     FROM e, UNNEST(generate_series(0, 7)) AS t(mi)),
+             ${lloydChainSql("e.vec_id >= 20")},
+             cells AS (${assignSql(centsCte, "vec_id", "e.vec_id >= 20")}),
+             ${queriesSql()},
+             $subSql,
              csub AS (SELECT cent_id, CAST(mi AS BIGINT) AS m,
                              cv[mi*8+1 : mi*8+8] AS csv
-                      FROM c2, UNNEST(generate_series(0, 7)) AS t(mi)),
+                      FROM $centsCte, UNNEST(generate_series(0, 7)) AS t(mi)),
              rsub AS (SELECT s.vec_id, s.m,
                              [s.sv[i] - cs.csv[i] FOR i IN generate_series(1, 8)] AS sv
-                      FROM sub s JOIN corpus a ON s.vec_id = a.vec_id
+                      FROM sub s JOIN cells a ON s.vec_id = a.vec_id
                       JOIN csub cs ON cs.cent_id = a.cent_id AND cs.m = s.m
                       WHERE s.vec_id >= 20),
-             cb AS (SELECT m, vec_id AS code, sv AS cv FROM rsub
-                    WHERE vec_id < 36),
-             codes AS (
-               SELECT vec_id, m, code FROM (
-                 SELECT r.vec_id, r.m, cb.code, row_number() OVER (
-                     PARTITION BY r.vec_id, r.m ORDER BY
-                       list_dot_product(r.sv, r.sv)
-                         - 2 * list_dot_product(r.sv, cb.cv)
-                         + list_dot_product(cb.cv, cb.cv), cb.code) AS rn
-                 FROM rsub r JOIN cb ON r.m = cb.m) x WHERE rn = 1),
-             qr AS (SELECT s.vec_id AS query_id, q.q_cent, s.m,
+             ${sampledCbSql("cb", "rsub", "vec_id < 36")},
+             qr AS (SELECT s.vec_id, q.q_cent, s.m,
                            [s.sv[i] - cs.csv[i] FOR i IN generate_series(1, 8)] AS sv
                     FROM sub s JOIN queries q ON s.vec_id = q.query_id
                     JOIN csub cs ON cs.cent_id = q.q_cent AND cs.m = s.m),
-             lut AS (
-               SELECT qr.query_id, qr.q_cent, qr.m, cb.code,
-                      CAST(floor((list_dot_product(qr.sv, qr.sv)
-                          - 2 * list_dot_product(qr.sv, cb.cv)
-                          + list_dot_product(cb.cv, cb.cv)) * 1000000)
-                        AS BIGINT) AS pd
-               FROM qr JOIN cb ON qr.m = cb.m),
-             cand AS (SELECT q.query_id, q.q_cent, c.vec_id
-                      FROM queries q JOIN corpus c ON q.q_cent = c.cent_id),
-             adc AS (
-               SELECT x.query_id, cd.vec_id, sum(l.pd) AS adc
-               FROM cand x
-               JOIN codes cd ON x.vec_id = cd.vec_id
-               JOIN lut l ON l.query_id = x.query_id AND l.q_cent = x.q_cent
-                 AND cd.m = l.m AND cd.code = l.code
-               GROUP BY x.query_id, cd.vec_id),
-             pq AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT query_id, vec_id, row_number() OVER (
-                     PARTITION BY query_id ORDER BY adc, vec_id) AS rn
-                 FROM adc) y WHERE rn <= $K),
-             brute AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT q.vec_id AS query_id, c.vec_id, row_number() OVER (
-                     PARTITION BY q.vec_id ORDER BY
-                       list_dot_product(c.v, c.v)
-                         - 2 * list_dot_product(q.v, c.v)
-                         + list_dot_product(q.v, q.v), c.vec_id) AS rn
-                 FROM e q CROSS JOIN e c
-                 WHERE q.vec_id >= $NCentroids AND q.vec_id < 13
-                   AND c.vec_id >= 20) z2 WHERE rn <= $K)
-             SELECT b.query_id, count(*) AS n_brute,
-                    count(p.vec_id) AS n_recovered,
-                    round(CAST(count(p.vec_id) AS DOUBLE) / count(*), 4)
-                      AS recall
-             FROM brute b LEFT JOIN pq p
-               ON b.query_id = p.query_id AND b.vec_id = p.vec_id
-             GROUP BY b.query_id ORDER BY b.query_id""")),
+             ${codesLutSql("cb", "rsub", "", "qr", "", lutKey = ", s.q_cent")},
+             ${adcRecallSql(Seq("query_id", "q_cent"),
+               s"q.vec_id >= $NCentroids AND q.vec_id < 13")}""")),
 
     // INCREMENTAL ANN ingest (VERDICT r15 #2) — the batch-vs-corpus
     // form every dedup-family operator already has
@@ -761,60 +627,13 @@ object ExtraSimilarityQueries {
         ivfPqSearch(e, frozenAnnIndex(e))
       },
       Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < $NCentroids),
-             a1 AS (${assignSql("c0", "vid",
-               "e.vec_id >= 20 AND e.vec_id % 5 <> 0")}),
-             c1 AS (${meansSql("a1", "c0")}),
-             a2 AS (${assignSql("c1", "vid",
-               "e.vec_id >= 20 AND e.vec_id % 5 <> 0")}),
-             c2 AS (${meansSql("a2", "c1")}),
-             -- FULL REBUILD against the frozen c2/cb: one assignment
+             ${lloydChainSql("e.vec_id >= 20 AND e.vec_id % 5 <> 0")},
+             -- FULL REBUILD against the frozen $centsCte/cb: one assignment
              -- pass over corpus AND batch together — a hash match with
              -- the Spark side's two-pass union proves the incremental
              -- append equals the rebuild
-             cells AS (${assignSql("c2", "vec_id", "e.vec_id >= 20")}),
-             queries AS (
-               SELECT vid AS query_id, cent_id AS q_cent FROM (
-                 ${assignSql("c2", "vid",
-                   s"e.vec_id >= $NCentroids AND e.vec_id < 13",
-                   maxRank = NProbe)}) z),
-             sub AS (SELECT vec_id, CAST(mi AS BIGINT) AS m,
-                            v[mi*8+1 : mi*8+8] AS sv
-                     FROM e, UNNEST(generate_series(0, 7)) AS t(mi)),
-             cb AS (SELECT m, vec_id AS code, sv AS cv FROM sub
-                    WHERE vec_id >= 20 AND vec_id < 36 AND vec_id % 5 <> 0),
-             codes AS (
-               SELECT vec_id, m, code FROM (
-                 SELECT s.vec_id, s.m, cb.code, row_number() OVER (
-                     PARTITION BY s.vec_id, s.m ORDER BY
-                       list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, cb.cv)
-                         + list_dot_product(cb.cv, cb.cv), cb.code) AS rn
-                 FROM sub s JOIN cb ON s.m = cb.m
-                 WHERE s.vec_id >= 20) x WHERE rn = 1),
-             lut AS (
-               SELECT s.vec_id AS query_id, s.m, cb.code,
-                      CAST(floor((list_dot_product(s.sv, s.sv)
-                          - 2 * list_dot_product(s.sv, cb.cv)
-                          + list_dot_product(cb.cv, cb.cv)) * 1000000)
-                        AS BIGINT) AS pd
-               FROM sub s JOIN cb ON s.m = cb.m
-               WHERE s.vec_id >= $NCentroids AND s.vec_id < 13),
-             cand AS (SELECT q.query_id, c.vec_id
-                      FROM queries q JOIN cells c ON q.q_cent = c.cent_id),
-             adc AS (
-               SELECT l.query_id, cd.vec_id, sum(l.pd) AS adc
-               FROM cand x
-               JOIN codes cd ON x.vec_id = cd.vec_id
-               JOIN lut l ON l.query_id = x.query_id
-                 AND cd.m = l.m AND cd.code = l.code
-               GROUP BY l.query_id, cd.vec_id)
-             SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id,
-                    (vec_id % 5 = 0) AS is_new, CAST(adc AS BIGINT) AS adc
-             FROM (SELECT query_id, vec_id, adc, row_number() OVER (
-                     PARTITION BY query_id ORDER BY adc, vec_id) AS rank
-                   FROM adc) y
-             WHERE rank <= $K ORDER BY query_id, rank""")),
+             cells AS (${assignSql(centsCte, "vec_id", "e.vec_id >= 20")}),
+             ${frozenSearchSql("s.vec_id >= 20")}""")),
 
     // DELETE path for the incremental index (VERDICT r16 missing #2):
     // the exact dual of q_ann_incremental's ingest proof. A real
@@ -853,64 +672,17 @@ object ExtraSimilarityQueries {
           codes = ScaleOps.tombstone(idx.codes, tomb, "vec_id")))
       },
       Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < $NCentroids),
-             a1 AS (${assignSql("c0", "vid",
-               "e.vec_id >= 20 AND e.vec_id % 5 <> 0")}),
-             c1 AS (${meansSql("a1", "c0")}),
-             a2 AS (${assignSql("c1", "vid",
-               "e.vec_id >= 20 AND e.vec_id % 5 <> 0")}),
-             c2 AS (${meansSql("a2", "c1")}),
+             ${lloydChainSql("e.vec_id >= 20 AND e.vec_id % 5 <> 0")},
              -- FULL REBUILD WITHOUT the deleted rows, against the SAME
-             -- frozen c2/cb (trained pre-delete, deleted rows
+             -- frozen $centsCte/cb (trained pre-delete, deleted rows
              -- included): a hash match with the Spark side's
              -- tombstone anti-join proves delete-then-query equals
              -- rebuild-without-deleted
-             cells AS (${assignSql("c2", "vec_id",
+             cells AS (${assignSql(centsCte, "vec_id",
                "e.vec_id >= 20 AND NOT (e.vec_id IN (21, 28) " +
                  "OR (e.vec_id >= 100 AND e.vec_id < 200))")}),
-             queries AS (
-               SELECT vid AS query_id, cent_id AS q_cent FROM (
-                 ${assignSql("c2", "vid",
-                   s"e.vec_id >= $NCentroids AND e.vec_id < 13",
-                   maxRank = NProbe)}) z),
-             sub AS (SELECT vec_id, CAST(mi AS BIGINT) AS m,
-                            v[mi*8+1 : mi*8+8] AS sv
-                     FROM e, UNNEST(generate_series(0, 7)) AS t(mi)),
-             cb AS (SELECT m, vec_id AS code, sv AS cv FROM sub
-                    WHERE vec_id >= 20 AND vec_id < 36 AND vec_id % 5 <> 0),
-             codes AS (
-               SELECT vec_id, m, code FROM (
-                 SELECT s.vec_id, s.m, cb.code, row_number() OVER (
-                     PARTITION BY s.vec_id, s.m ORDER BY
-                       list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, cb.cv)
-                         + list_dot_product(cb.cv, cb.cv), cb.code) AS rn
-                 FROM sub s JOIN cb ON s.m = cb.m
-                 WHERE s.vec_id >= 20 AND NOT (s.vec_id IN (21, 28)
-                   OR (s.vec_id >= 100 AND s.vec_id < 200))) x WHERE rn = 1),
-             lut AS (
-               SELECT s.vec_id AS query_id, s.m, cb.code,
-                      CAST(floor((list_dot_product(s.sv, s.sv)
-                          - 2 * list_dot_product(s.sv, cb.cv)
-                          + list_dot_product(cb.cv, cb.cv)) * 1000000)
-                        AS BIGINT) AS pd
-               FROM sub s JOIN cb ON s.m = cb.m
-               WHERE s.vec_id >= $NCentroids AND s.vec_id < 13),
-             cand AS (SELECT q.query_id, c.vec_id
-                      FROM queries q JOIN cells c ON q.q_cent = c.cent_id),
-             adc AS (
-               SELECT l.query_id, cd.vec_id, sum(l.pd) AS adc
-               FROM cand x
-               JOIN codes cd ON x.vec_id = cd.vec_id
-               JOIN lut l ON l.query_id = x.query_id
-                 AND cd.m = l.m AND cd.code = l.code
-               GROUP BY l.query_id, cd.vec_id)
-             SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id,
-                    (vec_id % 5 = 0) AS is_new, CAST(adc AS BIGINT) AS adc
-             FROM (SELECT query_id, vec_id, adc, row_number() OVER (
-                     PARTITION BY query_id ORDER BY adc, vec_id) AS rank
-                   FROM adc) y
-             WHERE rank <= $K ORDER BY query_id, rank""")),
+             ${frozenSearchSql("s.vec_id >= 20 AND NOT (s.vec_id IN (21, 28) " +
+               "OR (s.vec_id >= 100 AND s.vec_id < 200))")}""")),
 
     // Recall audit for the approximate path: per query, how many of the
     // exact top-k the hyperplane-LSH bucket search recovered. The
@@ -918,62 +690,30 @@ object ExtraSimilarityQueries {
     Spec("q_ann_recall",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val planes = hyperplanes(8, 64)
+        val planes = SimilarityQueries.Planes
         val q = e.filter(col("vec_id") < 20)
           .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
             hyperplaneBucket(col("embedding"), planes).as("qb"))
         val c = e.filter(col("vec_id") >= 20)
           .select(col("vec_id"), col("embedding").as("cv"),
             hyperplaneBucket(col("embedding"), planes).as("cb"))
-        // both top-k legs through the native TopKPerKey — membership
-        // only, so no residual rank window is needed at all
-        val brute = ScaleOps.topKPerKey(
-            c.crossJoin(broadcast(q.select(col("query_id"), col("qv"))))
-              .select(col("query_id"), col("vec_id"),
-                cosine(col("qv"), col("cv")).as("cos")),
-            Seq(col("query_id")), Seq(col("cos").desc, col("vec_id")), K)
-          .select(col("query_id"), col("vec_id"))
-        val lsh = ScaleOps.topKPerKey(
-            q.join(c, col("qb") === col("cb"))
-              .select(col("query_id"), col("vec_id"),
-                cosine(col("qv"), col("cv")).as("cos")),
-            Seq(col("query_id")), Seq(col("cos").desc, col("vec_id")), K)
-          .select(col("query_id").as("query_id_l"), col("vec_id").as("vec_id_l"))
-        brute.join(lsh,
-            col("query_id") === col("query_id_l") &&
-              col("vec_id") === col("vec_id_l"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_brute"),
-            count(col("vec_id_l")).as("n_recovered"))
-          .select(col("query_id"), col("n_brute"), col("n_recovered"),
-            round(col("n_recovered").cast("double") / col("n_brute"), 4)
-              .as("recall"))
-          .orderBy(col("query_id"))
+        recallTable(
+          bruteTopK(q.select(col("query_id"), col("qv")), c,
+            cosine(col("qv"), col("cv")), ascending = false),
+          topKOf(q.join(c, col("qb") === col("cb"))
+            .select(col("query_id"), col("vec_id"),
+              cosine(col("qv"), col("cv")).as("cos")), col("cos").desc))
       },
       Some(s"""WITH e AS (
                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                      ${bucketSqlPublic("CAST(embedding AS DOUBLE[])")} AS bucket
+                      ${SimilarityQueries.bucketSql("CAST(embedding AS DOUBLE[])")} AS bucket
                FROM embeddings),
              q AS (SELECT vec_id AS query_id, v, bucket FROM e WHERE vec_id < 20),
              c AS (SELECT vec_id, v, bucket FROM e WHERE vec_id >= 20),
-             brute AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT q.query_id, c.vec_id,
-                        row_number() OVER (PARTITION BY q.query_id ORDER BY
-                          $cosSqlPublic DESC, c.vec_id) AS rank
-                 FROM q, c) x WHERE rank <= $K),
-             lsh AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT q.query_id, c.vec_id,
-                        row_number() OVER (PARTITION BY q.query_id ORDER BY
-                          $cosSqlPublic DESC, c.vec_id) AS rank
-                 FROM q JOIN c ON q.bucket = c.bucket) x WHERE rank <= $K)
-             SELECT b.query_id, count(*) AS n_brute,
-                    count(l.vec_id) AS n_recovered,
-                    round(CAST(count(l.vec_id) AS DOUBLE) / count(*), 4) AS recall
-             FROM brute b LEFT JOIN lsh l
-               ON b.query_id = l.query_id AND b.vec_id = l.vec_id
-             GROUP BY b.query_id ORDER BY b.query_id""")),
+             $bruteCosSql,
+             ${topKSql("lsh", "q.query_id", s"$cosSql DESC",
+               "q JOIN c ON q.bucket = c.bucket")}
+             ${recallSql("lsh")}""")),
 
     // Johnson–Lindenstrauss distortion audit: the lemma promises
     // DISTANCE preservation — ‖proj(a)−proj(b)‖ ≈ √k·‖a−b‖ (in the

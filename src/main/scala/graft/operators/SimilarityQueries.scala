@@ -18,22 +18,23 @@ import graft.functions.VectorFunctions._
 object SimilarityQueries {
   import Q._
 
-  private val K = 5
+  /** Neighbors per query of every ANN row (brute, LSH, IVF, PQ). */
+  private[operators] final val K = 5
   private val NPlanes = 8
   private val Dim = 64
-  private lazy val Planes = hyperplanes(NPlanes, Dim)
+  private[operators] lazy val Planes = hyperplanes(NPlanes, Dim)
 
   private def planeSqlLiteral(p: Seq[Double]): String =
     p.mkString("[", ", ", "]")
 
   /** DuckDB replay of the hyperplane bucket: identical literals,
     * identical sign rule. */
-  private def bucketSql(vexpr: String): String =
+  private[operators] def bucketSql(vexpr: String): String =
     Planes.map(p =>
       s"(CASE WHEN list_dot_product($vexpr, CAST(${planeSqlLiteral(p)} AS DOUBLE[])) >= 0 THEN '1' ELSE '0' END)")
       .mkString(" || ")
 
-  private val cosSql =
+  private[operators] final val cosSql =
     "list_dot_product(q.v, c.v) / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v)))"
 
   /** Per-query top-k over (query_id, vec_id, cos) through the native

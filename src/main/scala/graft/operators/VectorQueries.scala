@@ -1,6 +1,11 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.VectorFunctions.asDouble
+import SimilarityQueries.K
+import ExtraSimilarityQueries.{bruteL2Sql, bruteTopK, recallSql, recallTable,
+  topKSql}
 
 /** Vector-column analytics over `embeddings` (SURVEY §2.9 X2
   * adjacency): the aggregate/transform ops a training pipeline runs on
@@ -48,13 +53,159 @@ object VectorQueries {
       .select(col(idCol), col("m"), col("mn.c").as("code"))
 
   /** Per-query ADC lookup table: floor-scaled integer-micros partial
-    * squared distances per (id, m, code) — order-free exact sums. */
+    * squared distances per (keys, m, code) — order-free exact sums. */
   private[graft] def pqLut(sub: org.apache.spark.sql.DataFrame,
                            cb: org.apache.spark.sql.DataFrame,
-                           idCol: String): org.apache.spark.sql.DataFrame =
+                           keys: String*): org.apache.spark.sql.DataFrame =
     sub.join(broadcast(cb), col("m") === col("cb_m"))
-      .select(col(idCol), col("m"), col("code"),
-        floor(pqSqd(col("sv"), col("cv")) * 1000000).cast("long").as("pd"))
+      .select(keys.map(col) ++ Seq(col("m"), col("code"),
+        floor(pqSqd(col("sv"), col("cv")) * 1000000).cast("long").as("pd")): _*)
+
+  /** The sampled PQ codebook: each `sub` subvector of vec_id < 36 is
+    * one code, (cb_m, code = its vec_id, cv). */
+  private[graft] def sampledCodebook(sub: DataFrame): DataFrame =
+    sub.filter(col("vec_id") < 36)
+      .select(col("m").as("cb_m"), col("vec_id").as("code"),
+        col("sv").as("cv"))
+
+  /** ADC search: `pairs` (query_id, vec_id, m, code, …) joined to the
+    * broadcast [[pqLut]] on `keys`, the integer-micros partial
+    * distances summed per (query_id, vec_id) as `adc`, and the K
+    * nearest per query (ties on vec_id) kept through the native
+    * TopKPerKey. Output (query_id, vec_id, adc). */
+  private[graft] def adcTopK(pairs: DataFrame, lut: DataFrame,
+                             keys: Seq[String]): DataFrame =
+    ScaleOps.topKPerKey(
+      pairs.join(broadcast(lut), keys)
+        .groupBy(col("query_id"), col("vec_id"))
+        .agg(sum(col("pd")).as("adc")),
+      Seq(col("query_id")), Seq(col("adc"), col("vec_id")), K)
+
+  /** The PQ recall audit of the three PQ rows: the ADC top-K of the
+    * `querySub` queries over `corpusSub` encoded against `cb`, scored
+    * against the exact-L2 top-K of the raw vectors (queries
+    * vec_id < 20, corpus vec_id ≥ 20). */
+  private def pqRecall(e: DataFrame, corpusSub: DataFrame,
+                       querySub: DataFrame, cb: DataFrame): DataFrame =
+    recallTable(
+      bruteTopK(
+        e.filter(col("vec_id") < 20).select(col("vec_id").as("query_id"),
+          asDouble(col("embedding")).as("qv")),
+        e.filter(col("vec_id") >= 20).select(col("vec_id"),
+          asDouble(col("embedding")).as("cv")),
+        pqSqd(col("qv"), col("cv")), ascending = true),
+      adcTopK(pqCodes(corpusSub, cb, "vec_id"),
+        pqLut(querySub, cb, "query_id"), Seq("m", "code")))
+
+  /** DuckDB replay of [[pqSub]] at m = 8, subDim = 8: CTE `sub`. */
+  private[operators] final val subSql =
+    """sub AS (SELECT vec_id, CAST(mi AS BIGINT) AS m,
+                      v[mi*8+1 : mi*8+8] AS sv
+               FROM e, UNNEST(generate_series(0, 7)) AS t(mi))"""
+
+  /** DuckDB replay of [[sampledCodebook]]: CTE `name` over the `sub`
+    * rows passing `flt`. */
+  private[operators] def sampledCbSql(name: String, sub: String,
+                                      flt: String): String =
+    s"$name AS (SELECT m, vec_id AS code, sv AS cv FROM $sub WHERE $flt)"
+
+  /** DuckDB replay of [[pqSqd]]. */
+  private def sqdSql(a: String, b: String): String =
+    s"list_dot_product($a, $a) - 2 * list_dot_product($a, $b) + list_dot_product($b, $b)"
+
+  private def where(flt: String): String =
+    if (flt.isEmpty) "" else s" WHERE $flt"
+
+  /** DuckDB replay of [[pqCodes]]' arg-min (ties on code) for the `sub`
+    * rows passing `flt` against codebook CTE `cb`; `keepSv` also keeps
+    * each subvector (the training chain's assign step). */
+  private def nearestCodeSql(sub: String, cb: String, flt: String,
+                             keepSv: Boolean = false): String = {
+    val (sv, ssv) = if (keepSv) (", sv", ", s.sv") else ("", "")
+    s"""SELECT vec_id, m, code$sv FROM (
+          SELECT s.vec_id, s.m, c.code$ssv, row_number() OVER (
+              PARTITION BY s.vec_id, s.m ORDER BY
+                ${sqdSql("s.sv", "c.cv")}, c.code) AS rn
+          FROM $sub s JOIN $cb c ON s.m = c.m${where(flt)}) x WHERE rn = 1"""
+  }
+
+  /** DuckDB replay of [[pqCodes]] and [[pqLut]] against codebook CTE
+    * `cb`: CTE `codes` over the `codeSub` rows passing `codeFlt`, CTE
+    * `lut` over the `lutSub` rows passing `lutFlt` (their vec_id is
+    * the query_id; `lutKey` lists further columns carried as keys). */
+  private[operators] def codesLutSql(cb: String, codeSub: String,
+      codeFlt: String, lutSub: String, lutFlt: String,
+      lutKey: String = ""): String =
+    s"""codes AS (${nearestCodeSql(codeSub, cb, codeFlt)}),
+       lut AS (
+         SELECT s.vec_id AS query_id$lutKey, s.m, c.code,
+                CAST(floor((${sqdSql("s.sv", "c.cv")}) * 1000000)
+                  AS BIGINT) AS pd
+         FROM $lutSub s JOIN $cb c ON s.m = c.m${where(lutFlt)})"""
+
+  /** DuckDB replay of [[adcTopK]]'s sum: CTE `adc` over `codes` ⋈
+    * `lut`. With `candKeys` it first builds CTE `cand`, the
+    * (`candKeys`, vec_id) pairs the probed `cells` admit for each
+    * `queries` row, and sums only over those, the LUT joined on
+    * `candKeys` too; without, every code is scored. */
+  private[operators] def adcSql(candKeys: Seq[String] = Nil): String = {
+    val cand =
+      if (candKeys.isEmpty) ""
+      else s"""cand AS (SELECT ${candKeys.map("q." + _).mkString(", ")}, c.vec_id
+                FROM queries q JOIN cells c ON q.q_cent = c.cent_id),
+            """
+    val from =
+      if (candKeys.isEmpty) "codes cd"
+      else "cand x JOIN codes cd ON x.vec_id = cd.vec_id"
+    val on = candKeys.map(k => s"l.$k = x.$k AND ").mkString
+    s"""${cand}adc AS (
+         SELECT l.query_id, cd.vec_id, sum(l.pd) AS adc
+         FROM $from
+         JOIN lut l ON ${on}cd.m = l.m AND cd.code = l.code
+         GROUP BY l.query_id, cd.vec_id)"""
+  }
+
+  /** DuckDB replay of an ADC recall audit's tail: [[adcSql]], its top-K
+    * CTE `pq`, the exact-L2 `brute` CTE for the queries passing
+    * `queryFlt`, and the recall table. */
+  private[operators] def adcRecallSql(candKeys: Seq[String],
+                                      queryFlt: String): String =
+    s"""${adcSql(candKeys)},
+       ${topKSql("pq", "c.query_id", "c.adc", "adc c")},
+       ${bruteL2Sql(queryFlt)}
+       ${recallSql("pq")}"""
+
+  /** DuckDB replay of [[pqRecall]] over the subvector CTE `sub` and
+    * codebook CTE `cb`. */
+  private def pqRecallSql(sub: String, cb: String): String =
+    s"""${codesLutSql(cb, sub, "s.vec_id >= 20", sub, "s.vec_id < 20")},
+       ${adcRecallSql(Nil, "q.vec_id < 20")}"""
+
+  /** Lloyd iterations of the trained-codebook row's [[pqTrain]]; its
+    * oracle's assign/mean chain ([[pqTrainChainSql]]) is generated
+    * from the same constant. */
+  private final val PqTrainIters = 2
+
+  /** DuckDB replay of [[pqTrain]] from the codebook CTE `cb0`: `a{i}`
+    * assigns the corpus subvectors with the encoder's arg-min, `cb{i}`
+    * is the micros-floored element-wise mean per (m, code), an emptied
+    * code keeping its previous centroid; ends in CTE
+    * `cb{PqTrainIters}`. */
+  private def pqTrainChainSql: String =
+    (1 to PqTrainIters).map { i =>
+      s"""a$i AS (${nearestCodeSql("sub", s"cb${i - 1}", "s.vec_id >= 20",
+          keepSv = true)}),
+         cb$i AS (
+           SELECT p.m, p.code, coalesce(mm.cv, p.cv) AS cv
+           FROM cb${i - 1} p LEFT JOIN (
+             SELECT m, code, list(mv ORDER BY pos) AS cv FROM (
+               SELECT m, code, pos, floor(avg(val) * 1000000) / 1000000 AS mv FROM (
+                 SELECT m, code, unnest(sv) AS val,
+                        unnest(range(1, len(sv) + 1)) AS pos
+                 FROM a$i) q1 GROUP BY m, code, pos) q2
+             GROUP BY m, code) mm
+           ON p.m = mm.m AND p.code = mm.code)"""
+    }.mkString(",\n")
 
   /** Per-subspace Lloyd refinement of a PQ codebook — the TRAINED
     * alternative to the sampled first-ks convention, after the r13
@@ -290,105 +441,17 @@ object VectorQueries {
     Spec("q_ann_pq_recall",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        def sqd(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-          pqSqd(a, b)
         val corpusSub = pqSub(e.filter(col("vec_id") >= 20), "vec_id", 8, 8)
-        val cb = corpusSub.filter(col("vec_id") < 36)
-          .select(col("m").as("cb_m"), col("vec_id").as("code"),
-            col("sv").as("cv"))
-        val codes = pqCodes(corpusSub, cb, "vec_id")
-        val lut = pqLut(
-          pqSub(e.filter(col("vec_id") < 20), "query_id", 8, 8), cb, "query_id")
-        val adc = codes.join(broadcast(lut), Seq("m", "code"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("pd")).as("adc"))
-        val pqTop = ScaleOps.topKPerKey(adc,
-            Seq(col("query_id")), Seq(col("adc"), col("vec_id")), 5)
-          .select(col("query_id").as("query_id_p"), col("vec_id").as("vec_id_p"))
-        val qraw = e.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"),
-            graft.functions.VectorFunctions.asDouble(col("embedding")).as("qv"))
-        val craw = e.filter(col("vec_id") >= 20)
-          .select(col("vec_id"),
-            graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv"))
-        val brute = ScaleOps.topKPerKey(
-            craw.crossJoin(broadcast(qraw))
-              .select(col("query_id"), col("vec_id"),
-                sqd(col("qv"), col("cv")).as("d2")),
-            Seq(col("query_id")), Seq(col("d2"), col("vec_id")), 5)
-          .select(col("query_id"), col("vec_id"))
-        brute.join(pqTop,
-            col("query_id") === col("query_id_p") &&
-              col("vec_id") === col("vec_id_p"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_brute"),
-            count(col("vec_id_p")).as("n_recovered"))
-          .select(col("query_id"), col("n_brute"), col("n_recovered"),
-            round(col("n_recovered").cast("double") / col("n_brute"), 4)
-              .as("recall"))
-          .orderBy(col("query_id"))
+        pqRecall(e, corpusSub,
+          pqSub(e.filter(col("vec_id") < 20), "query_id", 8, 8),
+          sampledCodebook(corpusSub))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                         FROM embeddings),
-             sub AS (SELECT vec_id, CAST(mi AS BIGINT) AS m,
-                            v[mi*8+1 : mi*8+8] AS sv
-                     FROM e, UNNEST(generate_series(0, 7)) AS t(mi)),
-             cb AS (SELECT m, vec_id AS code, sv AS cv FROM sub
-                    WHERE vec_id >= 20 AND vec_id < 36),
-             codes AS (
-               SELECT vec_id, m, code FROM (
-                 SELECT s.vec_id, s.m, cb.code, row_number() OVER (
-                     PARTITION BY s.vec_id, s.m ORDER BY
-                       list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, cb.cv)
-                         + list_dot_product(cb.cv, cb.cv), cb.code) AS rn
-                 FROM sub s JOIN cb ON s.m = cb.m
-                 WHERE s.vec_id >= 20) x WHERE rn = 1),
-             lut AS (
-               SELECT s.vec_id AS query_id, s.m, cb.code,
-                      CAST(floor((list_dot_product(s.sv, s.sv)
-                          - 2 * list_dot_product(s.sv, cb.cv)
-                          + list_dot_product(cb.cv, cb.cv)) * 1000000)
-                        AS BIGINT) AS pd
-               FROM sub s JOIN cb ON s.m = cb.m
-               WHERE s.vec_id < 20),
-             adc AS (
-               SELECT l.query_id, c.vec_id, sum(l.pd) AS adc
-               FROM codes c JOIN lut l ON c.m = l.m AND c.code = l.code
-               GROUP BY l.query_id, c.vec_id),
-             pq AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT query_id, vec_id, row_number() OVER (
-                     PARTITION BY query_id ORDER BY adc, vec_id) AS rn
-                 FROM adc) y WHERE rn <= 5),
-             brute AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT q.vec_id AS query_id, c.vec_id, row_number() OVER (
-                     PARTITION BY q.vec_id ORDER BY
-                       list_dot_product(c.v, c.v)
-                         - 2 * list_dot_product(q.v, c.v)
-                         + list_dot_product(q.v, q.v), c.vec_id) AS rn
-                 FROM e q CROSS JOIN e c
-                 WHERE q.vec_id < 20 AND c.vec_id >= 20) z WHERE rn <= 5)
-             SELECT b.query_id, count(*) AS n_brute,
-                    count(p.vec_id) AS n_recovered,
-                    round(CAST(count(p.vec_id) AS DOUBLE) / count(*), 4)
-                      AS recall
-             FROM brute b LEFT JOIN pq p
-               ON b.query_id = p.query_id AND b.vec_id = p.vec_id
-             GROUP BY b.query_id ORDER BY b.query_id""")),
+             $subSql,
+             ${sampledCbSql("cb", "sub", "vec_id >= 20 AND vec_id < 36")},
+             ${pqRecallSql("sub", "cb")}""")),
 
-    // TRAINED-codebook PQ recall audit: identical search to
-    // q_ann_pq_recall but the codebook is refined by two per-subspace
-    // Lloyd iterations ([[pqTrain]]) from the same sampled init — the
-    // estimator the r13 ks sweep identified as the real next knob
-    // (sampling saturated: 16→256 codes bought +0.4 pts). The oracle
-    // replays BOTH training iterations as unrolled CTEs (assign with
-    // the arg-min the encoder runs, element-wise mean per (m, code),
-    // emptied codes keep their previous centroid — the IVF oracle's
-    // a1/c1/a2/c2 pattern keyed by (m, code) instead of cent_id), so
-    // the trained codebook itself is gate-checked, not just the
-    // search over it.
     // PQ recall with the VARIANCE-BALANCED (snake) subspace
     // permutation (r16, `bench/clustered_ann_r16.jsonl`): plain
     // contiguous slicing hands subspace 0 the highest-variance dims
@@ -418,9 +481,7 @@ object VectorQueries {
         // per-dim variance over the corpus, micros-snapped, driver-
         // materialized (64 longs) — then the snake deal
         val dv = corpusRaw
-          .select(posexplode(
-            graft.functions.VectorFunctions.asDouble(col("embedding")))
-            .as(Seq("pos", "x")))
+          .select(posexplode(asDouble(col("embedding"))).as(Seq("pos", "x")))
           .groupBy("pos")
           .agg(floor((avg(col("x") * col("x"))
             - avg(col("x")) * avg(col("x"))) * 1e6).cast("long").as("v"))
@@ -435,51 +496,20 @@ object VectorQueries {
             bins(b) = bins(b) :+ pos
         }
         val perm = bins.toSeq.flatten // bin-major, round order within
-        def permuted(df: org.apache.spark.sql.DataFrame) =
+        def permuted(df: DataFrame) =
           df.select(col("vec_id"),
             array(perm.map(p =>
               col("embedding").getItem(p).cast("double")): _*)
               .as("embedding"))
         val corpusSub = pqSub(permuted(corpusRaw), "vec_id", m, subDim)
-        val cb = corpusSub.filter(col("vec_id") < 36)
-          .select(col("m").as("cb_m"), col("vec_id").as("code"),
-            col("sv").as("cv"))
-        val codes = pqCodes(corpusSub, cb, "vec_id")
-        val lut = pqLut(
+        // brute truth on the ORIGINAL vectors (inside pqRecall): the
+        // permutation is orthogonal, so exact L2 and its top-k are
+        // untouched
+        pqRecall(e, corpusSub,
           pqSub(permuted(e.filter(col("vec_id") < 20)), "query_id", m, subDim),
-          cb, "query_id")
-        val adc = codes.join(broadcast(lut), Seq("m", "code"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("pd")).as("adc"))
-        val pqTop = ScaleOps.topKPerKey(adc,
-            Seq(col("query_id")), Seq(col("adc"), col("vec_id")), 5)
-          .select(col("query_id").as("query_id_p"), col("vec_id").as("vec_id_p"))
-        // brute truth on the ORIGINAL vectors: the permutation is
-        // orthogonal, so exact L2 and its top-k are untouched
-        val qraw = e.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"),
-            graft.functions.VectorFunctions.asDouble(col("embedding")).as("qv"))
-        val craw = corpusRaw
-          .select(col("vec_id"),
-            graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv"))
-        val brute = ScaleOps.topKPerKey(
-            craw.crossJoin(broadcast(qraw))
-              .select(col("query_id"), col("vec_id"),
-                pqSqd(col("qv"), col("cv")).as("d2")),
-            Seq(col("query_id")), Seq(col("d2"), col("vec_id")), 5)
-          .select(col("query_id"), col("vec_id"))
-        brute.join(pqTop,
-            col("query_id") === col("query_id_p") &&
-              col("vec_id") === col("vec_id_p"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_brute"),
-            count(col("vec_id_p")).as("n_recovered"))
-          .select(col("query_id"), col("n_brute"), col("n_recovered"),
-            round(col("n_recovered").cast("double") / col("n_brute"), 4)
-              .as("recall"))
-          .orderBy(col("query_id"))
+          sampledCodebook(corpusSub))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                         FROM embeddings),
              dv AS (
                SELECT CAST(i AS INT) AS pos,
@@ -500,177 +530,34 @@ object VectorQueries {
                SELECT e.vec_id, CAST(p.bin AS BIGINT) AS m,
                       list(e.v[p.pos] ORDER BY p.rnd) AS sv
                FROM e, perm p GROUP BY e.vec_id, p.bin),
-             cb AS (SELECT m, vec_id AS code, sv AS cv FROM sub
-                    WHERE vec_id >= 20 AND vec_id < 36),
-             codes AS (
-               SELECT vec_id, m, code FROM (
-                 SELECT s.vec_id, s.m, c.code, row_number() OVER (
-                     PARTITION BY s.vec_id, s.m ORDER BY
-                       list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, c.cv)
-                         + list_dot_product(c.cv, c.cv), c.code) AS rn
-                 FROM sub s JOIN cb c ON s.m = c.m
-                 WHERE s.vec_id >= 20) x WHERE rn = 1),
-             lut AS (
-               SELECT s.vec_id AS query_id, s.m, c.code,
-                      CAST(floor((list_dot_product(s.sv, s.sv)
-                          - 2 * list_dot_product(s.sv, c.cv)
-                          + list_dot_product(c.cv, c.cv)) * 1000000)
-                        AS BIGINT) AS pd
-               FROM sub s JOIN cb c ON s.m = c.m
-               WHERE s.vec_id < 20),
-             adc AS (
-               SELECT l.query_id, c.vec_id, sum(l.pd) AS adc
-               FROM codes c JOIN lut l ON c.m = l.m AND c.code = l.code
-               GROUP BY l.query_id, c.vec_id),
-             pq AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT query_id, vec_id, row_number() OVER (
-                     PARTITION BY query_id ORDER BY adc, vec_id) AS rn
-                 FROM adc) y WHERE rn <= 5),
-             brute AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT q.vec_id AS query_id, c.vec_id, row_number() OVER (
-                     PARTITION BY q.vec_id ORDER BY
-                       list_dot_product(c.v, c.v)
-                         - 2 * list_dot_product(q.v, c.v)
-                         + list_dot_product(q.v, q.v), c.vec_id) AS rn
-                 FROM e q CROSS JOIN e c
-                 WHERE q.vec_id < 20 AND c.vec_id >= 20) z WHERE rn <= 5)
-             SELECT b.query_id, count(*) AS n_brute,
-                    count(p.vec_id) AS n_recovered,
-                    round(CAST(count(p.vec_id) AS DOUBLE) / count(*), 4)
-                      AS recall
-             FROM brute b LEFT JOIN pq p
-               ON b.query_id = p.query_id AND b.vec_id = p.vec_id
-             GROUP BY b.query_id ORDER BY b.query_id""")),
+             ${sampledCbSql("cb", "sub", "vec_id >= 20 AND vec_id < 36")},
+             ${pqRecallSql("sub", "cb")}""")),
 
+    // TRAINED-codebook PQ recall audit: identical search to
+    // q_ann_pq_recall but the codebook is refined by PqTrainIters
+    // per-subspace Lloyd iterations ([[pqTrain]]) from the same sampled
+    // init — the estimator the r13 ks sweep identified as the real
+    // next knob (sampling saturated: 16→256 codes bought +0.4 pts).
+    // The oracle replays every training iteration as a CTE pair
+    // generated from the same constant ([[pqTrainChainSql]]: assign
+    // with the arg-min the encoder runs, element-wise mean per
+    // (m, code), emptied codes keep their previous centroid — the IVF
+    // oracle's Lloyd chain keyed by (m, code) instead of cent_id), so
+    // the trained codebook itself is gate-checked, not just the
+    // search over it.
     Spec("q_ann_pq_trained_recall",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val corpusSub = pqSub(e.filter(col("vec_id") >= 20), "vec_id", 8, 8)
-        val cb0 = corpusSub.filter(col("vec_id") < 36)
-          .select(col("m").as("cb_m"), col("vec_id").as("code"),
-            col("sv").as("cv"))
-        val cb = pqTrain(corpusSub, cb0, 2)
-        val codes = pqCodes(corpusSub, cb, "vec_id")
-        val lut = pqLut(
-          pqSub(e.filter(col("vec_id") < 20), "query_id", 8, 8), cb, "query_id")
-        val adc = codes.join(broadcast(lut), Seq("m", "code"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("pd")).as("adc"))
-        val pqTop = ScaleOps.topKPerKey(adc,
-            Seq(col("query_id")), Seq(col("adc"), col("vec_id")), 5)
-          .select(col("query_id").as("query_id_p"), col("vec_id").as("vec_id_p"))
-        val qraw = e.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"),
-            graft.functions.VectorFunctions.asDouble(col("embedding")).as("qv"))
-        val craw = e.filter(col("vec_id") >= 20)
-          .select(col("vec_id"),
-            graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv"))
-        val brute = ScaleOps.topKPerKey(
-            craw.crossJoin(broadcast(qraw))
-              .select(col("query_id"), col("vec_id"),
-                pqSqd(col("qv"), col("cv")).as("d2")),
-            Seq(col("query_id")), Seq(col("d2"), col("vec_id")), 5)
-          .select(col("query_id"), col("vec_id"))
-        brute.join(pqTop,
-            col("query_id") === col("query_id_p") &&
-              col("vec_id") === col("vec_id_p"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_brute"),
-            count(col("vec_id_p")).as("n_recovered"))
-          .select(col("query_id"), col("n_brute"), col("n_recovered"),
-            round(col("n_recovered").cast("double") / col("n_brute"), 4)
-              .as("recall"))
-          .orderBy(col("query_id"))
+        pqRecall(e, corpusSub,
+          pqSub(e.filter(col("vec_id") < 20), "query_id", 8, 8),
+          pqTrain(corpusSub, sampledCodebook(corpusSub), PqTrainIters))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                         FROM embeddings),
-             sub AS (SELECT vec_id, CAST(mi AS BIGINT) AS m,
-                            v[mi*8+1 : mi*8+8] AS sv
-                     FROM e, UNNEST(generate_series(0, 7)) AS t(mi)),
-             cb0 AS (SELECT m, vec_id AS code, sv AS cv FROM sub
-                     WHERE vec_id >= 20 AND vec_id < 36),
-             a1 AS (
-               SELECT vec_id, m, code, sv FROM (
-                 SELECT s.vec_id, s.m, c.code, s.sv, row_number() OVER (
-                     PARTITION BY s.vec_id, s.m ORDER BY
-                       list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, c.cv)
-                         + list_dot_product(c.cv, c.cv), c.code) AS rn
-                 FROM sub s JOIN cb0 c ON s.m = c.m
-                 WHERE s.vec_id >= 20) x WHERE rn = 1),
-             cb1 AS (
-               SELECT p.m, p.code, coalesce(mm.cv, p.cv) AS cv
-               FROM cb0 p LEFT JOIN (
-                 SELECT m, code, list(mv ORDER BY pos) AS cv FROM (
-                   SELECT m, code, pos, floor(avg(val) * 1000000) / 1000000 AS mv FROM (
-                     SELECT m, code, unnest(sv) AS val,
-                            unnest(range(1, len(sv) + 1)) AS pos
-                     FROM a1) q1 GROUP BY m, code, pos) q2
-                 GROUP BY m, code) mm
-               ON p.m = mm.m AND p.code = mm.code),
-             a2 AS (
-               SELECT vec_id, m, code, sv FROM (
-                 SELECT s.vec_id, s.m, c.code, s.sv, row_number() OVER (
-                     PARTITION BY s.vec_id, s.m ORDER BY
-                       list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, c.cv)
-                         + list_dot_product(c.cv, c.cv), c.code) AS rn
-                 FROM sub s JOIN cb1 c ON s.m = c.m
-                 WHERE s.vec_id >= 20) x WHERE rn = 1),
-             cb2 AS (
-               SELECT p.m, p.code, coalesce(mm.cv, p.cv) AS cv
-               FROM cb1 p LEFT JOIN (
-                 SELECT m, code, list(mv ORDER BY pos) AS cv FROM (
-                   SELECT m, code, pos, floor(avg(val) * 1000000) / 1000000 AS mv FROM (
-                     SELECT m, code, unnest(sv) AS val,
-                            unnest(range(1, len(sv) + 1)) AS pos
-                     FROM a2) q1 GROUP BY m, code, pos) q2
-                 GROUP BY m, code) mm
-               ON p.m = mm.m AND p.code = mm.code),
-             codes AS (
-               SELECT vec_id, m, code FROM (
-                 SELECT s.vec_id, s.m, c.code, row_number() OVER (
-                     PARTITION BY s.vec_id, s.m ORDER BY
-                       list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, c.cv)
-                         + list_dot_product(c.cv, c.cv), c.code) AS rn
-                 FROM sub s JOIN cb2 c ON s.m = c.m
-                 WHERE s.vec_id >= 20) x WHERE rn = 1),
-             lut AS (
-               SELECT s.vec_id AS query_id, s.m, c.code,
-                      CAST(floor((list_dot_product(s.sv, s.sv)
-                          - 2 * list_dot_product(s.sv, c.cv)
-                          + list_dot_product(c.cv, c.cv)) * 1000000)
-                        AS BIGINT) AS pd
-               FROM sub s JOIN cb2 c ON s.m = c.m
-               WHERE s.vec_id < 20),
-             adc AS (
-               SELECT l.query_id, c.vec_id, sum(l.pd) AS adc
-               FROM codes c JOIN lut l ON c.m = l.m AND c.code = l.code
-               GROUP BY l.query_id, c.vec_id),
-             pq AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT query_id, vec_id, row_number() OVER (
-                     PARTITION BY query_id ORDER BY adc, vec_id) AS rn
-                 FROM adc) y WHERE rn <= 5),
-             brute AS (
-               SELECT query_id, vec_id FROM (
-                 SELECT q.vec_id AS query_id, c.vec_id, row_number() OVER (
-                     PARTITION BY q.vec_id ORDER BY
-                       list_dot_product(c.v, c.v)
-                         - 2 * list_dot_product(q.v, c.v)
-                         + list_dot_product(q.v, q.v), c.vec_id) AS rn
-                 FROM e q CROSS JOIN e c
-                 WHERE q.vec_id < 20 AND c.vec_id >= 20) z WHERE rn <= 5)
-             SELECT b.query_id, count(*) AS n_brute,
-                    count(p.vec_id) AS n_recovered,
-                    round(CAST(count(p.vec_id) AS DOUBLE) / count(*), 4)
-                      AS recall
-             FROM brute b LEFT JOIN pq p
-               ON b.query_id = p.query_id AND b.vec_id = p.vec_id
-             GROUP BY b.query_id ORDER BY b.query_id"""))
+             $subSql,
+             ${sampledCbSql("cb0", "sub", "vec_id >= 20 AND vec_id < 36")},
+             $pqTrainChainSql,
+             ${pqRecallSql("sub", s"cb$PqTrainIters")}"""))
   )
 }

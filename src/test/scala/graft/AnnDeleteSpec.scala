@@ -14,49 +14,36 @@ import org.scalatest.funsuite.AnyFunSuite
   * results actually CHANGED vs the pre-delete index, so the test
   * cannot pass vacuously). */
 class AnnDeleteSpec extends AnyFunSuite {
+  import AnnDeleteSpec.dir
   private lazy val spark = TestSpark.spark
-  private val dir = "/root/testdata/sf0.001"
 
   test("tombstone anti-join equals rebuild-without-deleted (cells and codes)") {
     import graft.operators.{ExtraSimilarityQueries => ESQ, ScaleOps, VectorQueries => VQ}
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val allE = e.filter(col("vec_id") >= 20)
-      .select(col("vec_id"), col("embedding"))
     // the q_ann_delete tombstone set (the gate's own shared predicate:
     // a retracted-crawl range plus two point takedowns that seeded the
     // frozen PQ codebook)
     val tombPred = ESQ.annDeleteTombstonePred(col("vec_id"))
+    val allE = e.filter(col("vec_id") >= 20)
+      .select(col("vec_id"), col("embedding"))
     val liveE = allE.filter(!tombPred)
     val tomb = allE.filter(tombPred).select(col("vec_id"))
-    // frozen artifacts trained PRE-delete (deleted rows included in
-    // training) — exactly the q_ann_delete construction
-    val corpusE = allE.filter(pmod(col("vec_id"), lit(5)) =!= 0)
-    val cents = ESQ.lloydTrain(
-      corpusE.select(col("vec_id"), col("embedding").as("ev")),
-      e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cent_id"),
-          graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv")),
-      2)
-    val cb = VQ.pqSub(corpusE, "vec_id", 8, 8).filter(col("vec_id") < 36)
-      .select(col("m").as("cb_m"), col("vec_id").as("code"),
-        col("sv").as("cv"))
-
-    def cellsOf(df: org.apache.spark.sql.DataFrame) =
-      ESQ.assignTo(cents)(
-          df.select(col("vec_id"), col("embedding").as("ev")),
-          "vec_id", "ev")
-        .select(col("vec_id"), col("cent_id"))
-    def codesOf(df: org.apache.spark.sql.DataFrame) =
-      VQ.pqCodes(VQ.pqSub(df, "vec_id", 8, 8), cb, "vec_id")
-
-    val tombCells = ScaleOps.tombstone(cellsOf(allE), tomb, "vec_id")
-    val rebuiltCells = cellsOf(liveE)
+    // the tombstone side: the production index (frozen artifacts
+    // trained PRE-delete, deleted rows included) minus the tombstones
+    val idx = ESQ.frozenAnnIndex(e)
+    // the rebuild side: the surviving rows assigned/encoded in one
+    // pass against the same frozen cents/cb
+    val tombCells = ScaleOps.tombstone(idx.cells, tomb, "vec_id")
+    val rebuiltCells = ESQ.assignTo(idx.cents)(
+        liveE.select(col("vec_id"), col("embedding").as("ev")),
+        "vec_id", "ev")
+      .select(col("vec_id"), col("cent_id"))
     assert(tombCells.exceptAll(rebuiltCells).isEmpty &&
       rebuiltCells.exceptAll(tombCells).isEmpty,
       "cells: tombstone anti-join must equal rebuild-without-deleted")
 
-    val tombCodes = ScaleOps.tombstone(codesOf(allE), tomb, "vec_id")
-    val rebuiltCodes = codesOf(liveE)
+    val tombCodes = ScaleOps.tombstone(idx.codes, tomb, "vec_id")
+    val rebuiltCodes = VQ.pqCodes(VQ.pqSub(liveE, "vec_id", 8, 8), idx.cb, "vec_id")
     assert(tombCodes.exceptAll(rebuiltCodes).isEmpty &&
       rebuiltCodes.exceptAll(tombCodes).isEmpty,
       "codes: tombstone anti-join must equal rebuild-without-deleted")
@@ -85,4 +72,9 @@ class AnnDeleteSpec extends AnyFunSuite {
       "pre-delete results contain no tombstoned ids — the delete test " +
         "would be vacuous; pick a different tombstone predicate")
   }
+}
+
+object AnnDeleteSpec {
+  /** The fixture both frozen-index specs read. */
+  private[graft] val dir = "/root/testdata/sf0.001"
 }

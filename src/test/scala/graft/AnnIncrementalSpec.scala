@@ -11,58 +11,59 @@ import org.scalatest.funsuite.AnyFunSuite
   * to a full rebuild that assigns+encodes corpus ∪ batch in one pass.
   * The oracle gate already proves this cross-engine (the DuckDB replay
   * IS the one-pass rebuild); this spec proves it engine-internally on
-  * both index artifacts, so a refactor that accidentally makes
-  * assignment depend on batch composition (e.g. a per-batch
-  * normalization) fails here first. */
+  * both index artifacts of the production construction
+  * (`ExtraSimilarityQueries.frozenAnnIndex`), so a change that makes
+  * its assignment or encoding depend on batch composition (e.g. a
+  * per-batch normalization or codebook) fails here first. */
 class AnnIncrementalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("incremental assign/encode against a frozen codebook equals a " +
     "full rebuild (cells and codes)") {
     import graft.operators.{ExtraSimilarityQueries => ESQ, VectorQueries => VQ}
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val corpusE = e.filter(col("vec_id") >= 20 &&
-        pmod(col("vec_id"), lit(5)) =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val batchE = e.filter(col("vec_id") >= 20 &&
-        pmod(col("vec_id"), lit(5)) === 0)
-      .select(col("vec_id"), col("embedding"))
+    val e = spark.read.parquet(s"${AnnDeleteSpec.dir}/embeddings.parquet")
+    // the incremental side: the production index, frozen artifacts
+    // trained on the corpus side, corpus and batch assigned/encoded in
+    // two passes and unioned
+    val idx = ESQ.frozenAnnIndex(e)
+    // the rebuild side: one pass over corpus ∪ batch against the same
+    // frozen cents/cb
     val unionE = e.filter(col("vec_id") >= 20)
       .select(col("vec_id"), col("embedding"))
-    // frozen artifacts, trained on the corpus side only — exactly the
-    // q_ann_incremental construction
-    val cents = ESQ.lloydTrain(
-      corpusE.select(col("vec_id"), col("embedding").as("ev")),
-      e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cent_id"),
-          graft.functions.VectorFunctions.asDouble(col("embedding")).as("cv")),
-      2)
-    val cb = VQ.pqSub(corpusE, "vec_id", 8, 8).filter(col("vec_id") < 36)
-      .select(col("m").as("cb_m"), col("vec_id").as("code"),
-        col("sv").as("cv"))
-
-    // cells: two-pass union vs one-pass rebuild
-    def cellsOf(df: org.apache.spark.sql.DataFrame) =
-      ESQ.assignTo(cents)(
-          df.select(col("vec_id"), col("embedding").as("ev")),
-          "vec_id", "ev")
-        .select(col("vec_id"), col("cent_id"))
-    val incCells = cellsOf(corpusE).unionByName(cellsOf(batchE))
-    val rebuildCells = cellsOf(unionE)
-    assert(incCells.exceptAll(rebuildCells).isEmpty &&
-      rebuildCells.exceptAll(incCells).isEmpty,
+    val rebuildCells = ESQ.assignTo(idx.cents)(
+        unionE.select(col("vec_id"), col("embedding").as("ev")),
+        "vec_id", "ev")
+      .select(col("vec_id"), col("cent_id"))
+    assert(idx.cells.exceptAll(rebuildCells).isEmpty &&
+      rebuildCells.exceptAll(idx.cells).isEmpty,
       "frozen-codebook cell assignment must not depend on batch composition")
 
-    // codes: two-pass union vs one-pass rebuild
-    def codesOf(df: org.apache.spark.sql.DataFrame) =
-      VQ.pqCodes(VQ.pqSub(df, "vec_id", 8, 8), cb, "vec_id")
-    val incCodes = codesOf(corpusE).unionByName(codesOf(batchE))
-    val rebuildCodes = codesOf(unionE)
-    assert(incCodes.exceptAll(rebuildCodes).isEmpty &&
-      rebuildCodes.exceptAll(incCodes).isEmpty,
+    val rebuildCodes = VQ.pqCodes(VQ.pqSub(unionE, "vec_id", 8, 8), idx.cb, "vec_id")
+    assert(idx.codes.exceptAll(rebuildCodes).isEmpty &&
+      rebuildCodes.exceptAll(idx.codes).isEmpty,
       "frozen-codebook PQ encoding must not depend on batch composition")
 
     // and the batch is genuinely non-trivial on this fixture
-    assert(batchE.count() > 0 && corpusE.count() > 0)
+    val isNew = pmod(col("vec_id"), lit(5)) === 0
+    assert(unionE.filter(isNew).count() > 0 && unionE.filter(!isNew).count() > 0)
+  }
+
+  test("recallTable keeps every brute query, fully missed ones at recall 0") {
+    import spark.implicits._
+    import graft.operators.ExtraSimilarityQueries.recallTable
+    // query 1 fully recovered, query 2 missed entirely (its only
+    // approximate neighbor is not in the exact top-k), query 3 half;
+    // query 4 exists only on the approximate side and must not appear
+    val brute = Seq((3L, 30L), (1L, 10L), (2L, 21L), (3L, 31L), (1L, 11L),
+      (2L, 20L)).toDF("query_id", "vec_id")
+    val approx = Seq((1L, 11L), (2L, 99L), (3L, 30L), (1L, 10L), (4L, 40L))
+      .toDF("query_id", "vec_id")
+    val out = recallTable(brute, approx)
+    assert(out.schema.map(f => (f.name, f.dataType.simpleString)) == Seq(
+      ("query_id", "bigint"), ("n_brute", "bigint"),
+      ("n_recovered", "bigint"), ("recall", "double")))
+    val got = out.collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    assert(got == Seq((1L, 2L, 2L, 1.0), (2L, 2L, 0L, 0.0), (3L, 2L, 1L, 0.5)))
   }
 }

@@ -185,9 +185,16 @@ class PlanAssertSpec extends AnyFunSuite {
   }
 
   test("q_ann_recall routes both top-k legs through TopKPerKey") {
-    val p = plan("q_ann_recall")
-    assert(p.sliding("TopKPerKeyFinal".length).count(_ == "TopKPerKeyFinal") == 2, p)
+    // every recall row: the exact leg and the approximate leg
+    for (q <- Seq("q_ann_recall", "q_ann_ivf_recall", "q_ann_ivfpq_recall",
+        "q_ann_ivfpq_residual_recall", "q_ann_pq_recall",
+        "q_ann_pq_balanced_recall", "q_ann_pq_trained_recall")) {
+      val p = plan(q)
+      assert(p.sliding("TopKPerKeyFinal".length)
+        .count(_ == "TopKPerKeyFinal") == 2, s"$q:\n$p")
+    }
     // membership-only consumers: no residual rank window at all
+    val p = plan("q_ann_recall")
     assert(!p.contains("row_number"), p)
   }
 
